@@ -5,8 +5,6 @@ import java.nio.file.{Files, Paths}
 
 import scala.collection.mutable.ListBuffer
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: times every SparkEntry query at SPARK_GRAFT_SF_DIR,
   * 3 runs per query, reporting the MINIMUM. This host's virtualization
   * stalls runs by 10-100x (observed: the same query at 0.85 s, 12.5 s
@@ -14,13 +12,13 @@ import org.apache.spark.sql.SparkSession
   * is never faster than the query's true cost — so the minimum is the
   * unbiased steady-state estimate, while a median still carries a stall
   * whenever 2 of 3 runs stall. All per-run times go to stderr AND into
-  * the JSON ("runs") so the jitter stays visible. Prints ONE COMPACT
-  * JSON metric line to stdout (total + per-query minimums + failed —
-  * no "runs" map: the driver's captured stdout tail truncated mid-array
-  * on the full map in round 2 → parsed:null) and writes the FULL JSON
-  * (with "runs") to SPARK_GRAFT_BENCH_OUT (default bench_out.json) —
-  * sbt wraps forked stdout in [info], which broke the driver's stdout
-  * parse in round 1.
+  * the JSON ("runs") so the jitter stays visible. Writes the FULL JSON
+  * (per-query minimums and "runs") to SPARK_GRAFT_BENCH_OUT (default
+  * bench_out.json) and prints ONE SHORT stdout line keyed
+  * `"metric":"total"` — total, query count and failed, a few hundred
+  * bytes, so any bounded tail of the captured stdout holds one whole
+  * parseable line (a per-query stdout line grew to ~17 KB and fell
+  * out of the tail window).
   *
   * A query that throws in any run is reported in "failed" and excluded
   * from the total rather than silently contributing its time-to-failure
@@ -30,15 +28,9 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_out.json")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession()
     // Warm up codegen/JIT, the parquet reader, and shuffle machinery so
     // whichever query runs first isn't charged session startup.
     try SparkEntry.entry(spark).count()
@@ -97,23 +89,10 @@ object Bench {
     }.mkString("{", ",", "}")
     val fl = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
     val total = results.map(_._2).sum
-    // Compact line for stdout (the driver captures a bounded tail; the
-    // full per-run map overflowed it in round 2), full JSON to the file.
-    val compact =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"failed":$fl,"sf":"$sfDir"}"""
     val full =
       s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"runs":$allRuns,"failed":$fl,"sf":"$sfDir"}"""
-    // SHORT final summary line (r13 verdict #2): the driver's stdout
-    // capture keeps only the last ~2000 bytes, and the full per-query
-    // line is ~17 KB — its leading "metric" key never lands in the tail
-    // window, so the driver parsed null for two rounds. This line is
-    // a few hundred bytes and printed LAST, so any tail window contains
-    // one complete parseable metric JSON. The full per-query line and
-    // bench_out.json are unchanged.
-    val summary =
-      s"""{"metric":"total_summary","value":$total,"unit":"sec","n":${results.size},"failed":$fl,"sf":"$sfDir"}"""
-    println(compact)
-    println(summary)
+    println(
+      s"""{"metric":"total","value":$total,"unit":"sec","n":${results.size},"failed":$fl,"sf":"$sfDir"}""")
     Files.write(Paths.get(outPath), (full + "\n").getBytes(StandardCharsets.UTF_8))
     spark.stop()
     if (failed.nonEmpty) sys.exit(1)

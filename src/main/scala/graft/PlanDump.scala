@@ -3,8 +3,6 @@ package graft
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: dump `.explain("formatted")` for named queries to files —
   * the r13 optimization-round evidence trail (`plans/r13/<q>_before/
   * _after.txt`). Args: <outDir> <suffix> <q1,q2,...>. Uses the same
@@ -20,13 +18,7 @@ object PlanDump {
     val suffix = args(1)
     val names = args(2).split(",").toSeq
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession()
     Files.createDirectories(Paths.get(outDir))
     val qs = SparkEntry.queries
     names.foreach { n =>

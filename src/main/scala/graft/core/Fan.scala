@@ -42,7 +42,7 @@ object Fan {
     // DSIR pipelines measured +1.3–3.7 s from exactly this before the
     // narrow guard. On a narrow plan there are no stages to run and
     // the probe is pure planning.
-    if (!narrowScanRooted(org.apache.spark.sql.graft.Bridge.logicalPlan(df), par)) return df
+    if (!narrowScanRooted(org.apache.spark.sql.graft.Bridge.logicalPlan(df))) return df
     // INVARIANT (r13 verdict): this .rdd probe is safe ONLY because
     // narrowScanRooted admitted no plan with executable stages below
     // it — extending the walk past any barrier (shuffle, join,
@@ -52,8 +52,7 @@ object Fan {
   }
 
   private def narrowScanRooted(
-      p: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
-      par: Int): Boolean = {
+      p: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): Boolean = {
     import org.apache.spark.sql.catalyst.plans.logical._
     p match {
       case _: org.apache.spark.sql.execution.datasources.LogicalRelation => true
@@ -62,17 +61,12 @@ object Fan {
       // the v2 relations too.
       case _: org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation => true
       case _: org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation => true
-      // Driver-side constant frames (r13 ADVICE): a LocalRelation
-      // small enough to plan fewer slices than defaultParallelism is
-      // usually a few-row constants table — a 32-way round-robin
-      // exchange for microseconds of work is pure scheduling overhead.
-      // Fan only when it carries at least a task's worth of rows per
-      // target slice (>= par rows, i.e. >= 1 row per fanned partition).
-      case l: LocalRelation => l.data.length >= par
       case n @ (_: Project | _: Filter | _: Generate | _: SubqueryAlias |
                 _: DeserializeToObject | _: SerializeFromObject |
                 _: MapElements | _: TypedFilter) =>
-        narrowScanRooted(n.asInstanceOf[UnaryNode].child, par)
+        narrowScanRooted(n.asInstanceOf[UnaryNode].child)
+      // not a LocalRelation: LocalTableScanExec already plans
+      // min(rows, defaultParallelism) slices, so it never needs a fan
       case _ => false
     }
   }

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -1395,45 +1395,66 @@ object ParityQueries {
     * iterations with the identical quantization, generated by
     * Graph.pageRankSql from the same constants.
     */
-  val pageRankQ: Q = (s, dir) => {
+  val pageRankQ: Q = (s, dir) =>
+    graft.operators.Graph.pageRank(tradeEdges(s, dir), "src", "dst").ranks(5)
+      .orderBy("node")
+
+  /** The customer→supplier trade graph shared by the graph demos: one
+    * `(src, dst)` edge per lineitem, node ids 2·custkey / 2·suppkey+1.
+    * `weight`, an expression over the orders ⋈ lineitem row, adds a
+    * `w` column; `symmetric` appends every edge reversed (the
+    * undirected form the walks and BFS run on).
+    */
+  private def tradeEdges(
+      s: SparkSession,
+      dir: String,
+      weight: Option[Column] = None,
+      symmetric: Boolean = true
+  ): DataFrame = {
     val o = Tables.orders(s, dir).select(col("o_orderkey"), col("o_custkey"))
-    val l = Tables.lineitem(s, dir).select(col("l_orderkey"), col("l_suppkey"))
-    val cs = o.join(l, col("o_orderkey") === col("l_orderkey"))
-      .select((col("o_custkey") * 2).as("src"), (col("l_suppkey") * 2 + 1).as("dst"))
-    val edges = cs.unionAll(cs.select(col("dst").as("src"), col("src").as("dst")))
-    graft.operators.Graph.pageRank(edges, "src", "dst", iters = 5).orderBy("node")
+    val cs = o.join(Tables.lineitem(s, dir), col("o_orderkey") === col("l_orderkey"))
+      .select((col("o_custkey") * 2).as("src") +: (col("l_suppkey") * 2 + 1).as("dst") +:
+        weight.map(_.as("w")).toSeq: _*)
+    if (!symmetric) cs
+    else cs.unionAll(cs.select(col("dst").as("src") +: col("src").as("dst") +:
+      weight.map(_ => col("w")).toSeq: _*))
   }
 
-  private val tradeEdgesSql: String = {
-    val cs = """SELECT o_custkey * 2 AS src, l_suppkey * 2 + 1 AS dst
-               |  FROM orders JOIN lineitem ON o_orderkey = l_orderkey""".stripMargin
-    s"$cs UNION ALL SELECT dst, src FROM ($cs)"
+  /** [[tradeEdges]] as oracle SQL; `weight` is a SQL expression. */
+  private def tradeEdgesSql(weight: Option[String] = None, symmetric: Boolean = true): String = {
+    val w = weight.fold("")(e => s", $e AS w")
+    val cs = s"""SELECT o_custkey * 2 AS src, l_suppkey * 2 + 1 AS dst$w
+                |  FROM orders JOIN lineitem ON o_orderkey = l_orderkey""".stripMargin
+    if (!symmetric) cs
+    else s"$cs UNION ALL SELECT dst, src${weight.fold("")(_ => ", w")} FROM ($cs)"
   }
+
+  /** The nation-0 suppliers as trade-graph `node`s: the trusted seed
+    * set of the personalized walks and the BFS proximity demos.
+    */
+  private def nationZeroSeeds(s: SparkSession, dir: String): DataFrame =
+    Tables.supplier(s, dir).filter(col("s_nationkey") === 0)
+      .select((col("s_suppkey") * 2 + 1).as("node"))
+
+  private val nationZeroSeedsSql: String =
+    "SELECT s_suppkey * 2 + 1 AS node FROM supplier WHERE s_nationkey = 0"
 
   val pageRankSql: String =
-    graft.operators.Graph.pageRankSql(tradeEdgesSql, iters = 5)
+    graft.operators.Graph.pageRankSql(tradeEdgesSql(), iters = 5)
 
-  /** Personalized PageRank (Graph.personalizedPageRank): the restart
+  /** Personalized PageRank (Graph.pageRank with seeds): the restart
     * mass concentrates on nation-0 suppliers, so ranks measure
     * random-walk proximity to that trusted seed set (the TrustRank
     * shape). Same fixed-point arithmetic, seed-aware oracle.
     */
-  val pageRankPersonalizedQ: Q = (s, dir) => {
-    val o = Tables.orders(s, dir).select(col("o_orderkey"), col("o_custkey"))
-    val l = Tables.lineitem(s, dir).select(col("l_orderkey"), col("l_suppkey"))
-    val cs = o.join(l, col("o_orderkey") === col("l_orderkey"))
-      .select((col("o_custkey") * 2).as("src"), (col("l_suppkey") * 2 + 1).as("dst"))
-    val edges = cs.unionAll(cs.select(col("dst").as("src"), col("src").as("dst")))
-    val seeds = Tables.supplier(s, dir).filter(col("s_nationkey") === 0)
-      .select((col("s_suppkey") * 2 + 1).as("node"))
-    graft.operators.Graph.personalizedPageRank(edges, "src", "dst", seeds, iters = 5)
+  val pageRankPersonalizedQ: Q = (s, dir) =>
+    graft.operators.Graph.pageRank(tradeEdges(s, dir), "src", "dst",
+        seeds = Some(nationZeroSeeds(s, dir))).ranks(5)
       .orderBy("node")
-  }
 
   val pageRankPersonalizedSql: String =
-    graft.operators.Graph.pageRankSql(tradeEdgesSql, iters = 5,
-      seedsSql = Some(
-        "SELECT s_suppkey * 2 + 1 AS node FROM supplier WHERE s_nationkey = 0"))
+    graft.operators.Graph.pageRankSql(tradeEdgesSql(), iters = 5,
+      seedsSql = Some(nationZeroSeedsSql))
 
   /** Data-contract expectations (Profile.expect): five declarative
     * rules over lineitem evaluated in one aggregate over one scan.
@@ -1493,87 +1514,57 @@ object ParityQueries {
       |  c.class_size < 5 AS suppressed
       |FROM e JOIN c USING (event_type, v_band) ORDER BY event_id""".stripMargin
 
-  /** Weighted PageRank (Graph.weightedPageRank): the same trade graph
-    * but rank flows in proportion to TRADE VOLUME — every lineitem
+  /** Weighted PageRank (Graph.pageRank with a weight): the same trade
+    * graph but rank flows in proportion to TRADE VOLUME — every lineitem
     * contributes one unit of weight to its (customer, supplier) edge,
     * so a supplier shipping 40 lines to one customer pulls 40× the
     * rank of a single-line relationship. Duplicate unit edges sum
     * inside the operator; the oracle runs the generator in weighted
     * mode over the same unit-weight edge stream.
     */
-  val pageRankWeightedQ: Q = (s, dir) => {
-    val o = Tables.orders(s, dir).select(col("o_orderkey"), col("o_custkey"))
-    val l = Tables.lineitem(s, dir).select(col("l_orderkey"), col("l_suppkey"))
-    val cs = o.join(l, col("o_orderkey") === col("l_orderkey"))
-      .select((col("o_custkey") * 2).as("src"), (col("l_suppkey") * 2 + 1).as("dst"),
-        lit(1L).as("w"))
-    val edges = cs.unionAll(
-      cs.select(col("dst").as("src"), col("src").as("dst"), col("w")))
-    graft.operators.Graph.weightedPageRank(edges, "src", "dst", col("w"), iters = 5)
+  val pageRankWeightedQ: Q = (s, dir) =>
+    graft.operators.Graph.pageRank(tradeEdges(s, dir, weight = Some(lit(1L))), "src", "dst",
+        weight = Some(col("w"))).ranks(5)
       .orderBy("node")
-  }
 
-  val pageRankWeightedSql: String = {
-    val cs = """SELECT o_custkey * 2 AS src, l_suppkey * 2 + 1 AS dst, 1 AS w
-               |  FROM orders JOIN lineitem ON o_orderkey = l_orderkey""".stripMargin
-    graft.operators.Graph.pageRankSql(
-      s"$cs UNION ALL SELECT dst, src, w FROM ($cs)", iters = 5, weighted = true)
-  }
+  val pageRankWeightedSql: String =
+    graft.operators.Graph.pageRankSql(tradeEdgesSql(weight = Some("1")), iters = 5,
+      weighted = true)
 
-  /** Seeded + weighted PageRank (Graph.personalizedWeightedPageRank):
+  /** Seeded + weighted PageRank (Graph.pageRank with both options):
     * restart mass concentrated on nation-0 suppliers AND rank flowing
     * in proportion to trade volume — trusted-proximity weighted by how
     * much actually ships (the TrustRank-on-trade-volume composition).
     * Oracle: the shared generator with BOTH options set.
     */
-  val pageRankPprWeightedQ: Q = (s, dir) => {
-    val o = Tables.orders(s, dir).select(col("o_orderkey"), col("o_custkey"))
-    val l = Tables.lineitem(s, dir).select(col("l_orderkey"), col("l_suppkey"))
-    val cs = o.join(l, col("o_orderkey") === col("l_orderkey"))
-      .select((col("o_custkey") * 2).as("src"), (col("l_suppkey") * 2 + 1).as("dst"),
-        lit(1L).as("w"))
-    val edges = cs.unionAll(
-      cs.select(col("dst").as("src"), col("src").as("dst"), col("w")))
-    val seeds = Tables.supplier(s, dir).filter(col("s_nationkey") === 0)
-      .select((col("s_suppkey") * 2 + 1).as("node"))
-    graft.operators.Graph.personalizedWeightedPageRank(
-        edges, "src", "dst", seeds, col("w"), iters = 5)
+  val pageRankPprWeightedQ: Q = (s, dir) =>
+    graft.operators.Graph.pageRank(tradeEdges(s, dir, weight = Some(lit(1L))), "src", "dst",
+        seeds = Some(nationZeroSeeds(s, dir)), weight = Some(col("w"))).ranks(5)
       .orderBy("node")
-  }
 
-  val pageRankPprWeightedSql: String = {
-    val cs = """SELECT o_custkey * 2 AS src, l_suppkey * 2 + 1 AS dst, 1 AS w
-               |  FROM orders JOIN lineitem ON o_orderkey = l_orderkey""".stripMargin
-    graft.operators.Graph.pageRankSql(
-      s"$cs UNION ALL SELECT dst, src, w FROM ($cs)", iters = 5, weighted = true,
-      seedsSql = Some(
-        "SELECT s_suppkey * 2 + 1 AS node FROM supplier WHERE s_nationkey = 0"))
-  }
+  val pageRankPprWeightedSql: String =
+    graft.operators.Graph.pageRankSql(tradeEdgesSql(weight = Some("1")), iters = 5,
+      weighted = true, seedsSql = Some(nationZeroSeedsSql))
 
-  /** PageRank restart (Graph.pageRankFrom): 3 rounds, hand the OUTPUT
-    * ranks over, resume for 2 more — and hash-match the UNINTERRUPTED
+  /** PageRank restart (PreparedPageRank.ranks with init): 3 rounds,
+    * hand the OUTPUT ranks over, resume for 2 more on the same
+    * prepared graph — and hash-match the UNINTERRUPTED
     * 5-round oracle verbatim (the long-run restart economy: the
     * nano-unit requantization on resume is exact, so the split run IS
     * the straight run).
     */
   val pageRankResumeQ: Q = (s, dir) => {
-    val o = Tables.orders(s, dir).select(col("o_orderkey"), col("o_custkey"))
-    val l = Tables.lineitem(s, dir).select(col("l_orderkey"), col("l_suppkey"))
-    val cs = o.join(l, col("o_orderkey") === col("l_orderkey"))
-      .select((col("o_custkey") * 2).as("src"), (col("l_suppkey") * 2 + 1).as("dst"))
-    val edges = cs.unionAll(cs.select(col("dst").as("src"), col("src").as("dst")))
-    // pageRankResumed: ONE shared graph prep feeds both legs (r12
-    // verdict #1 — the duplicated edge-distinct + outdeg join +
-    // checkpoint was the warm-start family's whole overhead); output
-    // bit-identical to the two-call pageRank → pageRankFrom form.
-    graft.operators.Graph.pageRankResumed(edges, "src", "dst",
-      itersFirst = 3, itersResumed = 2).orderBy("node")
+    // ONE prepared graph feeds both legs (r12 verdict #1 — a second
+    // edge-distinct + outdeg join + checkpoint was the warm-start
+    // family's whole overhead)
+    val g = graft.operators.Graph.pageRank(tradeEdges(s, dir), "src", "dst")
+    g.ranks(2, init = Some(g.ranks(3))).orderBy("node")
   }
 
   // the resumed split run must equal the straight 5-iteration oracle
   val pageRankResumeSql: String = pageRankSql
 
-  /** Incremental PageRank on an edge delta (Graph.pageRankDelta): the
+  /** Incremental PageRank on an edge delta (PreparedPageRank.mutate): the
     * converged 5-round ranks of YESTERDAY'S trade graph (customers
     * ck%10=3 not yet arrived) warm-start 3 refresh rounds on the
     * mutated graph — those customers' edges arrive, supplier-sk%17=2
@@ -1596,12 +1587,12 @@ object ParityQueries {
     val old = sym(j.filter(col("ck") % 10 =!= 3))
     val adds = sym(j.filter(col("ck") % 10 === 3))
     val rems = sym(j.filter(col("sk") % 17 === 2))
-    // pageRankDeltaWarm: the old graph preps ONCE for both the warm
-    // 5-round init and the delta anti-join (which now runs over the
-    // distinct checkpointed edge table, not the raw sym frame) — r12
-    // verdict #1; output bit-identical to pageRank → pageRankDelta.
-    graft.operators.Graph.pageRankDeltaWarm(old, "src", "dst", adds, rems,
-      itersInit = 5, itersRefresh = 3).orderBy("node")
+    // the old graph preps ONCE for both the warm 5-round init and the
+    // delta anti-join (which runs over the distinct checkpointed edge
+    // table, not the raw sym frame) — r12 verdict #1
+    val g = graft.operators.Graph.pageRank(old, "src", "dst")
+    val init = g.ranks(5)
+    g.mutate(adds, rems).ranks(3, init = Some(init)).orderBy("node")
   }
 
   val pageRankDeltaSql: String = {
@@ -1627,22 +1618,13 @@ object ParityQueries {
     * personalized PageRank; 4 rounds of exact integer min-plus,
     * oracle unrolled by the shared generator.
     */
-  val shortestPathQ: Q = (s, dir) => {
-    val o = Tables.orders(s, dir).select(col("o_orderkey"), col("o_custkey"))
-    val l = Tables.lineitem(s, dir).select(col("l_orderkey"), col("l_suppkey"))
-    val cs = o.join(l, col("o_orderkey") === col("l_orderkey"))
-      .select((col("o_custkey") * 2).as("src"), (col("l_suppkey") * 2 + 1).as("dst"))
-    val edges = cs.unionAll(cs.select(col("dst").as("src"), col("src").as("dst")))
-    val seeds = Tables.supplier(s, dir).filter(col("s_nationkey") === 0)
-      .select((col("s_suppkey") * 2 + 1).as("node"))
-    graft.operators.Graph.shortestPaths(edges, "src", "dst", seeds, maxHops = 4)
+  val shortestPathQ: Q = (s, dir) =>
+    graft.operators.Graph.shortestPaths(tradeEdges(s, dir), "src", "dst",
+        nationZeroSeeds(s, dir), maxHops = 4)
       .orderBy("node")
-  }
 
   val shortestPathSql: String =
-    graft.operators.Graph.shortestPathsSql(tradeEdgesSql,
-      "SELECT s_suppkey * 2 + 1 AS node FROM supplier WHERE s_nationkey = 0",
-      maxHops = 4)
+    graft.operators.Graph.shortestPathsSql(tradeEdgesSql(), nationZeroSeedsSql, maxHops = 4)
 
   /** Weighted bounded-hop shortest paths: the same trade graph with
     * each (customer, supplier) edge costing its cheapest line number
@@ -1650,49 +1632,50 @@ object ParityQueries {
     * min-cost proximity instead of hop count, identical integer
     * relaxation.
     */
-  val shortestPathWeightedQ: Q = (s, dir) => {
-    val o = Tables.orders(s, dir).select(col("o_orderkey"), col("o_custkey"))
-    val l = Tables.lineitem(s, dir)
-      .select(col("l_orderkey"), col("l_suppkey"), col("l_linenumber"))
-    val cs = o.join(l, col("o_orderkey") === col("l_orderkey"))
-      .select((col("o_custkey") * 2).as("src"), (col("l_suppkey") * 2 + 1).as("dst"),
-        col("l_linenumber").cast("long").as("w"))
-    val edges = cs.unionAll(
-      cs.select(col("dst").as("src"), col("src").as("dst"), col("w")))
-    val seeds = Tables.supplier(s, dir).filter(col("s_nationkey") === 0)
-      .select((col("s_suppkey") * 2 + 1).as("node"))
-    graft.operators.Graph.shortestPaths(edges, "src", "dst", seeds,
-        maxHops = 4, weight = Some(col("w")))
+  val shortestPathWeightedQ: Q = (s, dir) =>
+    graft.operators.Graph.shortestPaths(
+        tradeEdges(s, dir, weight = Some(col("l_linenumber").cast("long"))), "src", "dst",
+        nationZeroSeeds(s, dir), maxHops = 4, weight = Some(col("w")))
       .orderBy("node")
-  }
 
-  val shortestPathWeightedSql: String = {
-    val cs = """SELECT o_custkey * 2 AS src, l_suppkey * 2 + 1 AS dst, l_linenumber AS w
-               |  FROM orders JOIN lineitem ON o_orderkey = l_orderkey""".stripMargin
-    graft.operators.Graph.shortestPathsSql(
-      s"$cs UNION ALL SELECT dst, src, w FROM ($cs)",
-      "SELECT s_suppkey * 2 + 1 AS node FROM supplier WHERE s_nationkey = 0",
-      maxHops = 4, weighted = true)
-  }
+  val shortestPathWeightedSql: String =
+    graft.operators.Graph.shortestPathsSql(tradeEdgesSql(weight = Some("l_linenumber")),
+      nationZeroSeedsSql, maxHops = 4, weighted = true)
 
   /** Label-propagation communities (Graph.labelPropagation) over the
     * trade graph: 4 deterministic sync rounds (most-frequent neighbor
     * label, ties to the smallest), oracle unrolled by
     * Graph.labelPropagationSql from the same constants.
     */
-  val labelPropagationQ: Q = (s, dir) => {
-    val o = Tables.orders(s, dir).select(col("o_orderkey"), col("o_custkey"))
-    val l = Tables.lineitem(s, dir).select(col("l_orderkey"), col("l_suppkey"))
-    val cs = o.join(l, col("o_orderkey") === col("l_orderkey"))
-      .select((col("o_custkey") * 2).as("src"), (col("l_suppkey") * 2 + 1).as("dst"))
-    graft.operators.Graph.labelPropagation(cs, "src", "dst", iters = 4).orderBy("node")
-  }
+  val labelPropagationQ: Q = (s, dir) =>
+    graft.operators.Graph.labelPropagation(tradeEdges(s, dir, symmetric = false), "src", "dst",
+      iters = 4).orderBy("node")
 
   val labelPropagationSql: String =
-    graft.operators.Graph.labelPropagationSql(
-      """SELECT o_custkey * 2 AS src, l_suppkey * 2 + 1 AS dst
-        |  FROM orders JOIN lineitem ON o_orderkey = l_orderkey""".stripMargin,
-      iters = 4)
+    graft.operators.Graph.labelPropagationSql(tradeEdgesSql(symmetric = false), iters = 4)
+
+  /** The support-floored part co-purchase graph shared by the graph
+    * demos (q_graph_cc / _bigstar / _kcore / _louvain,
+    * q_triangle_count): parts co-ordered ≥ 2 times — the floor keeps
+    * it sparse (the co-supplier graph measured 91% dense at sf0.1).
+    */
+  private def copurchaseEdges(s: SparkSession, dir: String): DataFrame = {
+    val ti = Tables.lineitem(s, dir)
+      .select(col("l_orderkey").as("t"), col("l_partkey").as("i")).distinct()
+    ti.as("x")
+      .join(ti.as("y"), col("x.t") === col("y.t") && col("x.i") < col("y.i"))
+      .groupBy(col("x.i").as("src"), col("y.i").as("dst"))
+      .agg(count(lit(1)).as("c"))
+      .filter(col("c") >= 2)
+      .select(col("src"), col("dst"))
+  }
+
+  private val copurchaseEdgesSql: String =
+    """SELECT x.i AS src, y.i AS dst
+      |  FROM (SELECT DISTINCT l_orderkey AS t, l_partkey AS i FROM lineitem) x
+      |  JOIN (SELECT DISTINCT l_orderkey AS t, l_partkey AS i FROM lineitem) y
+      |    ON x.t = y.t AND x.i < y.i
+      |  GROUP BY 1, 2 HAVING count(*) >= 2""".stripMargin
 
   /** Per-node triangles + clustering coefficient
     * (Graph.triangleCount) over the part co-purchase graph — parts
@@ -1705,24 +1688,11 @@ object ParityQueries {
     * directly — same triangle set, so results agree with no
     * orientation replay.
     */
-  val triangleCountQ: Q = (s, dir) => {
-    val ti = Tables.lineitem(s, dir)
-      .select(col("l_orderkey").as("t"), col("l_partkey").as("i")).distinct()
-    val e = ti.as("x")
-      .join(ti.as("y"), col("x.t") === col("y.t") && col("x.i") < col("y.i"))
-      .groupBy(col("x.i").as("src"), col("y.i").as("dst"))
-      .agg(count(lit(1)).as("c"))
-      .filter(col("c") >= 2)
-      .select(col("src"), col("dst"))
-    graft.operators.Graph.triangleCount(e, "src", "dst").orderBy("node")
-  }
+  val triangleCountQ: Q = (s, dir) =>
+    graft.operators.Graph.triangleCount(copurchaseEdges(s, dir), "src", "dst").orderBy("node")
 
   val triangleCountSql: String =
-    """WITH ti AS (SELECT DISTINCT l_orderkey AS t, l_partkey AS i FROM lineitem),
-      |und AS (
-      |  SELECT x.i AS a, y.i AS b
-      |  FROM ti x JOIN ti y ON x.t = y.t AND x.i < y.i
-      |  GROUP BY 1, 2 HAVING count(*) >= 2),
+    s"""WITH und AS (SELECT src AS a, dst AS b FROM ($copurchaseEdgesSql)),
       |deg AS (
       |  SELECT node, count(*) AS deg
       |  FROM (SELECT a AS node FROM und UNION ALL SELECT b FROM und) u GROUP BY 1),
@@ -1751,29 +1721,6 @@ object ParityQueries {
     * dense demo graphs; 9 components at sf0.01), component = min
     * reachable id, oracle = the recursive transitive closure.
     */
-  /** The support-floored part co-purchase graph shared by the graph
-    * demos (q_graph_cc / _bigstar / _kcore / _louvain,
-    * q_triangle_count): parts co-ordered ≥ 2 times — the floor keeps
-    * it sparse (the co-supplier graph measured 91% dense at sf0.1).
-    */
-  private def copurchaseEdges(s: SparkSession, dir: String): DataFrame = {
-    val ti = Tables.lineitem(s, dir)
-      .select(col("l_orderkey").as("t"), col("l_partkey").as("i")).distinct()
-    ti.as("x")
-      .join(ti.as("y"), col("x.t") === col("y.t") && col("x.i") < col("y.i"))
-      .groupBy(col("x.i").as("src"), col("y.i").as("dst"))
-      .agg(count(lit(1)).as("c"))
-      .filter(col("c") >= 2)
-      .select(col("src"), col("dst"))
-  }
-
-  private val copurchaseEdgesSql: String =
-    """SELECT x.i AS src, y.i AS dst
-      |  FROM (SELECT DISTINCT l_orderkey AS t, l_partkey AS i FROM lineitem) x
-      |  JOIN (SELECT DISTINCT l_orderkey AS t, l_partkey AS i FROM lineitem) y
-      |    ON x.t = y.t AND x.i < y.i
-      |  GROUP BY 1, 2 HAVING count(*) >= 2""".stripMargin
-
   val graphCcQ: Q = (s, dir) => {
     val e = copurchaseEdges(s, dir)
     graft.operators.Graph.connectedComponents(e, "src", "dst").orderBy("node")
@@ -1792,17 +1739,9 @@ object ParityQueries {
     * O(diameter), per-round shuffle bounded by the oriented edge
     * count.
     */
-  val graphCcBigStarQ: Q = (s, dir) => {
-    val ti = Tables.lineitem(s, dir)
-      .select(col("l_orderkey").as("t"), col("l_partkey").as("i")).distinct()
-    val e = ti.as("x")
-      .join(ti.as("y"), col("x.t") === col("y.t") && col("x.i") < col("y.i"))
-      .groupBy(col("x.i").as("src"), col("y.i").as("dst"))
-      .agg(count(lit(1)).as("c"))
-      .filter(col("c") >= 2)
-      .select(col("src"), col("dst"))
-    graft.operators.Graph.connectedComponentsBigStar(e, "src", "dst").orderBy("node")
-  }
+  val graphCcBigStarQ: Q = (s, dir) =>
+    graft.operators.Graph.connectedComponentsBigStar(copurchaseEdges(s, dir), "src", "dst")
+      .orderBy("node")
 
   /** HITS hubs & authorities (Graph.hits) over the DIRECTED trade
     * graph (customer → supplier): the bipartite shape HITS was built
@@ -1812,19 +1751,12 @@ object ParityQueries {
     * pageRank fixed-point recipe; the oracle unrolls them from the
     * same constants (Graph.hitsSql).
     */
-  val hitsQ: Q = (s, dir) => {
-    val o = Tables.orders(s, dir).select(col("o_orderkey"), col("o_custkey"))
-    val l = Tables.lineitem(s, dir).select(col("l_orderkey"), col("l_suppkey"))
-    val edges = o.join(l, col("o_orderkey") === col("l_orderkey"))
-      .select((col("o_custkey") * 2).as("src"), (col("l_suppkey") * 2 + 1).as("dst"))
-    graft.operators.Graph.hits(edges, "src", "dst", iters = 3).orderBy("node")
-  }
+  val hitsQ: Q = (s, dir) =>
+    graft.operators.Graph.hits(tradeEdges(s, dir, symmetric = false), "src", "dst", iters = 3)
+      .orderBy("node")
 
   val hitsSqlQ: String =
-    graft.operators.Graph.hitsSql(
-      """SELECT o_custkey * 2 AS src, l_suppkey * 2 + 1 AS dst
-        |  FROM orders JOIN lineitem ON o_orderkey = l_orderkey""".stripMargin,
-      iters = 3)
+    graft.operators.Graph.hitsSql(tradeEdgesSql(symmetric = false), iters = 3)
 
   /** Modularity audit (Graph.modularity) of the label-propagation
     * partition: Q of the 4-round LPA communities over the same trade
@@ -1833,24 +1765,17 @@ object ParityQueries {
     * single closing division (DECIMAL(38,0) ≡ HUGEINT), labels fed to
     * the oracle by re-running the LPA unroll as a subquery.
     */
-  val modularityQ: Q = (s, dir) => {
-    val o = Tables.orders(s, dir).select(col("o_orderkey"), col("o_custkey"))
-    val l = Tables.lineitem(s, dir).select(col("l_orderkey"), col("l_suppkey"))
-    val cs = o.join(l, col("o_orderkey") === col("l_orderkey"))
-      .select((col("o_custkey") * 2).as("src"), (col("l_suppkey") * 2 + 1).as("dst"))
+  val modularityQ: Q = (s, dir) =>
     // fused LPA + modularity audit (r13 verdict #5): ONE symmetric
     // distinct edge table serves both the LPA rounds and the audit's
     // canonical frame — the two-operator form distinct-shuffled the
     // same edge list twice. Values identical; same oracle.
-    graft.operators.Graph.labelPropagationModularity(cs, "src", "dst", iters = 4)
+    graft.operators.Graph.labelPropagationModularity(tradeEdges(s, dir, symmetric = false),
+        "src", "dst", iters = 4)
       .orderBy("label")
-  }
 
   val modularitySqlQ: String =
-    graft.operators.Graph.modularitySql(
-      """SELECT o_custkey * 2 AS src, l_suppkey * 2 + 1 AS dst
-        |  FROM orders JOIN lineitem ON o_orderkey = l_orderkey""".stripMargin,
-      labelPropagationSql)
+    graft.operators.Graph.modularitySql(tradeEdgesSql(symmetric = false), labelPropagationSql)
 
   /** Louvain move-phase communities (Graph.louvainMoves) over the
     * support-floored part co-purchase graph (the sparse demo graph of

@@ -66,6 +66,16 @@ object Bridge {
     }
   }
 
+  /** Block until the SparkContext's listener bus has delivered every
+    * event posted so far (`listenerBus` is `private[spark]`). Query
+    * execution listeners run on that bus, so after an action returns
+    * and the bus drains, every event of that action has been seen —
+    * no polling. Throws a TimeoutException if the bus is still busy
+    * after 60 s.
+    */
+  def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty(60000L)
+
   // NOTE (r14): a `claimHashLayout` helper lived here briefly —
   // re-declaring HashPartitioning + sort order on a checkpoint's
   // LogicalRDD leaf so iterative loops could skip the static side's

@@ -167,11 +167,12 @@ class OperatorSpec extends SparkSpec {
   test("pageRankFrom: every split point resumes bit-identically to the straight run") {
     import graft.operators.Graph
     val e = Seq((1L, 2L), (2L, 3L), (3L, 1L), (1L, 3L), (4L, 1L)).toDF("src", "dst")
-    val straight = Graph.pageRank(e, "src", "dst", iters = 6)
+    val g = Graph.pageRank(e, "src", "dst")
+    val straight = g.ranks(6)
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     for (split <- 1 to 5) {
-      val first = Graph.pageRank(e, "src", "dst", iters = split)
-      val resumed = Graph.pageRankFrom(e, "src", "dst", first, iters = 6 - split)
+      val first = g.ranks(split)
+      val resumed = g.ranks(6 - split, init = Some(first))
         .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
       assert(resumed == straight, s"split at $split must be exact: $resumed vs $straight")
     }
@@ -208,7 +209,7 @@ class OperatorSpec extends SparkSpec {
     import graft.operators.Graph
     // directed 4-cycle: perfect symmetry — every rank EXACTLY equal
     val cyc = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 1L)).toDF("src", "dst")
-    val cr = Graph.pageRank(cyc, "src", "dst", iters = 5).collect()
+    val cr = Graph.pageRank(cyc, "src", "dst").ranks(5).collect()
       .map(_.getAs[Double]("rank")).toSet
     assert(cr.size == 1, s"cycle ranks must be identical, got $cr")
     assert(math.abs(cr.head - 0.25) < 1e-6)
@@ -216,7 +217,7 @@ class OperatorSpec extends SparkSpec {
     // star into a dangling hub: hub outranks every leaf; dangling mass
     // redistributes so total stays ~1 (not leaking to 0.15-base only)
     val star = (1L to 10L).map(i => (i, 0L)).toDF("src", "dst")
-    val sr = Graph.pageRank(star, "src", "dst", iters = 10).collect()
+    val sr = Graph.pageRank(star, "src", "dst").ranks(10).collect()
       .map(r => r.getAs[Long]("node") -> r.getAs[Double]("rank")).toMap
     assert(sr(0L) > sr(1L) * 3, s"hub must dominate: ${sr(0L)} vs ${sr(1L)}")
     assert(cr.sum * 4 > 0.999 && sr.values.sum > 0.999 && sr.values.sum < 1.001,
@@ -229,8 +230,8 @@ class OperatorSpec extends SparkSpec {
     // rotates with period 4, so short runs leave a transient bulge
     // mid-cycle) land on the analytic fixed point
     // r1 = 0.15/(1 − 0.85⁴), r_{k+1} = 0.85·r_k.
-    val pr = Graph.personalizedPageRank(cyc, "src", "dst",
-        Seq(Tuple1(1L)).toDF("node"), iters = 40).collect()
+    val pr = Graph.pageRank(cyc, "src", "dst",
+        seeds = Some(Seq(Tuple1(1L)).toDF("node"))).ranks(40).collect()
       .map(r => r.getAs[Long]("node") -> r.getAs[Double]("rank")).toMap
     val r1 = 0.15 / (1.0 - math.pow(0.85, 4))
     for ((n, want) <- Seq(1L -> r1, 2L -> r1 * 0.85,
@@ -244,7 +245,7 @@ class OperatorSpec extends SparkSpec {
     // pulls proportionally more rank; duplicate unit edges must sum
     val we = (Seq.fill(9)((1L, 2L)) ++ Seq((1L, 3L), (2L, 1L), (3L, 1L)))
       .map { case (a, b) => (a, b, 1L) }.toDF("src", "dst", "w")
-    val wr = Graph.weightedPageRank(we, "src", "dst", col("w"), iters = 20)
+    val wr = Graph.pageRank(we, "src", "dst", weight = Some(col("w"))).ranks(20)
       .collect().map(r => r.getAs[Long]("node") -> r.getAs[Double]("rank")).toMap
     assert(wr(2L) > wr(3L) * 3, s"9:1 weights must skew the split: $wr")
     assert(wr.values.sum > 0.999 && wr.values.sum < 1.001)
@@ -793,27 +794,27 @@ class OperatorSpec extends SparkSpec {
       .toDF("src", "dst")
     val adds = Seq((5L, 1L)).toDF("src", "dst")
     val rems = Seq((4L, 5L)).toDF("src", "dst")
-    val none = base.limit(0)
-    val init = Graph.pageRank(base, "src", "dst", iters = 5)
-    // the delta run IS pageRankFrom on the hand-mutated edge list
+    val g = Graph.pageRank(base, "src", "dst")
+    val init = g.ranks(5)
+    // the delta run IS a resume on the hand-mutated edge list
     val mutated = Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L), (4L, 1L), (5L, 4L), (5L, 1L))
       .toDF("src", "dst")
-    val viaDelta = Graph.pageRankDelta(base, "src", "dst", adds, rems, init, iters = 3)
+    val gm = g.mutate(adds, rems)
+    val viaDelta = gm.ranks(3, init = Some(init))
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    val viaFrom = Graph.pageRankFrom(mutated, "src", "dst", init, iters = 3)
+    val viaFrom = Graph.pageRank(mutated, "src", "dst").ranks(3, init = Some(init))
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     assert(viaDelta == viaFrom, "delta application + warm start must equal resume on mutated graph")
+    // a delta on a weighted graph is out of mutate's scope: fail loud
+    intercept[IllegalArgumentException](
+      Graph.pageRank(base.withColumn("w", lit(1L)), "src", "dst", weight = Some(col("w")))
+        .mutate(adds, rems))
     // warm-start economy: converged base ranks reach the tolerance on
     // the mutated graph in strictly fewer rounds than a cold start
-    val (convergedBase, _) =
-      Graph.pageRankDeltaConverged(base, "src", "dst", none, none, None,
-        tolNano = 1000L, maxIters = 50)
+    val (convergedBase, _) = g.converge(tolNano = 1000L, maxIters = 50)
     val (warmRanks, warmRounds) =
-      Graph.pageRankDeltaConverged(base, "src", "dst", adds, rems, Some(convergedBase),
-        tolNano = 1000000L, maxIters = 50)
-    val (coldRanks, coldRounds) =
-      Graph.pageRankDeltaConverged(base, "src", "dst", adds, rems, None,
-        tolNano = 1000000L, maxIters = 50)
+      gm.converge(tolNano = 1000000L, maxIters = 50, init = Some(convergedBase))
+    val (coldRanks, coldRounds) = gm.converge(tolNano = 1000000L, maxIters = 50)
     assert(warmRounds < coldRounds,
       s"warm start must converge faster: warm $warmRounds vs cold $coldRounds rounds")
     // both land on the same fixed point to within the tolerance

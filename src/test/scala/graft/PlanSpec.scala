@@ -1080,14 +1080,14 @@ class PlanSpec extends SparkSpec {
     try {
       val edges = spark.read.parquet(s"$dir/lineitem.parquet")
         .select(col("l_orderkey").as("src"), col("l_partkey").as("dst"))
-      graft.operators.Graph.pageRank(edges, "src", "dst", iters = 2).collect()
-      // listener events post asynchronously: the loop runs 1 seed-count
-      // + 2 dangling collects before the final action — wait for all 4
-      val deadline = System.nanoTime() + 10_000_000_000L
-      while (System.nanoTime() < deadline &&
-          stagePlans.toArray(Array.empty[String]).length < 4) Thread.sleep(100)
+      graft.operators.Graph.pageRank(edges, "src", "dst").ranks(2).collect()
+      // listener events post asynchronously: drain the bus so all of
+      // them — 1 seed-count + 2 dangling collects + the final action —
+      // have been delivered
+      org.apache.spark.sql.graft.Bridge.drainListenerBus(spark.sparkContext)
     } finally spark.listenerManager.unregister(listener)
     import scala.jdk.CollectionConverters._
+    assert(stagePlans.size >= 4, s"expected >= 4 captured stages, saw ${stagePlans.size}")
     val offenders = stagePlans.asScala.filter(p =>
       p.contains("BroadcastNestedLoopJoin") || p.contains("CartesianProduct"))
     assert(offenders.isEmpty,
@@ -1201,8 +1201,8 @@ class PlanSpec extends SparkSpec {
     // r13 verdict #7b: the shared-prep warm start must keep running
     // exactly one prep's worth of control-plane aggregates. The seed
     // count (sum(sf)) is collected once per prep, so the listener must
-    // see exactly ONE such query for the resumed pair — the two-call
-    // form runs two.
+    // see exactly ONE such query for the resumed pair on one prepared
+    // graph — preparing twice runs two.
     import org.apache.spark.sql.functions._
     val e = spark.range(400).select((col("id") % 40).as("src"), (col("id") % 23).as("dst"))
     val snPlans = new java.util.concurrent.atomic.AtomicInteger(0)
@@ -1215,11 +1215,11 @@ class PlanSpec extends SparkSpec {
     }
     spark.listenerManager.register(listener)
     try {
-      graft.operators.Graph.pageRankResumed(e, "src", "dst",
-        itersFirst = 2, itersResumed = 2).collect()
-      // listener events post asynchronously — poll before asserting
-      val deadline = System.nanoTime() + 10_000_000_000L
-      while (System.nanoTime() < deadline && snPlans.get() < 1) Thread.sleep(100)
+      val g = graft.operators.Graph.pageRank(e, "src", "dst")
+      g.ranks(2, init = Some(g.ranks(2))).collect()
+      // listener events post asynchronously — drain the bus so a second
+      // prep's event cannot arrive after the assertion
+      org.apache.spark.sql.graft.Bridge.drainListenerBus(spark.sparkContext)
     } finally spark.listenerManager.unregister(listener)
     assert(snPlans.get() == 1,
       s"resumed pair must prep once (one seed-count aggregate), saw ${snPlans.get()}")

@@ -412,13 +412,46 @@ class PropertySpec extends SparkSpec {
     forAll(undirGen, cases = 4) { edges =>
       val df = edges.toDF("src", "dst")
       val none = df.limit(0)
-      val init = graft.operators.Graph.pageRank(df, "src", "dst", iters = 3)
-      val viaDelta = graft.operators.Graph.pageRankDelta(
-          df, "src", "dst", none, none, init, iters = 2)
+      val g = graft.operators.Graph.pageRank(df, "src", "dst")
+      val viaDelta = g.mutate(none, none).ranks(2, init = Some(g.ranks(3)))
         .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-      val straight = graft.operators.Graph.pageRank(df, "src", "dst", iters = 5)
+      val straight = graft.operators.Graph.pageRank(df, "src", "dst").ranks(5)
         .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
       assert(viaDelta == straight, s"edges=$edges")
+    }
+  }
+
+  /** Directed multigraphs (duplicate edges kept) with a non-empty
+    * delta: `removed` hits existing edges (and one that may not exist),
+    * `added` may repeat edges already present.
+    */
+  private val deltaGen: Gen[(List[(Long, Long)], List[(Long, Long)], List[(Long, Long)])] = for {
+    nNodes <- Gen.choose(3, 7)
+    pair = for {
+      s <- Gen.choose(0, nNodes - 1)
+      d <- Gen.choose(0, nNodes - 1)
+    } yield (s.toLong, d.toLong)
+    base <- Gen.listOfN(12, pair)
+    dups <- Gen.choose(1, 4)
+    nAdd <- Gen.choose(1, 4)
+    added <- Gen.listOfN(nAdd, pair)
+    nRem <- Gen.choose(1, 3)
+    removed <- Gen.listOfN(nRem, Gen.oneOf(base))
+    stray <- pair
+  } yield (base ++ base.take(dups), added, stray :: removed)
+
+  test("property: mutate on the prepared distinct edges == preparing (edges ∖ removed) ∪ added") {
+    forAll(deltaGen, cases = 4) { case (edges, added, removed) =>
+      val g = graft.operators.Graph.pageRank(edges.toDF("src", "dst"), "src", "dst")
+      val init = g.ranks(2)
+      val viaMutate = g.mutate(added.toDF("src", "dst"), removed.toDF("src", "dst"))
+        .ranks(3, init = Some(init))
+        .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+      val raw = edges.filterNot(removed.toSet) ++ added
+      val viaRaw = graft.operators.Graph.pageRank(raw.toDF("src", "dst"), "src", "dst")
+        .ranks(3, init = Some(init))
+        .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+      assert(viaMutate == viaRaw, s"edges=$edges added=$added removed=$removed")
     }
   }
 
