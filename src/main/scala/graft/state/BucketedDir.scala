@@ -3,8 +3,9 @@ package graft.state
 import java.nio.charset.StandardCharsets
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.core.Names
 
@@ -59,8 +60,7 @@ object BucketedDir {
       root: String,
       keyCol: String,
       numBuckets: Int,
-      keepVersions: Int,
-      publishParallelism: Int
+      keepVersions: Int
   ): Int =
     bucketCount(spark, root) match {
       case Some(stored) =>
@@ -78,7 +78,7 @@ object BucketedDir {
         // claims to support (ADVICE r3). Migration runs BEFORE _BUCKETS
         // is written, so a crash mid-seed re-runs it on the next merge
         // (re-publishing a bucket just advances its version — idempotent).
-        migrateFlatLayout(spark, root, keyCol, numBuckets, keepVersions, publishParallelism)
+        migrateFlatLayout(spark, root, keyCol, numBuckets, keepVersions)
         val hfs = VersionedDir.fs(spark, root)
         hfs.mkdirs(new Path(root))
         val out = hfs.create(new Path(new Path(root), "_BUCKETS"), true)
@@ -96,13 +96,12 @@ object BucketedDir {
       root: String,
       keyCol: String,
       numBuckets: Int,
-      keepVersions: Int,
-      publishParallelism: Int
+      keepVersions: Int
   ): Unit =
     VersionedDir.read(spark, root).foreach { flat =>
       // materialize off the flat files before they are deleted below
       publishPartitioned(spark, root, flat, keyCol, numBuckets,
-        minVersion = 0L, keepVersions, publishParallelism)((_, part) => part)
+        minVersion = 0L, keepVersions)((_, part) => part)
       val hfs = VersionedDir.fs(spark, root)
       val rootPath = new Path(root)
       VersionedDir.committedVersions(hfs, rootPath).foreach(p => hfs.delete(p, true))
@@ -128,13 +127,16 @@ object BucketedDir {
     }
   }
 
-  /** Read ONE bucket's current version (None if that bucket was never
-    * written) — the point-query path: a key's row can only live in its
-    * hash bucket, so a lookup scans 1/numBuckets of the table (plus the
-    * key predicate pushed into that bucket's parquet scan).
+  /** Read ONE bucket's current version with the table's `schema` (None
+    * if that bucket was never written) — the point-query path: a key's
+    * row can only live in its hash bucket, so a lookup scans
+    * 1/numBuckets of the table (plus the key predicate pushed into that
+    * bucket's parquet scan), and the given schema spares the per-lookup
+    * schema-inference job.
     */
-  def readBucket(spark: SparkSession, root: String, bucket: Int): Option[DataFrame] =
-    VersionedDir.read(spark, new Path(new Path(root), bucketName(bucket)).toString)
+  def readBucket(spark: SparkSession, root: String, bucket: Int, schema: StructType): Option[DataFrame] =
+    VersionedDir.currentVersion(VersionedDir.fs(spark, root), new Path(new Path(root), bucketName(bucket)))
+      .map(v => spark.read.schema(schema).parquet(v.toString))
 
   /** The bucket a key value routes to, using the table's pinned count
     * and the SAME Catalyst expression tree as writes (`keyType` must be
@@ -166,25 +168,33 @@ object BucketedDir {
   }
 
   /** Merge a keyed batch, rewriting only the buckets its keys hash
-    * into. For each touched bucket, `mergeFn(existingBucketRows,
-    * batchRowsForBucket)` produces the bucket's new contents, published
-    * strictly above the bucket's current version (and `minVersion` —
-    * replay protection, see [[VersionedDir.publish]]). Untouched
-    * buckets' files are not rewritten (byte-identical across the merge;
-    * BucketedSinkSpec pins this).
+    * into. For each touched bucket, the bucket's new contents are
+    * `mergeFn(existingRows, batchRows)` restricted to that bucket,
+    * published strictly above the bucket's current version (and
+    * `minVersion` — replay protection, see [[VersionedDir.publish]]).
+    * Untouched buckets' files are not rewritten (byte-identical across
+    * the merge; BucketedSinkSpec pins this).
     *
-    * Touched buckets publish CONCURRENTLY on a bounded driver-side
-    * thread pool (`publishParallelism` at a time): each publish is an
-    * independent Spark job against an independent directory, and Spark's
-    * scheduler interleaves jobs submitted from multiple threads — a
-    * sequential loop would serialize the per-bucket job latency exactly
-    * when the table is large (a 100 TB table wants numBuckets in the
-    * thousands: numBuckets ~ tableSize / targetBucketBytes with bucket
-    * files at a few hundred MB, so merges touching many buckets are the
-    * norm, not the exception). All publishes are awaited; the first
-    * failure rethrows after the rest settle (buckets already published
-    * stay published — same partial-progress semantics as the sequential
-    * loop, and replays are version-guarded by `minVersion`).
+    * `mergeFn` must be key-local (each output row derives from input
+    * rows of its own key, as every upsert / latest-wins / delete merge
+    * is): a key fixes its bucket, so ONE `mergeFn` over the union of all
+    * touched buckets equals applying it bucket by bucket. Its output
+    * schema, `mergeFn(None, batch).schema`, is the stored schema.
+    *
+    * A merge costs a fixed number of Spark jobs whatever the number of
+    * touched buckets — a 100 TB table wants numBuckets in the thousands
+    * (numBuckets ~ tableSize / targetBucketBytes), so merges touching
+    * many buckets are the norm, and per-bucket job latency must not
+    * multiply: the batch checkpoint, the touched-bucket collect, then
+    * ONE scan of every touched bucket's current version (explicit
+    * schema, so no inference job), ONE `mergeFn`, and ONE write
+    * partitioned by bucket into a hidden stage dir. The driver then
+    * moves each bucket's partition dir to its next version dir and
+    * swaps that bucket's pointer. A touched bucket whose merge result
+    * is empty (its last key deleted) publishes an empty version on its
+    * own. A failure mid-publish leaves the buckets already swapped
+    * published — the reference's record-at-a-time granularity — and a
+    * replay is version-guarded by `minVersion`.
     *
     * Returns the touched bucket ids. The touched set is a <=numBuckets
     * driver-side collect — control-plane sized by construction.
@@ -196,17 +206,23 @@ object BucketedDir {
       keyCol: String,
       numBuckets: Int,
       minVersion: Long = 0L,
-      keepVersions: Int = 2,
-      publishParallelism: Int = 8
+      keepVersions: Int = 2
   )(mergeFn: (Option[DataFrame], DataFrame) => DataFrame): Seq[Int] = {
-    val nb = pinBucketCount(spark, root, keyCol, numBuckets, keepVersions, publishParallelism)
-    publishPartitioned(spark, root, batch, keyCol, nb, minVersion, keepVersions,
-      publishParallelism)(mergeFn)
+    val nb = pinBucketCount(spark, root, keyCol, numBuckets, keepVersions)
+    publishPartitioned(spark, root, batch, keyCol, nb, minVersion, keepVersions)(mergeFn)
   }
 
+  /** Hidden dir under the table root that a merge's partitioned write
+    * lands in before each bucket dir moves into place. Readers only
+    * resolve `b*` dirs, so a stage left by a crash is invisible, and
+    * the next merge's overwrite clears it. One stage per table: a table
+    * has one writer at a time, as its unlocked version choice already
+    * requires.
+    */
+  private[graft] val StageDir = "_stage"
+
   /** The shared bucket-publish machinery behind [[merge]] and the
-    * flat-layout migration: checkpoint the batch, route rows to buckets,
-    * publish every touched bucket through the bounded pool.
+    * flat-layout migration.
     */
   private def publishPartitioned(
       spark: SparkSession,
@@ -215,37 +231,56 @@ object BucketedDir {
       keyCol: String,
       nb: Int,
       minVersion: Long,
-      keepVersions: Int,
-      publishParallelism: Int
+      keepVersions: Int
   )(mergeFn: (Option[DataFrame], DataFrame) => DataFrame): Seq[Int] = {
     val bkt = Names.fresh(batch.columns.toSeq, "_bkt")
-    // Materialize the batch once; each touched bucket then filters the
-    // checkpointed blocks instead of recomputing the batch plan.
+    // Materialize the batch once: the touched collect and the merge both
+    // read the checkpointed blocks instead of recomputing the batch plan.
     val withB = batch.withColumn(bkt, bucketCol(keyCol, nb)).localCheckpoint(true)
     val touched = withB.select(bkt).distinct().collect().map(_.getInt(0)).sorted.toSeq
-    def publishOne(b: Int): Unit = {
-      val bRoot = new Path(new Path(root), bucketName(b)).toString
-      val existing = VersionedDir.read(spark, bRoot)
-      val part = withB.filter(col(bkt) === lit(b)).drop(bkt)
-      VersionedDir.publish(spark, bRoot, mergeFn(existing, part), minVersion, keepVersions)
-      ()
-    }
-    val par = math.max(1, math.min(publishParallelism, touched.size))
-    if (par <= 1) touched.foreach(publishOne)
-    else {
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(par)
-      implicit val ec: scala.concurrent.ExecutionContext =
-        scala.concurrent.ExecutionContext.fromExecutorService(pool)
-      try {
-        // settle ALL futures (no fail-fast abandon: an abandoned publish
-        // could still be mid-write when the caller retries), then rethrow
-        // the first failure in bucket order
-        val settled = scala.concurrent.Await.result(
-          scala.concurrent.Future.sequence(
-            touched.map(b => scala.concurrent.Future(publishOne(b)).transform(scala.util.Success(_)))),
-          scala.concurrent.duration.Duration.Inf)
-        settled.collectFirst { case scala.util.Failure(e) => throw e }
-      } finally pool.shutdown()
+    if (touched.nonEmpty) {
+      val hfs = VersionedDir.fs(spark, root)
+      val rootPath = new Path(root)
+      val bRoots = touched.map(b => b -> new Path(rootPath, bucketName(b))).toMap
+      val current = touched.map(b => b -> VersionedDir.currentVersion(hfs, bRoots(b))).toMap
+      val part = withB.drop(bkt)
+      val schema = mergeFn(None, part).schema
+      val existing = touched.flatMap(current) match {
+        case Seq() => None
+        case dirs =>
+          // a scan over more root paths than the parallel-discovery
+          // threshold lists them in a Spark job of its own; scans of at
+          // most that many list on the driver, keeping the job count fixed
+          val perScan = spark.conf.get("spark.sql.sources.parallelPartitionDiscovery.threshold").toInt
+          Some(dirs.map(_.toString).grouped(math.max(1, perScan))
+            .map(spark.read.schema(schema).parquet(_: _*)).reduce(_ union _))
+      }
+      val stage = new Path(rootPath, StageDir)
+      // repartition on the bucket: each bucket's rows meet in one task,
+      // so every bucket version is one parquet file
+      mergeFn(existing, part).withColumn(bkt, bucketCol(keyCol, nb))
+        .repartition(col(bkt))
+        .write.mode(SaveMode.Overwrite).partitionBy(bkt).parquet(stage.toString)
+      touched.foreach { b =>
+        val staged = new Path(stage, s"$bkt=$b")
+        if (!hfs.exists(staged))
+          // empty merge result: no partition dir, publish an empty
+          // version with the table schema
+          VersionedDir.publish(spark, bRoots(b).toString,
+            spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema), minVersion, keepVersions)
+        else {
+          // a version dir left by a crash before its pointer swap must go
+          // first: rename onto an existing dir would nest inside it
+          val nextV = VersionedDir.nextVersion(current(b), minVersion)
+          val vDir = new Path(bRoots(b), VersionedDir.versionDir(nextV))
+          hfs.delete(vDir, true)
+          hfs.mkdirs(bRoots(b))
+          hfs.create(new Path(staged, "_SUCCESS"), true).close()
+          require(hfs.rename(staged, vDir), s"could not move $staged to $vDir")
+          VersionedDir.swapAndPrune(hfs, bRoots(b), nextV, keepVersions)
+        }
+      }
+      hfs.delete(stage, true)
     }
     touched
   }

@@ -203,11 +203,12 @@ final class BucketedParquetConnector(
 
   /** Bucket-pruned lookup: scans ONLY the key's hash bucket (the trait
     * default filters a scan of every bucket) — at scale this is the
-    * difference between a point query and a table scan.
+    * difference between a point query and a table scan. The scan reads
+    * with the connector's schema, so a lookup runs no inference job.
     */
   override def pointQuery(key: Any): Option[Row] =
     BucketedDir.bucketForKey(spark, root, key, schema(keyCol).dataType).flatMap { b =>
-      BucketedDir.readBucket(spark, root, b)
+      BucketedDir.readBucket(spark, root, b, schema)
         .flatMap(_.filter(col(keyCol) === lit(key)).collect().headOption)
     }
 

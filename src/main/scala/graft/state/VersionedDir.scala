@@ -69,23 +69,35 @@ object VersionedDir {
   ): Long = {
     val rootPath = new Path(root)
     val hfs = fs(spark, root)
-    val cur = currentVersion(hfs, rootPath)
-    val nextV = math.max(cur.flatMap(p => versionOf(p.getName)).getOrElse(-1L) + 1, minVersion)
-    val vDir = f"v$nextV%020d"
-    df.write.mode(SaveMode.Overwrite).parquet(new Path(rootPath, vDir).toString)
+    val nextV = nextVersion(currentVersion(hfs, rootPath), minVersion)
+    df.write.mode(SaveMode.Overwrite).parquet(new Path(rootPath, versionDir(nextV)).toString)
+    swapAndPrune(hfs, rootPath, nextV, keepVersions)
+    nextV
+  }
+
+  def versionDir(v: Long): String = f"v$v%020d"
+
+  /** The version a publish writes: strictly above `current` (a version
+    * dir from [[currentVersion]]) and at least `minVersion`.
+    */
+  def nextVersion(current: Option[Path], minVersion: Long): Long =
+    math.max(current.flatMap(p => versionOf(p.getName)).getOrElse(-1L) + 1, minVersion)
+
+  /** Point `_CURRENT` at the committed version `v` under `root`, then
+    * prune committed versions down to the newest `keepVersions` — the
+    * commit step of every publish, whoever wrote the version dir.
+    */
+  def swapAndPrune(hfs: FileSystem, root: Path, v: Long, keepVersions: Int): Unit = {
     // pointer swap; read() falls back to the newest committed v* dir if
     // a reader lands inside the delete/rename window
-    val tmp = new Path(rootPath, s"_CURRENT.tmp$nextV")
+    val tmp = new Path(root, s"_CURRENT.tmp$v")
     val out = hfs.create(tmp, true)
-    try out.write(vDir.getBytes("UTF-8")) finally out.close()
-    val ptr = new Path(rootPath, "_CURRENT")
+    try out.write(versionDir(v).getBytes("UTF-8")) finally out.close()
+    val ptr = new Path(root, "_CURRENT")
     hfs.delete(ptr, false)
     hfs.rename(tmp, ptr)
-    if (keepVersions > 0) {
-      val committed = committedVersions(hfs, rootPath)
-      committed.dropRight(keepVersions).foreach(p => hfs.delete(p, true))
-    }
-    nextV
+    if (keepVersions > 0)
+      committedVersions(hfs, root).dropRight(keepVersions).foreach(p => hfs.delete(p, true))
   }
 
   /** Read a SPECIFIC committed version (None if absent/uncommitted) —

@@ -14,8 +14,10 @@ import graft.streaming.StreamingFeatures.{KeyEvent, KeyFeature}
   *
   * Each micro-batch merges the incoming per-key updates into the stored
   * table through [[graft.state.BucketedDir]]: the table is hash-bucketed
-  * by key and a batch rewrites ONLY the buckets its keys land in (union
-  * → max_by per key, per touched bucket), each bucket published with an
+  * by key and a batch rewrites ONLY the buckets its keys land in: one
+  * union → max_by per key over every touched bucket, written once
+  * partitioned by bucket (a fixed number of Spark jobs however many
+  * buckets the batch touches), then each bucket published with an
   * atomic `_CURRENT` pointer swap and superseded versions pruned.
   * Readers never see a partial write, storage stays bounded over a
   * long-running stream, and — the 100 TB property — write cost per
@@ -98,7 +100,8 @@ object FeatureTableSink {
     // Reduce the batch to its last event per key BEFORE bucketing (by
     // (ord, evicted): an update and its eviction at the same ord resolve
     // to the eviction, matching the operator's processing order) — then
-    // each touched bucket applies its deletes and upserts locally.
+    // the merge applies every touched bucket's deletes and upserts in one
+    // pass (both are key-local).
     val lastEvent = batch.toDF()
       .groupBy(col("key"))
       .agg(max_by(

@@ -5,10 +5,11 @@ import java.security.MessageDigest
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{DataFrame, Encoders, Row}
+import org.apache.spark.sql.functions.broadcast
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
-import graft.state.{BucketedDir, BucketedParquetConnector}
+import graft.state.{BucketedDir, BucketedParquetConnector, VersionedDir}
 
 /** The 100 TB sink property: a merge into a bucketed table rewrites ONLY
   * the buckets its batch keys hash into — every untouched bucket's files
@@ -138,9 +139,10 @@ class BucketedSinkSpec extends SparkSpec {
   }
 
   test("concurrent publishes: numBuckets >> pool still lands every touched bucket") {
-    // 64 buckets touched at once through the bounded 8-thread publish
-    // pool (local[4] session): every bucket must land its rows and an
-    // immediate second merge must advance versions without interference.
+    // 64 buckets touched at once, all written by one partitioned write
+    // and then moved into place bucket by bucket (local[4] session):
+    // every bucket must land its rows and an immediate second merge must
+    // advance versions without interference.
     val root = tmp()
     val nb = 64
     val keys = (1L to 400L)
@@ -212,5 +214,122 @@ class BucketedSinkSpec extends SparkSpec {
     assert(changed.size == 1, s"exactly one bucket should change, got: $changed")
     val t = graft.streaming.FeatureTableSink.read(spark, root).as[KeyFeature].collect()
     assert(t.length == 40 && t.find(_.key == "k7").get.value == 99.0)
+  }
+
+  /** Latest-wins upsert merge, as BucketedParquetConnector.upsert runs it. */
+  private def upsertFn(existing: Option[DataFrame], part: DataFrame): DataFrame =
+    existing.map(_.join(broadcast(part.select("key")), Seq("key"), "left_anti").unionByName(part))
+      .getOrElse(part)
+
+  test("a merge touching 64 buckets runs no more Spark jobs than one touching 1") {
+    val root = tmp()
+    val nb = 64
+    val keys = 1L to 400L
+    BucketedDir.merge(spark, root, df(keys.map(k => k -> s"v$k"): _*), "key", nb)(upsertFn)
+    val sc = spark.sparkContext
+    def jobs(group: String)(body: => Seq[Int]): (Int, Int) = {
+      sc.setJobGroup(group, group)
+      val touched = try body finally sc.clearJobGroup()
+      org.apache.spark.sql.graft.Bridge.drainListenerBus(sc)
+      (touched.size, sc.statusTracker.getJobIdsForGroup(group).length)
+    }
+    val (oneTouched, oneJobs) = jobs("bucketed-merge-one") {
+      BucketedDir.merge(spark, root, df(7L -> "one"), "key", nb)(upsertFn)
+    }
+    val (wideTouched, wideJobs) = jobs("bucketed-merge-wide") {
+      BucketedDir.merge(spark, root, df(keys.map(k => k -> s"w$k"): _*), "key", nb)(upsertFn)
+    }
+    assert(oneTouched == 1 && wideTouched == nb, s"touched $oneTouched and $wideTouched buckets")
+    assert(oneJobs > 0 && wideJobs <= oneJobs,
+      s"a 64-bucket merge ran $wideJobs jobs, a 1-bucket merge $oneJobs")
+    val got = BucketedDir.read(spark, root).get.collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+    assert(got.size == 400 && keys.forall(k => got(k) == s"w$k"))
+    // one parquet file per bucket version: point-query cost stays flat
+    (0 until nb).foreach { b =>
+      val bdir = Paths.get(root, BucketedDir.bucketName(b))
+      val cur = bdir.resolve(new String(Files.readAllBytes(bdir.resolve("_CURRENT")), "UTF-8").trim)
+      assert(Files.list(cur).iterator().asScala.count(_.getFileName.toString.endsWith(".parquet")) == 1,
+        s"bucket $b")
+    }
+  }
+
+  test("a stage dir left by a crashed merge is invisible to readers; the next merge succeeds") {
+    val root = tmp()
+    val nb = 8
+    val c = new BucketedParquetConnector(spark, "key", schema, root, numBuckets = nb)
+    c.upsert(df((1L to 40L).map(k => k -> s"v$k"): _*))
+    // the partitioned write of a merge that crashed before any move
+    df((1L to 40L).map(k => k -> "stale"): _*).withColumn("_bkt", BucketedDir.bucketCol("key", nb))
+      .write.partitionBy("_bkt").parquet(Paths.get(root, BucketedDir.StageDir).toString)
+    def table = c.bulkQuery().collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+    assert(table == (1L to 40L).map(k => k -> s"v$k").toMap)
+    assert(c.pointQuery(7L).map(_.getString(1)) == Some("v7"))
+    c.upsert(df(7L -> "updated"))
+    assert(table == (1L to 40L).map(k => k -> (if (k == 7L) "updated" else s"v$k")).toMap)
+    assert(!Files.exists(Paths.get(root, BucketedDir.StageDir)), "the merge clears its stage dir")
+  }
+
+  test("a committed version whose pointer swap never ran is replaced, not nested, by the next merge") {
+    val root = tmp()
+    val nb = 8
+    val c = new BucketedParquetConnector(spark, "key", schema, root, numBuckets = nb)
+    c.upsert(df((1L to 40L).map(k => k -> s"v$k"): _*))
+    val bdir = Paths.get(root, BucketedDir.bucketName(bucketOf(7L, nb)))
+    def pointer = new String(Files.readAllBytes(bdir.resolve("_CURRENT")), "UTF-8").trim
+    val nextV = VersionedDir.versionOf(pointer).get + 1
+    val vNext = bdir.resolve(VersionedDir.versionDir(nextV))
+    // a crash between the move into v<next> and the pointer swap
+    df(7L -> "crashed", 999L -> "ghost").coalesce(1).write.parquet(vNext.toString)
+    assert(Files.exists(vNext.resolve("_SUCCESS")))
+    assert(c.pointQuery(7L).map(_.getString(1)) == Some("v7"), "readers follow the pointer")
+    c.upsert(df(7L -> "updated"))
+    assert(pointer == VersionedDir.versionDir(nextV))
+    assert(!Files.list(vNext).iterator().asScala.exists(Files.isDirectory(_)),
+      "the new version must replace the leftover dir, not nest inside it")
+    val got = c.bulkQuery().collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+    assert(got == (1L to 40L).map(k => k -> (if (k == 7L) "updated" else s"v$k")).toMap)
+  }
+
+  test("deleting a bucket's only key publishes an empty version with the table schema") {
+    val root = tmp()
+    val nb = 8
+    val victim = 7L
+    val vb = bucketOf(victim, nb)
+    val keys = (1L to 40L).filter(k => k == victim || bucketOf(k, nb) != vb)
+    val c = new BucketedParquetConnector(spark, "key", schema, root, numBuckets = nb)
+    c.upsert(df(keys.map(k => k -> s"v$k"): _*))
+    val bdir = Paths.get(root, BucketedDir.bucketName(vb))
+    val before = new String(Files.readAllBytes(bdir.resolve("_CURRENT")), "UTF-8").trim
+    c.delete(Seq(victim))
+    val after = new String(Files.readAllBytes(bdir.resolve("_CURRENT")), "UTF-8").trim
+    assert(after != before, "the emptied bucket must publish a new version")
+    assert(spark.read.parquet(bdir.resolve(after).toString).count() == 0)
+    val bulk = c.bulkQuery()
+    assert(bulk.schema.map(f => f.name -> f.dataType) == schema.map(f => f.name -> f.dataType))
+    assert(bulk.count() == keys.size - 1)
+    assert(c.pointQuery(victim).isEmpty)
+  }
+
+  test("mergeEvents evicting every key of a bucket publishes an empty version") {
+    import spark.implicits._
+    import graft.streaming.FeatureTableSink
+    import graft.streaming.StreamingFeatures.{KeyEvent, KeyFeature}
+    val root = tmp()
+    val nb = 8
+    val keys = (1 to 40).map(i => s"k$i")
+    FeatureTableSink.mergeEvents(spark, root,
+      keys.map(k => KeyEvent(k, 1, 1.0, 1, evicted = false)).toDS(), 0, numBuckets = nb)
+    val vb = BucketedDir.routeKey("k1", StringType, nb)
+    val victims = keys.filter(k => BucketedDir.routeKey(k, StringType, nb) == vb)
+    FeatureTableSink.mergeEvents(spark, root,
+      victims.map(k => KeyEvent(k, 2, 0.0, 0, evicted = true)).toDS(), 1, numBuckets = nb)
+    val bdir = Paths.get(root, BucketedDir.bucketName(vb))
+    val cur = new String(Files.readAllBytes(bdir.resolve("_CURRENT")), "UTF-8").trim
+    assert(VersionedDir.versionOf(cur).contains(1L))
+    assert(spark.read.parquet(bdir.resolve(cur).toString).count() == 0)
+    val t = FeatureTableSink.read(spark, root)
+    assert(t.schema.map(f => f.name -> f.dataType) ==
+      Encoders.product[KeyFeature].schema.map(f => f.name -> f.dataType))
+    assert(t.as[KeyFeature].collect().map(_.key).sorted.toSeq == keys.filterNot(victims.contains).sorted)
   }
 }
