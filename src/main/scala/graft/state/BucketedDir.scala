@@ -1,9 +1,12 @@
 package graft.state
 
 import java.nio.charset.StandardCharsets
+import java.util.concurrent.{Callable, ExecutionException, Executors}
+
+import scala.util.{Failure, Try}
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
@@ -185,19 +188,22 @@ object BucketedDir {
     * touched buckets — a 100 TB table wants numBuckets in the thousands
     * (numBuckets ~ tableSize / targetBucketBytes), so merges touching
     * many buckets are the norm, and per-bucket job latency must not
-    * multiply: the batch checkpoint, the touched-bucket collect, then
-    * ONE scan of every touched bucket's current version (explicit
-    * schema, so no inference job), ONE `mergeFn`, and ONE write
-    * partitioned by bucket into a hidden stage dir. The driver then
-    * moves each bucket's partition dir to its next version dir and
-    * swaps that bucket's pointer. A touched bucket whose merge result
-    * is empty (its last key deleted) publishes an empty version on its
-    * own. A failure mid-publish leaves the buckets already swapped
-    * published — the reference's record-at-a-time granularity — and a
-    * replay is version-guarded by `minVersion`.
+    * multiply: the batch checkpoint, which also observes the touched
+    * bucket set, then ONE scan of every touched bucket's current version
+    * (explicit schema, so no inference job), ONE `mergeFn`, and ONE
+    * write partitioned by bucket into a hidden stage dir. The driver
+    * then moves each bucket's partition dir to its next version dir and
+    * swaps that bucket's pointer, buckets running concurrently (the
+    * version lookups too). A touched bucket whose merge result is empty
+    * (its last key deleted) publishes an empty version on its own,
+    * after the others, on the caller's thread. A failure mid-publish
+    * lets every other bucket finish publishing, then the merge throws
+    * the first failure in bucket order — the reference's
+    * record-at-a-time granularity — and a replay is version-guarded by
+    * `minVersion`.
     *
     * Returns the touched bucket ids. The touched set is a <=numBuckets
-    * driver-side collect — control-plane sized by construction.
+    * observed metric — control-plane sized by construction.
     */
   def merge(
       spark: SparkSession,
@@ -234,15 +240,18 @@ object BucketedDir {
       keepVersions: Int
   )(mergeFn: (Option[DataFrame], DataFrame) => DataFrame): Seq[Int] = {
     val bkt = Names.fresh(batch.columns.toSeq, "_bkt")
-    // Materialize the batch once: the touched collect and the merge both
-    // read the checkpointed blocks instead of recomputing the batch plan.
-    val withB = batch.withColumn(bkt, bucketCol(keyCol, nb)).localCheckpoint(true)
-    val touched = withB.select(bkt).distinct().collect().map(_.getInt(0)).sorted.toSeq
+    // Materialize the batch once: the merge reads the checkpointed blocks
+    // instead of recomputing the batch plan, and the checkpoint job also
+    // observes the touched set.
+    val seen = new Observation()
+    val withB = batch.withColumn(bkt, bucketCol(keyCol, nb))
+      .observe(seen, collect_set(col(bkt)).as(bkt)).localCheckpoint(true)
+    val touched = seen.get(bkt).asInstanceOf[collection.Seq[Int]].toSeq.sorted
     if (touched.nonEmpty) {
       val hfs = VersionedDir.fs(spark, root)
       val rootPath = new Path(root)
       val bRoots = touched.map(b => b -> new Path(rootPath, bucketName(b))).toMap
-      val current = touched.map(b => b -> VersionedDir.currentVersion(hfs, bRoots(b))).toMap
+      val current = perBucket(touched)(b => VersionedDir.currentVersion(hfs, bRoots(b)))
       val part = withB.drop(bkt)
       val schema = mergeFn(None, part).schema
       val existing = touched.flatMap(current) match {
@@ -257,18 +266,17 @@ object BucketedDir {
       }
       val stage = new Path(rootPath, StageDir)
       // repartition on the bucket: each bucket's rows meet in one task,
-      // so every bucket version is one parquet file
+      // so every bucket version is one parquet file. The stage root's
+      // _SUCCESS is never read (each bucket gets its own below).
       mergeFn(existing, part).withColumn(bkt, bucketCol(keyCol, nb))
         .repartition(col(bkt))
-        .write.mode(SaveMode.Overwrite).partitionBy(bkt).parquet(stage.toString)
-      touched.foreach { b =>
+        .write.mode(SaveMode.Overwrite).partitionBy(bkt)
+        .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
+        .parquet(stage.toString)
+      val moved = perBucket(touched) { b =>
         val staged = new Path(stage, s"$bkt=$b")
-        if (!hfs.exists(staged))
-          // empty merge result: no partition dir, publish an empty
-          // version with the table schema
-          VersionedDir.publish(spark, bRoots(b).toString,
-            spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema), minVersion, keepVersions)
-        else {
+        val found = hfs.exists(staged)
+        if (found) {
           // a version dir left by a crash before its pointer swap must go
           // first: rename onto an existing dir would nest inside it
           val nextV = VersionedDir.nextVersion(current(b), minVersion)
@@ -279,9 +287,36 @@ object BucketedDir {
           require(hfs.rename(staged, vDir), s"could not move $staged to $vDir")
           VersionedDir.swapAndPrune(hfs, bRoots(b), nextV, keepVersions)
         }
+        found
+      }
+      // empty merge result: no partition dir, so publish an empty version
+      // with the table schema. That is a Spark job, so it runs here on
+      // the caller's thread, under its job group, local properties and
+      // SQL execution id.
+      touched.filterNot(moved).foreach { b =>
+        VersionedDir.publish(spark, bRoots(b).toString,
+          spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema), minVersion, keepVersions)
       }
       hfs.delete(stage, true)
     }
     touched
+  }
+
+  /** Run the filesystem work `f` once per bucket on a pool of at most one
+    * thread per core: without libhadoop each local create forks `chmod`,
+    * and on HDFS or S3 each call is a round trip, so buckets overlap
+    * their waits. Every bucket settles before the first failure in
+    * bucket order is rethrown. Only filesystem calls belong here; Spark
+    * jobs stay on the caller's thread.
+    */
+  private def perBucket[A](buckets: Seq[Int])(f: Int => A): Map[Int, A] = {
+    val pool = Executors.newFixedThreadPool(math.min(buckets.size, Runtime.getRuntime.availableProcessors))
+    try {
+      val settled = buckets.map(b => pool.submit((() => f(b)): Callable[A])).map(fut => Try(fut.get()))
+      buckets.zip(settled.map {
+        case Failure(e: ExecutionException) => throw e.getCause
+        case r => r.get
+      }).toMap
+    } finally pool.shutdown()
   }
 }

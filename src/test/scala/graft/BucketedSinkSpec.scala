@@ -332,4 +332,102 @@ class BucketedSinkSpec extends SparkSpec {
       Encoders.product[KeyFeature].schema.map(f => f.name -> f.dataType))
     assert(t.as[KeyFeature].collect().map(_.key).sorted.toSeq == keys.filterNot(victims.contains).sorted)
   }
+
+  test("empty batches touch no bucket: table byte-identical, no stage dir left") {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration._
+    import org.apache.spark.sql.functions.{col, lit}
+    import spark.implicits._
+    val root = tmp()
+    val nb = 8
+    BucketedDir.merge(spark, root, df((1L to 40L).map(k => k -> s"v$k"): _*), "key", nb)(upsertFn)
+    val before = snapshot(root)
+    val empties = Seq(
+      "Seq.empty.toDS" -> Seq.empty[(Long, String)].toDS().toDF("key", "a"),
+      "emptyRDD" -> spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema),
+      "filtered to empty" -> spark.range(1, 41).select(col("id").as("key"), lit("x").as("a"))
+        .filter(col("key") < 0),
+      "limit(0)" -> df((1L to 40L).map(k => k -> s"x$k"): _*).limit(0))
+    empties.foreach { case (what, batch) =>
+      // bounded: an observation that never completes must fail, not hang
+      val touched = Await.result(
+        Future(BucketedDir.merge(spark, root, batch, "key", nb)(upsertFn)), 2.minutes)
+      assert(touched == Seq(), what)
+      assert(snapshot(root) == before, s"$what rewrote a bucket")
+      assert(!Files.exists(Paths.get(root, BucketedDir.StageDir)), s"$what left a stage dir")
+    }
+  }
+
+  test("an all-NULL-key batch publishes only the null key's bucket") {
+    val root = tmp()
+    val nb = 8
+    val strSchema = StructType(Seq(
+      StructField("key", StringType, nullable = true),
+      StructField("a", StringType, nullable = true)))
+    def rows(rs: Row*) = spark.createDataFrame(rs.asJava, strSchema)
+    val unionFn = (existing: Option[DataFrame], part: DataFrame) =>
+      existing.map(_.unionByName(part)).getOrElse(part)
+    BucketedDir.merge(spark, root, rows((1 to 40).map(i => Row(s"k$i", "v")): _*), "key", nb)(unionFn)
+    val before = snapshot(root)
+    val nullBucket = BucketedDir.routeKey(null, StringType, nb)
+    val touched = BucketedDir.merge(spark, root, rows(Row(null, "x"), Row(null, "y")), "key", nb)(unionFn)
+    assert(touched == Seq(nullBucket))
+    val after = snapshot(root)
+    assert(after.keySet.filter(b => !before.get(b).contains(after(b))) ==
+      Set(BucketedDir.bucketName(nullBucket)))
+    assert(BucketedDir.read(spark, root).get.filter("key IS NULL").count() == 2)
+  }
+
+  test("a bucket failing to publish fails the merge; the others publish; a re-run completes it") {
+    val root = tmp()
+    val nb = 8
+    val keys = 1L to 40L
+    val blocked = bucketOf(1L, nb)
+    BucketedDir.merge(spark, root,
+      df(keys.filter(bucketOf(_, nb) != blocked).map(k => k -> s"v$k"): _*), "key", nb)(upsertFn)
+    // a regular file where the never-written bucket's dir would go
+    val blockedPath = Paths.get(root, BucketedDir.bucketName(blocked))
+    Files.write(blockedPath, "not a dir".getBytes("UTF-8"))
+    def pointers = (0 until nb).filter(_ != blocked).map { b =>
+      b -> new String(Files.readAllBytes(Paths.get(root, BucketedDir.bucketName(b), "_CURRENT")), "UTF-8").trim
+    }.toMap
+    val before = pointers
+    def merge() = BucketedDir.merge(spark, root, df(keys.map(k => k -> s"w$k"): _*), "key", nb,
+      minVersion = 5L)(upsertFn)
+    val e = intercept[Exception](merge())
+    assert(e.getMessage.contains(blockedPath.toString), e.getMessage)
+    assert(!Files.exists(Paths.get(root, BucketedDir.StageDir, "_SUCCESS")),
+      "the stage write leaves no root marker")
+    val after = pointers
+    assert(before.keys.forall(b => after(b) != before(b)), s"pointers $before -> $after")
+    val got = BucketedDir.read(spark, root).get.collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+    assert(got == keys.filter(bucketOf(_, nb) != blocked).map(k => k -> s"w$k").toMap)
+    Files.delete(blockedPath)
+    merge()
+    val again = BucketedDir.read(spark, root).get.collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+    assert(again == keys.map(k => k -> s"w$k").toMap)
+  }
+
+  test("the empty-bucket publish runs in the caller's job group") {
+    import org.apache.spark.sql.graft.Bridge
+    val root = tmp()
+    val nb = 8
+    val victim = 7L
+    val vb = bucketOf(victim, nb)
+    val keys = (1L to 40L).filter(k => k == victim || bucketOf(k, nb) != vb)
+    val c = new BucketedParquetConnector(spark, "key", schema, root, numBuckets = nb)
+    c.upsert(df(keys.map(k => k -> s"v$k"): _*))
+    val sc = spark.sparkContext
+    Bridge.drainListenerBus(sc)
+    val ungrouped = sc.statusTracker.getJobIdsForGroup(null).toSet
+    val group = "bucketed-empty-publish"
+    sc.setJobGroup(group, group)
+    try c.delete(Seq(victim)) finally sc.clearJobGroup()
+    Bridge.drainListenerBus(sc)
+    assert((sc.statusTracker.getJobIdsForGroup(null).toSet -- ungrouped).isEmpty,
+      "a merge job ran outside the caller's job group")
+    assert(sc.statusTracker.getJobIdsForGroup(group).nonEmpty)
+    assert(c.pointQuery(victim).isEmpty && c.count() == keys.size - 1)
+  }
 }

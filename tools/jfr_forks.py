@@ -1,0 +1,89 @@
+#!/usr/bin/env python3
+"""Census of the processes a JVM forked, from a Java Flight Recording.
+
+    python3 tools/jfr_forks.py <recording.jfr> [--top N]
+
+Reads `jfr print --json --stack-depth 64 --events jdk.ProcessStart <file>`
+and prints the process starts twice: grouped by command (path arguments
+dropped, so `chmod 0644 /a/b` and `chmod 0644 /c/d` count together), and
+grouped by the first `graft.` or `org.apache.spark` frame on the forking
+thread's stack together with the command. Without libhadoop, Hadoop's
+local filesystem forks `chmod` on every `create` (twice for a checksummed
+file: the file and its `.crc`) and on every `mkdirs` of a new directory,
+so this census is how the filesystem calls of a code path are counted.
+
+Recording a perfbench run without editing perfbench:
+
+    # one normal run first, so the harness build is cached and the
+    # recording sees only the harness JVM
+    python3 perfbench/run.py --workload ralf_stream --seed 1 --seconds 15 --trace 0
+    JAVA_TOOL_OPTIONS=-XX:StartFlightRecording=filename=/tmp/stream.jfr,settings=profile \\
+        python3 perfbench/run.py --workload ralf_stream --seed 1 --seconds 15 --trace 0
+    python3 tools/jfr_forks.py /tmp/stream.jfr
+
+The run's `detail` line gives `micro_batches`; each micro-batch is one
+sink merge, so dividing a caller's count by it gives forks per merge.
+"""
+import argparse
+import collections
+import json
+import shutil
+import subprocess
+import sys
+
+CALLER_PREFIXES = ("graft.", "org.apache.spark")
+
+
+def events(recording):
+    jfr = shutil.which("jfr")
+    if jfr is None:
+        sys.exit("jfr_forks: the JDK's `jfr` tool is not on PATH")
+    out = subprocess.run(
+        [jfr, "print", "--json", "--stack-depth", "64", "--events", "jdk.ProcessStart", recording],
+        check=True, capture_output=True, text=True).stdout
+    return json.loads(out)["recording"]["events"]
+
+
+def command_shape(command):
+    """The command with its path and URI arguments dropped."""
+    return " ".join(w for w in command.split() if not w.startswith("/") and ":/" not in w) or command
+
+
+def caller(event):
+    """`class.method:line` of the first graft or Spark frame, else the top frame."""
+    frames = (event["values"].get("stackTrace") or {}).get("frames") or []
+    named = []
+    for f in frames:
+        m = f["method"]
+        cls = m["type"]["name"].replace("/", ".")
+        named.append(f"{cls}.{m['name']}:{f.get('lineNumber', '?')}")
+        if cls.startswith(CALLER_PREFIXES):
+            return named[-1]
+    return named[0] if named else "<no stack>"
+
+
+def main():
+    ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
+    ap.add_argument("recording", help="a .jfr file")
+    ap.add_argument("--top", type=int, default=30, help="rows per table (default 30)")
+    args = ap.parse_args()
+
+    evs = events(args.recording)
+    by_command = collections.Counter()
+    by_caller = collections.Counter()
+    for e in evs:
+        shape = command_shape(e["values"].get("command", ""))
+        by_command[shape] += 1
+        by_caller[(caller(e), shape)] += 1
+
+    print(f"{len(evs)} process starts")
+    print("\nby command")
+    for shape, n in by_command.most_common(args.top):
+        print(f"{n:8d}  {shape}")
+    print("\nby first graft./org.apache.spark caller, command")
+    for (frame, shape), n in by_caller.most_common(args.top):
+        print(f"{n:8d}  {frame}  [{shape}]")
+
+
+if __name__ == "__main__":
+    main()
