@@ -119,9 +119,10 @@ final case class CorpusFrame(df: DataFrame, idCol: String, textCol: String) {
     * `loPermille`/1000 and longest `hiPermille`/1000 docs by length
     * rank.
     */
-  /** Attach the Kneser–Ney cross-entropy against an in-corpus
-    * reference slice ([[Selection.lmCrossEntropyKneserNey]]) — the
-    * CCNet-style LM quality signal as a chainable stage. `refPred`
+  /** Attach the order-2 Kneser–Ney cross-entropy against an in-corpus
+    * reference slice ([[Selection.lmCrossEntropyKneserNey]] at its
+    * default `order = 2`) — the CCNet-style LM quality signal as a
+    * chainable stage. `refPred`
     * marks the reference rows (e.g. `col("lang") === "en"`). Note:
     * unlike the pure-filter stages this one is EAGER at its broadcast
     * guard (the model-size count) and checkpoints its token table;

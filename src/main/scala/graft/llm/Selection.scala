@@ -29,19 +29,19 @@ import graft.functions.GraftFunctions.strhash
   */
 object Selection {
 
-  /** Loud ceiling on the data-dependent broadcast model tables the
-    * hashed-LM family ships to every executor ([[dsirWeights]],
-    * [[lmCrossEntropy]], [[lmCrossEntropyBigram]],
-    * [[lmCrossEntropyTrigram]]). The n-gram models are sized by the
-    * REFERENCE slice's distinct hashed n-grams — bounded by
-    * `numBuckets` powers only in the worst case — so without a guard
-    * the first symptom of an oversized reference at cluster scale is
-    * an executor OOM or a silent multi-GB broadcast. 4M rows of
-    * (≤3 longs + hash-relation overhead) is a few hundred MB — the
-    * upper edge of a sane broadcast; past it the caller must coarsen
-    * the model (lower `numBuckets`) or raise `maxModelRows`
-    * deliberately. Same fail-loud contract as
-    * [[graft.llm.TextIndex.probeAll]]'s 4096-query cap and
+  /** Loud ceiling on the broadcast model tables the hashed-LM family
+    * ships to every executor ([[dsirWeights]], [[lmCrossEntropy]] at
+    * every order, [[lmCrossEntropyKneserNey]]). Order-1 models are one
+    * row per bucket, so their bound is `numBuckets` and checks at entry;
+    * from order 2 the models are sized by the REFERENCE slice's
+    * distinct hashed n-grams — bounded by `numBuckets` powers only in
+    * the worst case — so without a guard the first symptom of an
+    * oversized reference at cluster scale is an executor OOM or a
+    * silent multi-GB broadcast. 4M rows of (≤3 longs + hash-relation
+    * overhead) is a few hundred MB — the upper edge of a sane
+    * broadcast; past it the caller must coarsen the model (lower
+    * `numBuckets`) or raise `maxModelRows` deliberately. Same fail-loud
+    * contract as [[graft.llm.TextIndex.probeAll]]'s 4096-query cap and
     * [[graft.operators.StatTests.chiSquareByKey]]'s 4096-cell grid.
     */
   val MaxBroadcastModelRows: Long = 4L << 20
@@ -130,6 +130,98 @@ object Selection {
         lit(nShards).as("n_shards"))
   }
 
+  /** The count stage every hashed n-gram scorer shares: ONE scan (via
+    * [[graft.core.Fan.out]]) tokenizes the corpus into per-(doc, n-gram
+    * bucket) counts `n`, map-side combined, so the exchange carries at
+    * most doc_len rows per doc and never raw tokens.
+    *
+    * Token adjacency is built IN ARRAY LAND — no per-doc window shuffle:
+    * slot 0 is the words array and slot k ≥ 1 is the same array shifted
+    * right by k (NULLs in front, cut to the same length), zipped and
+    * exploded together. Slot k's bucket `b<k>` is
+    * `pmod(strhash(word), B)`; a history slot that falls before the
+    * document's first word takes the reserved start context B (outside
+    * 0..B−1). Docs with zero words (or NULL text) have no rows and drop
+    * out, mirrored by the oracles' unnest.
+    *
+    * Output: id, `flagName`, payload, `b0` … `b<order−1>`, `n` —
+    * localCheckpoint'd, since it feeds both the models and the scoring
+    * pass.
+    */
+  private def ngramCounts(
+      docs: DataFrame,
+      idCol: String,
+      textCol: String,
+      flag: Column,
+      flagName: String,
+      payload: Seq[Column],
+      order: Int,
+      numBuckets: Int
+  ): DataFrame = {
+    val bLit = lit(numBuckets.toLong)
+    val ws = TextOps.words(col(textCol))
+    val slots = (0 until order).map {
+      case 0 => ws.as("s0")
+      case k => concat(
+          array_repeat(lit(null).cast("string"), least(size(ws), lit(k))),
+          slice(ws, lit(1), greatest(size(ws) - k, lit(0)))).as(s"s$k")
+    }
+    val buckets = (0 until order).map {
+      case 0 => pmod(strhash(col("z.s0")), bLit).as("b0")
+      case k => coalesce(pmod(strhash(col(s"z.s$k")), bLit), bLit).as(s"b$k")
+    }
+    graft.core.Fan.out(docs)
+      .select(col(idCol) +: flag.as(flagName) +: payload :+
+        explode(arrays_zip(slots: _*)).as("z"): _*)
+      .groupBy(col(idCol) +: col(flagName) +: payload ++: buckets: _*)
+      .agg(count(lit(1)).as("n"))
+      .localCheckpoint(false)
+  }
+
+  /** The slot buckets of an order-k n-gram, oldest history first. */
+  private def gram(k: Int): Seq[String] = ((k - 1) to 0 by -1).map(j => s"b$j")
+
+  /** The scoring tail both LM scorers share. It left-joins the model
+    * ladder onto the counted frame as broadcasts, highest order first:
+    * for k = order … 1 the n-gram table `t(k − 1)` on the newest k
+    * slots, then (k ≥ 2) its context table `ctx(k − 2)` on the k − 1
+    * older ones. It cross-joins the one-row totals, quantizes each
+    * bucket's log-prob `p` round(,6) → DECIMAL, and reduces per doc:
+    * `cross_entropy = −Σ n·lp / Σ n`. The dot product is an exact
+    * decimal sum (order-independent, so shuffle order cannot move a
+    * bit) and the closing division has bit-identical operands in both
+    * engines.
+    */
+  private def crossEntropy(
+      db: DataFrame,
+      t: Seq[DataFrame],
+      ctx: Seq[DataFrame],
+      tot: DataFrame,
+      p: Column,
+      idCol: String,
+      payload: Seq[Column]
+  ): DataFrame = {
+    val keys = col(idCol) +: col("is_ref") +: payload
+    val models = (t.size to 1 by -1).flatMap { k =>
+      (t(k - 1), gram(k)) +: (if (k > 1) Seq((ctx(k - 2), gram(k).init)) else Nil)
+    }
+    models
+      .foldLeft(db) { case (acc, (m, on)) => acc.join(broadcast(m), on, "left") }
+      .crossJoin(broadcast(tot))
+      .withColumn("lp", round(log(p), 6).cast("decimal(18,6)"))
+      .groupBy(keys: _*)
+      .agg(
+        sum(col("n")).as("n_tokens"),
+        sum(col("n") * col("lp")).as("lps"))
+      .select(keys :+ col("n_tokens") :+
+        (-(col("lps").cast("double")) / col("n_tokens").cast("double"))
+          .as("cross_entropy"): _*)
+  }
+
+  private def requireOrder(order: Int, range: Range, opName: String): Unit =
+    require(range.contains(order),
+      s"$opName: order must be in ${range.start}..${range.end}, got $order")
+
   /** DSIR importance weights (Xie et al. 2023, "Data Selection for
     * Language Models via Importance Resampling", arXiv:2302.03169):
     * score every document by the log-likelihood ratio of a TARGET
@@ -138,11 +230,11 @@ object Selection {
     * DSIR resamples by (compose with [[graft.operators.Shedding]]'s
     * weighted sampler, or cut a prefix with [[selectByBudget]]).
     *
-    * Model: words hash into `numBuckets` buckets
-    * (`pmod(strhash(w), B)`); the target model counts tokens of docs
-    * matching `targetPred`, the raw model counts the rest; both are
-    * add-one smoothed, so buckets unseen in one class still get finite
-    * ratios. Per doc: Σ_buckets n(doc,b) · log(p_t(b) / p_r(b)).
+    * Model: words hash into `numBuckets` buckets; the target model
+    * counts tokens of docs matching `targetPred`, the raw model counts
+    * the rest; both are add-one smoothed, so buckets unseen in one
+    * class still get finite ratios. Per doc:
+    * Σ_buckets n(doc,b) · log(p_t(b) / p_r(b)).
     *
     * Cross-engine FP discipline: each bucket's log ratio is
     * ln( ((c_t+1)·(R+B)) / ((c_r+1)·(T+B)) ) with both products EXACT
@@ -150,17 +242,11 @@ object Selection {
     * tokens stays under 2^53 — hash-bucket models are built per corpus
     * SLICE long before that bound binds), ONE double divide and one
     * ln, quantized to DECIMAL(18,6); the per-doc score is then an
-    * exact decimal dot product n·lr — order-independent, so shuffle
-    * order can't move a bit.
+    * exact decimal dot product n·lr.
     *
-    * Scale shape: the corpus is tokenized ONCE into per-(doc, bucket)
-    * counts (map-side combined — the exchange carries at most
-    * min(doc_len, B) rows per doc, never raw tokens); the bucket
-    * models re-aggregate THAT frame (B-row output), the log-ratio
-    * table is a broadcast at any corpus size (B rows, fixed by
-    * config), and the final per-doc sum partial-aggregates below its
-    * exchange. Docs with zero words have no bucket rows and drop out
-    * (mirrored by the oracle's unnest).
+    * Scale shape: the [[ngramCounts]] stage at order 1; the bucket
+    * models re-aggregate THAT frame (B-row output), and the log-ratio
+    * table is a broadcast at any corpus size (B rows, fixed by config).
     *
     * Output: id, `is_target`, any `payloadCols` (doc attributes riding
     * the single scan — no second corpus join downstream), `n_tokens`,
@@ -178,33 +264,26 @@ object Selection {
     require(numBuckets > 0, s"numBuckets must be positive, got $numBuckets")
     // the log-ratio model is one row per bucket — structurally ≤
     // numBuckets rows, so the broadcast bound is checkable at entry
-    // with no count job (unlike the bigram/trigram members, whose
-    // model size is data-dependent)
+    // with no count job
     require(numBuckets <= maxModelRows,
       s"dsirWeights: numBuckets=$numBuckets exceeds maxModelRows=$maxModelRows — " +
         "the bucket model broadcasts to every executor; lower numBuckets or " +
         "raise maxModelRows deliberately.")
     val bLit = lit(numBuckets.toLong)
     val payload = payloadCols.map(col)
-    val db = graft.core.Fan.out(docs)
-      .select(col(idCol) +: targetPred.as("is_target") +: payload :+
-        explode(TextOps.words(col(textCol))).as("w"): _*)
-      .groupBy(col(idCol) +: col("is_target") +: payload :+
-        pmod(strhash(col("w")), bLit).as("b"): _*)
-      .agg(count(lit(1)).as("n"))
-      .localCheckpoint(false) // feeds both the bucket models and the scoring pass
-    val model = db.groupBy(col("b")).agg(
+    val db = ngramCounts(docs, idCol, textCol, targetPred, "is_target", payload, 1, numBuckets)
+    val model = db.groupBy(col("b0")).agg(
       coalesce(sum(when(col("is_target"), col("n"))), lit(0L)).as("ct"),
       coalesce(sum(when(!col("is_target"), col("n"))), lit(0L)).as("cr"))
     val tot = model.agg(
       coalesce(sum(col("ct")), lit(0L)).as("t"),
       coalesce(sum(col("cr")), lit(0L)).as("r"))
     val lr = model.crossJoin(broadcast(tot))
-      .select(col("b"),
+      .select(col("b0"),
         round(log(((col("ct") + 1L) * (col("r") + bLit)).cast("double") /
           ((col("cr") + 1L) * (col("t") + bLit)).cast("double")), 6)
           .cast("decimal(18,6)").as("lr"))
-    db.join(broadcast(lr), Seq("b"))
+    db.join(broadcast(lr), Seq("b0"))
       .groupBy(col(idCol) +: col("is_target") +: payload: _*)
       .agg(
         sum(col("n")).as("n_tokens"),
@@ -214,36 +293,39 @@ object Selection {
   /** CCNet-style LM quality scoring (Wenzek et al. 2020, "CCNet:
     * Extracting High Quality Monolingual Datasets from Web Crawl
     * Data", arXiv:1911.00359): score every document by the per-token
-    * CROSS-ENTROPY of a hashed bag-of-words language model trained on
-    * a REFERENCE slice (`refPred` — the wiki-like high-quality subset;
-    * CCNet trains a KenLM there and buckets the crawl into
-    * head/middle/tail by perplexity — cross-entropy is ln(ppl), the
-    * same order, so thresholds translate directly). Companion to
+    * CROSS-ENTROPY of an interpolated add-one hashed n-gram LM of
+    * Markov order `order` − 1, trained on a REFERENCE slice (`refPred`
+    * — the wiki-like high-quality subset; cross-entropy is ln(ppl), so
+    * CCNet's perplexity thresholds translate directly). Companion to
     * [[dsirWeights]]: DSIR scores target-vs-raw contrast, this scores
-    * absolute closeness to the reference distribution — the classic
-    * quality filter.
+    * absolute closeness to the reference distribution.
     *
-    * Model: words hash into `numBuckets` buckets; reference counts are
-    * add-one smoothed over the bucket space, so buckets unseen in the
-    * reference back off to the floor 1/(T+B) instead of -∞. Per doc:
-    * ce = −Σ_b n(doc,b)·ln(p_ref(b)) / n_tokens.
+    * Per token, with `lambdas` = (λ_n … λ_2) highest order first and
+    * λ_1 = 1 − λ_n − … − λ_2:
     *
-    * Cross-engine FP discipline (the [[dsirWeights]] pattern): each
-    * bucket's log-prob is ln of ONE double division of exact long
-    * operands ((c_b+1) / (T+B)), quantized round(6) → DECIMAL per
-    * term; the per-doc dot product is an exact decimal sum, and the
-    * final ce is one negation and one division of bit-identical
-    * operands — so the raw double hash-matches. (Perplexity itself is
-    * deliberately NOT emitted: exp of an aggregated double is the one
-    * op whose last ulp may differ between engines' libm; callers
-    * threshold in ln-space, which is order-identical.)
+    *   ln(Σ_k λ_k·P_k),  P_k = (c(h_k, w) + 1) / (c(h_k ·) + B)
     *
-    * Scale shape: identical to [[dsirWeights]] — the corpus tokenizes
-    * ONCE into per-(doc, bucket) counts (map-side combined), the
-    * reference model is a ≤B-row broadcast at any corpus size, and the
-    * per-doc sum partial-aggregates below its exchange. Docs with zero
-    * words drop out (no bucket rows — mirrored by the oracle's
-    * unnest).
+    * where h_k is the k − 1 words before w (the start context B where
+    * the document has none) and P_1's context count is the reference
+    * total. Order 1 is the bag-of-words unigram (no lambdas); unseen
+    * buckets back off to the add-one floor instead of −∞.
+    *
+    * Cross-engine FP discipline: every count is an exact long, each
+    * P_k one double division, the λ_k shared driver-computed literals
+    * (rendered as plain strings by the oracles), the mixture summed
+    * highest order first, and each per-token log-prob quantized
+    * round(,6) → DECIMAL before the exact count-weighted sums
+    * ([[crossEntropy]]). Perplexity itself is deliberately NOT
+    * emitted: exp of an aggregated double is the one op whose last ulp
+    * may differ between engines' libm; threshold in ln-space instead.
+    *
+    * Scale shape: [[ngramCounts]] at `order` (one counted exchange),
+    * then 2·order − 1 broadcast model tables, each a group-by of the
+    * reference rows. Order 1's model is ≤ B rows, so its broadcast
+    * bound checks at entry with no job; from order 2 the finest table
+    * is bounded by the reference slice's distinct hashed n-grams, and
+    * one control-plane count REQUIRES it ≤ `maxModelRows` before the
+    * first broadcast (fail-loud, never an executor OOM).
     *
     * Output: id, `is_ref`, any `payloadCols`, `n_tokens`,
     * `cross_entropy` (double, nats per token).
@@ -253,444 +335,129 @@ object Selection {
       idCol: String,
       textCol: String,
       refPred: Column,
+      order: Int = 1,
+      lambdas: Seq[Double] = Nil,
       numBuckets: Int = 1 << 12,
       payloadCols: Seq[String] = Nil,
       maxModelRows: Long = MaxBroadcastModelRows
   ): DataFrame = {
     require(numBuckets > 0, s"numBuckets must be positive, got $numBuckets")
-    // reference model is one row per bucket — structurally ≤ numBuckets
-    // rows (see dsirWeights), so the bound checks at entry, jobless
-    require(numBuckets <= maxModelRows,
+    requireOrder(order, 1 to 3, "lmCrossEntropy")
+    require(lambdas.size == order - 1,
+      s"lmCrossEntropy: order $order takes ${order - 1} lambdas (highest order first), " +
+        s"got ${lambdas.size}")
+    require(lambdas.forall(_ > 0) && lambdas.sum < 1,
+      s"lambdas must be positive with a sum below 1, got ${lambdas.mkString(", ")}")
+    // the unigram model is one row per bucket — structurally ≤ numBuckets
+    // rows, so the bound checks at entry, jobless
+    if (order == 1) require(numBuckets <= maxModelRows,
       s"lmCrossEntropy: numBuckets=$numBuckets exceeds maxModelRows=$maxModelRows — " +
         "the reference model broadcasts to every executor; lower numBuckets or " +
         "raise maxModelRows deliberately.")
     val bLit = lit(numBuckets.toLong)
     val payload = payloadCols.map(col)
-    val db = graft.core.Fan.out(docs)
-      .select(col(idCol) +: refPred.as("is_ref") +: payload :+
-        explode(TextOps.words(col(textCol))).as("w"): _*)
-      .groupBy(col(idCol) +: col("is_ref") +: payload :+
-        pmod(strhash(col("w")), bLit).as("b"): _*)
-      .agg(count(lit(1)).as("n"))
-      .localCheckpoint(false) // feeds the reference model and the scoring pass
-    val model = db.filter(col("is_ref")).groupBy(col("b"))
-      .agg(sum(col("n")).as("cb"))
-    val tot = model.agg(coalesce(sum(col("cb")), lit(0L)).as("t"))
-    val scored = db
-      .join(broadcast(model), Seq("b"), "left")
-      .crossJoin(broadcast(tot))
-      .withColumn("lp",
-        round(log((coalesce(col("cb"), lit(0L)) + 1L).cast("double") /
-          (col("t") + bLit).cast("double")), 6).cast("decimal(18,6)"))
-    scored
-      .groupBy(col(idCol) +: col("is_ref") +: payload: _*)
-      .agg(
-        sum(col("n")).as("n_tokens"),
-        sum(col("n") * col("lp")).as("lps"))
-      .select(col(idCol) +: col("is_ref") +: payload :+
-        col("n_tokens") :+
-        (-(col("lps").cast("double")) / col("n_tokens").cast("double"))
-          .as("cross_entropy"): _*)
-  }
-
-  /** Interpolated-bigram cross-entropy — [[lmCrossEntropy]]'s model
-    * upgraded one Markov order (the KenLM-direction step CCNet's real
-    * scorer takes): each token scores under
-    * `ln(λ·P_bg(w|prev) + (1−λ)·P_ug(w))` with add-one smoothing on
-    * BOTH hashed models — `P_bg = (c(prev,w)+1)/(c(prev·)+B)`,
-    * `P_ug = (c(w)+1)/(T+B)` — and `prev` of a document's first token
-    * is the reserved start context (bucket id B, outside 0..B−1).
-    *
-    * Token adjacency is built IN ARRAY LAND: the words array zips with
-    * its own 1-shifted self before the explode, so no per-doc window
-    * shuffle exists — the only exchanges are the (doc, prev_b, w_b)
-    * count aggregation and the model joins. Both models are
-    * group-by-bucket aggregates of the SAME counted frame (one corpus
-    * tokenization, localCheckpoint'd); at any corpus size the models
-    * are ≤ B² + B rows — pick `numBuckets` so they broadcast, and the
-    * finest model's row count is REQUIRED ≤ `maxModelRows` (one
-    * control-plane count before the first broadcast — fail-loud, never
-    * an executor OOM). λ and
-    * 1−λ are driver-computed shared literals; per-token log-probs
-    * quantize round(,6)→DECIMAL before the exact count-weighted sums
-    * (the repo's transcendental-parity pattern).
-    */
-  def lmCrossEntropyBigram(
-      docs: DataFrame,
-      idCol: String,
-      textCol: String,
-      refPred: Column,
-      lambda: Double = 0.7,
-      numBuckets: Int = 1 << 12,
-      payloadCols: Seq[String] = Nil,
-      maxModelRows: Long = MaxBroadcastModelRows
-  ): DataFrame = {
-    require(numBuckets > 0, s"numBuckets must be positive, got $numBuckets")
-    require(lambda > 0 && lambda < 1, s"lambda must be in (0,1), got $lambda")
-    val bLit = lit(numBuckets.toLong)
-    val payload = payloadCols.map(col)
-    val ws = TextOps.words(col(textCol))
-    // prev[i] = words[i-1]; prev[0] = NULL → start-context bucket B
-    val prevArr = when(size(ws) > 0,
-      concat(array(lit(null).cast("string")), slice(ws, lit(1), size(ws) - 1)))
-      .otherwise(array().cast("array<string>"))
-    val db = graft.core.Fan.out(docs)
-      .select(col(idCol) +: refPred.as("is_ref") +: payload :+
-        explode(arrays_zip(ws.as("w"), prevArr.as("p"))).as("z"): _*)
-      .groupBy(col(idCol) +: col("is_ref") +: payload :+
-        pmod(strhash(col("z.w")), bLit).as("wb") :+
-        coalesce(pmod(strhash(col("z.p")), bLit), bLit).as("pb"): _*)
-      .agg(count(lit(1)).as("n"))
-      .localCheckpoint(false) // feeds both models and the scoring pass
+    val db = ngramCounts(docs, idCol, textCol, refPred, "is_ref", payload, order, numBuckets)
     val ref = db.filter(col("is_ref"))
-    val ug = ref.groupBy(col("wb").as("u_wb")).agg(sum(col("n")).as("cb"))
-    val bg = ref.groupBy(col("pb").as("b_pb"), col("wb").as("b_wb"))
-      .agg(sum(col("n")).as("c2"))
-    val ctx = ref.groupBy(col("pb").as("c_pb")).agg(sum(col("n")).as("c1"))
-    // bg is the FINEST model: ug and ctx are coarsenings of its group
-    // keys, so one count bounds all three broadcasts below
-    requireModelBroadcastable(bg, "lmCrossEntropyBigram", numBuckets, maxModelRows)
-    val tot = ug.agg(coalesce(sum(col("cb")), lit(0L)).as("t"))
-    val lamLit = lit(lambda)
-    val omLit = lit(1.0 - lambda)
-    val pBg = (coalesce(col("c2"), lit(0L)) + 1L).cast("double") /
-      (coalesce(col("c1"), lit(0L)) + bLit).cast("double")
-    val pUg = (coalesce(col("cb"), lit(0L)) + 1L).cast("double") /
-      (col("t") + bLit).cast("double")
-    val scored = db
-      .join(broadcast(bg), col("pb") === col("b_pb") && col("wb") === col("b_wb"), "left")
-      .join(broadcast(ctx), col("pb") === col("c_pb"), "left")
-      .join(broadcast(ug), col("wb") === col("u_wb"), "left")
-      .crossJoin(broadcast(tot))
-      .withColumn("lp",
-        round(log(lamLit * pBg + omLit * pUg), 6).cast("decimal(18,6)"))
-    scored
-      .groupBy(col(idCol) +: col("is_ref") +: payload: _*)
-      .agg(
-        sum(col("n")).as("n_tokens"),
-        sum(col("n") * col("lp")).as("lps"))
-      .select(col(idCol) +: col("is_ref") +: payload :+
-        col("n_tokens") :+
-        (-(col("lps").cast("double")) / col("n_tokens").cast("double"))
-          .as("cross_entropy"): _*)
+    val t = (1 to order).map(k =>
+      ref.groupBy(gram(k).map(col): _*).agg(sum(col("n")).as(s"c$k")))
+    val ctx = (2 to order).map(k =>
+      ref.groupBy(gram(k).init.map(col): _*).agg(sum(col("n")).as(s"x$k")))
+    // the order-n table is the FINEST model: every other table coarsens
+    // its group keys, so one count bounds all the broadcasts
+    if (order > 1) requireModelBroadcastable(t.last, "lmCrossEntropy", numBuckets, maxModelRows)
+    val tot = t.head.agg(coalesce(sum(col("c1")), lit(0L)).as("t"))
+    def prob(k: Int): Column =
+      (coalesce(col(s"c$k"), lit(0L)) + 1L).cast("double") /
+        ((if (k == 1) col("t") else coalesce(col(s"x$k"), lit(0L))) + bLit).cast("double")
+    // λ_1 subtracts left to right, as the oracle renders it
+    // (1.0 − 0.5 − 0.3 is 0.2 in doubles; 1.0 − (0.5 + 0.3) is not)
+    val weights = lambdas :+ lambdas.foldLeft(1.0)(_ - _)
+    val mix =
+      if (order == 1) prob(1)
+      else (order to 1 by -1).zip(weights).map { case (k, l) => lit(l) * prob(k) }.reduce(_ + _)
+    crossEntropy(db, t, ctx, tot, mix, idCol, payload)
   }
 
-  /** Interpolated-TRIGRAM cross-entropy — the Markov-order-2 member of
-    * the [[lmCrossEntropy]] / [[lmCrossEntropyBigram]] ladder (CCNet's
-    * real scorer is a 5-gram KenLM; each added order closes most of
-    * the remaining gap): per token
-    * `ln(λ3·P_tg + λ2·P_bg + (1−λ3−λ2)·P_ug)` with add-one smoothing
-    * on all three hashed models — `P_tg = (c₃(pp,p,w)+1)/(c₂(pp,p)+B)`
-    * and the lower orders as in the bigram. BOTH history slots of a
-    * document's opening tokens take the reserved start context
-    * (bucket B): position 1 has (pp, p) = (B, B), position 2
-    * (B, hash(w₁)).
+  /** Interpolated Kneser–Ney cross-entropy at `order` 2 or 3 — the
+    * smoothing the CCNet-class perplexity filters actually run (Kneser
+    * & Ney 1995; Chen & Goodman 1999 §3's interpolated form). Instead
+    * of add-one mass spread uniformly, each count is ABSOLUTELY
+    * DISCOUNTED by `discount` and the freed mass backs off one order to
+    * a CONTINUATION distribution — how many distinct contexts complete
+    * this way, not how often ("Francisco" is frequent but only ever
+    * follows "San", so its continuation probability is tiny). The
+    * highest order discounts RAW reference counts; every lower order
+    * discounts continuation TYPE counts, the KN insight applied
+    * recursively:
     *
-    * Same exactness discipline as the bigram: shared λ literals
-    * (BigDecimal plain-string renders in the oracle), per-token
-    * log-prob round(,6)→DECIMAL, count-weighted exact decimal sums,
-    * one closing division.
+    *   P_k(w|h) = max(c_k(h,w) − D, 0)/c_k(h·) + D·N₁₊(h·)/c_k(h·) · P_{k−1}(w|h')
+    *   P_1(w)   = (N₁₊(·w) + 1) / (N₁₊(··) + B)
     *
-    * Scale shape: token adjacency in array land (the words array zips
-    * with its 1- and 2-shifted selves — no window shuffle), ONE
-    * (doc, wb, pb, qb) counted exchange, and five broadcast model
-    * joins. Model rows are bounded by the REFERENCE slice's distinct
-    * hashed n-grams (≤ its token count, and ≤ B·B² absolutely) — at
-    * corpus scale `numBuckets` is the knob that keeps the trigram
-    * table broadcastable, the hashed-LM economy; the trigram table's
-    * row count is REQUIRED ≤ `maxModelRows` (one control-plane count
-    * before the first broadcast — fail-loud, never an executor OOM).
-    */
-  def lmCrossEntropyTrigram(
-      docs: DataFrame,
-      idCol: String,
-      textCol: String,
-      refPred: Column,
-      lambda3: Double = 0.5,
-      lambda2: Double = 0.3,
-      numBuckets: Int = 1 << 12,
-      payloadCols: Seq[String] = Nil,
-      maxModelRows: Long = MaxBroadcastModelRows
-  ): DataFrame = {
-    require(numBuckets > 0, s"numBuckets must be positive, got $numBuckets")
-    require(lambda3 > 0 && lambda2 > 0 && lambda3 + lambda2 < 1,
-      s"lambdas must be positive with lambda3 + lambda2 < 1, got $lambda3, $lambda2")
-    val bLit = lit(numBuckets.toLong)
-    val payload = payloadCols.map(col)
-    val ws = TextOps.words(col(textCol))
-    val nullS = lit(null).cast("string")
-    val prev1 = when(size(ws) > 0,
-      concat(array(nullS), slice(ws, lit(1), size(ws) - 1)))
-      .otherwise(array().cast("array<string>"))
-    val prev2 = when(size(ws) >= 2,
-      concat(array(nullS, nullS), slice(ws, lit(1), size(ws) - 2)))
-      .otherwise(when(size(ws) === 1, array(nullS))
-        .otherwise(array().cast("array<string>")))
-    val db = graft.core.Fan.out(docs)
-      .select(col(idCol) +: refPred.as("is_ref") +: payload :+
-        explode(arrays_zip(ws.as("w"), prev1.as("p"), prev2.as("q"))).as("z"): _*)
-      .groupBy(col(idCol) +: col("is_ref") +: payload :+
-        pmod(strhash(col("z.w")), bLit).as("wb") :+
-        coalesce(pmod(strhash(col("z.p")), bLit), bLit).as("pb") :+
-        coalesce(pmod(strhash(col("z.q")), bLit), bLit).as("qb"): _*)
-      .agg(count(lit(1)).as("n"))
-      .localCheckpoint(false) // feeds all five models and the scoring pass
-    val ref = db.filter(col("is_ref"))
-    val ug = ref.groupBy(col("wb").as("u_wb")).agg(sum(col("n")).as("cb"))
-    val bg = ref.groupBy(col("pb").as("b_pb"), col("wb").as("b_wb"))
-      .agg(sum(col("n")).as("c2"))
-    val ctx1 = ref.groupBy(col("pb").as("c_pb")).agg(sum(col("n")).as("c1"))
-    val tg = ref.groupBy(col("qb").as("t_qb"), col("pb").as("t_pb"), col("wb").as("t_wb"))
-      .agg(sum(col("n")).as("c3"))
-    val ctx2 = ref.groupBy(col("qb").as("d_qb"), col("pb").as("d_pb"))
-      .agg(sum(col("n")).as("cc2"))
-    // tg is the FINEST model: ug/bg/ctx1/ctx2 all coarsen its group
-    // keys, so one count bounds all five broadcasts below
-    requireModelBroadcastable(tg, "lmCrossEntropyTrigram", numBuckets, maxModelRows)
-    val tot = ug.agg(coalesce(sum(col("cb")), lit(0L)).as("t"))
-    val l3Lit = lit(lambda3)
-    val l2Lit = lit(lambda2)
-    val l1Lit = lit(1.0 - lambda3 - lambda2)
-    val pTg = (coalesce(col("c3"), lit(0L)) + 1L).cast("double") /
-      (coalesce(col("cc2"), lit(0L)) + bLit).cast("double")
-    val pBg = (coalesce(col("c2"), lit(0L)) + 1L).cast("double") /
-      (coalesce(col("c1"), lit(0L)) + bLit).cast("double")
-    val pUg = (coalesce(col("cb"), lit(0L)) + 1L).cast("double") /
-      (col("t") + bLit).cast("double")
-    val scored = db
-      .join(broadcast(tg),
-        col("qb") === col("t_qb") && col("pb") === col("t_pb") &&
-          col("wb") === col("t_wb"), "left")
-      .join(broadcast(ctx2),
-        col("qb") === col("d_qb") && col("pb") === col("d_pb"), "left")
-      .join(broadcast(bg), col("pb") === col("b_pb") && col("wb") === col("b_wb"), "left")
-      .join(broadcast(ctx1), col("pb") === col("c_pb"), "left")
-      .join(broadcast(ug), col("wb") === col("u_wb"), "left")
-      .crossJoin(broadcast(tot))
-      .withColumn("lp",
-        round(log(l3Lit * pTg + l2Lit * pBg + l1Lit * pUg), 6).cast("decimal(18,6)"))
-    scored
-      .groupBy(col(idCol) +: col("is_ref") +: payload: _*)
-      .agg(
-        sum(col("n")).as("n_tokens"),
-        sum(col("n") * col("lp")).as("lps"))
-      .select(col(idCol) +: col("is_ref") +: payload :+
-        col("n_tokens") :+
-        (-(col("lps").cast("double")) / col("n_tokens").cast("double"))
-          .as("cross_entropy"): _*)
-  }
-
-  /** Interpolated Kneser–Ney bigram cross-entropy — the smoothing the
-    * CCNet-class perplexity filters actually run (Kneser & Ney 1995;
-    * Chen & Goodman 1999's interpolated form): instead of add-one
-    * mass spread uniformly, each bigram's count is ABSOLUTELY
-    * DISCOUNTED by `discount` and the freed mass backs off to the
-    * CONTINUATION distribution — how many distinct contexts a word
-    * completes, not how often it occurs ("Francisco" is frequent but
-    * only ever follows "San", so its continuation probability is
-    * tiny). Per token, with all counts from the reference slice:
+    * with c_n the raw counts, c_k (k < n) the number of distinct
+    * older words preceding (h', w), N₁₊(h·) the distinct words after
+    * h, and N₁₊(··) the number of distinct bigram types. A context h
+    * unseen in the reference backs off to P_{k−1} alone; the +1/+B on
+    * P_1 keeps unseen buckets finite (the hashed-vocabulary analog of
+    * KN's unigram floor).
     *
-    *   P(w|p) = max(c(p,w) − D, 0)/c(p·) + D·N₁₊(p·)/c(p·) · Pc(w)
-    *   Pc(w)  = (N₁₊(·w) + 1) / (N₁₊(··) + B)
+    * Every table derives from the order-n TYPE table T_n (T_{k−1} is
+    * T_k grouped by its newest k − 1 slots, counting rows), so type and
+    * token counts stay consistent and ONE count of T_n guards all the
+    * broadcasts ([[MaxBroadcastModelRows]]).
     *
-    * where N₁₊(p·) = distinct words following p, N₁₊(·w) = distinct
-    * contexts preceding w, N₁₊(··) = total distinct bigram types —
-    * the +1/+B add-one on the continuation model keeps unseen buckets
-    * finite (the hashed-vocabulary analog of KN's unigram floor). A
-    * context unseen in the reference backs off to Pc(w) alone.
+    * Cross-engine FP discipline: each order is a FIXED sequence of
+    * IEEE double ops over exact longs — subtract/max/divide for the
+    * discounted term, a multiply-divide back-off weight, one
+    * multiply-add — mirrored op-for-op by the oracles, then the
+    * [[crossEntropy]] quantized tail. `discount` renders as a shared
+    * plain-string literal in both engines.
     *
-    * Cross-engine FP discipline (the [[lmCrossEntropyBigram]]
-    * pattern): every count is an exact long; the per-token probability
-    * is a FIXED sequence of IEEE double ops — one divide for Pc, a
-    * subtract/max/divide for the discounted term, a multiply-divide
-    * for the back-off weight λ(p) = D·N₁₊(p·)/c(p·), one
-    * multiply-add — mirrored op-for-op by the oracle, then
-    * round(,6)→DECIMAL before the exact count-weighted sum. `discount`
-    * renders as a shared plain-string literal in both engines.
-    *
-    * Scale shape: identical to [[lmCrossEntropyBigram]] — adjacency in
-    * array land, ONE counted (doc, wb, pb) exchange, and the bigram
-    * type table (the finest model — the context and continuation
-    * tables are its group-by coarsenings, computed FROM it so the
-    * type counts stay consistent) broadcast under the
-    * [[MaxBroadcastModelRows]] fail-loud bound.
+    * Scale shape: [[ngramCounts]] at `order` (one counted exchange),
+    * T_n and T_2 … T_{n−1} localCheckpoint'd (each feeds its coarsenings
+    * AND the scoring join), 2·order broadcast model joins.
     */
   def lmCrossEntropyKneserNey(
       docs: DataFrame,
       idCol: String,
       textCol: String,
       refPred: Column,
+      order: Int = 2,
       discount: Double = 0.75,
       numBuckets: Int = 1 << 12,
       payloadCols: Seq[String] = Nil,
       maxModelRows: Long = MaxBroadcastModelRows
   ): DataFrame = {
     require(numBuckets > 0, s"numBuckets must be positive, got $numBuckets")
+    requireOrder(order, 2 to 3, "lmCrossEntropyKneserNey")
     require(discount > 0 && discount < 1,
       s"discount must be in (0,1), got $discount")
     val bLit = lit(numBuckets.toLong)
     val payload = payloadCols.map(col)
-    val ws = TextOps.words(col(textCol))
-    val prevArr = when(size(ws) > 0,
-      concat(array(lit(null).cast("string")), slice(ws, lit(1), size(ws) - 1)))
-      .otherwise(array().cast("array<string>"))
-    val db = graft.core.Fan.out(docs)
-      .select(col(idCol) +: refPred.as("is_ref") +: payload :+
-        explode(arrays_zip(ws.as("w"), prevArr.as("p"))).as("z"): _*)
-      .groupBy(col(idCol) +: col("is_ref") +: payload :+
-        pmod(strhash(col("z.w")), bLit).as("wb") :+
-        coalesce(pmod(strhash(col("z.p")), bLit), bLit).as("pb"): _*)
-      .agg(count(lit(1)).as("n"))
-      .localCheckpoint(false) // feeds the bigram type table and the scoring pass
-    // ALL models derive from the bigram type table so token counts and
-    // type counts stay consistent: ctx = row-sums + distinct-word
-    // counts per context, cont = distinct-context counts per word,
-    // tot = the type total
-    val bg = db.filter(col("is_ref"))
-      .groupBy(col("pb").as("b_pb"), col("wb").as("b_wb"))
-      .agg(sum(col("n")).as("c2"))
-      .localCheckpoint(false) // feeds ctx/cont/tot AND the scoring join
-    requireModelBroadcastable(bg, "lmCrossEntropyKneserNey", numBuckets, maxModelRows)
-    val ctx = bg.groupBy(col("b_pb").as("c_pb"))
-      .agg(sum(col("c2")).as("c1"), count(lit(1)).as("n1p"))
-    val cont = bg.groupBy(col("b_wb").as("u_wb")).agg(count(lit(1)).as("n1s"))
-    val tot = bg.agg(coalesce(count(lit(1)), lit(0L)).as("nt"))
-    val dLit = lit(discount)
-    val pc = (coalesce(col("n1s"), lit(0L)) + 1L).cast("double") /
-      (col("nt") + bLit).cast("double")
-    val c1d = col("c1").cast("double")
-    val t1 = greatest(coalesce(col("c2"), lit(0L)).cast("double") - dLit, lit(0.0)) / c1d
-    val lam = dLit * col("n1p").cast("double") / c1d
-    val p = when(col("c1").isNotNull, t1 + lam * pc).otherwise(pc)
-    val scored = db
-      .join(broadcast(bg), col("pb") === col("b_pb") && col("wb") === col("b_wb"), "left")
-      .join(broadcast(ctx), col("pb") === col("c_pb"), "left")
-      .join(broadcast(cont), col("wb") === col("u_wb"), "left")
-      .crossJoin(broadcast(tot))
-      .withColumn("lp", round(log(p), 6).cast("decimal(18,6)"))
-    scored
-      .groupBy(col(idCol) +: col("is_ref") +: payload: _*)
-      .agg(
-        sum(col("n")).as("n_tokens"),
-        sum(col("n") * col("lp")).as("lps"))
-      .select(col(idCol) +: col("is_ref") +: payload :+
-        col("n_tokens") :+
-        (-(col("lps").cast("double")) / col("n_tokens").cast("double"))
-          .as("cross_entropy"): _*)
-  }
-
-  /** Interpolated Kneser–Ney TRIGRAM cross-entropy — the ladder's
-    * order-3 member ([[lmCrossEntropyKneserNey]] one Markov order up,
-    * Chen & Goodman 1999 §3's interpolated KN at the order real
-    * CCNet-class scorers approach): the highest order discounts RAW
-    * counts, every lower order discounts CONTINUATION TYPE counts —
-    * "how many distinct contexts complete this way", the KN insight
-    * applied recursively:
-    *
-    *   P(w|q,p)  = max(c₃(qpw) − D, 0)/c₂(qp·) + D·N₁₊(qp·)/c₂(qp·) · P₂(w|p)
-    *   P₂(w|p)   = max(N₁₊(·pw) − D, 0)/N₁₊(·p·) + D·N₁₊(p·)/N₁₊(·p·) · Pc(w)
-    *   Pc(w)     = (N₁₊(·w) + 1) / (N₁₊(··) + B)
-    *
-    * with an unseen (q,p) context backing off to P₂ and an unseen p to
-    * Pc. ALL count tables derive from the trigram TYPE table (mid =
-    * distinct-q counts per (p,w); its coarsenings give every N₁₊), so
-    * type/token counts stay consistent and ONE count guards all six
-    * broadcasts ([[MaxBroadcastModelRows]]).
-    *
-    * Cross-engine FP discipline: the [[lmCrossEntropyKneserNey]]
-    * sequence applied twice — each order is subtract/max/divide plus a
-    * multiply-divide back-off weight and one multiply-add, every
-    * operand an exact long, mirrored op-for-op by the oracle, then
-    * round(,6)→DECIMAL per token and exact count-weighted sums.
-    *
-    * Scale shape: the trigram tokenize of [[lmCrossEntropyTrigram]]
-    * (adjacency in array land, ONE counted exchange) + six broadcast
-    * model joins, models bounded by the reference slice's distinct
-    * hashed trigrams.
-    */
-  def lmCrossEntropyKneserNeyTrigram(
-      docs: DataFrame,
-      idCol: String,
-      textCol: String,
-      refPred: Column,
-      discount: Double = 0.75,
-      numBuckets: Int = 1 << 12,
-      payloadCols: Seq[String] = Nil,
-      maxModelRows: Long = MaxBroadcastModelRows
-  ): DataFrame = {
-    require(numBuckets > 0, s"numBuckets must be positive, got $numBuckets")
-    require(discount > 0 && discount < 1,
-      s"discount must be in (0,1), got $discount")
-    val bLit = lit(numBuckets.toLong)
-    val payload = payloadCols.map(col)
-    val ws = TextOps.words(col(textCol))
-    val nullS = lit(null).cast("string")
-    val prev1 = when(size(ws) > 0,
-      concat(array(nullS), slice(ws, lit(1), size(ws) - 1)))
-      .otherwise(array().cast("array<string>"))
-    val prev2 = when(size(ws) >= 2,
-      concat(array(nullS, nullS), slice(ws, lit(1), size(ws) - 2)))
-      .otherwise(when(size(ws) === 1, array(nullS))
-        .otherwise(array().cast("array<string>")))
-    val db = graft.core.Fan.out(docs)
-      .select(col(idCol) +: refPred.as("is_ref") +: payload :+
-        explode(arrays_zip(ws.as("w"), prev1.as("p"), prev2.as("q"))).as("z"): _*)
-      .groupBy(col(idCol) +: col("is_ref") +: payload :+
-        pmod(strhash(col("z.w")), bLit).as("wb") :+
-        coalesce(pmod(strhash(col("z.p")), bLit), bLit).as("pb") :+
-        coalesce(pmod(strhash(col("z.q")), bLit), bLit).as("qb"): _*)
-      .agg(count(lit(1)).as("n"))
-      .localCheckpoint(false) // feeds the trigram type table and the scoring pass
-    val tg = db.filter(col("is_ref"))
-      .groupBy(col("qb").as("t_qb"), col("pb").as("t_pb"), col("wb").as("t_wb"))
-      .agg(sum(col("n")).as("c3"))
+    val db = ngramCounts(docs, idCol, textCol, refPred, "is_ref", payload, order, numBuckets)
+    val top = db.filter(col("is_ref"))
+      .groupBy(gram(order).map(col): _*).agg(sum(col("n")).as(s"c$order"))
       .localCheckpoint(false) // feeds every lower-order table AND the scoring join
-    requireModelBroadcastable(tg, "lmCrossEntropyKneserNeyTrigram", numBuckets, maxModelRows)
-    val ctx2 = tg.groupBy(col("t_qb").as("d_qb"), col("t_pb").as("d_pb"))
-      .agg(sum(col("c3")).as("cc2"), count(lit(1)).as("n1p3"))
-    // middle order: continuation TYPE counts — distinct left contexts
-    // q per (p, w), then its row/level coarsenings
-    val mid = tg.groupBy(col("t_pb").as("m_pb"), col("t_wb").as("m_wb"))
-      .agg(count(lit(1)).as("c2p"))
-      .localCheckpoint(false) // feeds midctx/cont/tot AND the scoring join
-    val midctx = mid.groupBy(col("m_pb").as("x_pb"))
-      .agg(sum(col("c2p")).as("m1"), count(lit(1)).as("n1pw"))
-    val cont = mid.groupBy(col("m_wb").as("u_wb")).agg(count(lit(1)).as("n1s"))
-    val tot = mid.agg(count(lit(1)).as("nt"))
+    requireModelBroadcastable(top, "lmCrossEntropyKneserNey", numBuckets, maxModelRows)
+    // T_{k−1} = T_k by its newest k − 1 slots, counting types; t(k − 1) = T_k
+    val t = (order to 2 by -1).scanLeft(top) { (tk, k) =>
+      val lower = tk.groupBy(gram(k - 1).map(col): _*).agg(count(lit(1)).as(s"c${k - 1}"))
+      if (k > 2) lower.localCheckpoint(false) else lower
+    }.reverse
+    // ctx_k = T_k by its context: token sum and type count
+    val ctx = (2 to order).map(k => t(k - 1).groupBy(gram(k).init.map(col): _*)
+      .agg(sum(col(s"c$k")).as(s"x$k"), count(lit(1)).as(s"n$k")))
+    val tot = t(1).agg(count(lit(1)).as("nt"))
     val dLit = lit(discount)
-    val pc = (coalesce(col("n1s"), lit(0L)) + 1L).cast("double") /
+    val pc = (coalesce(col("c1"), lit(0L)) + 1L).cast("double") /
       (col("nt") + bLit).cast("double")
-    val m1d = col("m1").cast("double")
-    val p2 = when(col("m1").isNotNull,
-      greatest(coalesce(col("c2p"), lit(0L)).cast("double") - dLit, lit(0.0)) / m1d +
-        dLit * col("n1pw").cast("double") / m1d * pc)
-      .otherwise(pc)
-    val cc2d = col("cc2").cast("double")
-    val p3 = when(col("cc2").isNotNull,
-      greatest(coalesce(col("c3"), lit(0L)).cast("double") - dLit, lit(0.0)) / cc2d +
-        dLit * col("n1p3").cast("double") / cc2d * p2)
-      .otherwise(p2)
-    val scored = db
-      .join(broadcast(tg),
-        col("qb") === col("t_qb") && col("pb") === col("t_pb") &&
-          col("wb") === col("t_wb"), "left")
-      .join(broadcast(ctx2),
-        col("qb") === col("d_qb") && col("pb") === col("d_pb"), "left")
-      .join(broadcast(mid),
-        col("pb") === col("m_pb") && col("wb") === col("m_wb"), "left")
-      .join(broadcast(midctx), col("pb") === col("x_pb"), "left")
-      .join(broadcast(cont), col("wb") === col("u_wb"), "left")
-      .crossJoin(broadcast(tot))
-      .withColumn("lp", round(log(p3), 6).cast("decimal(18,6)"))
-    scored
-      .groupBy(col(idCol) +: col("is_ref") +: payload: _*)
-      .agg(
-        sum(col("n")).as("n_tokens"),
-        sum(col("n") * col("lp")).as("lps"))
-      .select(col(idCol) +: col("is_ref") +: payload :+
-        col("n_tokens") :+
-        (-(col("lps").cast("double")) / col("n_tokens").cast("double"))
-          .as("cross_entropy"): _*)
+    val p = (2 to order).foldLeft(pc) { (lower, k) =>
+      val xd = col(s"x$k").cast("double")
+      when(col(s"x$k").isNotNull,
+        greatest(coalesce(col(s"c$k"), lit(0L)).cast("double") - dLit, lit(0.0)) / xd +
+          dLit * col(s"n$k").cast("double") / xd * lower)
+        .otherwise(lower)
+    }
+    crossEntropy(db, t, ctx, tot, p, idCol, payload)
   }
 
   /** The DSIR resampling step: draw `k` docs PER `groupCol` slice,

@@ -1335,6 +1335,38 @@ object LlmQueries {
        |FROM f ORDER BY doc""".stripMargin
   }
 
+  private val lrCols = Seq("_x0", "_x1", "_x2")
+
+  /** The quality-LR feature frame, the Spark twin of [[lrFeatsSql]]:
+    * label = the quality-score median split, features = the three
+    * quality ratios centered and ×10-scaled by fixed literals
+    * (corpus-independent constants, so the oracle stays static): raw
+    * ratios have std 0.007-0.2, which stalls GD — centered ×10
+    * features reach 90% accuracy in 40 rounds. Checkpointed: one
+    * tokenize feeds training AND scoring.
+    */
+  private def lrFeatures(s: org.apache.spark.sql.SparkSession, dir: String): DataFrame =
+    TextAnalysis.quality(Tables.documents(s, dir), "doc_id", "text")
+      .select(col("doc"),
+        (col("quality_score") >= 0.405).cast("double").as("_y"),
+        ((col("stopword_ratio") - lit(0.06)) * lit(10.0)).as("_x0"),
+        ((least(col("avg_word_len") / lit(10.0), lit(1.0)) - lit(0.45)) * lit(10.0)).as("_x1"),
+        ((col("alpha_ratio") - lit(0.82)) * lit(10.0)).as("_x2"))
+      .localCheckpoint(false)
+
+  /** The held-out fifth under the holdout-trained LR, the Spark twin of
+    * [[lrHoldoutInnerSql]] filtered to `doc % 5 = 0`: train on the
+    * doc_id % 5 != 0 eighty percent, score the other fifth, join its
+    * label. Columns: doc, margin_micro, score, keep, label.
+    */
+  private def lrHeldOut(s: org.apache.spark.sql.SparkSession, dir: String): DataFrame = {
+    val feats = lrFeatures(s, dir)
+    val wu = Classify.logisticTrain(
+      feats.filter(col("doc") % 5 =!= 0), "_y", lrCols, iters = 40, lr = 4.0)
+    Classify.logisticScore(feats.filter(col("doc") % 5 === 0), "doc", lrCols, wu)
+      .join(feats.select(col("doc"), col("_y").cast("long").as("label")), "doc")
+  }
+
   /** CCNet/GPT-3-style logistic-regression quality classifier
     * (Classify.logisticTrain/logisticScore): 40 full-batch GD
     * iterations over the three oracled quality features (rounded
@@ -1349,19 +1381,9 @@ object LlmQueries {
     * once-rounded sigmoid score, and the margin-sign keep verdict.
     */
   val qualityLr: Q = (s, dir) => {
-    val fc = Seq("_x0", "_x1", "_x2")
-    // fixed-literal centering/scaling (corpus-independent constants, so
-    // the oracle stays static): raw ratios have std 0.007-0.2, which
-    // stalls GD — centered ×10 features reach 90% accuracy in 40 rounds
-    val feats = TextAnalysis.quality(Tables.documents(s, dir), "doc_id", "text")
-      .select(col("doc"),
-        (col("quality_score") >= 0.405).cast("double").as("_y"),
-        ((col("stopword_ratio") - lit(0.06)) * lit(10.0)).as("_x0"),
-        ((least(col("avg_word_len") / lit(10.0), lit(1.0)) - lit(0.45)) * lit(10.0)).as("_x1"),
-        ((col("alpha_ratio") - lit(0.82)) * lit(10.0)).as("_x2"))
-      .localCheckpoint(false) // one tokenize feeds training AND scoring
-    val wu = Classify.logisticTrain(feats, "_y", fc, iters = 40, lr = 4.0)
-    Classify.logisticScore(feats, "doc", fc, wu)
+    val feats = lrFeatures(s, dir)
+    val wu = Classify.logisticTrain(feats, "_y", lrCols, iters = 40, lr = 4.0)
+    Classify.logisticScore(feats, "doc", lrCols, wu)
       .join(feats.select(col("doc"), col("_y").cast("long").as("label")), "doc")
       .select(col("doc"), col("label"), col("margin_micro"), col("score"), col("keep"))
       .orderBy("doc")
@@ -1374,17 +1396,10 @@ object LlmQueries {
     * oracle trains on the filtered CTE and scores the full one.
     */
   val qualityLrHoldout: Q = (s, dir) => {
-    val fc = Seq("_x0", "_x1", "_x2")
-    val feats = TextAnalysis.quality(Tables.documents(s, dir), "doc_id", "text")
-      .select(col("doc"),
-        (col("quality_score") >= 0.405).cast("double").as("_y"),
-        ((col("stopword_ratio") - lit(0.06)) * lit(10.0)).as("_x0"),
-        ((least(col("avg_word_len") / lit(10.0), lit(1.0)) - lit(0.45)) * lit(10.0)).as("_x1"),
-        ((col("alpha_ratio") - lit(0.82)) * lit(10.0)).as("_x2"))
-      .localCheckpoint(false)
+    val feats = lrFeatures(s, dir)
     val wu = Classify.logisticTrain(
-      feats.filter(col("doc") % 5 =!= 0), "_y", fc, iters = 40, lr = 4.0)
-    Classify.logisticScore(feats, "doc", fc, wu)
+      feats.filter(col("doc") % 5 =!= 0), "_y", lrCols, iters = 40, lr = 4.0)
+    Classify.logisticScore(feats, "doc", lrCols, wu)
       .join(feats.select(col("doc"), col("_y").cast("long").as("label")), "doc")
       .select(col("doc"), col("label"), col("margin_micro"), col("score"), col("keep"),
         (col("doc") % 5 === 0).as("holdout"))
@@ -1429,21 +1444,8 @@ object LlmQueries {
     * confidence sums, one division per output rate. ECE is
     * Σ n·abs_gap / Σ n over these rows.
     */
-  val qualityLrCalibration: Q = (s, dir) => {
-    val fc = Seq("_x0", "_x1", "_x2")
-    val feats = TextAnalysis.quality(Tables.documents(s, dir), "doc_id", "text")
-      .select(col("doc"),
-        (col("quality_score") >= 0.405).cast("double").as("_y"),
-        ((col("stopword_ratio") - lit(0.06)) * lit(10.0)).as("_x0"),
-        ((least(col("avg_word_len") / lit(10.0), lit(1.0)) - lit(0.45)) * lit(10.0)).as("_x1"),
-        ((col("alpha_ratio") - lit(0.82)) * lit(10.0)).as("_x2"))
-      .localCheckpoint(false)
-    val wu = Classify.logisticTrain(
-      feats.filter(col("doc") % 5 =!= 0), "_y", fc, iters = 40, lr = 4.0)
-    val held = Classify.logisticScore(feats.filter(col("doc") % 5 === 0), "doc", fc, wu)
-      .join(feats.select(col("doc"), col("_y").cast("long").as("label")), "doc")
-    Classify.calibrationBins(held, "label", "score", bins = 8).orderBy("bin")
-  }
+  val qualityLrCalibration: Q = (s, dir) =>
+    Classify.calibrationBins(lrHeldOut(s, dir), "label", "score", bins = 8).orderBy("bin")
 
   /** Isotonic calibration (Classify.isotonicCalibration) of the same
     * held-out LR scores: the PAV-fitted monotone probability curve
@@ -1452,21 +1454,8 @@ object LlmQueries {
     * nondecreasing mapping a deployed calibrator would use. Minimax
     * form so the oracle's join-lattice replay is bit-identical.
     */
-  val qualityLrIsotonic: Q = (s, dir) => {
-    val fc = Seq("_x0", "_x1", "_x2")
-    val feats = TextAnalysis.quality(Tables.documents(s, dir), "doc_id", "text")
-      .select(col("doc"),
-        (col("quality_score") >= 0.405).cast("double").as("_y"),
-        ((col("stopword_ratio") - lit(0.06)) * lit(10.0)).as("_x0"),
-        ((least(col("avg_word_len") / lit(10.0), lit(1.0)) - lit(0.45)) * lit(10.0)).as("_x1"),
-        ((col("alpha_ratio") - lit(0.82)) * lit(10.0)).as("_x2"))
-      .localCheckpoint(false)
-    val wu = Classify.logisticTrain(
-      feats.filter(col("doc") % 5 =!= 0), "_y", fc, iters = 40, lr = 4.0)
-    val held = Classify.logisticScore(feats.filter(col("doc") % 5 === 0), "doc", fc, wu)
-      .join(feats.select(col("doc"), col("_y").cast("long").as("label")), "doc")
-    Classify.isotonicCalibration(held, "label", "score", bins = 8).orderBy("bin")
-  }
+  val qualityLrIsotonic: Q = (s, dir) =>
+    Classify.isotonicCalibration(lrHeldOut(s, dir), "label", "score", bins = 8).orderBy("bin")
 
   val qualityLrIsotonicSql: String =
     Classify.isotonicCalibrationSql(
@@ -1480,18 +1469,7 @@ object LlmQueries {
     * the key-partitioned join-lattice over the same holdout unroll.
     */
   val qualityLrIsotonicBySrc: Q = (s, dir) => {
-    val fc = Seq("_x0", "_x1", "_x2")
-    val feats = TextAnalysis.quality(Tables.documents(s, dir), "doc_id", "text")
-      .select(col("doc"),
-        (col("quality_score") >= 0.405).cast("double").as("_y"),
-        ((col("stopword_ratio") - lit(0.06)) * lit(10.0)).as("_x0"),
-        ((least(col("avg_word_len") / lit(10.0), lit(1.0)) - lit(0.45)) * lit(10.0)).as("_x1"),
-        ((col("alpha_ratio") - lit(0.82)) * lit(10.0)).as("_x2"))
-      .localCheckpoint(false)
-    val wu = Classify.logisticTrain(
-      feats.filter(col("doc") % 5 =!= 0), "_y", fc, iters = 40, lr = 4.0)
-    val held = Classify.logisticScore(feats.filter(col("doc") % 5 === 0), "doc", fc, wu)
-      .join(feats.select(col("doc"), col("_y").cast("long").as("label")), "doc")
+    val held = lrHeldOut(s, dir)
       .join(Tables.documents(s, dir).select(col("doc_id").as("doc"), col("source")), "doc")
     Classify.isotonicCalibrationByKey(held, "source", "label", "score", bins = 8)
   }
@@ -1509,21 +1487,8 @@ object LlmQueries {
     * ranks kept integer, HUGEINT ≡ DECIMAL(38,0), one closing
     * division.
     */
-  val qualityLrAuc: Q = (s, dir) => {
-    val fc = Seq("_x0", "_x1", "_x2")
-    val feats = TextAnalysis.quality(Tables.documents(s, dir), "doc_id", "text")
-      .select(col("doc"),
-        (col("quality_score") >= 0.405).cast("double").as("_y"),
-        ((col("stopword_ratio") - lit(0.06)) * lit(10.0)).as("_x0"),
-        ((least(col("avg_word_len") / lit(10.0), lit(1.0)) - lit(0.45)) * lit(10.0)).as("_x1"),
-        ((col("alpha_ratio") - lit(0.82)) * lit(10.0)).as("_x2"))
-      .localCheckpoint(false)
-    val wu = Classify.logisticTrain(
-      feats.filter(col("doc") % 5 =!= 0), "_y", fc, iters = 40, lr = 4.0)
-    val held = Classify.logisticScore(feats.filter(col("doc") % 5 === 0), "doc", fc, wu)
-      .join(feats.select(col("doc"), col("_y").cast("long").as("label")), "doc")
-    Classify.auc(held, "label", "margin_micro")
-  }
+  val qualityLrAuc: Q = (s, dir) =>
+    Classify.auc(lrHeldOut(s, dir), "label", "margin_micro")
 
   val qualityLrAucSql: String =
     Classify.aucSql(
@@ -4539,7 +4504,7 @@ object LlmQueries {
        |FROM ag ORDER BY doc_id""".stripMargin
 
   /** Interpolated-bigram LM cross-entropy
-    * (Selection.lmCrossEntropyBigram): the q_lm_perplexity model one
+    * (Selection.lmCrossEntropy at order 2): the q_lm_perplexity model one
     * Markov order up — ln(0.7·P_bg(w|prev) + 0.3·P_ug(w)) per token,
     * add-one smoothing on both hashed models, reserved start context
     * for each document's first token. The oracle replays the zipped
@@ -4547,9 +4512,9 @@ object LlmQueries {
     * and the quantized log-prob dot product.
     */
   val lmPerplexityBigram: Q = (s, dir) =>
-    graft.llm.Selection.lmCrossEntropyBigram(
+    graft.llm.Selection.lmCrossEntropy(
         Tables.documents(s, dir), "doc_id", "text",
-        col("lang") === "en", lambda = 0.7, numBuckets = 4096,
+        col("lang") === "en", order = 2, lambdas = Seq(0.7), numBuckets = 4096,
         payloadCols = Seq("source"))
       .orderBy("doc_id")
 
@@ -4591,7 +4556,7 @@ object LlmQueries {
        |FROM ag ORDER BY doc_id""".stripMargin
   }
 
-  /** Interpolated trigram LM scoring (Selection.lmCrossEntropyTrigram):
+  /** Interpolated trigram LM scoring (Selection.lmCrossEntropy at order 3):
     * the q_lm_perplexity_bigram model one more Markov order up —
     * λ3·P_tg + λ2·P_bg + (1−λ3−λ2)·P_ug over the same English
     * reference slice, both opening history slots on the reserved
@@ -4599,9 +4564,9 @@ object LlmQueries {
     * the shared λ literals.
     */
   val lmPerplexityTrigram: Q = (s, dir) =>
-    graft.llm.Selection.lmCrossEntropyTrigram(
+    graft.llm.Selection.lmCrossEntropy(
         Tables.documents(s, dir), "doc_id", "text",
-        col("lang") === "en", lambda3 = 0.5, lambda2 = 0.3, numBuckets = 4096,
+        col("lang") === "en", order = 3, lambdas = Seq(0.5, 0.3), numBuckets = 4096,
         payloadCols = Seq("source"))
       .orderBy("doc_id")
 
@@ -4654,7 +4619,7 @@ object LlmQueries {
   }
 
   /** Interpolated Kneser–Ney bigram cross-entropy
-    * (Selection.lmCrossEntropyKneserNey): the q_lm_perplexity_bigram
+    * (Selection.lmCrossEntropyKneserNey at order 2): the q_lm_perplexity_bigram
     * model with the smoothing real CCNet-class filters use — absolute
     * discounting (D=0.75) plus continuation-count back-off instead of
     * add-one interpolation. The oracle replays the zipped adjacency,
@@ -4712,16 +4677,16 @@ object LlmQueries {
   }
 
   /** Interpolated Kneser–Ney TRIGRAM cross-entropy
-    * (Selection.lmCrossEntropyKneserNeyTrigram): the KN ladder's
+    * (Selection.lmCrossEntropyKneserNey at order 3): the KN ladder's
     * order-3 member — raw-count discounting at the top, continuation
     * TYPE counts below, every table derived from the trigram type
     * table. The oracle replays the trigram adjacency, the six model
     * coarsenings, and the doubly-nested discount sequence.
     */
   val lmPerplexityKn3: Q = (s, dir) =>
-    graft.llm.Selection.lmCrossEntropyKneserNeyTrigram(
+    graft.llm.Selection.lmCrossEntropyKneserNey(
         Tables.documents(s, dir), "doc_id", "text",
-        col("lang") === "en", discount = 0.75, numBuckets = 4096,
+        col("lang") === "en", order = 3, discount = 0.75, numBuckets = 4096,
         payloadCols = Seq("source"))
       .orderBy("doc_id")
 

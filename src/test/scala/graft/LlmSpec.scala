@@ -437,8 +437,9 @@ class LlmSpec extends SparkSpec {
       (4L, false, "b a b a"),          // same bag of words, reversed order
       (5L, false, "q r s t")           // all-unseen: pure add-one floor
     ).toDF("doc_id", "is_ref", "text")
-    val bg = graft.llm.Selection.lmCrossEntropyBigram(
-        docs, "doc_id", "text", col("is_ref"), lambda = 0.7, numBuckets = 1 << 12)
+    val bg = graft.llm.Selection.lmCrossEntropy(
+        docs, "doc_id", "text", col("is_ref"), order = 2, lambdas = Seq(0.7),
+        numBuckets = 1 << 12)
       .collect().map(r => r.getLong(0) -> r.getAs[Double]("cross_entropy")).toMap
     val ug = graft.llm.Selection.lmCrossEntropy(
         docs, "doc_id", "text", col("is_ref"), numBuckets = 1 << 12)
@@ -469,9 +470,9 @@ class LlmSpec extends SparkSpec {
       (4L, false, "q r s t"),     // all-unseen: add-one floor
       (5L, false, "c b a c b a")  // reversed: wrong order everywhere
     ).toDF("doc_id", "is_ref", "text")
-    val tg = graft.llm.Selection.lmCrossEntropyTrigram(
+    val tg = graft.llm.Selection.lmCrossEntropy(
         docs, "doc_id", "text", col("is_ref"),
-        lambda3 = 0.5, lambda2 = 0.3, numBuckets = 1 << 12)
+        order = 3, lambdas = Seq(0.5, 0.3), numBuckets = 1 << 12)
       .collect().map(r => r.getLong(0) -> r.getAs[Double]("cross_entropy")).toMap
     assert(tg(3L) < tg(5L),
       s"in-order doc must score lower trigram CE: ${tg(3L)} vs ${tg(5L)}")
@@ -480,8 +481,9 @@ class LlmSpec extends SparkSpec {
     // docs score on the start-context history without error
     val short = Seq((1L, true, "a b c a b c"), (2L, false, "a"), (3L, false, "a b"))
       .toDF("doc_id", "is_ref", "text")
-    val s = graft.llm.Selection.lmCrossEntropyTrigram(
-        short, "doc_id", "text", col("is_ref"), numBuckets = 1 << 10)
+    val s = graft.llm.Selection.lmCrossEntropy(
+        short, "doc_id", "text", col("is_ref"), order = 3, lambdas = Seq(0.5, 0.3),
+        numBuckets = 1 << 10)
       .collect().map(r => r.getLong(0) -> r.getAs[Long]("n_tokens")).toMap
     assert(s(2L) == 1L && s(3L) == 2L)
   }
@@ -499,8 +501,9 @@ class LlmSpec extends SparkSpec {
     val kn = graft.llm.Selection.lmCrossEntropyKneserNey(
         docs, "doc_id", "text", col("is_ref"), discount = 0.75, numBuckets = 1 << 12)
       .collect().map(r => r.getLong(0) -> r.getAs[Double]("cross_entropy")).toMap
-    val addOne = graft.llm.Selection.lmCrossEntropyBigram(
-        docs, "doc_id", "text", col("is_ref"), lambda = 0.7, numBuckets = 1 << 12)
+    val addOne = graft.llm.Selection.lmCrossEntropy(
+        docs, "doc_id", "text", col("is_ref"), order = 2, lambdas = Seq(0.7),
+        numBuckets = 1 << 12)
       .collect().map(r => r.getLong(0) -> r.getAs[Double]("cross_entropy")).toMap
     // absolute discounting keeps seen-bigram mass that add-one's c+B
     // denominator destroys: KN must score the held-out in-distribution
@@ -533,7 +536,7 @@ class LlmSpec extends SparkSpec {
   test("lmCrossEntropyKneserNeyTrigram: order-3 context wins where bigram KN cannot; guard trips") {
     import spark.implicits._
     // docs 3 and 5 have identical BIGRAM multisets against the ref but
-    // differ in trigram continuation (the lmCrossEntropyTrigram case,
+    // differ in trigram continuation (the add-one order-3 case,
     // under KN smoothing)
     val docs = Seq(
       (1L, true, "a b c a b c a b c a b c"),
@@ -542,8 +545,8 @@ class LlmSpec extends SparkSpec {
       (4L, false, "q r s t"),
       (5L, false, "c b a c b a")
     ).toDF("doc_id", "is_ref", "text")
-    val kn3 = graft.llm.Selection.lmCrossEntropyKneserNeyTrigram(
-        docs, "doc_id", "text", col("is_ref"), numBuckets = 1 << 12)
+    val kn3 = graft.llm.Selection.lmCrossEntropyKneserNey(
+        docs, "doc_id", "text", col("is_ref"), order = 3, numBuckets = 1 << 12)
       .collect().map(r => r.getLong(0) -> r.getAs[Double]("cross_entropy")).toMap
     assert(kn3(3L) < kn3(5L), s"in-order trigrams must score lower: $kn3")
     assert(kn3(4L) > kn3(3L), "unseen text stays the worst-scored")
@@ -555,14 +558,14 @@ class LlmSpec extends SparkSpec {
       s"order-3 KN must explain exact ref trigrams better: ${kn3(3L)} vs ${kn2(3L)}")
     // broadcast guard trips before any broadcast
     val err = intercept[IllegalArgumentException] {
-      graft.llm.Selection.lmCrossEntropyKneserNeyTrigram(
-        docs, "doc_id", "text", col("is_ref"), maxModelRows = 2L)
+      graft.llm.Selection.lmCrossEntropyKneserNey(
+        docs, "doc_id", "text", col("is_ref"), order = 3, maxModelRows = 2L)
     }
     assert(err.getMessage.contains("numBuckets"), err.getMessage)
     // degenerate lengths survive the double-shifted zip
-    val s = graft.llm.Selection.lmCrossEntropyKneserNeyTrigram(
+    val s = graft.llm.Selection.lmCrossEntropyKneserNey(
         Seq((1L, true, "a b c"), (2L, false, "a"), (3L, false, "a b")).toDF("doc_id", "is_ref", "text"),
-        "doc_id", "text", col("is_ref"), numBuckets = 1 << 10)
+        "doc_id", "text", col("is_ref"), order = 3, numBuckets = 1 << 10)
       .collect().map(r => r.getLong(0) -> r.getAs[Long]("n_tokens")).toMap
     assert(s(2L) == 1L && s(3L) == 2L)
   }

@@ -11,9 +11,9 @@ class MetricsSpec extends SparkSpec {
     val l = MetricsListener.attach(spark, path)
     try {
       Seq(1, 2, 3).toDF("x").filter("x > 1").count()
-      // the listener fires asynchronously on the listener bus; poll
-      var tries = 0
-      while (!new java.io.File(path).exists() && tries < 100) { Thread.sleep(100); tries += 1 }
+      // the listener fires asynchronously on the listener bus, and
+      // closes the file on each write: a drained bus means a complete file
+      org.apache.spark.sql.graft.Bridge.drainListenerBus(spark.sparkContext)
       val lines = scala.io.Source.fromFile(path).getLines().toList
       assert(lines.nonEmpty, "expected at least one metrics line")
       val line = lines.head
@@ -33,12 +33,10 @@ class MetricsSpec extends SparkSpec {
       intercept[Exception] {
         Seq(1, 2, 3).toDF("x").select(boom($"x")).collect()
       }
-      var tries = 0
-      def failedLine(): Option[String] =
+      org.apache.spark.sql.graft.Bridge.drainListenerBus(spark.sparkContext)
+      val line =
         if (!new java.io.File(path).exists()) None
         else scala.io.Source.fromFile(path).getLines().find(_.contains(""""status":"failed""""))
-      while (failedLine().isEmpty && tries < 100) { Thread.sleep(100); tries += 1 }
-      val line = failedLine()
       assert(line.isDefined, "expected a failed-status metrics line")
       assert(line.get.contains(""""error":""""))
     } finally MetricsListener.detach(spark, l)

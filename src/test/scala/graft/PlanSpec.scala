@@ -487,10 +487,9 @@ class PlanSpec extends SparkSpec {
         p.collect() // drive the final stage under the listener too
         p
       } finally {
-        // listener events post asynchronously — give the bus a moment
-        val deadline = System.nanoTime() + 10_000_000_000L
-        while (System.nanoTime() < deadline && !stagePlans.toArray(Array.empty[String])
-            .exists(_.contains("qv:array<tinyint>"))) Thread.sleep(100)
+        // listener events post asynchronously: drain the bus so every
+        // stage of the probe has been delivered
+        org.apache.spark.sql.graft.Bridge.drainListenerBus(spark.sparkContext)
         spark.listenerManager.unregister(listener)
       }
     val plan = probed.queryExecution.executedPlan.toString
@@ -610,9 +609,7 @@ class PlanSpec extends SparkSpec {
         val p = IvfIndex.probe(spark, idx, queries, "vec_id", "embedding",
           k = 5, nProbe = 2, pqRerank = 3)
         val rows = p.select("qid", "rank", "nid", "cosine").collect().map(_.toSeq).toSet
-        val deadline = System.nanoTime() + 10_000_000_000L
-        while (System.nanoTime() < deadline && !stagePlans.toArray(Array.empty[String])
-            .exists(_.contains("pqc:array<tinyint>"))) Thread.sleep(100)
+        org.apache.spark.sql.graft.Bridge.drainListenerBus(spark.sparkContext)
         rows
       } finally spark.listenerManager.unregister(listener)
     // the ADC stage scans the 8-byte code column, never the vectors
@@ -1114,9 +1111,7 @@ class PlanSpec extends SparkSpec {
       graft.llm.Classify.logisticTrain(f, "y", Seq("x"), iters = 3, lr = 1.0)
       val edges = Seq((1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L)).toDF("src", "dst")
       graft.operators.Graph.connectedComponentsBigStar(edges, "src", "dst").collect()
-      val deadline = System.nanoTime() + 10_000_000_000L
-      while (System.nanoTime() < deadline &&
-          stagePlans.toArray(Array.empty[String]).length < 5) Thread.sleep(100)
+      org.apache.spark.sql.graft.Bridge.drainListenerBus(spark.sparkContext)
     } finally spark.listenerManager.unregister(listener)
     import scala.jdk.CollectionConverters._
     val plans = stagePlans.asScala.toList

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -107,15 +108,17 @@ class SelectionSpec extends SparkSpec {
     // trigram: ref slice has 12 distinct (qb,pb,wb) trigram rows — a
     // maxModelRows below that must trip BEFORE any broadcast
     val eTg = intercept[IllegalArgumentException] {
-      Selection.lmCrossEntropyTrigram(
-        docs, "doc_id", "text", col("is_ref"), maxModelRows = 3L)
+      Selection.lmCrossEntropy(
+        docs, "doc_id", "text", col("is_ref"), order = 3, lambdas = Seq(0.5, 0.3),
+        maxModelRows = 3L)
     }
     assert(eTg.getMessage.contains("numBuckets") &&
       eTg.getMessage.contains("maxModelRows=3"))
     // bigram sibling trips the same guard
     val eBg = intercept[IllegalArgumentException] {
-      Selection.lmCrossEntropyBigram(
-        docs, "doc_id", "text", col("is_ref"), maxModelRows = 3L)
+      Selection.lmCrossEntropy(
+        docs, "doc_id", "text", col("is_ref"), order = 2, lambdas = Seq(0.7),
+        maxModelRows = 3L)
     }
     assert(eBg.getMessage.contains("numBuckets"))
     // unigram + DSIR models are structurally <= numBuckets rows: the
@@ -131,9 +134,85 @@ class SelectionSpec extends SparkSpec {
     }
     assert(eDs.getMessage.contains("numBuckets=4096"))
     // at the default bound all four still run: same docs, scores finite
-    val ok = Selection.lmCrossEntropyTrigram(docs, "doc_id", "text", col("is_ref"))
+    val ok = Selection.lmCrossEntropy(docs, "doc_id", "text", col("is_ref"), order = 3,
+      lambdas = Seq(0.5, 0.3))
       .select(col("doc_id"), col("cross_entropy")).as[(Long, Double)].collect()
     assert(ok.length == 3 && ok.forall(t => !t._2.isNaN && !t._2.isInfinite))
+  }
+
+  // the five hashed-LM configurations: (name, whether an empty reference
+  // puts every token exactly on the 1/B floor, scorer). The add-one
+  // orders 2 and 3 mix λ-weighted copies of 1/B, which need not round
+  // back to it exactly.
+  private def lmConfigs(b: Int): Seq[(String, Boolean, (DataFrame, Column) => DataFrame)] = Seq(
+    ("add-one order 1", true, (d, r) => Selection.lmCrossEntropy(d, "doc_id", "text", r,
+      numBuckets = b)),
+    ("add-one order 2", false, (d, r) => Selection.lmCrossEntropy(d, "doc_id", "text", r,
+      order = 2, lambdas = Seq(0.7), numBuckets = b)),
+    ("add-one order 3", false, (d, r) => Selection.lmCrossEntropy(d, "doc_id", "text", r,
+      order = 3, lambdas = Seq(0.5, 0.3), numBuckets = b)),
+    ("KN order 2", true, (d, r) => Selection.lmCrossEntropyKneserNey(d, "doc_id", "text", r,
+      numBuckets = b)),
+    ("KN order 3", true, (d, r) => Selection.lmCrossEntropyKneserNey(d, "doc_id", "text", r,
+      order = 3, numBuckets = b)))
+
+  test("LM family: NULL and empty docs drop, short docs score finite, empty reference floors") {
+    val b = 1 << 10
+    val docs = Seq(
+      (1L, Some("a b c a b"), true),
+      (2L, None, false),               // NULL text
+      (3L, Some(""), false),           // zero words
+      (4L, Some("a"), false),          // one word: every history slot is the start context
+      (5L, Some("a b"), false),
+      (6L, Some("a b c d e"), false)
+    ).toDF("doc_id", "text", "is_ref")
+    def finite(d: Double) = !d.isNaN && !d.isInfinite
+    for ((name, _, lm) <- lmConfigs(b)) {
+      val ce = lm(docs, col("is_ref"))
+        .select(col("doc_id"), col("cross_entropy")).as[(Long, Double)].collect().toMap
+      assert(ce.keySet == Set(1L, 4L, 5L, 6L), s"$name: NULL and empty docs drop: $ce")
+      assert(ce.values.forall(finite), s"$name: $ce")
+    }
+    val ds = Selection.dsirWeights(docs, "doc_id", "text", col("is_ref"), numBuckets = b)
+      .select(col("doc_id"), col("dsir_score")).as[(Long, Double)].collect().toMap
+    assert(ds.keySet == Set(1L, 4L, 5L, 6L) && ds.values.forall(finite), s"dsirWeights: $ds")
+    // no reference row at all: every model table is empty, so each token
+    // backs off to the 1/B floor −round(ln(1/B), 6); a doc of n tokens
+    // then scores (n·floor as an exact decimal, to double) / n — the
+    // closing division, which may sit one ulp off the floor itself
+    val floor = -BigDecimal(math.log(1.0 / b)).setScale(6, BigDecimal.RoundingMode.HALF_UP)
+    for ((name, exactFloor, lm) <- lmConfigs(b)) {
+      val ce = lm(docs, lit(false))
+        .select(col("doc_id"), col("n_tokens"), col("cross_entropy"))
+        .as[(Long, Long, Double)].collect().map(r => r._1 -> (r._2, r._3)).toMap
+      assert(ce.keySet == Set(1L, 4L, 5L, 6L) && ce.values.forall(v => finite(v._2)),
+        s"$name: $ce")
+      if (exactFloor) ce.foreach { case (id, (n, x)) =>
+        assert(x == (floor * n).toDouble / n, s"$name: doc $id must sit on the floor $floor: $x")
+      }
+    }
+  }
+
+  test("LM family: order and lambdas outside the family fail loud") {
+    val docs = Seq((1L, "a b c", true)).toDF("doc_id", "text", "is_ref")
+    def err(f: => DataFrame): String = intercept[IllegalArgumentException](f).getMessage
+    val o0 = err(Selection.lmCrossEntropy(docs, "doc_id", "text", col("is_ref"), order = 0))
+    assert(o0.contains("lmCrossEntropy: order must be in 1..3, got 0"), o0)
+    val o4 = err(Selection.lmCrossEntropy(docs, "doc_id", "text", col("is_ref"), order = 4,
+      lambdas = Seq(0.4, 0.3, 0.2)))
+    assert(o4.contains("order must be in 1..3, got 4"), o4)
+    val kn1 = err(Selection.lmCrossEntropyKneserNey(docs, "doc_id", "text", col("is_ref"),
+      order = 1))
+    assert(kn1.contains("lmCrossEntropyKneserNey: order must be in 2..3, got 1"), kn1)
+    val kn4 = err(Selection.lmCrossEntropyKneserNey(docs, "doc_id", "text", col("is_ref"),
+      order = 4))
+    assert(kn4.contains("order must be in 2..3, got 4"), kn4)
+    val lam = err(Selection.lmCrossEntropy(docs, "doc_id", "text", col("is_ref"), order = 3,
+      lambdas = Seq(0.7)))
+    assert(lam.contains("order 3 takes 2 lambdas"), lam)
+    val sum = err(Selection.lmCrossEntropy(docs, "doc_id", "text", col("is_ref"), order = 3,
+      lambdas = Seq(0.6, 0.4)))
+    assert(sum.contains("sum below 1"), sum)
   }
 
   test("dsirResample: exact k per group, deterministic, score-biased") {

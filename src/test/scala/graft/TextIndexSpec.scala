@@ -442,8 +442,7 @@ class TextIndexSpec extends SparkSpec {
     spark.listenerManager.register(listener)
     try {
       TextIndex.probeExpanded(spark, idx, terms, k = 5, fbDocs = 2, fbTerms = 2).collect()
-      val deadline = System.nanoTime() + 10_000_000_000L
-      while (System.nanoTime() < deadline && minedPlan.isEmpty) Thread.sleep(100)
+      org.apache.spark.sql.graft.Bridge.drainListenerBus(spark.sparkContext)
     } finally spark.listenerManager.unregister(listener)
     assert(minedPlan.nonEmpty,
       s"expected the mining scan to push In(doc, ...) to parquet among:\n${
