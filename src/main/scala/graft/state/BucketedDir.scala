@@ -194,7 +194,9 @@ object BucketedDir {
     * write partitioned by bucket into a hidden stage dir. The driver
     * then moves each bucket's partition dir to its next version dir and
     * swaps that bucket's pointer, buckets running concurrently (the
-    * version lookups too). A touched bucket whose merge result is empty
+    * version lookups too), so on HDFS or S3 their round trips overlap.
+    * A local root forks no process along the way ([[LocalFs]]). A
+    * touched bucket whose merge result is empty
     * (its last key deleted) publishes an empty version on its own,
     * after the others, on the caller's thread. A failure mid-publish
     * lets every other bucket finish publishing, then the merge throws
@@ -272,6 +274,7 @@ object BucketedDir {
         .repartition(col(bkt))
         .write.mode(SaveMode.Overwrite).partitionBy(bkt)
         .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
+        .options(VersionedDir.writeOptions(spark, root))
         .parquet(stage.toString)
       val moved = perBucket(touched) { b =>
         val staged = new Path(stage, s"$bkt=$b")
@@ -303,11 +306,10 @@ object BucketedDir {
   }
 
   /** Run the filesystem work `f` once per bucket on a pool of at most one
-    * thread per core: without libhadoop each local create forks `chmod`,
-    * and on HDFS or S3 each call is a round trip, so buckets overlap
-    * their waits. Every bucket settles before the first failure in
-    * bucket order is rethrown. Only filesystem calls belong here; Spark
-    * jobs stay on the caller's thread.
+    * thread per core: on HDFS or S3 each call is a round trip, so
+    * buckets overlap their waits. Every bucket settles before the first
+    * failure in bucket order is rethrown. Only filesystem calls belong
+    * here; Spark jobs stay on the caller's thread.
     */
   private def perBucket[A](buckets: Seq[Int])(f: Int => A): Map[Int, A] = {
     val pool = Executors.newFixedThreadPool(math.min(buckets.size, Runtime.getRuntime.availableProcessors))

@@ -1,5 +1,6 @@
 package graft.state
 
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 
@@ -15,8 +16,28 @@ object VersionedDir {
     if (name.startsWith("v") && name.drop(1).forall(_.isDigit)) Some(name.drop(1).toLong)
     else None
 
-  def fs(spark: SparkSession, root: String): FileSystem =
-    new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+  /** The filesystem under `root`: one shared [[LocalFs]] for a local
+    * root (a `file:` URI, or no scheme under a local default FS),
+    * Hadoop's own filesystem otherwise.
+    */
+  def fs(spark: SparkSession, root: String): FileSystem = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    if (isLocal(conf, root)) LocalFs.shared(conf) else new Path(root).getFileSystem(conf)
+  }
+
+  /** Writer options that make a Spark write under `root` create its
+    * files through [[LocalFs]] when the root is local (none otherwise).
+    * Spark copies writer options into the write job's Hadoop conf, so
+    * the parquet writer, commit protocol and stats tracker all see them;
+    * the cache is off for the job because Hadoop caches filesystems by
+    * scheme, not by implementation.
+    */
+  private[state] def writeOptions(spark: SparkSession, root: String): Map[String, String] =
+    if (!isLocal(spark.sparkContext.hadoopConfiguration, root)) Map.empty
+    else Map("fs.file.impl" -> classOf[LocalFs].getName, "fs.file.impl.disable.cache" -> "true")
+
+  private def isLocal(conf: Configuration, root: String): Boolean =
+    Option(new Path(root).toUri.getScheme).getOrElse(FileSystem.getDefaultUri(conf).getScheme) == "file"
 
   /** Current version dir: the `_CURRENT` pointer, falling back to the
     * highest committed `v*` directory if the pointer is mid-swap or was
@@ -70,7 +91,8 @@ object VersionedDir {
     val rootPath = new Path(root)
     val hfs = fs(spark, root)
     val nextV = nextVersion(currentVersion(hfs, rootPath), minVersion)
-    df.write.mode(SaveMode.Overwrite).parquet(new Path(rootPath, versionDir(nextV)).toString)
+    df.write.mode(SaveMode.Overwrite).options(writeOptions(spark, root))
+      .parquet(new Path(rootPath, versionDir(nextV)).toString)
     swapAndPrune(hfs, rootPath, nextV, keepVersions)
     nextV
   }

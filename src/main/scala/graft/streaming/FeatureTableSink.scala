@@ -125,23 +125,6 @@ object FeatureTableSink {
     ()
   }
 
-  /** Attach a stream of KeyEvents (updates + evictions) to the sink. */
-  def startEvents(
-      spark: SparkSession,
-      events: Dataset[KeyEvent],
-      root: String,
-      availableNow: Boolean = true,
-      numBuckets: Int = DefaultBuckets,
-      keepVersions: Int = 2
-  ): StreamingQuery = {
-    val w = events.writeStream
-      .outputMode(OutputMode.Update())
-      .foreachBatch { (batch: Dataset[KeyEvent], id: Long) =>
-        mergeEvents(spark, root, batch, id, numBuckets, keepVersions)
-      }
-    (if (availableNow) w.trigger(Trigger.AvailableNow()) else w).start()
-  }
-
   /** Attach the sink to a stream of KeyFeature updates. */
   def start(
       spark: SparkSession,

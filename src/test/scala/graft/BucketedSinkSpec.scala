@@ -216,6 +216,102 @@ class BucketedSinkSpec extends SparkSpec {
     assert(t.length == 40 && t.find(_.key == "k7").get.value == 99.0)
   }
 
+  test("a merge into a local root starts no process (chmod runs in-process)") {
+    import jdk.jfr.Recording
+    import jdk.jfr.consumer.RecordingFile
+    import spark.implicits._
+    import graft.streaming.FeatureTableSink
+    import graft.streaming.StreamingFeatures.{KeyEvent, KeyFeature}
+    val root = tmp()
+    val keys = (1 to 200).map(i => s"k$i")
+    val vb = BucketedDir.routeKey("k1", StringType, FeatureTableSink.DefaultBuckets)
+    val victims = keys.filter(k => BucketedDir.routeKey(k, StringType, FeatureTableSink.DefaultBuckets) == vb)
+    val updates = keys.map(k => KeyFeature(k, 1, 1.0, 1)).toDS()
+    val evictions = victims.map(k => KeyEvent(k, 2, 0.0, 0, evicted = true)).toDS()
+    val rec = new Recording()
+    rec.enable("jdk.ProcessStart")
+    rec.start()
+    try {
+      // a fresh 16-bucket table, then an eviction that empties one bucket
+      // (the empty-version publish), then a known fork as the census check
+      FeatureTableSink.merge(spark, root, updates, 0)
+      FeatureTableSink.mergeEvents(spark, root, evictions, 1)
+      new ProcessBuilder("ls", root).start().waitFor()
+    } finally rec.stop()
+    val dump = Files.createTempFile("graft-forks", ".jfr")
+    try {
+      rec.dump(dump)
+      val (census, forks) = RecordingFile.readAllEvents(dump).asScala.toSeq
+        .map(_.getString("command")).filter(_.contains(root)).partition(_ == s"ls $root")
+      assert(census.size == 1, "the recording must see the census fork")
+      assert(forks.size == 0, s"the merges started processes, e.g. ${forks.take(3)}")
+    } finally { rec.close(); Files.delete(dump) }
+    assert(Files.list(Paths.get(root)).iterator().asScala
+      .count(_.getFileName.toString.matches("b\\d+")) == FeatureTableSink.DefaultBuckets)
+    assert(FeatureTableSink.read(spark, root).count() == keys.size - victims.size)
+  }
+
+  test("a local merge leaves the files and modes Hadoop's stock local filesystem leaves") {
+    import java.nio.file.attribute.PosixFilePermissions
+    import org.apache.spark.sql.functions.col
+    import graft.streaming.FeatureTableSink
+    import graft.streaming.StreamingFeatures.KeyFeature
+    import spark.implicits._
+    spark.sparkContext.hadoopConfiguration.set("fs.stocklocal.impl", classOf[StockLocalFs].getName)
+    /** Relative path -> mode of everything under `root`, with the write's
+      * job UUID and task number dropped from parquet part names.
+      */
+    def tree(root: String): Map[String, String] = {
+      val r = Paths.get(root)
+      Files.walk(r).iterator().asScala.toSeq.filter(_ != r).map { p =>
+        r.relativize(p).toString.replaceAll("part-\\d+-[0-9a-f-]{36}", "part-*") ->
+          PosixFilePermissions.toString(Files.getPosixFilePermissions(p))
+      }.toMap
+    }
+    def mergeTwice(root: String): Unit = {
+      val batch = (1 to 200).map(i => KeyFeature(s"k$i", 1, i.toDouble, 1)).toDS()
+      FeatureTableSink.merge(spark, root, batch, 0)
+      FeatureTableSink.merge(spark, root, batch.filter(col("value") < 20), 1)
+    }
+    val local = tmp()
+    val stock = tmp()
+    mergeTwice(local)
+    mergeTwice(s"stocklocal://$stock")
+    val got = tree(local)
+    assert(got == tree(stock))
+    assert(got.keys.exists(_.endsWith(".parquet.crc")) && got.keys.exists(_.endsWith("_CURRENT.crc")))
+    got.foreach { case (rel, mode) =>
+      val dir = Files.isDirectory(Paths.get(local, rel))
+      assert(mode == (if (dir) "rwxr-xr-x" else "rw-r--r--"), rel)
+    }
+  }
+
+  test("LocalFs sets the modes the shell chmod path sets, and fails on a missing path as it does") {
+    import java.nio.file.attribute.PosixFilePermissions
+    import org.apache.hadoop.fs.{LocalFileSystem, Path => HPath}
+    import org.apache.hadoop.fs.permission.FsPermission
+    import graft.state.LocalFs
+    val conf = spark.sparkContext.hadoopConfiguration
+    val ours = new LocalFs
+    ours.initialize(java.net.URI.create("file:///"), conf)
+    val stock = new LocalFileSystem
+    stock.initialize(java.net.URI.create("file:///"), conf)
+    val dir = tmp()
+    val (a, b) = (new HPath(dir, "a"), new HPath(dir, "b"))
+    Seq(a, b).foreach(ours.create(_).close())
+    def mode(p: HPath) = Files.getPosixFilePermissions(Paths.get(p.toString))
+    Seq("600", "640", "751", "704", "000", "777").foreach { m =>
+      val perm = new FsPermission(Integer.parseInt(m, 8).toShort)
+      ours.setPermission(a, perm)
+      stock.setPermission(b, perm)
+      assert(mode(a) == mode(b) && PosixFilePermissions.toString(mode(a)) == perm.toString, m)
+    }
+    val missing = new HPath(dir, "missing")
+    intercept[java.io.IOException](stock.setPermission(missing, FsPermission.getFileDefault))
+    intercept[java.io.IOException](ours.setPermission(missing, FsPermission.getFileDefault))
+    assert(!Files.exists(Paths.get(missing.toString)))
+  }
+
   /** Latest-wins upsert merge, as BucketedParquetConnector.upsert runs it. */
   private def upsertFn(existing: Option[DataFrame], part: DataFrame): DataFrame =
     existing.map(_.join(broadcast(part.select("key")), Seq("key"), "left_anti").unionByName(part))
@@ -431,3 +527,11 @@ class BucketedSinkSpec extends SparkSpec {
     assert(c.pointQuery(victim).isEmpty && c.count() == keys.size - 1)
   }
 }
+
+/** Hadoop's stock checksummed local filesystem under the `stocklocal:`
+  * scheme, so a merge can be written through it beside a `file:` merge.
+  */
+class StockLocalFs extends org.apache.hadoop.fs.LocalFileSystem(
+  new org.apache.hadoop.fs.RawLocalFileSystem {
+    override def getUri: java.net.URI = java.net.URI.create("stocklocal:///")
+  })

@@ -1,7 +1,7 @@
 #!/usr/bin/env python3
 """Census of the processes a JVM forked, from a Java Flight Recording.
 
-    python3 tools/jfr_forks.py <recording.jfr> [--top N]
+    python3 tools/jfr_forks.py <recording.jfr> [--top N] [--per N]
 
 Reads `jfr print --json --stack-depth 64 --events jdk.ProcessStart <file>`
 and prints the process starts twice: grouped by command (path arguments
@@ -21,8 +21,10 @@ Recording a perfbench run without editing perfbench:
         python3 perfbench/run.py --workload ralf_stream --seed 1 --seconds 15 --trace 0
     python3 tools/jfr_forks.py /tmp/stream.jfr
 
-The run's `detail` line gives `micro_batches`; each micro-batch is one
-sink merge, so dividing a caller's count by it gives forks per merge.
+Each micro-batch is one sink merge. The run's `detail` line gives
+`micro_batches`, the measured ones; the two warm-up batches merge in the
+same JVM, so `--per <micro_batches + 2>` adds each count divided by the
+merges the recording saw: forks per merge.
 """
 import argparse
 import collections
@@ -65,8 +67,12 @@ def caller(event):
 def main():
     ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
     ap.add_argument("recording", help="a .jfr file")
-    ap.add_argument("--top", type=int, default=30, help="rows per table (default 30)")
+    ap.add_argument("--top", type=int, default=30, metavar="N", help="rows per table (default 30)")
+    ap.add_argument("--per", type=int, metavar="N",
+                    help="also print each count divided by N (micro-batches)")
     args = ap.parse_args()
+    if args.per is not None and args.per <= 0:
+        ap.error("--per must be positive")
 
     evs = events(args.recording)
     by_command = collections.Counter()
@@ -76,13 +82,16 @@ def main():
         by_command[shape] += 1
         by_caller[(caller(e), shape)] += 1
 
-    print(f"{len(evs)} process starts")
+    def count(n):
+        return f"{n:8d}" + (f" {n / args.per:8.1f}" if args.per else "")
+
+    print(f"{count(len(evs))}  process starts" + (f" (count, per {args.per})" if args.per else ""))
     print("\nby command")
     for shape, n in by_command.most_common(args.top):
-        print(f"{n:8d}  {shape}")
+        print(f"{count(n)}  {shape}")
     print("\nby first graft./org.apache.spark caller, command")
     for (frame, shape), n in by_caller.most_common(args.top):
-        print(f"{n:8d}  {frame}  [{shape}]")
+        print(f"{count(n)}  {frame}  [{shape}]")
 
 
 if __name__ == "__main__":
