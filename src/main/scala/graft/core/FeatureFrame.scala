@@ -63,9 +63,6 @@ final case class FeatureFrame(df: DataFrame, key: String, ord: String) {
   def shedSample(idCol: String, modulus: Int, keepBelow: Int): FeatureFrame =
     copy(df = Shedding.sampleDeterministic(df, col(idCol), modulus, keepBelow))
 
-  def shedKeepIncreasing(gateCol: String): FeatureFrame =
-    copy(df = Shedding.keepIncreasing(df, key, ordCol, col(gateCol)))
-
   def shedMeanPolicy(valueCol: String, thresh: Double): FeatureFrame =
     copy(df = Shedding.meanPolicyFold(df, key, ord, valueCol, thresh))
 

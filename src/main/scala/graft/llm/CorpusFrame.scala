@@ -49,12 +49,6 @@ final case class CorpusFrame(df: DataFrame, idCol: String, textCol: String) {
   def filterLang(lang: String): CorpusFrame =
     copy(df = withLang().df.filter(col("pred_lang") === lang).drop("pred_lang"))
 
-  /** Attach repetition stats (type-token / top-word ratios). */
-  def withRepetition(cols: String*): CorpusFrame = {
-    val keep = if (cols.nonEmpty) cols else Seq("distinct_ratio", "top_word_ratio")
-    copy(df = joinFeature(TextAnalysis.repetition(df, idCol, textCol), keep))
-  }
-
   /** Exact dedup: keep each distinct text's lowest-id copy. */
   def dedupExact(): CorpusFrame = {
     val canon = Dedup.exact(df, idCol, textCol)
@@ -159,12 +153,6 @@ final case class CorpusFrame(df: DataFrame, idCol: String, textCol: String) {
   ): CorpusFrame =
     copy(df = TextAnalysis.trimLengthOutliers(
       df, groupCol, lenCol, idCol, loPermille, hiPermille))
-
-  /** Stable hash-based train/val/test assignment
-    * (TextAnalysis.assignSplit); adds `split_bucket` + `split`.
-    */
-  def withSplit(splits: (String, Int)*): CorpusFrame =
-    copy(df = TextAnalysis.assignSplit(df, idCol, splits))
 
   /** Deterministic quota: keep `k` docs per `groupCol`
     * (Shedding.quotaSample on TopKPerKey bounded heaps).

@@ -559,12 +559,6 @@ object Similarity {
       .select(col("vid"), col("cell"))
   }
 
-  /** Deterministic random-hyperplane weight for plane `p`, dim `j`:
-    * integer in [-3, 3]. Same formula is interpolated into the oracle.
-    */
-  def planeWeight(p: Column, j: Column): Column =
-    (p * 31 + j * 17) % 7 - 3
-
   /** LSH bucket id: `planes` sign bits of deterministic hyperplane dot
     * products, packed into a long. Vectors hashing to the same bucket are
     * each other's candidate set.

@@ -1,8 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+
+import graft.core.KeyedFold
 
 /** Load-shedding policies (ralf/policies/load_shedding_policy.py:6-61,
   * gate at ralf/operator.py:199-208): decide, per pending update, whether
@@ -11,9 +13,6 @@ import org.apache.spark.sql.functions._
   * and run as an ordered per-key fold.
   */
 object Shedding {
-
-  /** `always_process` (load_shedding_policy.py:6-7): identity. */
-  def alwaysProcess(df: DataFrame): DataFrame = df
 
   /** `make_sampling_policy(rate)` (load_shedding_policy.py:53-57):
     * Bernoulli drop. Batch-deterministic variant: keep a fixed residue
@@ -169,11 +168,12 @@ object Shedding {
     * column (v/baseline) and a relative `thresh`; a windowed mean is
     * [[Windows.tumbling]] composed upstream.
     *
-    * Physical plan: hash-repartition on key + in-partition sort + a
-    * single streaming pass (mapPartitions with key-change detection).
-    * One shuffle, O(1) state per key in flight, no per-key
-    * materialization — this is the scalable shape of any ordered
-    * per-key fold at 100 TB.
+    * Physical plan: the [[graft.core.KeyedFold.batch]] sort-fold —
+    * hash-repartition on key + in-partition sort + one streaming pass
+    * with O(1) state per key in flight; rows with a NULL key, order or
+    * value are dropped up front. The streaming twin
+    * [[graft.streaming.StreamingFeatures.meanPolicyGate]] runs the same
+    * [[meanGate]] step.
     *
     * Input must contain `key` (any type), `ordCol` (long-compatible) and
     * `valueCol` (double). Output: input columns, kept rows only.
@@ -185,35 +185,27 @@ object Shedding {
       valueCol: String,
       thresh: Double
   ): DataFrame = {
-    val schema = df.schema
-    val keyIdx = schema.fieldIndex(key)
-    val valIdx = schema.fieldIndex(valueCol)
-    val sorted = df
-      .repartition(col(key))
-      .sortWithinPartitions(col(key), col(ordCol))
-    val enc = Encoders.row(schema)
-    sorted.mapPartitions { it =>
-      var curKey: Any = null
-      var hasKept = false
-      var lastKept = 0.0
-      it.filter { row: Row =>
-        val k = row.get(keyIdx)
-        if (k != curKey) { curKey = k; hasKept = false; lastKept = 0.0 }
-        val v = row.getDouble(valIdx)
-        // First record of a key always processes (KeyError path in the
-        // reference gate, ralf/operator.py:203-206).
-        val keep = !hasKept || math.abs(v - lastKept) >= thresh
-        if (keep) { hasKept = true; lastKept = v }
-        keep
-      }
-    }(enc)
+    val valIdx = df.schema.fieldIndex(valueCol)
+    KeyedFold.batch(df, key, ordCol, valueCol, df.schema, Double.NaN) { (last, row, emit) =>
+      meanGate(thresh)(last, row.getDouble(valIdx))(emit(row))
+    }
   }
+
+  /** One mean-policy step: `last` is the key's last KEPT value (NaN
+    * before its first record, which always processes — the KeyError
+    * path in the reference gate, ralf/operator.py:203-206). Runs `keep`
+    * and returns `v` when `v` moved >= thresh from it; otherwise returns
+    * `last` unchanged.
+    */
+  private[graft] def meanGate(thresh: Double)(last: Double, v: Double)(keep: => Unit): Double =
+    if (last.isNaN || math.abs(v - last) >= thresh) { keep; v } else last
 
   /** `make_cosine_policy(thresh)` (load_shedding_policy.py:14-38): same
     * sequential gate, but the compared feature is a vector (the current
     * window) and the distance is cosine. Input: `vecCol` is
     * Array[Double]. Keep iff cosine_distance(candidate, lastKept) >=
-    * thresh (first record always kept).
+    * thresh (first record always kept). Same sort-fold and NULL rule as
+    * [[meanPolicyFold]].
     */
   def cosinePolicyFold(
       df: DataFrame,
@@ -222,31 +214,19 @@ object Shedding {
       vecCol: String,
       thresh: Double
   ): DataFrame = {
-    val schema = df.schema
-    val keyIdx = schema.fieldIndex(key)
-    val vecIdx = schema.fieldIndex(vecCol)
-    val sorted = df
-      .repartition(col(key))
-      .sortWithinPartitions(col(key), col(ordCol))
-    val enc = Encoders.row(schema)
-    sorted.mapPartitions { it =>
-      var curKey: Any = null
-      var lastKept: Array[Double] = null
-      def cosineDist(a: Array[Double], b: Array[Double]): Double = {
-        var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
-        val n = math.min(a.length, b.length)
-        while (i < n) { dot += a(i) * b(i); na += a(i) * a(i); nb += b(i) * b(i); i += 1 }
-        if (na == 0.0 || nb == 0.0) 1.0 else 1.0 - dot / math.sqrt(na * nb)
-      }
-      it.filter { row: Row =>
-        val k = row.get(keyIdx)
-        if (k != curKey) { curKey = k; lastKept = null }
+    val vecIdx = df.schema.fieldIndex(vecCol)
+    KeyedFold.batch(df, key, ordCol, vecCol, df.schema, Option.empty[Array[Double]]) {
+      (last, row, emit) =>
         val v = row.getSeq[Double](vecIdx).toArray
-        val keep = lastKept == null || cosineDist(v, lastKept) >= thresh
-        if (keep) lastKept = v
-        keep
-      }
-    }(enc)
+        if (last.forall(cosineDist(v, _) >= thresh)) { emit(row); Some(v) } else last
+    }
+  }
+
+  private def cosineDist(a: Array[Double], b: Array[Double]): Double = {
+    var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
+    val n = math.min(a.length, b.length)
+    while (i < n) { dot += a(i) * b(i); na += a(i) * a(i); nb += b(i) * b(i); i += 1 }
+    if (na == 0.0 || nb == 0.0) 1.0 else 1.0 - dot / math.sqrt(na * nb)
   }
 
   /** Processing-order policies (ralf/policies/processing_policy.py:6-24,

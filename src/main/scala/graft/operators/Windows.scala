@@ -1,8 +1,12 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
+
+import graft.core.KeyedFold
+import graft.streaming.StreamingFeatures.CusumState
 
 /** Count-based per-key windows (the only window kind the reference has:
   * ralf/operators/window.py:14-124 — no time/session windows, see
@@ -384,19 +388,21 @@ object Windows {
     * oracle ([[cusumSql]], one level per per-key record index, the
     * shedMeanPolicySql precedent) is exact by construction.
     *
-    * Scale shape: one hash-partition shuffle on the key + in-partition
-    * sort, then a single streaming per-partition fold carrying two
-    * longs per key (the meanPolicyFold recipe — no buffered history).
-    * Skewed keys: one key's history must fit a task's scan, never its
-    * memory. The oracle's recursion depth is max records/key — an
-    * oracle-side bound, not an operator one.
+    * Scale shape: the [[graft.core.KeyedFold.batch]] sort-fold — one
+    * hash-partition shuffle on the key + in-partition sort, then a
+    * single streaming per-partition fold carrying two longs per key (no
+    * buffered history). Skewed keys: one key's history must fit a
+    * task's scan, never its memory. The oracle's recursion depth is max
+    * records/key — an oracle-side bound, not an operator one. The
+    * streaming twin [[graft.streaming.StreamingFeatures.cusumStream]]
+    * runs the same [[cusumStep]].
     *
-    * NULL policy: rows with a NULL key, order, or value are DROPPED
-    * up front (the StatTests pair-drop rule) — a NULL key would
-    * otherwise fold under one phantom `null == null` state here while
-    * dropping out of the oracle's equi-join, and a NULL value has no
-    * meaningful CUSUM contribution. [[cusumSql]] applies the same
-    * filter, so both engines agree by construction.
+    * NULL policy: the sort-fold's — rows with a NULL key, order, or
+    * value are DROPPED up front (a NULL key would otherwise fold under
+    * one phantom `null == null` state while dropping out of the
+    * oracle's equi-join, and a NULL value has no meaningful CUSUM
+    * contribution). [[cusumSql]] applies the same filter, so both
+    * engines agree by construction.
     */
   def cusum(
       df: DataFrame,
@@ -407,36 +413,33 @@ object Windows {
       slack: Long,
       threshold: Long
   ): DataFrame = {
+    val step = cusumStep(target, slack, threshold)
+    val base = df.select(col(key),
+      col(ordCol).cast("long").as(ordCol), col(valueCol).cast("long").as(valueCol))
+    val out = StructType(base.schema.fields ++
+      Seq("cusum_pos", "cusum_neg", "alarm").map(StructField(_, LongType, nullable = false)))
+    KeyedFold.batch(base, key, ordCol, valueCol, out, CusumState(0L, 0L)) { (st, row, emit) =>
+      val v = row.getLong(2)
+      step(st, v, (sp, sn, alarm) => emit(Row(row.get(0), row.getLong(1), v, sp, sn, alarm)))
+    }
+  }
+
+  /** The [[cusum]] step, shared with its streaming twin: folds `v` into
+    * the carried accumulators, passes the pre-reset
+    * `(cusum_pos, cusum_neg, alarm)` to `emit`, and returns the
+    * post-reset state.
+    */
+  private[graft] def cusumStep(target: Long, slack: Long, threshold: Long)
+      : (CusumState, Long, (Long, Long, Long) => Unit) => CusumState = {
     require(slack >= 0, s"slack must be non-negative, got $slack")
     require(threshold > 0, s"threshold must be positive, got $threshold")
-    val base = df.select(col(key),
-        col(ordCol).cast("long").as(ordCol), col(valueCol).cast("long").as(valueCol))
-      .filter(col(key).isNotNull && col(ordCol).isNotNull && col(valueCol).isNotNull)
-    val schema = base.schema
-    val sorted = base.repartition(col(key)).sortWithinPartitions(col(key), col(ordCol))
-    val outSchema = org.apache.spark.sql.types.StructType(Seq(
-      schema(0), schema(1), schema(2),
-      org.apache.spark.sql.types.StructField("cusum_pos",
-        org.apache.spark.sql.types.LongType, nullable = false),
-      org.apache.spark.sql.types.StructField("cusum_neg",
-        org.apache.spark.sql.types.LongType, nullable = false),
-      org.apache.spark.sql.types.StructField("alarm",
-        org.apache.spark.sql.types.LongType, nullable = false)))
-    sorted.mapPartitions { it =>
-      var curKey: Any = null
-      var sp = 0L
-      var sn = 0L
-      it.map { row: org.apache.spark.sql.Row =>
-        val k = row.get(0)
-        if (k != curKey) { curKey = k; sp = 0L; sn = 0L }
-        val v = row.getLong(2)
-        val sp1 = math.max(0L, sp + v - target - slack)
-        val sn1 = math.max(0L, sn + target - v - slack)
-        val alarm = if (sp1 > threshold) 1L else if (sn1 > threshold) -1L else 0L
-        if (alarm != 0L) { sp = 0L; sn = 0L } else { sp = sp1; sn = sn1 }
-        org.apache.spark.sql.Row(k, row.getLong(1), v, sp1, sn1, alarm)
-      }
-    }(org.apache.spark.sql.Encoders.row(outSchema))
+    (st, v, emit) => {
+      val sp1 = math.max(0L, st.sp + v - target - slack)
+      val sn1 = math.max(0L, st.sn + target - v - slack)
+      val alarm = if (sp1 > threshold) 1L else if (sn1 > threshold) -1L else 0L
+      emit(sp1, sn1, alarm)
+      if (alarm != 0L) CusumState(0L, 0L) else CusumState(sp1, sn1)
+    }
   }
 
   /** The [[cusum]] oracle generator: `srcSql` must yield `(k, ord, v)`

@@ -2040,7 +2040,8 @@ object ParityQueries {
     * pure IEEE subtract/abs/compare with no accumulation, so the
     * decision sequence is bit-identical across engines. Oracled since
     * round 10 (previously the documented `err: no_oracle` row);
-    * ScalaTest keeps the in-memory reference-fold pin.
+    * ScalaTest keeps the in-memory reference-fold pin. Both engines drop
+    * rows with a NULL key, order or value (the sort-fold's NULL rule).
     */
   val shedMeanPolicy: Q = (s, dir) => {
     val e = events(s, dir).select("user_id", "event_id", "value")
@@ -2052,7 +2053,8 @@ object ParityQueries {
     """WITH RECURSIVE ev AS (
       |  SELECT user_id, event_id, value,
       |    row_number() OVER (PARTITION BY user_id ORDER BY event_id) AS rn
-      |  FROM events),
+      |  FROM events
+      |  WHERE user_id IS NOT NULL AND event_id IS NOT NULL AND value IS NOT NULL),
       |fold AS (
       |  SELECT user_id, event_id, value, rn, value AS last_kept, true AS kept
       |  FROM ev WHERE rn = 1
@@ -2071,7 +2073,8 @@ object ParityQueries {
     * loop exactly — three strict left folds (list_reduce over a 0.0
     * prepend, the strhashSql pattern) for dot/na/nb over the
     * min-length prefix, then `1.0 - dot / sqrt(na*nb)` in the
-    * identical op order, zero-norm → distance 1.0.
+    * identical op order, zero-norm → distance 1.0. NULL windows drop as
+    * in [[shedMeanPolicy]].
     */
   val shedCosinePolicy: Q = (s, dir) => {
     val e = events(s, dir).select("user_id", "event_id", "value")
@@ -2099,7 +2102,7 @@ object ParityQueries {
       |wr AS (
       |  SELECT user_id, window_id, vs,
       |    row_number() OVER (PARTITION BY user_id ORDER BY window_id) AS wn
-      |  FROM w),
+      |  FROM w WHERE user_id IS NOT NULL AND window_id IS NOT NULL AND vs IS NOT NULL),
       |fold AS (
       |  SELECT user_id, window_id, wn, vs AS last_kept, true AS kept
       |  FROM wr WHERE wn = 1

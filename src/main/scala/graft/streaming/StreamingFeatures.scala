@@ -4,6 +4,9 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.KeyedFold
+import graft.operators.{Shedding, Windows}
+
 /** Structured Streaming implementations of ralf's incremental semantics
   * (reference: the eager per-record push loop, ralf/operator.py:189-259).
   *
@@ -18,6 +21,11 @@ import org.apache.spark.sql.functions._
   * streaming analog of ralf's LRU cache_size eviction
   * (ralf/operator.py:243-254): idle keys expire instead of
   * least-recently-used keys being evicted.
+  *
+  * The ordered stateful operators run on [[graft.core.KeyedFold]]: one
+  * stateful node each, a per-record step, records applied in `ord`
+  * order within a micro-batch (ties broken as each operator states)
+  * and in arrival order across batches, as in the reference.
   */
 object StreamingFeatures {
 
@@ -25,6 +33,11 @@ object StreamingFeatures {
     * shape, ralf/operators/source.py:61-70).
     */
   final case class Update(key: String, ord: Long, value: Double)
+
+  // the in-batch orders the ordered operators share
+  private val byOrd: Option[Ordering[Update]] = Some(Ordering.by(_.ord))
+  private val byOrdValue: Option[Ordering[Update]] = Some(Ordering.by(u => (u.ord, u.value)))
+  private val eventOrder: Option[Ordering[TypedEvent]] = Some(Ordering.by(e => (e.ord, e.etype)))
 
   /** Current per-key feature state: latest record + update counter
     * (mirrors TableState counters, ralf/state/table_state.py:9-46).
@@ -86,31 +99,21 @@ object StreamingFeatures {
       size: Int
   ): Dataset[WindowEmit] = {
     import spark.implicits._
-    updates
-      .groupByKey(_.key)
-      .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout) {
-        (key: String, batch: Iterator[Update], state: GroupState[WinState]) =>
-          var st = state.getOption.getOrElse(WinState(Array.empty, 0L))
-          val out = Seq.newBuilder[WindowEmit]
-          // within a micro-batch, apply records in ord order (the
-          // cross-batch order is arrival order, as in the reference)
-          batch.toSeq.sortBy(_.ord).foreach { u =>
-            val buf = st.buffer :+ u.value
-            if (buf.length >= size) {
-              out += WindowEmit(key, st.emitted, buf.take(size).toSeq)
-              st = WinState(Array.empty, st.emitted + 1)
-            } else st = st.copy(buffer = buf)
-          }
-          state.update(st)
-          out.result().iterator
-      }
+    KeyedFold.stream[String, Update, WinState, WindowEmit](updates, OutputMode.Append(), byOrd,
+        _.key, _ => WinState(Array.empty, 0L)) { (key, st, u, emit) =>
+      val buf = st.buffer :+ u.value
+      if (buf.length >= size) {
+        emit(WindowEmit(key, st.emitted, buf.take(size).toSeq))
+        WinState(Array.empty, st.emitted + 1)
+      } else st.copy(buffer = buf)
+    }
   }
 
   /** Per-key count-based sliding window as a stateful stream
     * (ralf/operators/window.py:54-124): emit the last `windowSize`
-    * values every `slideSize` records. State holds at most
-    * windowSize-1 values plus a position counter — bounded regardless
-    * of stream length.
+    * values every `slideSize` records. State holds the last
+    * min(seen, windowSize) values plus a position counter — bounded
+    * regardless of stream length.
     */
   final case class SlideState(buffer: Array[Double], seen: Long)
 
@@ -121,27 +124,18 @@ object StreamingFeatures {
       slideSize: Int
   ): Dataset[WindowEmit] = {
     import spark.implicits._
-    updates
-      .groupByKey(_.key)
-      .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout) {
-        (key: String, batch: Iterator[Update], state: GroupState[SlideState]) =>
-          var st = state.getOption.getOrElse(SlideState(Array.empty, 0L))
-          val out = Seq.newBuilder[WindowEmit]
-          batch.toSeq.sortBy(_.ord).foreach { u =>
-            val buf0 = st.buffer :+ u.value
-            // keep only the trailing window
-            val buf = if (buf0.length > windowSize) buf0.takeRight(windowSize) else buf0
-            val seen = st.seen + 1
-            // emit at rows where seen >= w and (seen - w) % s == 0 —
-            // the same emit predicate as the batch formulation
-            if (seen >= windowSize && (seen - windowSize) % slideSize == 0) {
-              out += WindowEmit(key, (seen - windowSize) / slideSize, buf.toSeq)
-            }
-            st = SlideState(buf, seen)
-          }
-          state.update(st)
-          out.result().iterator
-      }
+    KeyedFold.stream[String, Update, SlideState, WindowEmit](updates, OutputMode.Append(), byOrd,
+        _.key, _ => SlideState(Array.empty, 0L)) { (key, st, u, emit) =>
+      val buf0 = st.buffer :+ u.value
+      // keep only the trailing window
+      val buf = if (buf0.length > windowSize) buf0.takeRight(windowSize) else buf0
+      val seen = st.seen + 1
+      // emit at rows where seen >= w and (seen - w) % s == 0 —
+      // the same emit predicate as the batch formulation
+      if (seen >= windowSize && (seen - windowSize) % slideSize == 0)
+        emit(WindowEmit(key, (seen - windowSize) / slideSize, buf.toSeq))
+      SlideState(buf, seen)
+    }
   }
 
   /** An update that may be an eviction tombstone (ralf's cascading
@@ -226,37 +220,28 @@ object StreamingFeatures {
     * Rights arriving before their left also buffer (micro-batch
     * boundaries can put a right ahead of its left — the eager reference
     * loop has the same property under arbitrary arrival interleaving).
-    * State per key is the pending tail of ONE side: every emitted pair
-    * removes one record from each side, so the buffers never both grow.
+    * State per key is the pending tail of ONE side: each record consumes
+    * the other side's oldest pending record or, if there is none,
+    * queues, so the buffers never both grow. Within a micro-batch records
+    * apply in ord order (stable, so each side keeps its own order).
     */
   def sequenceJoinStream(
       spark: SparkSession,
       updates: Dataset[SideUpdate]
   ): Dataset[JoinedPair] = {
     import spark.implicits._
-    updates
-      .groupByKey(_.key)
-      .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout) {
-        (key: String, batch: Iterator[SideUpdate], state: GroupState[JoinBuf]) =>
-          val st = state.getOption.getOrElse(
-            JoinBuf(Array.empty, Array.empty, Array.empty, Array.empty))
-          // within a micro-batch each side applies in ord order (the
-          // same convention as the other stateful operators here)
-          val (ls, rs) = batch.toSeq.partition(_.isLeft)
-          val lsS = ls.sortBy(_.ord)
-          val rsS = rs.sortBy(_.ord)
-          val lOrds = st.lOrds ++ lsS.map(_.ord)
-          val lVals = st.lVals ++ lsS.map(_.value)
-          val rOrds = st.rOrds ++ rsS.map(_.ord)
-          val rVals = st.rVals ++ rsS.map(_.value)
-          val n = math.min(lOrds.length, rOrds.length)
-          val out = (0 until n).map { i =>
-            JoinedPair(key, lOrds(i), lVals(i), rOrds(i), rVals(i))
-          }
-          state.update(JoinBuf(
-            lOrds.drop(n), lVals.drop(n), rOrds.drop(n), rVals.drop(n)))
-          out.iterator
-      }
+    KeyedFold.stream[String, SideUpdate, JoinBuf, JoinedPair](updates, OutputMode.Append(),
+        Some(Ordering.by(_.ord)), _.key,
+        _ => JoinBuf(Array.empty, Array.empty, Array.empty, Array.empty)) { (key, b, u, emit) =>
+      if (u.isLeft && b.rOrds.nonEmpty) {
+        emit(JoinedPair(key, u.ord, u.value, b.rOrds(0), b.rVals(0)))
+        b.copy(rOrds = b.rOrds.drop(1), rVals = b.rVals.drop(1))
+      } else if (u.isLeft) b.copy(lOrds = b.lOrds :+ u.ord, lVals = b.lVals :+ u.value)
+      else if (b.lOrds.nonEmpty) {
+        emit(JoinedPair(key, b.lOrds(0), b.lVals(0), u.ord, u.value))
+        b.copy(lOrds = b.lOrds.drop(1), lVals = b.lVals.drop(1))
+      } else b.copy(rOrds = b.rOrds :+ u.ord, rVals = b.rVals :+ u.value)
+    }
   }
 
   /** Output of [[asOfJoinStream]]: a left record paired with the right
@@ -298,30 +283,24 @@ object StreamingFeatures {
       maxRightsPerKey: Int = 1024
   ): Dataset[AsOfPair] = {
     import spark.implicits._
-    updates
-      .groupByKey(_.key)
-      .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout) {
-        (key: String, batch: Iterator[SideUpdate], state: GroupState[RightsBuf]) =>
-          var ords = state.getOption.map(_.ords).getOrElse(Array.empty[Long])
-          var vals = state.getOption.map(_.vals).getOrElse(Array.empty[Double])
-          val out = Seq.newBuilder[AsOfPair]
-          // in-batch order: by ord, rights before lefts at equal ord —
-          // mirrors the batch operator's (_ord asc, _ir desc) sort
-          batch.toSeq.sortBy(u => (u.ord, u.isLeft)).foreach { u =>
-            if (!u.isLeft) {
-              val pos = upperBound(ords, u.ord) // append in the in-order common case
-              ords = (ords.take(pos) :+ u.ord) ++ ords.drop(pos)
-              vals = (vals.take(pos) :+ u.value) ++ vals.drop(pos)
-              if (ords.length > maxRightsPerKey) { ords = ords.drop(1); vals = vals.drop(1) }
-            } else {
-              val pos = upperBound(ords, u.ord) - 1 // latest right with ord <= left ord
-              if (pos >= 0) out += AsOfPair(key, u.ord, u.value, Some(ords(pos)), Some(vals(pos)))
-              else out += AsOfPair(key, u.ord, u.value, None, None)
-            }
-          }
-          state.update(RightsBuf(ords, vals))
-          out.result().iterator
+    // in-batch order: by ord, rights before lefts at equal ord — mirrors
+    // the batch operator's (_ord asc, _ir desc) sort
+    KeyedFold.stream[String, SideUpdate, RightsBuf, AsOfPair](updates, OutputMode.Append(),
+        Some(Ordering.by(u => (u.ord, u.isLeft))), _.key,
+        _ => RightsBuf(Array.empty, Array.empty)) { (key, b, u, emit) =>
+      if (!u.isLeft) {
+        val pos = upperBound(b.ords, u.ord) // append in the in-order common case
+        val ords = (b.ords.take(pos) :+ u.ord) ++ b.ords.drop(pos)
+        val vals = (b.vals.take(pos) :+ u.value) ++ b.vals.drop(pos)
+        if (ords.length > maxRightsPerKey) RightsBuf(ords.drop(1), vals.drop(1))
+        else RightsBuf(ords, vals)
+      } else {
+        val pos = upperBound(b.ords, u.ord) - 1 // latest right with ord <= left ord
+        if (pos >= 0) emit(AsOfPair(key, u.ord, u.value, Some(b.ords(pos)), Some(b.vals(pos))))
+        else emit(AsOfPair(key, u.ord, u.value, None, None))
+        b
       }
+    }
   }
 
   /** First index in ascending `a` whose value exceeds `x` (a.length if
@@ -345,16 +324,13 @@ object StreamingFeatures {
 
   def runningSum(spark: SparkSession, updates: Dataset[Update]): Dataset[RunningSum] = {
     import spark.implicits._
-    updates
-      .groupByKey(_.key)
-      .mapGroupsWithState(GroupStateTimeout.NoTimeout) {
-        (key: String, batch: Iterator[Update], state: GroupState[RunningSum]) =>
-          var cur = state.getOption.getOrElse(RunningSum(key, 0.0, 0L))
-          batch.foreach(u => cur = RunningSum(key, cur.sum + u.value, cur.count + 1))
-          state.update(cur)
-          cur
-      }
+    KeyedFold.stream[String, Update, RunningSum, RunningSum](updates, OutputMode.Update(), None,
+        _.key, RunningSum(_, 0.0, 0L))(
+      (key, cur, u, _) => RunningSum(key, cur.sum + u.value, cur.count + 1), emitState)
   }
+
+  /** The `done` of operators whose output is their state, once per batch. */
+  private def emitState[K, S](key: K, st: S): Iterator[S] = Iterator.single(st)
 
   /** Decayed-feature state: the key's newest seen ordinal and the
     * decayed aggregates AS OF that ordinal. */
@@ -379,17 +355,9 @@ object StreamingFeatures {
   ): Dataset[DecayState] = {
     import spark.implicits._
     require(halfLife > 0, s"halfLife must be positive, got $halfLife")
-    updates
-      .groupByKey(_.key)
-      .mapGroupsWithState(GroupStateTimeout.NoTimeout) {
-        (key: String, batch: Iterator[Update], state: GroupState[DecayState]) =>
-          var cur = state.getOption.getOrElse(DecayState(key, Long.MinValue, 0.0, 0.0, 0L))
-          batch.toSeq.sortBy(u => (u.ord, u.value)).foreach { u =>
-            cur = foldDecay(cur, u, halfLife)
-          }
-          state.update(cur)
-          cur
-      }
+    KeyedFold.stream[String, Update, DecayState, DecayState](updates, OutputMode.Update(),
+        byOrdValue, _.key, DecayState(_, Long.MinValue, 0.0, 0.0, 0L))(
+      (_, cur, u, _) => foldDecay(cur, u, halfLife), emitState)
   }
 
   /** One decay-fold step (exposed for direct spec coverage of the
@@ -433,21 +401,15 @@ object StreamingFeatures {
   ): Dataset[FunnelProgress] = {
     import spark.implicits._
     require(steps.nonEmpty, "funnel needs at least one step")
-    events
-      .groupByKey(_.key)
-      .mapGroupsWithState(GroupStateTimeout.NoTimeout) {
-        (key: String, batch: Iterator[TypedEvent], state: GroupState[FunnelProgress]) =>
-          var cur = state.getOption.getOrElse(FunnelProgress(key, 0L, Seq.empty))
-          batch.toSeq.sortBy(e => (e.ord, e.etype)).foreach { e =>
-            val step = cur.stepOrds.length
-            val advances = step < steps.length && e.etype == steps(step) &&
-              (cur.stepOrds.isEmpty || e.ord > cur.stepOrds.last)
-            cur = FunnelProgress(key, cur.nEvents + 1L,
-              if (advances) cur.stepOrds :+ e.ord else cur.stepOrds)
-          }
-          state.update(cur)
-          cur
-      }
+    KeyedFold.stream[String, TypedEvent, FunnelProgress, FunnelProgress](events,
+        OutputMode.Update(), eventOrder, _.key, FunnelProgress(_, 0L, Seq.empty))(
+      { (key, cur, e, _) =>
+        val step = cur.stepOrds.length
+        val advances = step < steps.length && e.etype == steps(step) &&
+          (cur.stepOrds.isEmpty || e.ord > cur.stepOrds.last)
+        FunnelProgress(key, cur.nEvents + 1L,
+          if (advances) cur.stepOrds :+ e.ord else cur.stepOrds)
+      }, emitState)
   }
 
   /** One adjacency emitted by [[transitionsStream]]: the key's
@@ -475,19 +437,12 @@ object StreamingFeatures {
       events: Dataset[TypedEvent]
   ): Dataset[TransitionPair] = {
     import spark.implicits._
-    events
-      .groupByKey(_.key)
-      .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout) {
-        (key: String, batch: Iterator[TypedEvent], state: GroupState[String]) =>
-          val out = Seq.newBuilder[TransitionPair]
-          var last = state.getOption
-          batch.toSeq.sortBy(e => (e.ord, e.etype)).foreach { e =>
-            last.foreach(f => out += TransitionPair(key, f, e.etype, e.ord))
-            last = Some(e.etype)
-          }
-          last.foreach(state.update)
-          out.result().iterator
-      }
+    // state: the key's last event type (null before its first event)
+    KeyedFold.stream[String, TypedEvent, String, TransitionPair](events, OutputMode.Append(),
+        eventOrder, _.key, _ => null) { (key, last, e, emit) =>
+      if (last != null) emit(TransitionPair(key, last, e.etype, e.ord))
+      e.etype
+    }
   }
 
   /** A closed SCD2 version interval emitted by [[historyStream]]. */
@@ -515,30 +470,22 @@ object StreamingFeatures {
       events: Dataset[TypedEvent]
   ): Dataset[ClosedVersion] = {
     import spark.implicits._
-    events
-      .groupByKey(_.key)
-      .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout) {
-        (key: String, batch: Iterator[TypedEvent], state: GroupState[OpenVersion]) =>
-          val out = Seq.newBuilder[ClosedVersion]
-          var open = state.getOption
-          batch.toSeq.sortBy(e => (e.ord, e.etype)).foreach { e =>
-            open match {
-              case Some(OpenVersion(v, from)) if v != e.etype =>
-                out += ClosedVersion(key, v, from, e.ord)
-                open = Some(OpenVersion(e.etype, e.ord))
-              case Some(_) => () // no-change update collapses
-              case None => open = Some(OpenVersion(e.etype, e.ord))
-            }
-          }
-          open.foreach(state.update)
-          out.result().iterator
-      }
+    // state: the open version (null before the key's first event)
+    KeyedFold.stream[String, TypedEvent, OpenVersion, ClosedVersion](events, OutputMode.Append(),
+        eventOrder, _.key, _ => null) { (key, open, e, emit) =>
+      if (open == null) OpenVersion(e.etype, e.ord)
+      else if (open.value != e.etype) {
+        emit(ClosedVersion(key, open.value, open.validFrom, e.ord))
+        OpenVersion(e.etype, e.ord)
+      } else open // no-change update collapses
+    }
   }
 
   /** Stateful shedding gate (make_mean_policy,
     * ralf/policies/load_shedding_policy.py:41-50) on a live stream: pass
     * an update through only if it moved >= thresh from the last KEPT
-    * value. The streaming twin of Shedding.meanPolicyFold.
+    * value. The streaming twin of [[Shedding.meanPolicyFold]]: both run
+    * [[Shedding.meanGate]], so they agree by construction.
     */
   def meanPolicyGate(
       spark: SparkSession,
@@ -546,21 +493,10 @@ object StreamingFeatures {
       thresh: Double
   ): Dataset[Update] = {
     import spark.implicits._
-    updates
-      .groupByKey(_.key)
-      .flatMapGroupsWithState(OutputMode.Update(), GroupStateTimeout.NoTimeout) {
-        (key: String, batch: Iterator[Update], state: GroupState[Double]) =>
-          val out = Seq.newBuilder[Update]
-          var last = state.getOption
-          batch.toSeq.sortBy(_.ord).foreach { u =>
-            if (last.isEmpty || math.abs(u.value - last.get) >= thresh) {
-              out += u
-              last = Some(u.value)
-            }
-          }
-          last.foreach(state.update)
-          out.result().iterator
-      }
+    KeyedFold.stream[String, Update, Double, Update](updates, OutputMode.Update(), byOrd,
+        _.key, _ => Double.NaN) { (_, last, u, emit) =>
+      Shedding.meanGate(thresh)(last, u.value)(emit(u))
+    }
   }
 
   /** A session-tagged record emitted by [[sessionizeStream]]. */
@@ -585,23 +521,14 @@ object StreamingFeatures {
       maxGap: Long
   ): Dataset[SessionAssign] = {
     import spark.implicits._
-    updates
-      .groupByKey(_.key)
-      .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout) {
-        (key: String, batch: Iterator[Update], state: GroupState[SessState]) =>
-          var st = state.getOption
-          val out = batch.toSeq.sortBy(_.ord).map { u =>
-            val next = st match {
-              case None                                   => SessState(u.ord, 0L)
-              case Some(s) if u.ord - s.lastOrd > maxGap  => SessState(u.ord, s.session + 1)
-              case Some(s)                                => SessState(u.ord, s.session)
-            }
-            st = Some(next)
-            SessionAssign(key, u.ord, u.value, next.session)
-          }
-          st.foreach(state.update)
-          out.iterator
-      }
+    // a new key starts at session -1, so its first record opens session 0
+    KeyedFold.stream[String, Update, SessState, SessionAssign](updates, OutputMode.Append(),
+        byOrd, _.key, _ => SessState(Long.MinValue, -1L)) { (key, s, u, emit) =>
+      val session =
+        if (s.session < 0 || u.ord - s.lastOrd > maxGap) s.session + 1 else s.session
+      emit(SessionAssign(key, u.ord, u.value, session))
+      SessState(u.ord, session)
+    }
   }
 
   /** A timestamped update for event-time windowing. */
@@ -752,22 +679,16 @@ object StreamingFeatures {
       .withColumn("textHash",
         Bridge.column(graft.functions.StrHash(Bridge.expression(col("text")))))
       .as[HashedStreamDoc]
-    hashed
-      .groupByKey { d =>
-        val dig = java.security.MessageDigest.getInstance("MD5")
-          .digest(d.text.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        (d.textHash, dig.map("%02x".format(_)).mkString)
-      }
-      .flatMapGroupsWithState(OutputMode.Update(), GroupStateTimeout.NoTimeout) {
-        (key: (Long, String), batch: Iterator[HashedStreamDoc],
-         state: GroupState[DedupGroup]) =>
-          var cur = state.getOption.getOrElse(DedupGroup(key._1, Long.MaxValue, 0L))
-          batch.foreach { d =>
-            cur = DedupGroup(cur.textHash, math.min(cur.canonicalId, d.docId), cur.nCopies + 1)
-          }
-          state.update(cur)
-          Iterator.single(cur)
-      }
+    val md5Key = (d: HashedStreamDoc) => {
+      val dig = java.security.MessageDigest.getInstance("MD5")
+        .digest(d.text.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      (d.textHash, dig.map("%02x".format(_)).mkString)
+    }
+    KeyedFold.stream[(Long, String), HashedStreamDoc, DedupGroup, DedupGroup](hashed,
+        OutputMode.Update(), None, md5Key, k => DedupGroup(k._1, Long.MaxValue, 0L))(
+      (_, cur, d, _) =>
+        DedupGroup(cur.textHash, math.min(cur.canonicalId, d.docId), cur.nCopies + 1),
+      emitState)
   }
 
   /** Streaming incremental near-dup dedup — the streaming twin of
@@ -868,25 +789,19 @@ object StreamingFeatures {
     require(k > 0, s"k must be positive, got $k")
     val better = (a: WeightedKeep, b: WeightedKeep) =>
       a.esKey > b.esKey || (a.esKey == b.esKey && a.id < b.id)
-    docs
-      .groupByKey(_.group)
-      .flatMapGroupsWithState(OutputMode.Update(), GroupStateTimeout.NoTimeout) {
-        (group: String, batch: Iterator[WeightedDoc], state: GroupState[WSampleState]) =>
-          var entries = state.getOption.map { s =>
-            s.ids.indices.toList.map(i =>
-              WeightedKeep(group, s.ids(i), s.weights(i), s.keys(i)))
-          }.getOrElse(Nil)
-          batch.foreach { d =>
-            if (d.weight > 0.0) {
-              val e = WeightedKeep(group, d.id, d.weight, aresKey(d.id, d.weight))
-              entries = (e :: entries).sortWith(better).take(k)
-            }
-          }
-          state.update(WSampleState(
-            entries.map(_.id).toArray, entries.map(_.weight).toArray,
-            entries.map(_.esKey).toArray))
-          entries.iterator
-      }
+    // the state's entries, best first
+    val entries = (group: String, s: WSampleState) =>
+      s.ids.indices.toList.map(i => WeightedKeep(group, s.ids(i), s.weights(i), s.keys(i)))
+    KeyedFold.stream[String, WeightedDoc, WSampleState, WeightedKeep](docs, OutputMode.Update(),
+        None, _.group, _ => WSampleState(Array.empty, Array.empty, Array.empty))(
+      { (group, s, d, _) =>
+        if (d.weight > 0.0) {
+          val e = WeightedKeep(group, d.id, d.weight, aresKey(d.id, d.weight))
+          val kept = (e :: entries(group, s)).sortWith(better).take(k)
+          WSampleState(kept.map(_.id).toArray, kept.map(_.weight).toArray,
+            kept.map(_.esKey).toArray)
+        } else s
+      }, entries(_, _).iterator)
   }
 
   /** Trailing-window slope state: the last `windowSize` (ord, cent)
@@ -918,41 +833,36 @@ object StreamingFeatures {
   ): Dataset[SlopePoint] = {
     import spark.implicits._
     require(windowSize >= 2, s"windowSize must be >= 2, got $windowSize")
-    updates
-      .groupByKey(_.key)
-      .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout) {
-        (key: String, batch: Iterator[Update], state: GroupState[SlopeState]) =>
-          var ords = state.getOption.map(_.ords).getOrElse(Array.emptyLongArray)
-          var cents = state.getOption.map(_.cents).getOrElse(Array.emptyLongArray)
-          val out = scala.collection.mutable.ArrayBuffer.empty[SlopePoint]
-          batch.toSeq.sortBy(u => (u.ord, u.value)).foreach { u =>
-            // HALF_UP, not math.round (floor(x+0.5)): the batch twin
-            // quantizes via Spark round = BigDecimal HALF_UP, and the
-            // two differ on negative half-cent boundaries (-12.5 →
-            // -13 vs -12) — ADVICE r7; same decimal-text BigDecimal
-            // Spark's Round constructs
-            val yc = BigDecimal(u.value * 100)
-              .setScale(0, BigDecimal.RoundingMode.HALF_UP).toLong
-            ords = (ords :+ u.ord).takeRight(windowSize)
-            cents = (cents :+ yc).takeRight(windowSize)
-            if (ords.length == windowSize) {
-              val n = windowSize.toLong
-              val sx = ords.sum
-              val sy = cents.sum
-              val sxy = ords.zip(cents).map { case (a, b) => a * b }.sum
-              val sxx = ords.map(a => a * a).sum
-              val den = n * sxx - sx * sx
-              val slope =
-                if (den == 0L) None
-                else Some(BigDecimal((n * sxy - sx * sy).toDouble / den.toDouble / 100.0)
-                  .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble)
-              out += SlopePoint(key, u.ord, slope)
-            }
-          }
-          state.update(SlopeState(ords, cents))
-          out.iterator
-      }
+    KeyedFold.stream[String, Update, SlopeState, SlopePoint](updates, OutputMode.Append(),
+        byOrdValue, _.key, _ => SlopeState(Array.emptyLongArray, Array.emptyLongArray)) {
+      (key, st, u, emit) =>
+        val ords = (st.ords :+ u.ord).takeRight(windowSize)
+        val cents = (st.cents :+ toCents(u.value)).takeRight(windowSize)
+        if (ords.length == windowSize) {
+          val n = windowSize.toLong
+          val sx = ords.sum
+          val sy = cents.sum
+          val sxy = ords.zip(cents).map { case (a, b) => a * b }.sum
+          val sxx = ords.map(a => a * a).sum
+          val den = n * sxx - sx * sx
+          val slope =
+            if (den == 0L) None
+            else Some(BigDecimal((n * sxy - sx * sy).toDouble / den.toDouble / 100.0)
+              .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble)
+          emit(SlopePoint(key, u.ord, slope))
+        }
+        SlopeState(ords, cents)
+    }
   }
+
+  /** Dollars to integer cents exactly as the batch twins' Spark
+    * `round(value * 100)` does. HALF_UP, not math.round (floor(x+0.5)):
+    * Spark's round is BigDecimal HALF_UP, and the two differ on negative
+    * half-cent boundaries (-12.5 → -13 vs -12) — ADVICE r7; same
+    * decimal-text BigDecimal Spark's Round constructs.
+    */
+  private def toCents(v: Double): Long =
+    BigDecimal(v * 100).setScale(0, BigDecimal.RoundingMode.HALF_UP).toLong
 
   /** Trailing z-score state: the key's last `windowSize` cent values,
     * oldest first.
@@ -981,34 +891,20 @@ object StreamingFeatures {
     import spark.implicits._
     require(windowSize >= 2, s"windowSize must be >= 2, got $windowSize")
     require(threshold > 0, s"threshold must be positive, got $threshold")
-    updates
-      .groupByKey(_.key)
-      .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout) {
-        (key: String, batch: Iterator[Update], state: GroupState[ZScoreState]) =>
-          var cents = state.getOption.map(_.cents).getOrElse(Array.emptyLongArray)
-          val out = scala.collection.mutable.ArrayBuffer.empty[ZScorePoint]
-          batch.toSeq.sortBy(u => (u.ord, u.value)).foreach { u =>
-            // HALF_UP, not math.round (floor(x+0.5)): the batch twin
-            // quantizes via Spark round = BigDecimal HALF_UP, and the
-            // two differ on negative half-cent boundaries (-12.5 →
-            // -13 vs -12) — ADVICE r7; same decimal-text BigDecimal
-            // Spark's Round constructs
-            val yc = BigDecimal(u.value * 100)
-              .setScale(0, BigDecimal.RoundingMode.HALF_UP).toLong
-            if (cents.length == windowSize) {
-              val n = windowSize.toLong
-              val sy = cents.sum
-              val syy = cents.map(c => c * c).sum
-              val den = n * syy - sy * sy
-              val z = if (den > 0L) Some((yc * n - sy).toDouble / math.sqrt(den.toDouble))
-                      else None
-              out += ZScorePoint(key, u.ord, z, z.exists(v => math.abs(v) >= threshold))
-            }
-            cents = (cents :+ yc).takeRight(windowSize)
-          }
-          state.update(ZScoreState(cents))
-          out.iterator
+    KeyedFold.stream[String, Update, ZScoreState, ZScorePoint](updates, OutputMode.Append(),
+        byOrdValue, _.key, _ => ZScoreState(Array.emptyLongArray)) { (key, st, u, emit) =>
+      val yc = toCents(u.value)
+      val cents = st.cents
+      if (cents.length == windowSize) {
+        val n = windowSize.toLong
+        val sy = cents.sum
+        val syy = cents.map(c => c * c).sum
+        val den = n * syy - sy * sy
+        val z = if (den > 0L) Some((yc * n - sy).toDouble / math.sqrt(den.toDouble)) else None
+        emit(ZScorePoint(key, u.ord, z, z.exists(v => math.abs(v) >= threshold)))
       }
+      ZScoreState((cents :+ yc).takeRight(windowSize))
+    }
   }
 
   /** Per-key CUSUM fold state: the two one-sided accumulators,
@@ -1026,7 +922,8 @@ object StreamingFeatures {
     * two-sided Page fold as O(1) state per key — two longs through
     * the state store however long the stream — quantizing dollars to
     * cents with the same BigDecimal HALF_UP Spark's `round(value·100)`
-    * applies in the batch query, so every emitted row is
+    * applies in the batch query. Both sides run
+    * [[graft.operators.Windows.cusumStep]], so every emitted row is
     * BIT-IDENTICAL to the batch fold at the same (key, ord). The pure
     * integer arithmetic makes the equality exact across ANY
     * micro-batch boundary placement (no FP accumulation to diverge);
@@ -1040,26 +937,12 @@ object StreamingFeatures {
       threshold: Long
   ): Dataset[CusumPoint] = {
     import spark.implicits._
-    require(slack >= 0, s"slack must be non-negative, got $slack")
-    require(threshold > 0, s"threshold must be positive, got $threshold")
-    updates
-      .groupByKey(_.key)
-      .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout) {
-        (key: String, batch: Iterator[Update], state: GroupState[CusumState]) =>
-          var st = state.getOption.getOrElse(CusumState(0L, 0L))
-          val out = scala.collection.mutable.ArrayBuffer.empty[CusumPoint]
-          batch.toSeq.sortBy(u => (u.ord, u.value)).foreach { u =>
-            val vc = BigDecimal(u.value * 100)
-              .setScale(0, BigDecimal.RoundingMode.HALF_UP).toLong
-            val sp1 = math.max(0L, st.sp + vc - target - slack)
-            val sn1 = math.max(0L, st.sn + target - vc - slack)
-            val alarm = if (sp1 > threshold) 1L else if (sn1 > threshold) -1L else 0L
-            st = if (alarm != 0L) CusumState(0L, 0L) else CusumState(sp1, sn1)
-            out += CusumPoint(key, u.ord, vc, sp1, sn1, alarm)
-          }
-          state.update(st)
-          out.iterator
-      }
+    val step = Windows.cusumStep(target, slack, threshold)
+    KeyedFold.stream[String, Update, CusumState, CusumPoint](updates, OutputMode.Append(),
+        byOrdValue, _.key, _ => CusumState(0L, 0L)) { (key, st, u, emit) =>
+      val vc = toCents(u.value)
+      step(st, vc, (sp, sn, alarm) => emit(CusumPoint(key, u.ord, vc, sp, sn, alarm)))
+    }
   }
 
   /** Live two-sample drift monitor — the KS/Wasserstein twin of

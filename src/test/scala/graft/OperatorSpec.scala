@@ -1088,6 +1088,41 @@ class OperatorSpec extends SparkSpec {
     assert(kept == Set(("a", 1L), ("a", 3L), ("b", 1L)))
   }
 
+  test("batch sort-folds share one NULL rule: NULL-key and NULL-value rows drop") {
+    // each fold gets a NULL-value row and a NULL-key row next to two
+    // real rows of key "a"; both NULL rows drop, the real rows fold as
+    // if the NULL rows were absent
+    val scalar = Seq(
+      (Option("a"), 1L, Option(10.0)), (Option("a"), 2L, None: Option[Double]),
+      (None: Option[String], 3L, Option(500.0)), (Option("a"), 4L, Option(90.0))
+    ).toDF("key", "ord", "value")
+    val mean = Shedding.meanPolicyFold(scalar, "key", "ord", "value", thresh = 30.0)
+      .select("key", "ord").as[(String, Long)].collect().toSet
+    assert(mean == Set(("a", 1L), ("a", 4L)))
+
+    val vecs = Seq(
+      (Option("a"), 1L, Option(Seq(1.0, 0.0))), (Option("a"), 2L, None: Option[Seq[Double]]),
+      (None: Option[String], 3L, Option(Seq(0.0, 1.0))), (Option("a"), 4L, Option(Seq(0.0, 1.0)))
+    ).toDF("key", "ord", "vec")
+    val cosine = Shedding.cosinePolicyFold(vecs, "key", "ord", "vec", thresh = 0.01)
+      .select("key", "ord").as[(String, Long)].collect().toSet
+    assert(cosine == Set(("a", 1L), ("a", 4L)))
+
+    val ints = scalar.select(col("key"), col("ord"), col("value").cast("long").as("v"))
+    val cusum = Windows.cusum(ints, "key", "ord", "v", target = 10L, slack = 2L, threshold = 15L)
+      .collect().map(r => r.getLong(1) -> r.getAs[Long]("cusum_pos")).toMap
+    assert(cusum == Map(1L -> 0L, 4L -> 78L))
+  }
+
+  test("FeatureFrame sinks: sinkParquet round-trips its rows and print runs") {
+    val path = java.nio.file.Files.createTempDirectory("graft-ffsink").toString + "/t"
+    val ff = core.FeatureFrame.source(stream, "key", "ord")
+    ff.sinkParquet(path)
+    val back = spark.read.parquet(path).as[(String, Long, Double)].collect().toSet
+    assert(back == stream.as[(String, Long, Double)].collect().toSet)
+    ff.print(3)
+  }
+
   test("FeatureFrame.asOfJoin renames the right key and enriches point-in-time") {
     val l = core.FeatureFrame.source(
       Seq(("a", 5L)).toDF("key", "ord"), "key", "ord")

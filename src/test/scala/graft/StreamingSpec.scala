@@ -635,15 +635,53 @@ class StreamingSpec extends SparkSpec {
     val rng = new scala.util.Random(7)
     val data = for (k <- Seq("x", "y"); i <- 1 to 50)
       yield Update(k, i.toLong, rng.nextDouble() * 100)
+    // three real micro-batches (continuous trigger, addData interleaved
+    // with processAllAvailable), so each key's last-kept value crosses
+    // two state handoffs
     val in = MemoryStream[Update]
-    in.addData(data: _*)
-    val streamed = StreamingFeatures.runToMemory(
-      spark, StreamingFeatures.meanPolicyGate(spark, in.toDS(), thresh = 25.0), "t_gate")
-      .select("key", "ord").as[(String, Long)].collect().toSet
-    val batch = graft.operators.Shedding
-      .meanPolicyFold(data.toDF("key", "ord", "value"), "key", "ord", "value", 25.0)
-      .select("key", "ord").as[(String, Long)].collect().toSet
-    assert(streamed == batch)
+    val q = StreamingFeatures.meanPolicyGate(spark, in.toDS(), thresh = 25.0)
+      .writeStream.format("memory").queryName("t_gate").outputMode("update").start()
+    try {
+      for (part <- data.groupBy(u => (u.ord - 1) / 17).toSeq.sortBy(_._1).map(_._2)) {
+        in.addData(part: _*); q.processAllAvailable()
+      }
+      val streamed = spark.table("t_gate").select("key", "ord").as[(String, Long)].collect().toSet
+      val batch = graft.operators.Shedding
+        .meanPolicyFold(data.toDF("key", "ord", "value"), "key", "ord", "value", 25.0)
+        .select("key", "ord").as[(String, Long)].collect().toSet
+      assert(streamed == batch)
+    } finally q.stop()
+  }
+
+  test("every KeyedFold stream operator plans exactly one stateful node") {
+    import graft.streaming.StreamingFeatures.{SideUpdate, StreamDoc, TypedEvent, WeightedDoc}
+    val sf = StreamingFeatures
+    val u = MemoryStream[Update].toDS()
+    val sides = MemoryStream[SideUpdate].toDS()
+    val events = MemoryStream[TypedEvent].toDS()
+    val ops: Seq[(String, org.apache.spark.sql.Dataset[_])] = Seq(
+      "tumblingCountWindow" -> sf.tumblingCountWindow(spark, u, 4),
+      "slidingCountWindow" -> sf.slidingCountWindow(spark, u, 4, 2),
+      "sequenceJoinStream" -> sf.sequenceJoinStream(spark, sides),
+      "asOfJoinStream" -> sf.asOfJoinStream(spark, sides),
+      "runningSum" -> sf.runningSum(spark, u),
+      "decayedSumStream" -> sf.decayedSumStream(spark, u, halfLife = 10L),
+      "funnelStream" -> sf.funnelStream(spark, events, Seq("view", "buy")),
+      "transitionsStream" -> sf.transitionsStream(spark, events),
+      "historyStream" -> sf.historyStream(spark, events),
+      "meanPolicyGate" -> sf.meanPolicyGate(spark, u, thresh = 1.0),
+      "sessionizeStream" -> sf.sessionizeStream(spark, u, maxGap = 5L),
+      "dedupExactStream" -> sf.dedupExactStream(spark, MemoryStream[StreamDoc].toDS()),
+      "weightedSampleStream" -> sf.weightedSampleStream(spark, MemoryStream[WeightedDoc].toDS(), 3),
+      "rollingSlopeStream" -> sf.rollingSlopeStream(spark, u, 3),
+      "rollingZScoreStream" -> sf.rollingZScoreStream(spark, u, 3, 2.0),
+      "cusumStream" -> sf.cusumStream(spark, u, target = 0L, slack = 0L, threshold = 10L))
+    for ((name, ds) <- ops) {
+      val stateful = ds.queryExecution.analyzed.collect {
+        case p if p.nodeName == "FlatMapGroupsWithState" => p
+      }
+      assert(stateful.size == 1, s"$name: ${stateful.size} FlatMapGroupsWithState nodes")
+    }
   }
 
   test("streaming incremental dedup matches batch minhashAgainstPairs") {

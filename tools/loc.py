@@ -14,7 +14,8 @@ file and in total, the added and removed lines of each kind:
 
 Added and removed lines come from `git diff -U0` (renames followed), so
 the figures match what the diff shows. The last lines give the absolute
-code / comment / blank totals of the tree at both ends.
+code / comment / blank totals of the tree at both ends. A revision git
+cannot resolve prints git's error and exits with status 2.
 """
 import os
 import subprocess
@@ -26,8 +27,14 @@ KINDS = ("code", "comment", "blank")
 
 
 def git(*args):
-    return subprocess.run(("git",) + args, check=True, capture_output=True,
-                          text=True).stdout
+    """git's stdout; on failure (an unknown revision, a path given as a
+    revision) print git's stderr and exit 2."""
+    try:
+        return subprocess.run(("git",) + args, check=True, capture_output=True,
+                              text=True).stdout
+    except subprocess.CalledProcessError as e:
+        sys.stderr.write(e.stderr)
+        sys.exit(2)
 
 
 def kind(line):
