@@ -7,7 +7,9 @@ import scala.util.{Failure, Try}
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.sql.types.StructType
 
 import graft.core.Names
@@ -103,8 +105,8 @@ object BucketedDir {
   ): Unit =
     VersionedDir.read(spark, root).foreach { flat =>
       // materialize off the flat files before they are deleted below
-      publishPartitioned(spark, root, flat, keyCol, numBuckets,
-        minVersion = 0L, keepVersions)((_, part) => part)
+      publishPartitioned(spark, root, flat, keyCol, numBuckets, flat.schema,
+        minVersion = 0L, keepVersions)((_, rows) => rows)
       val hfs = VersionedDir.fs(spark, root)
       val rootPath = new Path(root)
       VersionedDir.committedVersions(hfs, rootPath).foreach(p => hfs.delete(p, true))
@@ -171,38 +173,41 @@ object BucketedDir {
   }
 
   /** Merge a keyed batch, rewriting only the buckets its keys hash
-    * into. For each touched bucket, the bucket's new contents are
-    * `mergeFn(existingRows, batchRows)` restricted to that bucket,
-    * published strictly above the bucket's current version (and
-    * `minVersion` — replay protection, see [[VersionedDir.publish]]).
-    * Untouched buckets' files are not rewritten (byte-identical across
-    * the merge; BucketedSinkSpec pins this).
+    * into. For each batch key k, the key's new stored rows are
+    * `mergeFn(stored rows of k, batch rows of k)`: the first in the
+    * table `schema`, the second in the batch's schema, the result in the
+    * table `schema` (Nil deletes the key). Stored rows of keys outside
+    * the batch stay as they are. Each touched bucket publishes its next
+    * version strictly above its current one (and `minVersion` — replay
+    * protection, see [[VersionedDir.publish]]). Untouched buckets' files
+    * are not rewritten (byte-identical across the merge;
+    * BucketedSinkSpec pins this).
     *
-    * `mergeFn` must be key-local (each output row derives from input
-    * rows of its own key, as every upsert / latest-wins / delete merge
-    * is): a key fixes its bucket, so ONE `mergeFn` over the union of all
-    * touched buckets equals applying it bucket by bucket. Its output
-    * schema, `mergeFn(None, batch).schema`, is the stored schema.
+    * Keys group by value (strings, numbers, NULL; BINARY by content); a
+    * key column of another type is refused before anything is written.
+    * The batch's key column must have the table's key type: the bucket
+    * is a hash of the key value as typed.
     *
-    * A merge costs a fixed number of Spark jobs whatever the number of
-    * touched buckets — a 100 TB table wants numBuckets in the thousands
-    * (numBuckets ~ tableSize / targetBucketBytes), so merges touching
-    * many buckets are the norm, and per-bucket job latency must not
-    * multiply: the batch checkpoint, which also observes the touched
-    * bucket set, then ONE scan of every touched bucket's current version
-    * (explicit schema, so no inference job), ONE `mergeFn`, and ONE
-    * write partitioned by bucket into a hidden stage dir. The driver
-    * then moves each bucket's partition dir to its next version dir and
-    * swaps that bucket's pointer, buckets running concurrently (the
-    * version lookups too), so on HDFS or S3 their round trips overlap.
-    * A local root forks no process along the way ([[LocalFs]]). A
-    * touched bucket whose merge result is empty
-    * (its last key deleted) publishes an empty version on its own,
-    * after the others, on the caller's thread. A failure mid-publish
-    * lets every other bucket finish publishing, then the merge throws
-    * the first failure in bucket order — the reference's
-    * record-at-a-time granularity — and a replay is version-guarded by
-    * `minVersion`.
+    * A merge is ONE Spark job whatever the number of touched buckets — a
+    * 100 TB table wants numBuckets in the thousands (numBuckets ~
+    * tableSize / targetBucketBytes), so merges touching many buckets are
+    * the norm, and per-bucket job latency must not multiply. The batch is
+    * consumed once: it is shuffled on the bucket id, and each task, for
+    * each bucket it holds, resolves the bucket's `_CURRENT`, streams the
+    * stored version through Spark's Parquet reader, passes stored rows of
+    * keys outside the batch through, and applies `mergeFn` to the rest
+    * ([[BucketMergeTask]]). The same job writes the result partitioned by
+    * bucket into a hidden stage dir, one file per bucket, and observes
+    * the touched bucket set. The driver then moves each bucket's
+    * partition dir to its next version dir and swaps that bucket's
+    * pointer, buckets running concurrently, so on HDFS or S3 their round
+    * trips overlap. A local root forks no process along the way
+    * ([[LocalFs]]). A touched bucket whose merge result is empty (its
+    * last key deleted) publishes an empty version on its own, after the
+    * others, on the caller's thread. A failure mid-publish lets every
+    * other bucket finish publishing, then the merge throws the first
+    * failure in bucket order — the reference's record-at-a-time
+    * granularity — and a replay is version-guarded by `minVersion`.
     *
     * Returns the touched bucket ids. The touched set is a <=numBuckets
     * observed metric — control-plane sized by construction.
@@ -213,11 +218,13 @@ object BucketedDir {
       batch: DataFrame,
       keyCol: String,
       numBuckets: Int,
+      schema: StructType,
       minVersion: Long = 0L,
       keepVersions: Int = 2
-  )(mergeFn: (Option[DataFrame], DataFrame) => DataFrame): Seq[Int] = {
+  )(mergeFn: (Seq[Row], Seq[Row]) => Seq[Row]): Seq[Int] = {
+    BucketMergeTask.validate(batch.schema, schema, keyCol)
     val nb = pinBucketCount(spark, root, keyCol, numBuckets, keepVersions)
-    publishPartitioned(spark, root, batch, keyCol, nb, minVersion, keepVersions)(mergeFn)
+    publishPartitioned(spark, root, batch, keyCol, nb, schema, minVersion, keepVersions)(mergeFn)
   }
 
   /** Hidden dir under the table root that a merge's partitioned write
@@ -238,70 +245,58 @@ object BucketedDir {
       batch: DataFrame,
       keyCol: String,
       nb: Int,
+      schema: StructType,
       minVersion: Long,
       keepVersions: Int
-  )(mergeFn: (Option[DataFrame], DataFrame) => DataFrame): Seq[Int] = {
-    val bkt = Names.fresh(batch.columns.toSeq, "_bkt")
-    // Materialize the batch once: the merge reads the checkpointed blocks
-    // instead of recomputing the batch plan, and the checkpoint job also
-    // observes the touched set.
+  )(mergeFn: (Seq[Row], Seq[Row]) => Seq[Row]): Seq[Int] = {
+    val bkt = Names.fresh(batch.columns.toSeq ++ schema.fieldNames, "_bkt")
+    val task = BucketMergeTask(spark, root, batch.schema, schema, keyCol, mergeFn)
     val seen = new Observation()
-    val withB = batch.withColumn(bkt, bucketCol(keyCol, nb))
-      .observe(seen, collect_set(col(bkt)).as(bkt)).localCheckpoint(true)
+    val keyed = Bridge.logicalPlan(batch.withColumn(bkt, bucketCol(keyCol, nb))
+      .observe(seen, collect_set(col(bkt)).as(bkt)))
+    val bktAttr = keyed.output.last
+    // plan and write in the batch's own session: a streaming batch lives
+    // in the stream's session, whose listeners complete the observation
+    val session = batch.sparkSession
+    BucketMergeStrategy.install(session)
+    val merged = BucketMerge(task, math.min(nb, spark.sparkContext.defaultParallelism), bktAttr,
+      DataTypeUtils.toAttributes(schema) :+ bktAttr, keyed)
+    val rootPath = new Path(root)
+    val stage = new Path(rootPath, StageDir)
+    // the stage root's _SUCCESS is never read (each bucket gets its own)
+    Bridge.ofRows(session, merged)
+      .write.mode(SaveMode.Overwrite).partitionBy(bkt)
+      .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
+      .options(VersionedDir.writeOptions(spark, root))
+      .parquet(stage.toString)
     val touched = seen.get(bkt).asInstanceOf[collection.Seq[Int]].toSeq.sorted
-    if (touched.nonEmpty) {
-      val hfs = VersionedDir.fs(spark, root)
-      val rootPath = new Path(root)
-      val bRoots = touched.map(b => b -> new Path(rootPath, bucketName(b))).toMap
-      val current = perBucket(touched)(b => VersionedDir.currentVersion(hfs, bRoots(b)))
-      val part = withB.drop(bkt)
-      val schema = mergeFn(None, part).schema
-      val existing = touched.flatMap(current) match {
-        case Seq() => None
-        case dirs =>
-          // a scan over more root paths than the parallel-discovery
-          // threshold lists them in a Spark job of its own; scans of at
-          // most that many list on the driver, keeping the job count fixed
-          val perScan = spark.conf.get("spark.sql.sources.parallelPartitionDiscovery.threshold").toInt
-          Some(dirs.map(_.toString).grouped(math.max(1, perScan))
-            .map(spark.read.schema(schema).parquet(_: _*)).reduce(_ union _))
+    val hfs = VersionedDir.fs(spark, root)
+    val bRoots = touched.map(b => b -> new Path(rootPath, bucketName(b))).toMap
+    val moved = perBucket(touched) { b =>
+      val staged = new Path(stage, s"$bkt=$b")
+      val found = hfs.exists(staged)
+      if (found) {
+        // a version dir left by a crash before its pointer swap must go
+        // first: rename onto an existing dir would nest inside it
+        val nextV = VersionedDir.nextVersion(VersionedDir.currentVersion(hfs, bRoots(b)), minVersion)
+        val vDir = new Path(bRoots(b), VersionedDir.versionDir(nextV))
+        hfs.delete(vDir, true)
+        hfs.mkdirs(bRoots(b))
+        hfs.create(new Path(staged, "_SUCCESS"), true).close()
+        require(hfs.rename(staged, vDir), s"could not move $staged to $vDir")
+        VersionedDir.swapAndPrune(hfs, bRoots(b), nextV, keepVersions)
       }
-      val stage = new Path(rootPath, StageDir)
-      // repartition on the bucket: each bucket's rows meet in one task,
-      // so every bucket version is one parquet file. The stage root's
-      // _SUCCESS is never read (each bucket gets its own below).
-      mergeFn(existing, part).withColumn(bkt, bucketCol(keyCol, nb))
-        .repartition(col(bkt))
-        .write.mode(SaveMode.Overwrite).partitionBy(bkt)
-        .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
-        .options(VersionedDir.writeOptions(spark, root))
-        .parquet(stage.toString)
-      val moved = perBucket(touched) { b =>
-        val staged = new Path(stage, s"$bkt=$b")
-        val found = hfs.exists(staged)
-        if (found) {
-          // a version dir left by a crash before its pointer swap must go
-          // first: rename onto an existing dir would nest inside it
-          val nextV = VersionedDir.nextVersion(current(b), minVersion)
-          val vDir = new Path(bRoots(b), VersionedDir.versionDir(nextV))
-          hfs.delete(vDir, true)
-          hfs.mkdirs(bRoots(b))
-          hfs.create(new Path(staged, "_SUCCESS"), true).close()
-          require(hfs.rename(staged, vDir), s"could not move $staged to $vDir")
-          VersionedDir.swapAndPrune(hfs, bRoots(b), nextV, keepVersions)
-        }
-        found
-      }
-      // empty merge result: no partition dir, so publish an empty version
-      // with the table schema. That is a Spark job, so it runs here on
-      // the caller's thread, under its job group, local properties and
-      // SQL execution id.
-      touched.filterNot(moved).foreach { b =>
-        VersionedDir.publish(spark, bRoots(b).toString,
-          spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema), minVersion, keepVersions)
-      }
-      hfs.delete(stage, true)
+      found
     }
+    // empty merge result: no partition dir, so publish an empty version
+    // with the table schema. That is a Spark job, so it runs here on
+    // the caller's thread, under its job group, local properties and
+    // SQL execution id.
+    touched.filterNot(moved).foreach { b =>
+      VersionedDir.publish(spark, bRoots(b).toString,
+        spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema), minVersion, keepVersions)
+    }
+    hfs.delete(stage, true)
     touched
   }
 
@@ -311,14 +306,16 @@ object BucketedDir {
     * failure in bucket order is rethrown. Only filesystem calls belong
     * here; Spark jobs stay on the caller's thread.
     */
-  private def perBucket[A](buckets: Seq[Int])(f: Int => A): Map[Int, A] = {
-    val pool = Executors.newFixedThreadPool(math.min(buckets.size, Runtime.getRuntime.availableProcessors))
-    try {
-      val settled = buckets.map(b => pool.submit((() => f(b)): Callable[A])).map(fut => Try(fut.get()))
-      buckets.zip(settled.map {
-        case Failure(e: ExecutionException) => throw e.getCause
-        case r => r.get
-      }).toMap
-    } finally pool.shutdown()
-  }
+  private def perBucket[A](buckets: Seq[Int])(f: Int => A): Map[Int, A] =
+    if (buckets.isEmpty) Map.empty
+    else {
+      val pool = Executors.newFixedThreadPool(math.min(buckets.size, Runtime.getRuntime.availableProcessors))
+      try {
+        val settled = buckets.map(b => pool.submit((() => f(b)): Callable[A])).map(fut => Try(fut.get()))
+        buckets.zip(settled.map {
+          case Failure(e: ExecutionException) => throw e.getCause
+          case r => r.get
+        }).toMap
+      } finally pool.shutdown()
+    }
 }

@@ -212,27 +212,25 @@ final class BucketedParquetConnector(
         .flatMap(_.filter(col(keyCol) === lit(key)).collect().headOption)
     }
 
-  /** Full rewrite — only reached via the trait's non-overridden paths
-    * (none today); upsert/delete below are the bucket-pruned fast paths.
+  /** Not supported: a bucketed table is rewritten only bucket by
+    * bucket, and a merge of `table` would keep every untouched bucket's
+    * old rows — an upsert, not a replace. Nothing in the trait reaches
+    * it ([[upsert]] and [[delete]] are overridden).
     */
-  override protected def replace(table: DataFrame): Unit = {
-    BucketedDir.merge(spark, root, table, keyCol, numBuckets)((_, part) => part)
-    ()
-  }
+  override def replace(table: DataFrame): Unit =
+    throw new UnsupportedOperationException(
+      "BucketedParquetConnector.replace: a bucketed table cannot be replaced in place; use upsert and delete")
 
   override def upsert(batch: DataFrame): Unit = {
     validateBatchSchema(batch)
-    val b = batch.dropDuplicates(keyCol).localCheckpoint(true)
-    BucketedDir.merge(spark, root, b, keyCol, numBuckets) { (existing, part) =>
-      existing match {
-        case Some(cur) =>
-          cur.join(broadcast(part.select(keyCol)), Seq(keyCol), "left_anti").unionByName(part)
-        case None => part
-      }
-    }
+    val b = batch.select(schema.fieldNames.map(col).toSeq: _*).dropDuplicates(keyCol).localCheckpoint(true)
+    BucketedDir.merge(spark, root, b, keyCol, numBuckets, schema)((_, rows) => rows)
     updates += b.count()
   }
 
+  /** Deletes through the bucketed merge: each deleted key's merge keeps
+    * nothing. As in the trait, NULL-key rows are never deleted.
+    */
   override def delete(keys: Seq[Any]): Unit = if (keys.nonEmpty) {
     import scala.jdk.CollectionConverters._
     val hit = bulkQuery().filter(col(keyCol).isin(keys: _*)).count()
@@ -241,17 +239,8 @@ final class BucketedParquetConnector(
       // as writes (never a driver-side hash), then rewrite only the
       // buckets the deleted keys live in.
       val keyDf = spark.createDataFrame(
-        keys.map(k => Row(k)).asJava, StructType(Seq(schema(keyCol))))
-      BucketedDir.merge(spark, root, keyDf, keyCol, numBuckets) { (existing, part) =>
-        existing match {
-          case Some(cur) =>
-            cur.join(broadcast(part.select(keyCol)), Seq(keyCol), "left_anti")
-          case None =>
-            // deleted key hashed to a never-written bucket: publish an
-            // empty bucket with the TABLE schema, not the key-list's
-            spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
-        }
-      }
+        keys.filter(_ != null).map(k => Row(k)).asJava, StructType(Seq(schema(keyCol))))
+      BucketedDir.merge(spark, root, keyDf, keyCol, numBuckets, schema)((_, _) => Nil)
     }
     deletes += hit
   }

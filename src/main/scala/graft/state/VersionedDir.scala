@@ -20,10 +20,10 @@ object VersionedDir {
     * root (a `file:` URI, or no scheme under a local default FS),
     * Hadoop's own filesystem otherwise.
     */
-  def fs(spark: SparkSession, root: String): FileSystem = {
-    val conf = spark.sparkContext.hadoopConfiguration
+  def fs(spark: SparkSession, root: String): FileSystem = fs(spark.sparkContext.hadoopConfiguration, root)
+
+  def fs(conf: Configuration, root: String): FileSystem =
     if (isLocal(conf, root)) LocalFs.shared(conf) else new Path(root).getFileSystem(conf)
-  }
 
   /** Writer options that make a Spark write under `root` create its
     * files through [[LocalFs]] when the root is local (none otherwise).

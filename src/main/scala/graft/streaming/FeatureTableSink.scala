@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row, SparkSession}
 
 import graft.state.{BucketedDir, VersionedDir}
 import graft.streaming.StreamingFeatures.{KeyEvent, KeyFeature}
@@ -14,11 +14,13 @@ import graft.streaming.StreamingFeatures.{KeyEvent, KeyFeature}
   *
   * Each micro-batch merges the incoming per-key updates into the stored
   * table through [[graft.state.BucketedDir]]: the table is hash-bucketed
-  * by key and a batch rewrites ONLY the buckets its keys land in: one
-  * union → max_by per key over every touched bucket, written once
-  * partitioned by bucket (a fixed number of Spark jobs however many
-  * buckets the batch touches), then each bucket published with an
-  * atomic `_CURRENT` pointer swap and superseded versions pruned.
+  * by key and a batch rewrites ONLY the buckets its keys land in. The
+  * merge is one Spark job however many buckets the batch touches: each
+  * task reads its buckets' stored rows, keeps the latest row of every
+  * batch key ([[latest]], a per-key function), passes the other keys'
+  * rows through, and writes the bucket's next version; each bucket is
+  * then published with an atomic `_CURRENT` pointer swap and superseded
+  * versions pruned.
   * Readers never see a partial write, storage stays bounded over a
   * long-running stream, and — the 100 TB property — write cost per
   * micro-batch is O(touched buckets), not O(table): a small batch into a
@@ -65,20 +67,8 @@ object FeatureTableSink {
     // (and at least the micro-batch id) — a replayed micro-batch id
     // (restart before offset commit) must never overwrite the directory
     // a reader is lazily scanning.
-    BucketedDir.merge(spark, root, batch.toDF(), "key", numBuckets,
-      minVersion = version, keepVersions = keepVersions) { (existing, part) =>
-      // Winner per key: highest event order (ord), numUpdates only as a
-      // tie-break for re-emissions of the same ord. Never numUpdates
-      // alone — the TTL path in latestPerKey resets that counter, and a
-      // stale high count must not shadow fresh data.
-      existing.map(_.unionByName(part)).getOrElse(part)
-        .groupBy(col("key"))
-        .agg(max_by(
-          struct(col("ord"), col("value"), col("numUpdates")),
-          struct(col("ord"), col("numUpdates"))).as("_cur"))
-        .select(col("key"), col("_cur.ord").as("ord"), col("_cur.value").as("value"),
-          col("_cur.numUpdates").as("numUpdates"))
-    }
+    BucketedDir.merge(spark, root, batch.toDF(), "key", numBuckets, Schema,
+      minVersion = version, keepVersions = keepVersions)((stored, rows) => Seq(latest(stored ++ rows)))
     ()
   }
 
@@ -87,7 +77,9 @@ object FeatureTableSink {
     * batch is a tombstone is deleted from the stored table; other keys
     * merge latest-wins as in [[merge]]. "Last" is by (ord, evicted):
     * an update and its eviction at the same ord resolve to the
-    * eviction, matching the operator's processing order.
+    * eviction, matching the operator's processing order. The last
+    * event is picked inside the per-key merge, so the batch crosses one
+    * shuffle: the merge's own, on the bucket.
     */
   def mergeEvents(
       spark: SparkSession,
@@ -97,33 +89,24 @@ object FeatureTableSink {
       numBuckets: Int = DefaultBuckets,
       keepVersions: Int = 2
   ): Unit = {
-    // Reduce the batch to its last event per key BEFORE bucketing (by
-    // (ord, evicted): an update and its eviction at the same ord resolve
-    // to the eviction, matching the operator's processing order) — then
-    // the merge applies every touched bucket's deletes and upserts in one
-    // pass (both are key-local).
-    val lastEvent = batch.toDF()
-      .groupBy(col("key"))
-      .agg(max_by(
-        struct(col("ord"), col("value"), col("numUpdates"), col("evicted")),
-        struct(col("ord"), col("evicted").cast("int"))).as("_e"))
-      .select(col("key"), col("_e.ord").as("ord"), col("_e.value").as("value"),
-        col("_e.numUpdates").as("numUpdates"), col("_e.evicted").as("evicted"))
-    BucketedDir.merge(spark, root, lastEvent, "key", numBuckets,
-      minVersion = version, keepVersions = keepVersions) { (existing, part) =>
-      val evictedKeys = part.filter(col("evicted")).select("key")
-      val ups = part.filter(!col("evicted")).drop("evicted")
-      existing.map(_.join(broadcast(evictedKeys), Seq("key"), "left_anti")).getOrElse(ups.limit(0))
-        .unionByName(ups)
-        .groupBy(col("key"))
-        .agg(max_by(
-          struct(col("ord"), col("value"), col("numUpdates")),
-          struct(col("ord"), col("numUpdates"))).as("_cur"))
-        .select(col("key"), col("_cur.ord").as("ord"), col("_cur.value").as("value"),
-          col("_cur.numUpdates").as("numUpdates"))
+    BucketedDir.merge(spark, root, batch.toDF(), "key", numBuckets, Schema,
+      minVersion = version, keepVersions = keepVersions) { (stored, events) =>
+      val last = events.maxBy(e => (e.getLong(1), e.getBoolean(4)))
+      if (last.getBoolean(4)) Nil
+      else Seq(latest(stored :+ Row(last.get(0), last.get(1), last.get(2), last.get(3))))
     }
     ()
   }
+
+  /** The stored table's schema: one [[KeyFeature]] per key. */
+  private val Schema = Encoders.product[KeyFeature].schema
+
+  /** A key's winning row: highest event order (ord), numUpdates only as
+    * a tie-break for re-emissions of the same ord. Never numUpdates
+    * alone — the TTL path in latestPerKey resets that counter, and a
+    * stale high count must not shadow fresh data.
+    */
+  private def latest(rows: Seq[Row]): Row = rows.maxBy(r => (r.getLong(1), r.getLong(3)))
 
   /** Attach the sink to a stream of KeyFeature updates. */
   def start(

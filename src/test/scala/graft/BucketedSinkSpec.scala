@@ -5,8 +5,7 @@ import java.security.MessageDigest
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, Encoders, Row}
-import org.apache.spark.sql.functions.broadcast
+import org.apache.spark.sql.{Encoders, Row}
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 import graft.state.{BucketedDir, BucketedParquetConnector, VersionedDir}
@@ -147,9 +146,7 @@ class BucketedSinkSpec extends SparkSpec {
     val nb = 64
     val keys = (1L to 400L)
     val touched = BucketedDir.merge(spark, root, df(keys.map(k => k -> s"v$k"): _*),
-      "key", nb) { (existing, part) =>
-      existing.map(_.unionByName(part)).getOrElse(part)
-    }
+      "key", nb, schema)((stored, rows) => stored ++ rows)
     assert(touched.size > 8, s"expected the batch to span >8 buckets, got ${touched.size}")
     val got = BucketedDir.read(spark, root).get.collect()
       .map(r => r.getLong(0) -> r.getString(1)).toMap
@@ -157,7 +154,7 @@ class BucketedSinkSpec extends SparkSpec {
       "every row must land exactly once across all concurrently-published buckets")
     // second wide merge on the same table: versions advance per bucket
     BucketedDir.merge(spark, root, df(keys.map(k => k -> s"w$k"): _*),
-      "key", nb, minVersion = 1L) { (existing, part) => part }
+      "key", nb, schema, minVersion = 1L)((_, rows) => rows)
     val got2 = BucketedDir.read(spark, root).get.collect()
       .map(r => r.getLong(0) -> r.getString(1)).toMap
     assert(got2.size == 400 && keys.forall(k => got2(k) == s"w$k"))
@@ -313,28 +310,29 @@ class BucketedSinkSpec extends SparkSpec {
   }
 
   /** Latest-wins upsert merge, as BucketedParquetConnector.upsert runs it. */
-  private def upsertFn(existing: Option[DataFrame], part: DataFrame): DataFrame =
-    existing.map(_.join(broadcast(part.select("key")), Seq("key"), "left_anti").unionByName(part))
-      .getOrElse(part)
+  private val upsertFn: (Seq[Row], Seq[Row]) => Seq[Row] = (_, rows) => rows
+
+  /** Run `body` under a fresh job group: (its result, the Spark jobs it ran). */
+  private def jobsIn[A](group: String)(body: => A): (A, Int) = {
+    val sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    val out = try body finally sc.clearJobGroup()
+    org.apache.spark.sql.graft.Bridge.drainListenerBus(sc)
+    (out, sc.statusTracker.getJobIdsForGroup(group).length)
+  }
 
   test("a merge touching 64 buckets runs no more Spark jobs than one touching 1") {
     val root = tmp()
     val nb = 64
     val keys = 1L to 400L
-    BucketedDir.merge(spark, root, df(keys.map(k => k -> s"v$k"): _*), "key", nb)(upsertFn)
-    val sc = spark.sparkContext
-    def jobs(group: String)(body: => Seq[Int]): (Int, Int) = {
-      sc.setJobGroup(group, group)
-      val touched = try body finally sc.clearJobGroup()
-      org.apache.spark.sql.graft.Bridge.drainListenerBus(sc)
-      (touched.size, sc.statusTracker.getJobIdsForGroup(group).length)
+    BucketedDir.merge(spark, root, df(keys.map(k => k -> s"v$k"): _*), "key", nb, schema)(upsertFn)
+    val (one, oneJobs) = jobsIn("bucketed-merge-one") {
+      BucketedDir.merge(spark, root, df(7L -> "one"), "key", nb, schema)(upsertFn)
     }
-    val (oneTouched, oneJobs) = jobs("bucketed-merge-one") {
-      BucketedDir.merge(spark, root, df(7L -> "one"), "key", nb)(upsertFn)
+    val (wide, wideJobs) = jobsIn("bucketed-merge-wide") {
+      BucketedDir.merge(spark, root, df(keys.map(k => k -> s"w$k"): _*), "key", nb, schema)(upsertFn)
     }
-    val (wideTouched, wideJobs) = jobs("bucketed-merge-wide") {
-      BucketedDir.merge(spark, root, df(keys.map(k => k -> s"w$k"): _*), "key", nb)(upsertFn)
-    }
+    val (oneTouched, wideTouched) = (one.size, wide.size)
     assert(oneTouched == 1 && wideTouched == nb, s"touched $oneTouched and $wideTouched buckets")
     assert(oneJobs > 0 && wideJobs <= oneJobs,
       s"a 64-bucket merge ran $wideJobs jobs, a 1-bucket merge $oneJobs")
@@ -437,7 +435,7 @@ class BucketedSinkSpec extends SparkSpec {
     import spark.implicits._
     val root = tmp()
     val nb = 8
-    BucketedDir.merge(spark, root, df((1L to 40L).map(k => k -> s"v$k"): _*), "key", nb)(upsertFn)
+    BucketedDir.merge(spark, root, df((1L to 40L).map(k => k -> s"v$k"): _*), "key", nb, schema)(upsertFn)
     val before = snapshot(root)
     val empties = Seq(
       "Seq.empty.toDS" -> Seq.empty[(Long, String)].toDS().toDF("key", "a"),
@@ -448,7 +446,7 @@ class BucketedSinkSpec extends SparkSpec {
     empties.foreach { case (what, batch) =>
       // bounded: an observation that never completes must fail, not hang
       val touched = Await.result(
-        Future(BucketedDir.merge(spark, root, batch, "key", nb)(upsertFn)), 2.minutes)
+        Future(BucketedDir.merge(spark, root, batch, "key", nb, schema)(upsertFn)), 2.minutes)
       assert(touched == Seq(), what)
       assert(snapshot(root) == before, s"$what rewrote a bucket")
       assert(!Files.exists(Paths.get(root, BucketedDir.StageDir)), s"$what left a stage dir")
@@ -462,12 +460,11 @@ class BucketedSinkSpec extends SparkSpec {
       StructField("key", StringType, nullable = true),
       StructField("a", StringType, nullable = true)))
     def rows(rs: Row*) = spark.createDataFrame(rs.asJava, strSchema)
-    val unionFn = (existing: Option[DataFrame], part: DataFrame) =>
-      existing.map(_.unionByName(part)).getOrElse(part)
-    BucketedDir.merge(spark, root, rows((1 to 40).map(i => Row(s"k$i", "v")): _*), "key", nb)(unionFn)
+    val unionFn = (stored: Seq[Row], batch: Seq[Row]) => stored ++ batch
+    BucketedDir.merge(spark, root, rows((1 to 40).map(i => Row(s"k$i", "v")): _*), "key", nb, strSchema)(unionFn)
     val before = snapshot(root)
     val nullBucket = BucketedDir.routeKey(null, StringType, nb)
-    val touched = BucketedDir.merge(spark, root, rows(Row(null, "x"), Row(null, "y")), "key", nb)(unionFn)
+    val touched = BucketedDir.merge(spark, root, rows(Row(null, "x"), Row(null, "y")), "key", nb, strSchema)(unionFn)
     assert(touched == Seq(nullBucket))
     val after = snapshot(root)
     assert(after.keySet.filter(b => !before.get(b).contains(after(b))) ==
@@ -481,7 +478,7 @@ class BucketedSinkSpec extends SparkSpec {
     val keys = 1L to 40L
     val blocked = bucketOf(1L, nb)
     BucketedDir.merge(spark, root,
-      df(keys.filter(bucketOf(_, nb) != blocked).map(k => k -> s"v$k"): _*), "key", nb)(upsertFn)
+      df(keys.filter(bucketOf(_, nb) != blocked).map(k => k -> s"v$k"): _*), "key", nb, schema)(upsertFn)
     // a regular file where the never-written bucket's dir would go
     val blockedPath = Paths.get(root, BucketedDir.bucketName(blocked))
     Files.write(blockedPath, "not a dir".getBytes("UTF-8"))
@@ -489,7 +486,7 @@ class BucketedSinkSpec extends SparkSpec {
       b -> new String(Files.readAllBytes(Paths.get(root, BucketedDir.bucketName(b), "_CURRENT")), "UTF-8").trim
     }.toMap
     val before = pointers
-    def merge() = BucketedDir.merge(spark, root, df(keys.map(k => k -> s"w$k"): _*), "key", nb,
+    def merge() = BucketedDir.merge(spark, root, df(keys.map(k => k -> s"w$k"): _*), "key", nb, schema,
       minVersion = 5L)(upsertFn)
     val e = intercept[Exception](merge())
     assert(e.getMessage.contains(blockedPath.toString), e.getMessage)
@@ -525,6 +522,76 @@ class BucketedSinkSpec extends SparkSpec {
       "a merge job ran outside the caller's job group")
     assert(sc.statusTracker.getJobIdsForGroup(group).nonEmpty)
     assert(c.pointQuery(victim).isEmpty && c.count() == keys.size - 1)
+  }
+
+  test("a non-empty merge runs at most 2 Spark jobs") {
+    import graft.streaming.FeatureTableSink
+    import graft.streaming.StreamingFeatures.KeyFeature
+    import spark.implicits._
+    val root = tmp()
+    val nb = 8
+    BucketedDir.merge(spark, root, df((1L to 40L).map(k => k -> s"v$k"): _*), "key", nb, schema)(upsertFn)
+    val (touched, jobs) = jobsIn("bucketed-merge-jobs") {
+      BucketedDir.merge(spark, root, df((1L to 40L).map(k => k -> s"w$k"): _*), "key", nb, schema)(upsertFn)
+    }
+    assert(touched.size == nb && jobs >= 1 && jobs <= 2, s"a merge touching ${touched.size} buckets ran $jobs jobs")
+    val sink = tmp()
+    FeatureTableSink.merge(spark, sink, (1 to 40).map(i => KeyFeature(s"k$i", 1, i.toDouble, 1)).toDS(), 0)
+    val (_, sinkJobs) = jobsIn("sink-merge-jobs") {
+      FeatureTableSink.merge(spark, sink, (1 to 40).map(i => KeyFeature(s"k$i", 2, i.toDouble, 2)).toDS(), 1)
+    }
+    assert(sinkJobs >= 1 && sinkJobs <= 2, s"a sink merge ran $sinkJobs jobs")
+  }
+
+  test("string, long, int, NULL and BINARY keys group by value; other key types fail before any write") {
+    import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, IntegerType}
+    def table(keyType: DataType) = StructType(Seq(
+      StructField("key", keyType, nullable = true), StructField("a", StringType, nullable = true)))
+    // each key: one stored row, then two batch rows built from distinct
+    // objects; the merge must see all three in one group
+    val count: (Seq[Row], Seq[Row]) => Seq[Row] =
+      (stored, rows) => Seq(Row(rows.head.get(0), s"${stored.size}+${rows.size}"))
+    def check(keyType: DataType, keys: Seq[() => Any], show: Any => Any): Unit = {
+      val root = tmp()
+      val t = table(keyType)
+      def rows(a: String) = spark.createDataFrame(keys.map(k => Row(k(), a)).asJava, t)
+      BucketedDir.merge(spark, root, rows("seed"), "key", 4, t)((_, rs) => rs)
+      BucketedDir.merge(spark, root, rows("x").union(rows("y")), "key", 4, t)(count)
+      val got = BucketedDir.read(spark, root).get.collect().map(r => show(r.get(0)) -> r.getString(1))
+      assert(got.length == keys.size && got.forall(_._2 == "1+2"), s"${keyType.sql}: ${got.toSeq}")
+      assert(got.map(_._1).toSet == keys.map(k => show(k())).toSet, keyType.sql)
+    }
+    val id: Any => Any = identity
+    check(StringType, Seq(() => new String("k1"), () => new String("käse"), () => null), id)
+    check(LongType, Seq(() => java.lang.Long.valueOf(1234567L), () => -1L, () => null), id)
+    check(IntegerType, Seq(() => 7, () => Int.MinValue, () => null), id)
+    check(BinaryType, Seq(() => Array[Byte](1, 2, 3), () => Array[Byte](), () => null),
+      k => Option(k).map(_.asInstanceOf[Array[Byte]].toSeq).orNull)
+    // an ARRAY key has no grouping value: refused before anything lands
+    val root = tmp()
+    val arr = table(ArrayType(LongType))
+    val e = intercept[IllegalArgumentException](BucketedDir.merge(spark, root,
+      spark.createDataFrame(Seq(Row(Seq(1L), "x")).asJava, arr), "key", 4, arr)((_, rs) => rs))
+    assert(e.getMessage.contains("only atomic key types"), e.getMessage)
+    assert(Files.list(Paths.get(root)).count() == 0, "a refused merge must write nothing")
+  }
+
+  test("a hot key with many batch rows and a stored row publishes exactly one latest row") {
+    import graft.streaming.FeatureTableSink
+    import graft.streaming.StreamingFeatures.KeyFeature
+    import spark.implicits._
+    val root = tmp()
+    // hot: stored ord 5, the batch's 500 rows reach ord 500; cold: the
+    // stored ord 1000 outranks every batch row
+    FeatureTableSink.merge(spark, root,
+      Seq(KeyFeature("hot", 5, -1.0, 9), KeyFeature("cold", 1000, -2.0, 9), KeyFeature("other", 1, 1.0, 1)).toDS(), 0)
+    val batch = scala.util.Random.shuffle((1 to 500).flatMap(i =>
+      Seq(KeyFeature("hot", i, i.toDouble, i % 7), KeyFeature("cold", i, i.toDouble, 1))))
+    FeatureTableSink.merge(spark, root, batch.toDS().repartition(4), 1)
+    val t = FeatureTableSink.read(spark, root).as[KeyFeature].collect()
+    assert(t.count(_.key == "hot") == 1 && t.count(_.key == "cold") == 1 && t.length == 3)
+    assert(t.find(_.key == "hot").get == KeyFeature("hot", 500, 500.0, 500 % 7))
+    assert(t.find(_.key == "cold").get == KeyFeature("cold", 1000, -2.0, 9))
   }
 }
 

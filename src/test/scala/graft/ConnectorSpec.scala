@@ -143,4 +143,12 @@ class ConnectorSpec extends SparkSpec {
     val old = graft.state.VersionedDir.readVersion(spark, root, v0)
     assert(old.map(_.count()) == Some(3L))
   }
+
+  test("bucketed connector refuses replace with a named error and keeps its table") {
+    val c = new BucketedParquetConnector(spark, "key", schema, tmp("graft-bkrepl"), numBuckets = 4)
+    c.upsert(df(1L -> "a", 2L -> "b"))
+    val e = intercept[UnsupportedOperationException](c.replace(df(3L -> "c")))
+    assert(e.getMessage.startsWith("BucketedParquetConnector.replace"), e.getMessage)
+    assert(c.bulkQuery().collect().map(r => (r.getLong(0), r.getString(1))).toSet == Set(1L -> "a", 2L -> "b"))
+  }
 }
