@@ -24,6 +24,10 @@ import scala.collection.mutable.ListBuffer
   * from the total rather than silently contributing its time-to-failure
   * (a query can fail at bench scale yet pass the smaller correctness
   * gate).
+  *
+  * Each run executes under its own job group, so the JSON also records
+  * every query's Spark job count ("jobs", the fewest over its runs) from
+  * the same runs that give the time floors.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
@@ -45,8 +49,10 @@ object Bench {
       .sortBy(_._1).flatMap { case (name, fn) =>
       val times = (1 to runs).map { i =>
         // label the jobs (guide §1.5) so UI/eventlog debugging can map
-        // stages back to queries; costs nothing measured
-        spark.sparkContext.setJobDescription(s"bench: $name run $i")
+        // stages back to queries, and count them by group after the run;
+        // costs nothing measured
+        val group = s"bench: $name run $i"
+        spark.sparkContext.setJobGroup(group, group)
         // toRdd executes the query's own optimized plan (projections,
         // sorts and all) and counts InternalRows; a DataFrame count()
         // would instead re-optimize with the aggregate on top, letting
@@ -67,8 +73,10 @@ object Bench {
         // keep storage-memory pressure from leaking into later queries.
         spark.catalog.clearCache()
         System.gc()
-        spark.sparkContext.setJobDescription(null)
-        (t, ok)
+        spark.sparkContext.clearJobGroup()
+        // the status store learns of jobs through the listener bus
+        org.apache.spark.sql.graft.Bridge.drainListenerBus(spark.sparkContext)
+        (t, ok, spark.sparkContext.statusTracker.getJobIdsForGroup(group).length)
       }
       if (times.exists(!_._2)) { failed += name; None }
       else {
@@ -78,11 +86,12 @@ object Bench {
           f"[bench] $name%-28s min=$best%8.3f  runs=[${times.map(t => f"${t._1}%.3f").mkString(", ")}]")
         if (ts.last > 5 * ts.head && ts.last - ts.head > 2.0)
           System.err.println(f"[bench] $name%-28s JITTER: ${ts.last / ts.head}%.1fx spread across runs (virtualized-host stall; min reported)")
-        Some((name, best, times.map(_._1)))
+        Some((name, best, times.map(_._1), times.map(_._3).min))
       }
     }
-    val qs = results.map { case (k, v, _) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
-    val allRuns = results.map { case (k, _, rs) =>
+    val qs = results.map { case (k, v, _, _) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
+    val jobs = results.map { case (k, _, _, j) => "\"" + k + "\":" + j }.mkString("{", ",", "}")
+    val allRuns = results.map { case (k, _, rs, _) =>
       // Locale.ROOT: a comma-decimal default locale would corrupt the JSON
       "\"" + k + "\":" + rs.map(r => String.format(java.util.Locale.ROOT, "%.3f", Double.box(r)))
         .mkString("[", ",", "]")
@@ -90,7 +99,7 @@ object Bench {
     val fl = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
     val total = results.map(_._2).sum
     val full =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"runs":$allRuns,"failed":$fl,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"runs":$allRuns,"jobs":$jobs,"failed":$fl,"sf":"$sfDir"}"""
     println(
       s"""{"metric":"total","value":$total,"unit":"sec","n":${results.size},"failed":$fl,"sf":"$sfDir"}""")
     Files.write(Paths.get(outPath), (full + "\n").getBytes(StandardCharsets.UTF_8))

@@ -276,82 +276,12 @@ object Dedup {
       .filter(col("hamming") <= maxHamming)
   }
 
-  /** Connected components over near-dup pairs — the step that turns a
-    * pair list into actual deduplication: every document in a connected
-    * cluster shares the component id (the cluster's minimum doc id),
-    * so "keep one per component" is a single groupBy away.
-    *
-    * Iterative min-label propagation: each round, every vertex takes
-    * the minimum label among itself and its neighbors; converges in
-    * O(cluster diameter) rounds (near-dup clusters are shallow — dup
-    * groups link through shared neighbors, so diameter is small even
-    * when clusters are large). Each round is one join + one aggregate,
-    * labels are localCheckpoint'ed per round so the plan doesn't grow
-    * with iterations — the standard scalable CC formulation when a
-    * graph engine isn't on the classpath. For hub-skewed or
-    * long-diameter pair graphs where O(diameter) rounds bite, use
-    * [[graft.operators.Graph.connectedComponentsBigStar]] (same
-    * output contract, O(log² n) rounds).
-    */
-  def connectedComponents(
-      pairs: DataFrame,
-      aCol: String,
-      bCol: String,
-      maxIter: Int = 50
-  ): DataFrame = {
-    val edges = pairs.select(col(aCol).as("src"), col(bCol).as("dst"))
-      .unionByName(pairs.select(col(bCol).as("src"), col(aCol).as("dst")))
-      .distinct()
-      .localCheckpoint(false)
-    var labels = edges.select(col("src").as("v")).distinct()
-      .withColumn("label", col("v"))
-      .localCheckpoint(false)
-    var changed = 1L
-    var it = 0
-    while (changed > 0 && it < maxIter) {
-      val nbrMin = edges
-        .join(labels.withColumnRenamed("v", "src"), "src")
-        .groupBy(col("dst").as("nv"))
-        .agg(min(col("label")).as("nlabel"))
-      // carry the previous label alongside the new one: the convergence
-      // count is then a filter over the just-materialized result, not a
-      // second self-join per round
-      val next = labels
-        .join(nbrMin, labels("v") === nbrMin("nv"), "left")
-        .select(col("v"),
-          least(col("label"), coalesce(col("nlabel"), col("label"))).as("label"),
-          col("label").as("_prev"))
-        // LAZY checkpoint (r14): the convergence count below is the
-        // materializing action, so each round runs ONE job — the former
-        // eager checkpoint ran its own materialization job and then the
-        // count as a second
-        .localCheckpoint(false)
-        // reset the carried origin stats: O(diameter) rounds of
-        // self-joins otherwise compound them geometrically (the
-        // louvainMultiLevel driver-wedge lesson, Bridge.resetStats)
-        .transform(org.apache.spark.sql.graft.Bridge.resetStats)
-      changed = next.filter(col("label") =!= col("_prev")).count()
-      labels = next.drop("_prev")
-      it += 1
-    }
-    // Min-label propagation needs O(component diameter) rounds. Exiting
-    // with changed > 0 means some chain is longer than maxIter — the
-    // labels would SILENTLY split one true component into several, and
-    // canonicalize would keep extra duplicates. Fail loudly instead
-    // (ADVICE r2): the caller raises maxIter (cost is one join+agg per
-    // extra round, and converged runs stop early regardless).
-    if (changed > 0)
-      throw new IllegalStateException(
-        s"connectedComponents did not converge in $maxIter rounds " +
-          s"($changed labels still changing): a near-dup chain's diameter exceeds maxIter; " +
-          "raise maxIter")
-    labels.select(col("v").as("doc"), col("label").as("component"))
-  }
-
   /** The deduplicated corpus: drop every document that sits in a
     * near-dup cluster but is not its canonical (minimum-id) member —
-    * the end-user API over [[connectedComponents]]. Documents in no
-    * pair survive untouched; the anti-join is keyed on the id.
+    * the end-user API over [[graft.operators.Graph.connectedComponents]]
+    * on the pair graph (every document in a cluster shares the
+    * cluster's minimum id). Documents in no pair survive untouched; the
+    * anti-join is keyed on the id.
     *
     * Deliberately NO `broadcast()` hint on the losers side: near-dups
     * are 20-40% of a real web corpus, i.e. O(corpus) ids at 100 TB — a
@@ -367,9 +297,9 @@ object Dedup {
       aCol: String = "doc_a",
       bCol: String = "doc_b"
   ): DataFrame = {
-    val losers = connectedComponents(pairs, aCol, bCol)
-      .filter(col("doc") =!= col("component"))
-      .select(col("doc").as(idCol))
+    val losers = graft.operators.Graph.connectedComponents(pairs, aCol, bCol)
+      .filter(col("node") =!= col("component"))
+      .select(col("node").as(idCol))
     docs.join(losers, Seq(idCol), "left_anti")
   }
 

@@ -316,12 +316,11 @@ object TextAnalysis {
     * [[assignSplit]] on a dup-free corpus.
     *
     * Scale shape: the component table comes from the banded pair graph
-    * ([[Dedup.connectedComponents]] — or swap in
-    * [[graft.operators.Graph.connectedComponentsBigStar]] upstream for
-    * hub-skewed pair graphs), is pair-endpoint-sized (≪ corpus), and
-    * joins back keyed on the id; the split itself stays a pure per-row
-    * hash. Output: input columns + `split_group`, `split_bucket`,
-    * `split`.
+    * ([[graft.operators.Graph.connectedComponents]], O(log² n) rounds
+    * even on hub-skewed pair graphs), is pair-endpoint-sized (≪
+    * corpus), and joins back keyed on the id; the split itself stays a
+    * pure per-row hash. Output: input columns + `split_group`,
+    * `split_bucket`, `split`.
     */
   def assignSplitLeakageSafe(
       docs: DataFrame,
@@ -334,11 +333,11 @@ object TextAnalysis {
   ): DataFrame = {
     require(splits.nonEmpty && splits.map(_._2).sum == 1000,
       s"split weights must sum to 1000 per-mille, got $splits")
-    val comp = graft.llm.Dedup.connectedComponents(pairs, aCol, bCol, maxIter)
+    val comp = graft.operators.Graph.connectedComponents(pairs, aCol, bCol, maxIter)
     val bucket =
       graft.functions.GraftFunctions.strhash(col("split_group").cast("string")) % 1000
     docs
-      .join(comp.withColumnRenamed("doc", idCol), Seq(idCol), "left")
+      .join(comp.withColumnRenamed("node", idCol), Seq(idCol), "left")
       .withColumn("split_group", coalesce(col("component"), col(idCol)))
       .drop("component")
       .withColumn("split_bucket", bucket)

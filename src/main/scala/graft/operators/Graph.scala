@@ -755,15 +755,34 @@ object Graph {
           .otherwise(lit(0.0)).as("clustering"))
   }
 
-  /** Connected components over an arbitrary undirected edge frame —
-    * the dedup clustering core ([[graft.llm.Dedup.connectedComponents]],
-    * min-label propagation: one join + one map-side-combined aggregate
-    * per round, per-round checkpoint bounding lineage, early exit at
-    * the fixed point, loud failure past `maxIter`) promoted to the
-    * graph suite next to [[labelPropagation]]: (node, component) with
-    * `component` = the minimum node id reachable from `node`. Vertex
-    * universe = edge endpoints (an isolated node is invisible to an
-    * edge list — pre-union singleton self-loops if it must appear).
+  /** Connected components over an undirected edge frame: (node,
+    * component) with `component` = the minimum node id reachable from
+    * `node`. The vertex universe is the edge endpoints, self-loop-only
+    * nodes included (an isolated node is invisible to an edge list —
+    * pre-union a self-loop if it must appear). A row with a NULL
+    * endpoint is dropped: it names no edge, and `greatest`/`least`
+    * would otherwise turn `(x, NULL)` into a self-loop.
+    *
+    * The two-phase large-star/small-star alternation (Kiveris,
+    * Lattanzi, Mirrokni, Rastogi, Vassilvitskii 2014, "Connected
+    * Components in MapReduce and Beyond"). Each round rewires edges
+    * toward local minima — large-star hangs every neighbor LARGER than
+    * u off u's minimum, small-star collapses each node's SMALLER
+    * neighbors onto theirs — and the edge set provably stays
+    * component-preserving while converging to disjoint min-rooted stars
+    * in O(log² n) rounds regardless of diameter or hub degree (min-label
+    * propagation needs O(diameter) rounds and re-shuffles the hot
+    * component in every one). Per-round shuffle volume is bounded by
+    * 2·|E| id pairs (large-star emits at most one edge per symmetrized
+    * input edge, small-star exactly one per oriented edge): a degree-d
+    * hub costs d aggregate rows with map-side combine, never d².
+    *
+    * The input plan runs once: one canonical `(greatest, least)`
+    * distinct edge checkpoint feeds both the vertex universe and the
+    * loop. Rounds are checkpointed (lineage cap); the fixed point is
+    * detected by the star test in ONE map-side-combined aggregate per
+    * round; past `maxIter` it fails loudly rather than return labels
+    * that split a true component.
     */
   def connectedComponents(
       edges: DataFrame,
@@ -771,64 +790,29 @@ object Graph {
       dstCol: String,
       maxIter: Int = 50
   ): DataFrame =
-    graft.llm.Dedup.connectedComponents(edges, srcCol, dstCol, maxIter)
-      .select(col("doc").as("node"), col("component"))
+    starRun(edges, srcCol, dstCol, maxIter)._1
 
-  /** Skew-hardened connected components — the two-phase
-    * large-star/small-star alternation (Kiveris, Lattanzi, Mirrokni,
-    * Rastogi, Vassilvitskii 2014, "Connected Components in MapReduce
-    * and Beyond"), the scale path for hub-skewed graphs where
-    * [[connectedComponents]]' min-label propagation needs
-    * O(component diameter) rounds and re-shuffles the hot component
-    * every one of them. Same output contract: (node, component) with
-    * component = minimum reachable node id.
-    *
-    * Each round rewires edges toward local minima — large-star hangs
-    * every neighbor LARGER than u off u's minimum, small-star collapses
-    * each node's SMALLER neighbors onto theirs — and the edge set
-    * provably stays component-preserving while converging to disjoint
-    * min-rooted stars in O(log² n) rounds regardless of diameter or
-    * hub degree. Per-round shuffle volume is bounded by 2·|E| id pairs
-    * (large-star emits at most one edge per symmetrized input edge,
-    * small-star exactly one per oriented edge): a degree-d hub costs d
-    * aggregate rows with map-side combine, never d². Rounds are
-    * checkpointed (lineage cap); the fixed point is detected by the
-    * star test (no node is both a leaf and a center, no leaf has two
-    * edges) in ONE map-side-combined aggregate per round; past
-    * `maxIter` it fails loudly, the [[connectedComponents]] rule.
-    */
-  def connectedComponentsBigStar(
-      edges: DataFrame,
-      srcCol: String,
-      dstCol: String,
-      maxIter: Int = 50
-  ): DataFrame =
-    bigStarRun(edges, srcCol, dstCol, maxIter)._1
-
-  /** [[connectedComponentsBigStar]] plus per-round oriented-edge counts
+  /** [[connectedComponents]] plus per-round oriented-edge counts
     * (post-distinct, the per-round shuffle row bound) — the spec hook
     * for the planted-hub volume pin.
     */
-  private[graft] def bigStarRun(
+  private[graft] def starRun(
       edges: DataFrame,
       srcCol: String,
       dstCol: String,
       maxIter: Int
   ): (DataFrame, Seq[Long]) = {
-    val raw = edges.select(col(srcCol).as("u"), col(dstCol).as("v"))
-    // the vertex universe includes self-loop-only nodes; the star loop
+    val (a, b) = (col(srcCol), col(dstCol))
+    // canonical orientation throughout: (u, v) with u >= v. LAZY
+    // checkpoint: the starStats aggregate right below is a full scan
+    // and doubles as its materializing action
+    val canon = edges.filter(a.isNotNull && b.isNotNull)
+      .select(greatest(a, b).as("u"), least(a, b).as("v"))
+      .distinct().localCheckpoint(false)
+    // the vertex universe keeps self-loop-only nodes; the star loop
     // drops self-loops (they never change connectivity)
-    val nodes = raw.select(col("u").as("node"))
-      .unionAll(raw.select(col("v").as("node")))
-      .distinct().localCheckpoint(false)
-    // canonical orientation throughout: (u, v) with u > v. LAZY
-    // checkpoint (r14): the starStats aggregate right below is a full
-    // scan and doubles as the materializing action — the former eager
-    // checkpoint ran its own materialization job first (2 jobs/round;
-    // the louvain quiet-fold rationale).
-    var e = raw.filter(col("u") =!= col("v"))
-      .select(greatest(col("u"), col("v")).as("u"), least(col("u"), col("v")).as("v"))
-      .distinct().localCheckpoint(false)
+    val nodes = canon.select(explode(array(col("u"), col("v"))).as("node")).distinct()
+    var e = canon.filter(col("u") =!= col("v"))
     val sizes = scala.collection.mutable.ArrayBuffer[Long]()
     var it = 0
     var converged = starStats(e)._1 == 0L
@@ -845,19 +829,15 @@ object Graph {
       // small-star: collapse each node's smaller neighborhood onto its
       // minimum — one output edge per input edge, orientation kept
       val minsS = ls.groupBy(col("u")).agg(min(col("v")).as("mn"))
-      e = ls.join(minsS, Seq("u"))
+      // lazy: the round's starStats full-scan aggregate materializes
+      // it — one action per round
+      e = ckptRound(ls.join(minsS, Seq("u"))
         .select(
           when(col("v") === col("mn"), col("u")).otherwise(col("v")).as("nu"),
           col("mn").as("nv"))
         .filter(col("nu") =!= col("nv"))
         .select(col("nu").as("u"), col("nv").as("v"))
-        .distinct()
-        // lazy: the round's starStats full-scan aggregate materializes
-        // it — one job per round instead of eager-ckpt + stats (r14)
-        .localCheckpoint(false)
-        // the checkpoint still carries origin stats — reset per
-        // round or the O(log² n) alternation compounds them
-        .transform(org.apache.spark.sql.graft.Bridge.resetStats)
+        .distinct())
       val (viol, nEdges) = starStats(e)
       sizes += nEdges
       converged = viol == 0L
@@ -865,7 +845,7 @@ object Graph {
     }
     if (!converged)
       throw new IllegalStateException(
-        s"connectedComponentsBigStar did not converge in $maxIter rounds; " +
+        s"connectedComponents did not converge in $maxIter rounds; " +
           "raise maxIter (the alternation needs O(log^2 n) rounds)")
     val labels = nodes
       .join(e.select(col("u").as("node"), col("v").as("component")), Seq("node"), "left")
@@ -989,23 +969,28 @@ object Graph {
        |ORDER BY node""".stripMargin
   }
 
-  /** The [[connectedComponents]] oracle generator — recursive
-    * transitive closure over any `(src, dst)` edge SQL: component(v) =
-    * least id reachable from v (incl. v), the dedup-clusters replica
-    * generalized.
+  /** The [[connectedComponents]] oracle: recursive-closure CTEs over
+    * the `pairs` CTE's `(a, b)` columns, every name prefixed by
+    * `prefix` so several closures can share one `WITH RECURSIVE`.
+    * `${prefix}e` symmetrizes the pairs (rows with a NULL endpoint
+    * dropped, the operator's rule), `${prefix}reach` is the transitive
+    * closure and `${prefix}comp(node, component)` labels every node
+    * with the least id reachable from it (itself included).
     */
-  def connectedComponentsSql(edgesSql: String): String =
-    s"""WITH RECURSIVE ge0 AS ($edgesSql),
-       |ge AS (
-       |  SELECT src, dst FROM ge0
+  def componentsCtes(pairs: String, a: String, b: String, prefix: String): String = {
+    val (e, r) = (s"${prefix}e", s"${prefix}reach")
+    s"""$e AS (
+       |  SELECT $a AS src, $b AS dst FROM $pairs WHERE $a IS NOT NULL AND $b IS NOT NULL
        |  UNION
-       |  SELECT dst AS src, src AS dst FROM ge0),
-       |greach AS (
-       |  SELECT src, dst FROM ge
+       |  SELECT $b AS src, $a AS dst FROM $pairs WHERE $a IS NOT NULL AND $b IS NOT NULL),
+       |$r AS (
+       |  SELECT src, dst FROM $e
        |  UNION
-       |  SELECT greach.src, ge.dst FROM greach JOIN ge ON greach.dst = ge.src)
-       |SELECT src AS node, least(src, min(dst)) AS component
-       |FROM greach GROUP BY src ORDER BY node""".stripMargin
+       |  SELECT $r.src, $e.dst FROM $r JOIN $e ON $r.dst = $e.src),
+       |${prefix}comp AS (
+       |  SELECT src AS node, least(src, min(dst)) AS component
+       |  FROM $r GROUP BY src)""".stripMargin
+  }
 
   /** HITS hubs & authorities (Kleinberg 1999, "Authoritative Sources
     * in a Hyperlinked Environment") — the second classic link-quality

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.llm.{Classify, Dedup, Multimodal, Similarity, TextAnalysis, TextOps}
+import graft.operators.Graph
 
 /** LLM-training-data pipeline queries over `documents` / `embeddings`:
   * dedup (exact / MinHash-LSH / SimHash / n-gram Jaccard), embedding
@@ -188,28 +189,22 @@ object LlmQueries {
        |GROUP BY 1, 2 HAVING count(*) >= 3
        |ORDER BY doc_a, doc_b""".stripMargin
 
-  /** Near-dup clusters: connected components over the minhash pairs.
-    * Mirrors Dedup.connectedComponents via a recursive transitive
-    * closure — component(v) = min id reachable from v (incl. v).
+  /** Near-dup clusters: connected components (Graph.connectedComponents)
+    * over the minhash pairs. The oracle is the recursive transitive
+    * closure (Graph.componentsCtes) — component(v) = min id reachable
+    * from v (incl. v).
     */
   val dedupClusters: Q = (s, dir) =>
-    Dedup.connectedComponents(
-      Dedup.minhashPairs(Tables.documents(s, dir), "doc_id", "text", minJaccard = 0.6),
-      "doc_a", "doc_b")
+    Graph.connectedComponents(
+        Dedup.minhashPairs(Tables.documents(s, dir), "doc_id", "text", minJaccard = 0.6),
+        "doc_a", "doc_b")
+      .select(col("node").as("doc"), col("component"))
       .orderBy("doc")
 
   val dedupClustersSql: String =
     s"""WITH RECURSIVE $minhashCtes,
-       |e AS (
-       |  SELECT doc_a AS src, doc_b AS dst FROM mh
-       |  UNION
-       |  SELECT doc_b AS src, doc_a AS dst FROM mh),
-       |reach AS (
-       |  SELECT src, dst FROM e
-       |  UNION
-       |  SELECT reach.src, e.dst FROM reach JOIN e ON reach.dst = e.src)
-       |SELECT src AS doc, least(src, min(dst)) AS component
-       |FROM reach GROUP BY src ORDER BY doc""".stripMargin
+       |${Graph.componentsCtes("mh", "doc_a", "doc_b", "")}
+       |SELECT node AS doc, component FROM comp ORDER BY doc""".stripMargin
 
   /** Leakage-safe train/val/test split
     * (TextAnalysis.assignSplitLeakageSafe): the 90/5/5 hash split of
@@ -231,21 +226,11 @@ object LlmQueries {
 
   val splitLeakageSafeSql: String =
     s"""WITH RECURSIVE $minhashCtes,
-       |e AS (
-       |  SELECT doc_a AS src, doc_b AS dst FROM mh
-       |  UNION
-       |  SELECT doc_b AS src, doc_a AS dst FROM mh),
-       |reach AS (
-       |  SELECT src, dst FROM e
-       |  UNION
-       |  SELECT reach.src, e.dst FROM reach JOIN e ON reach.dst = e.src),
-       |comp AS (
-       |  SELECT src AS doc, least(src, min(dst)) AS component
-       |  FROM reach GROUP BY src),
+       |${Graph.componentsCtes("mh", "doc_a", "doc_b", "")},
        |g AS (
        |  SELECT d.doc_id AS doc,
        |    COALESCE(c.component, d.doc_id) AS split_group
-       |  FROM documents d LEFT JOIN comp c ON c.doc = d.doc_id),
+       |  FROM documents d LEFT JOIN comp c ON c.node = d.doc_id),
        |b AS (
        |  SELECT doc, split_group,
        |    ${strhashSql("CAST(split_group AS VARCHAR)", "h")} % 1000 AS split_bucket
@@ -350,37 +335,17 @@ object LlmQueries {
        |    JOIN gsig sa ON sa.doc_id = c.doc_a
        |    JOIN gsig sb ON sb.doc_id = c.doc_b)
        |  WHERE est_jaccard >= 0.6),
-       |ge AS (
-       |  SELECT doc_a AS src, doc_b AS dst FROM gmh
-       |  UNION
-       |  SELECT doc_b AS src, doc_a AS dst FROM gmh),
-       |greach AS (
-       |  SELECT src, dst FROM ge
-       |  UNION
-       |  SELECT greach.src, ge.dst FROM greach JOIN ge ON greach.dst = ge.src),
-       |glosers AS (
-       |  SELECT src AS doc_id FROM greach GROUP BY src
-       |  HAVING src <> least(src, min(dst)))
+       |${Graph.componentsCtes("gmh", "doc_a", "doc_b", "g")}
        |SELECT doc_id FROM s3
-       |WHERE doc_id NOT IN (SELECT doc_id FROM glosers)
+       |WHERE doc_id NOT IN (SELECT node FROM gcomp WHERE node <> component)
        |ORDER BY doc_id""".stripMargin
   }
 
   val dedupCanonicalSql: String =
     s"""WITH RECURSIVE $minhashCtes,
-       |e AS (
-       |  SELECT doc_a AS src, doc_b AS dst FROM mh
-       |  UNION
-       |  SELECT doc_b AS src, doc_a AS dst FROM mh),
-       |reach AS (
-       |  SELECT src, dst FROM e
-       |  UNION
-       |  SELECT reach.src, e.dst FROM reach JOIN e ON reach.dst = e.src),
-       |losers AS (
-       |  SELECT src AS doc_id FROM reach GROUP BY src
-       |  HAVING src <> least(src, min(dst)))
+       |${Graph.componentsCtes("mh", "doc_a", "doc_b", "")}
        |SELECT source, count(*) AS n_docs, min(doc_id) AS first_doc
-       |FROM documents WHERE doc_id NOT IN (SELECT doc_id FROM losers)
+       |FROM documents WHERE doc_id NOT IN (SELECT node FROM comp WHERE node <> component)
        |GROUP BY source ORDER BY source""".stripMargin
 
   // ------------------------------------- incremental (cross-corpus) dedup
@@ -5080,7 +5045,7 @@ object LlmQueries {
     * aggregates are map-side-combined shuffles over O(clustered docs).
     */
   val dedupHistogram: Q = (s, dir) =>
-    Dedup.connectedComponents(
+    Graph.connectedComponents(
         Dedup.minhashPairs(Tables.documents(s, dir), "doc_id", "text", minJaccard = 0.6),
         "doc_a", "doc_b")
       .groupBy(col("component")).agg(count(lit(1)).as("csize"))
@@ -5090,17 +5055,7 @@ object LlmQueries {
 
   val dedupHistogramSql: String =
     s"""WITH RECURSIVE $minhashCtes,
-       |e AS (
-       |  SELECT doc_a AS src, doc_b AS dst FROM mh
-       |  UNION
-       |  SELECT doc_b AS src, doc_a AS dst FROM mh),
-       |reach AS (
-       |  SELECT src, dst FROM e
-       |  UNION
-       |  SELECT reach.src, e.dst FROM reach JOIN e ON reach.dst = e.src),
-       |comp AS (
-       |  SELECT src AS doc, least(src, min(dst)) AS component
-       |  FROM reach GROUP BY src),
+       |${Graph.componentsCtes("mh", "doc_a", "doc_b", "")},
        |cs AS (SELECT component, count(*) AS csize FROM comp GROUP BY component)
        |SELECT csize, count(*) AS n_clusters, CAST(sum(csize) AS BIGINT) AS n_docs
        |FROM cs GROUP BY csize ORDER BY csize""".stripMargin

@@ -8,6 +8,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{Encoders, Row}
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
+import graft.metrics.Capture
 import graft.state.{BucketedDir, BucketedParquetConnector, VersionedDir}
 
 /** The 100 TB sink property: a merge into a bucketed table rewrites ONLY
@@ -313,23 +314,15 @@ class BucketedSinkSpec extends SparkSpec {
   private val upsertFn: (Seq[Row], Seq[Row]) => Seq[Row] = (_, rows) => rows
 
   /** Run `body` under a fresh job group: (its result, the Spark jobs it ran). */
-  private def jobsIn[A](group: String)(body: => A): (A, Int) = {
-    val sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    val out = try body finally sc.clearJobGroup()
-    org.apache.spark.sql.graft.Bridge.drainListenerBus(sc)
-    (out, sc.statusTracker.getJobIdsForGroup(group).length)
-  }
-
   test("a merge touching 64 buckets runs no more Spark jobs than one touching 1") {
     val root = tmp()
     val nb = 64
     val keys = 1L to 400L
     BucketedDir.merge(spark, root, df(keys.map(k => k -> s"v$k"): _*), "key", nb, schema)(upsertFn)
-    val (one, oneJobs) = jobsIn("bucketed-merge-one") {
+    val Capture.Result(one, _, oneJobs) = Capture.run(spark) {
       BucketedDir.merge(spark, root, df(7L -> "one"), "key", nb, schema)(upsertFn)
     }
-    val (wide, wideJobs) = jobsIn("bucketed-merge-wide") {
+    val Capture.Result(wide, _, wideJobs) = Capture.run(spark) {
       BucketedDir.merge(spark, root, df(keys.map(k => k -> s"w$k"): _*), "key", nb, schema)(upsertFn)
     }
     val (oneTouched, wideTouched) = (one.size, wide.size)
@@ -531,13 +524,13 @@ class BucketedSinkSpec extends SparkSpec {
     val root = tmp()
     val nb = 8
     BucketedDir.merge(spark, root, df((1L to 40L).map(k => k -> s"v$k"): _*), "key", nb, schema)(upsertFn)
-    val (touched, jobs) = jobsIn("bucketed-merge-jobs") {
+    val Capture.Result(touched, _, jobs) = Capture.run(spark) {
       BucketedDir.merge(spark, root, df((1L to 40L).map(k => k -> s"w$k"): _*), "key", nb, schema)(upsertFn)
     }
     assert(touched.size == nb && jobs >= 1 && jobs <= 2, s"a merge touching ${touched.size} buckets ran $jobs jobs")
     val sink = tmp()
     FeatureTableSink.merge(spark, sink, (1 to 40).map(i => KeyFeature(s"k$i", 1, i.toDouble, 1)).toDS(), 0)
-    val (_, sinkJobs) = jobsIn("sink-merge-jobs") {
+    val Capture.Result(_, _, sinkJobs) = Capture.run(spark) {
       FeatureTableSink.merge(spark, sink, (1 to 40).map(i => KeyFeature(s"k$i", 2, i.toDouble, 2)).toDS(), 1)
     }
     assert(sinkJobs >= 1 && sinkJobs <= 2, s"a sink merge ran $sinkJobs jobs")

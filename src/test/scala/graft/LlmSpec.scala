@@ -60,7 +60,7 @@ class LlmSpec extends SparkSpec {
     // graph: 1-2, 2-3 (one cluster via transitivity), 10-11, 20-21-22
     val pairs = Seq((1L, 2L), (2L, 3L), (10L, 11L), (20L, 21L), (21L, 22L))
       .toDF("doc_a", "doc_b")
-    val cc = Dedup.connectedComponents(pairs, "doc_a", "doc_b")
+    val cc = graft.operators.Graph.connectedComponents(pairs, "doc_a", "doc_b")
       .as[(Long, Long)].collect().toMap
     assert(cc == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 10L, 11L -> 10L,
       20L -> 20L, 21L -> 20L, 22L -> 20L))

@@ -1346,13 +1346,14 @@ class OperatorSpec extends SparkSpec {
   }
 
   test("connectedComponents fails loudly when a chain outruns maxIter") {
-    // a path graph of length 12 needs ~11 min-label rounds
+    // a path graph of length 12 needs more than 3 star rounds
     val chain = (0 until 12).map(i => (i.toLong, i.toLong + 1)).toDF("doc_a", "doc_b")
-    intercept[IllegalStateException] {
-      graft.llm.Dedup.connectedComponents(chain, "doc_a", "doc_b", maxIter = 3).collect()
+    val e = intercept[IllegalStateException] {
+      graft.operators.Graph.connectedComponents(chain, "doc_a", "doc_b", maxIter = 3).collect()
     }
+    assert(e.getMessage.contains("did not converge in 3 rounds"), e.getMessage)
     // and converges fine with headroom: one component labeled 0
-    val ok = graft.llm.Dedup.connectedComponents(chain, "doc_a", "doc_b", maxIter = 20)
+    val ok = graft.operators.Graph.connectedComponents(chain, "doc_a", "doc_b", maxIter = 20)
       .select("component").distinct().as[Long].collect().toList
     assert(ok == List(0L))
   }
@@ -1572,24 +1573,56 @@ class OperatorSpec extends SparkSpec {
     assert(got == wantDeg, s"got $got want $wantDeg")
   }
 
-  test("connectedComponentsBigStar ≡ connectedComponents on random graphs") {
+  test("connectedComponents ≡ driver-side union-find on random multigraphs") {
     import spark.implicits._
-    for (seed <- Seq(7, 21, 99)) {
+    for (seed <- Seq(7, 21, 99, 1234)) {
       val rnd = new scala.util.Random(seed)
-      // sparse enough for several non-trivial components + isolated
-      // self-loop nodes (the universe rule)
-      val es = ((1 to 60).map(_ => (rnd.nextInt(80).toLong, rnd.nextInt(80).toLong)) :+
-        (77L, 77L)).distinct
-      val edges = es.toDF("src", "dst")
-      val want = graft.operators.Graph.connectedComponents(edges, "src", "dst")
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      val got = graft.operators.Graph.connectedComponentsBigStar(edges, "src", "dst")
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(got == want, s"seed $seed: bigStar disagrees with min-label CC")
+      // sparse enough for several non-trivial components; duplicate and
+      // reversed copies of some edges, and self-loop-only nodes (the
+      // universe rule)
+      val base = (1 to 60).map(_ => (rnd.nextInt(80).toLong, rnd.nextInt(80).toLong))
+      val es = base ++ base.take(15) ++ base.takeRight(15).map(_.swap) ++
+        Seq((90L, 90L), (91L, 91L), (91L, 91L))
+      // union-find whose root is always its set's minimum id
+      val parent = scala.collection.mutable.Map[Long, Long]()
+      def find(x: Long): Long = {
+        val p = parent.getOrElseUpdate(x, x)
+        if (p == x) x else { val r = find(p); parent(x) = r; r }
+      }
+      es.foreach { case (a, b) =>
+        val (ra, rb) = (find(a), find(b))
+        if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+      }
+      val want = parent.keys.map(v => v -> find(v)).toMap
+      val got = graft.operators.Graph.connectedComponents(rnd.shuffle(es).toDF("src", "dst"),
+          "src", "dst")
+        .collect().map(r => r.getLong(0) -> r.getLong(1))
+      assert(got.length == want.size, s"seed $seed: one row per node")
+      assert(got.toMap == want, s"seed $seed: connectedComponents disagrees with union-find")
     }
   }
 
-  test("connectedComponentsBigStar: planted hub converges fast with bounded per-round volume") {
+  test("connectedComponents drops a row with a NULL endpoint") {
+    val edges = Seq((Some(1L), Some(2L)), (Some(5L), None), (None, Some(7L)))
+      .toDF("src", "dst")
+    val got = graft.operators.Graph.connectedComponents(edges, "src", "dst")
+      .as[(Long, Long)].collect().toSet
+    assert(got == Set(1L -> 1L, 2L -> 1L))
+    val allNull = Seq((Option.empty[Long], Option.empty[Long])).toDF("src", "dst")
+    assert(graft.operators.Graph.connectedComponents(allNull, "src", "dst").isEmpty)
+  }
+
+  test("connectedComponents evaluates its input edge plan once") {
+    val rows = spark.sparkContext.longAccumulator("cc-input-rows")
+    val tick = udf { (x: Long) => rows.add(1L); x }.asNondeterministic()
+    val edges = spark.range(400)
+      .select(tick(col("id") % 97).as("src"), (col("id") * 7 % 89 + 100).as("dst"))
+    val got = graft.operators.Graph.connectedComponents(edges, "src", "dst").collect()
+    assert(got.nonEmpty)
+    assert(rows.value == 400L, s"the input ran ${rows.value / 400.0} times over")
+  }
+
+  test("connectedComponents: planted hub converges fast with bounded per-round volume") {
     import spark.implicits._
     // a 400-leaf hub (worst case for per-node neighborhood skew) welded
     // to a 60-node path (worst case for diameter) — min-label needs
@@ -1598,7 +1631,7 @@ class OperatorSpec extends SparkSpec {
     val path = (0L until 60L).map(i => (1000L + i, 1001L + i)) :+ (401L, 1000L)
     val edges = (hub ++ path).toDF("src", "dst")
     val nEdges = edges.count()
-    val (labels, sizes) = graft.operators.Graph.bigStarRun(edges, "src", "dst", maxIter = 50)
+    val (labels, sizes) = graft.operators.Graph.starRun(edges, "src", "dst", maxIter = 50)
     val got = labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     // one component; minimum id is leaf 2
     assert(got.values.toSet == Set(2L), s"expected one component rooted at 2: ${got.values.toSet}")
@@ -1609,6 +1642,23 @@ class OperatorSpec extends SparkSpec {
     // hub blowup), and the alternation beats the 61-round diameter
     assert(sizes.forall(_ <= nEdges), s"per-round volume exceeded |E|: $sizes (|E|=$nEdges)")
     assert(sizes.length <= 12, s"expected O(log² n) rounds, got ${sizes.length}: $sizes")
+  }
+
+  test("connectedComponents runs a bounded number of Spark jobs per round") {
+    // each round is one materializing aggregate, which AQE submits as
+    // one job per exchange: 10 per round, plus 7 for the input stage
+    // and the final labels (measured on chains needing 2 to 8 rounds)
+    val seen = Seq(4, 256).map { n =>
+      val chain = (0 until n).map(i => (i.toLong, i.toLong + 1)).toDF("src", "dst")
+      val cap = graft.metrics.Capture.run(spark) {
+        val (labels, sizes) = graft.operators.Graph.starRun(chain, "src", "dst", maxIter = 50)
+        labels.collect()
+        sizes.length
+      }
+      assert(cap.jobs <= 7 + 10 * cap.value, s"chain of $n: ${cap.jobs} jobs in ${cap.value} rounds")
+      cap.value
+    }
+    assert(seen(1) > seen(0), s"a longer chain needs more rounds: $seen")
   }
 
   test("labelPropagation: two triangles split across the bridge in 4 sync rounds") {

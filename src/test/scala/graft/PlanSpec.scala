@@ -468,38 +468,23 @@ class PlanSpec extends SparkSpec {
     graft.llm.IvfIndex.write(emb, "vec_id", "embedding", idx, numCentroids = 16,
       sq8 = true)
     // the candidate stage executes inside probe() (one control-plane
-    // collect), so its plan is captured via a listener rather than the
+    // collect), so its plan is captured rather than read off the
     // returned frame
-    val stagePlans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-      override def onSuccess(f: String,
-          qe: org.apache.spark.sql.execution.QueryExecution, d: Long): Unit =
-        stagePlans.add(qe.executedPlan.toString)
-      override def onFailure(f: String,
-          qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
+    val cap = graft.metrics.Capture.run(spark) {
+      val p = graft.llm.IvfIndex.probe(spark, idx,
+        emb.filter(col("vec_id") % 100 === 0), "vec_id", "embedding",
+        k = 5, nProbe = 2, sq8Rerank = 3)
+      p.collect() // drive the final stage under the capture too
+      p
     }
-    spark.listenerManager.register(listener)
-    val probed =
-      try {
-        val p = graft.llm.IvfIndex.probe(spark, idx,
-          emb.filter(col("vec_id") % 100 === 0), "vec_id", "embedding",
-          k = 5, nProbe = 2, sq8Rerank = 3)
-        p.collect() // drive the final stage under the listener too
-        p
-      } finally {
-        // listener events post asynchronously: drain the bus so every
-        // stage of the probe has been delivered
-        org.apache.spark.sql.graft.Bridge.drainListenerBus(spark.sparkContext)
-        spark.listenerManager.unregister(listener)
-      }
+    val (probed, stagePlans) = (cap.value, cap.plans)
     val plan = probed.queryExecution.executedPlan.toString
     // stage 1 must be the NARROW scan: int8 codes without the full
     // vector column — that column pruning is the 1/8-bytes IO economy
-    import scala.jdk.CollectionConverters._
-    assert(stagePlans.asScala.exists(_.linesIterator.exists(l =>
+    assert(stagePlans.exists(_.linesIterator.exists(l =>
         l.contains("ReadSchema") && l.contains("qv:array<tinyint>") &&
           !l.contains("v:array<double>"))),
-      s"expected a code-block-only candidate scan among:\n${stagePlans.asScala.mkString("\n---\n")}")
+      s"expected a code-block-only candidate scan among:\n${stagePlans.mkString("\n---\n")}")
     // stage 2 (exact re-rank) reads full vectors but only for the
     // driver-planted candidate id set (vid In (...)) on pruned cells
     assert(plan.linesIterator.exists(l =>
@@ -595,29 +580,17 @@ class PlanSpec extends SparkSpec {
     // the frozen codebook persists next to the quantizer
     assert(spark.read.parquet(s"$idx/pqbook").count() == 8 * 16)
     val queries = emb.filter(col("vec_id") % 100 === 0)
-    val stagePlans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-      override def onSuccess(f: String,
-          qe: org.apache.spark.sql.execution.QueryExecution, d: Long): Unit =
-        stagePlans.add(qe.executedPlan.toString)
-      override def onFailure(f: String,
-          qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
-    }
-    spark.listenerManager.register(listener)
-    val before =
-      try {
-        val p = IvfIndex.probe(spark, idx, queries, "vec_id", "embedding",
+    val cap = graft.metrics.Capture.run(spark) {
+      IvfIndex.probe(spark, idx, queries, "vec_id", "embedding",
           k = 5, nProbe = 2, pqRerank = 3)
-        val rows = p.select("qid", "rank", "nid", "cosine").collect().map(_.toSeq).toSet
-        org.apache.spark.sql.graft.Bridge.drainListenerBus(spark.sparkContext)
-        rows
-      } finally spark.listenerManager.unregister(listener)
+        .select("qid", "rank", "nid", "cosine").collect().map(_.toSeq).toSet
+    }
+    val (before, stagePlans) = (cap.value, cap.plans)
     // the ADC stage scans the 8-byte code column, never the vectors
-    import scala.jdk.CollectionConverters._
-    assert(stagePlans.asScala.exists(_.linesIterator.exists(l =>
+    assert(stagePlans.exists(_.linesIterator.exists(l =>
         l.contains("ReadSchema") && l.contains("pqc:array<tinyint>") &&
           !l.contains("v:array<double>"))),
-      s"expected a code-only ADC scan among:\n${stagePlans.asScala.mkString("\n---\n")}")
+      s"expected a code-only ADC scan among:\n${stagePlans.mkString("\n---\n")}")
     // appends encode against the persisted frozen book; compaction
     // preserves the code column and the probe answer
     IvfIndex.appendEpoch(spark, idx, newHalf, "vec_id", "embedding", epoch = 1L)
@@ -1063,58 +1036,31 @@ class PlanSpec extends SparkSpec {
     // crossJoin(broadcast(oneRowAgg)) planned a 1-row
     // BroadcastNestedLoopJoin per iteration. The loop's stages execute
     // eagerly inside pageRank (per-round collect), so their plans are
-    // captured via a listener, not the returned frame.
+    // captured, not read off the returned frame.
     import org.apache.spark.sql.functions._
-    val stagePlans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-      override def onSuccess(f: String,
-          qe: org.apache.spark.sql.execution.QueryExecution, d: Long): Unit =
-        stagePlans.add(qe.executedPlan.toString)
-      override def onFailure(f: String,
-          qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
-    }
-    spark.listenerManager.register(listener)
-    try {
+    val stagePlans = graft.metrics.Capture.run(spark) {
       val edges = spark.read.parquet(s"$dir/lineitem.parquet")
         .select(col("l_orderkey").as("src"), col("l_partkey").as("dst"))
       graft.operators.Graph.pageRank(edges, "src", "dst").ranks(2).collect()
-      // listener events post asynchronously: drain the bus so all of
-      // them — 1 seed-count + 2 dangling collects + the final action —
-      // have been delivered
-      org.apache.spark.sql.graft.Bridge.drainListenerBus(spark.sparkContext)
-    } finally spark.listenerManager.unregister(listener)
-    import scala.jdk.CollectionConverters._
+    }.plans
+    // 1 seed-count + 2 dangling collects + the final action
     assert(stagePlans.size >= 4, s"expected >= 4 captured stages, saw ${stagePlans.size}")
-    val offenders = stagePlans.asScala.filter(p =>
+    val offenders = stagePlans.filter(p =>
       p.contains("BroadcastNestedLoopJoin") || p.contains("CartesianProduct"))
     assert(offenders.isEmpty,
       s"pageRank iteration stages must be nested-loop-free:\n${offenders.mkString("\n---\n")}")
   }
 
-  test("logisticTrain / connectedComponentsBigStar: eager loop stages are nested-loop-free, partial-combined") {
+  test("logisticTrain / connectedComponents: eager loop stages are nested-loop-free") {
     // both loops run eagerly inside the operator (per-round collects),
-    // so their stage plans are captured via a listener, the pageRank
-    // convention
-    import org.apache.spark.sql.functions._
-    val stagePlans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-      override def onSuccess(f: String,
-          qe: org.apache.spark.sql.execution.QueryExecution, d: Long): Unit =
-        stagePlans.add(qe.executedPlan.toString)
-      override def onFailure(f: String,
-          qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
-    }
-    spark.listenerManager.register(listener)
-    try {
+    // so their stage plans are captured, the pageRank convention
+    val plans = graft.metrics.Capture.run(spark) {
       import spark.implicits._
       val f = (0 until 64).map(i => (i.toLong, i / 63.0, i % 2)).toDF("id", "x", "y")
       graft.llm.Classify.logisticTrain(f, "y", Seq("x"), iters = 3, lr = 1.0)
       val edges = Seq((1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L)).toDF("src", "dst")
-      graft.operators.Graph.connectedComponentsBigStar(edges, "src", "dst").collect()
-      org.apache.spark.sql.graft.Bridge.drainListenerBus(spark.sparkContext)
-    } finally spark.listenerManager.unregister(listener)
-    import scala.jdk.CollectionConverters._
-    val plans = stagePlans.asScala.toList
+      graft.operators.Graph.connectedComponents(edges, "src", "dst").collect()
+    }.plans
     assert(plans.nonEmpty, "listener must capture the eager loop stages")
     val offenders = plans.filter(p =>
       p.contains("BroadcastNestedLoopJoin") || p.contains("CartesianProduct"))
@@ -1200,23 +1146,11 @@ class PlanSpec extends SparkSpec {
     // graph — preparing twice runs two.
     import org.apache.spark.sql.functions._
     val e = spark.range(400).select((col("id") % 40).as("src"), (col("id") % 23).as("dst"))
-    val snPlans = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-      override def onSuccess(f: String,
-          qe: org.apache.spark.sql.execution.QueryExecution, d: Long): Unit =
-        if (qe.analyzed.toString.contains("sum(sf")) snPlans.incrementAndGet()
-      override def onFailure(f: String,
-          qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
-    }
-    spark.listenerManager.register(listener)
-    try {
+    val snPlans = graft.metrics.Capture.run(spark) {
       val g = graft.operators.Graph.pageRank(e, "src", "dst")
       g.ranks(2, init = Some(g.ranks(2))).collect()
-      // listener events post asynchronously — drain the bus so a second
-      // prep's event cannot arrive after the assertion
-      org.apache.spark.sql.graft.Bridge.drainListenerBus(spark.sparkContext)
-    } finally spark.listenerManager.unregister(listener)
-    assert(snPlans.get() == 1,
-      s"resumed pair must prep once (one seed-count aggregate), saw ${snPlans.get()}")
+    }.executions.count(_.analyzed.toString.contains("sum(sf"))
+    assert(snPlans == 1,
+      s"resumed pair must prep once (one seed-count aggregate), saw $snPlans")
   }
 }

@@ -427,26 +427,15 @@ class TextIndexSpec extends SparkSpec {
       assert(ds == ds.sorted, s"file ${p.getPath} not doc-ascending")
     }
     // the feedback-mining scan runs eagerly inside probeExpanded —
-    // capture its plan via a listener and pin the pushed doc filter
-    val stagePlans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-      override def onSuccess(f: String,
-          qe: org.apache.spark.sql.execution.QueryExecution, d: Long): Unit =
-        stagePlans.add(qe.executedPlan.toString)
-      override def onFailure(f: String,
-          qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
-    }
-    import scala.jdk.CollectionConverters._
-    def minedPlan: Option[String] = stagePlans.asScala.find(p =>
-      p.matches("(?s).*PushedFilters: \\[[^\\]]*In\\(doc[^\\]]*\\].*"))
-    spark.listenerManager.register(listener)
-    try {
+    // capture its plan and pin the pushed doc filter
+    val stagePlans = graft.metrics.Capture.run(spark) {
       TextIndex.probeExpanded(spark, idx, terms, k = 5, fbDocs = 2, fbTerms = 2).collect()
-      org.apache.spark.sql.graft.Bridge.drainListenerBus(spark.sparkContext)
-    } finally spark.listenerManager.unregister(listener)
+    }.plans
+    val minedPlan = stagePlans.find(p =>
+      p.matches("(?s).*PushedFilters: \\[[^\\]]*In\\(doc[^\\]]*\\].*"))
     assert(minedPlan.nonEmpty,
       s"expected the mining scan to push In(doc, ...) to parquet among:\n${
-        stagePlans.asScala.mkString("\n---\n")}")
+        stagePlans.mkString("\n---\n")}")
   }
 
   test("probeAll enforces the control-plane batch bound") {
