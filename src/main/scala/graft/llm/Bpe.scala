@@ -95,13 +95,11 @@ object Bpe {
     val wordFreq = graft.core.Fan.out(docs)
       .select(explode(TextOps.words(col(textCol))).as("w"))
       .groupBy(col("w")).agg(count(lit(1)).as("freq"))
-    var cur = wordFreq
+    val cur0 = wordFreq
       .select(col("freq"), spacedChars(col("w")).as("sp"))
       .localCheckpoint(false)
     val merges = scala.collection.mutable.ArrayBuffer.empty[Merge]
-    var step = 1
-    var exhausted = false
-    while (step <= nMerges && !exhausted) {
+    graft.core.Rounds.run("learnMerges", cur0, nMerges) { (cur, step) =>
       val top = cur
         .select(col("freq"), explode(adjacentPairs(col("sp"))).as("pr"))
         .groupBy(col("pr.l").as("l"), col("pr.r").as("r"))
@@ -109,15 +107,12 @@ object Bpe {
         .orderBy(col("cnt").desc, col("l"), col("r"))
         .limit(1)
         .collect()
-      if (top.isEmpty) exhausted = true
+      if (top.isEmpty) (cur, true)
       else {
         val (l, r, cnt) = (top(0).getString(0), top(0).getString(1), top(0).getLong(2))
         merges += Merge(step.toLong, l, r, cnt)
-        cur = org.apache.spark.sql.graft.Bridge.resetStats(cur
-          .withColumn("sp", replaceLit(col("sp"), s" $l  $r ", s" $l$r "))
-          .localCheckpoint(false)) // resetStats: hundreds of merge
-          // rounds must not compound carried origin stats
-        step += 1
+        (graft.core.Rounds.checkpoint(
+          cur.withColumn("sp", replaceLit(col("sp"), s" $l  $r ", s" $l$r "))), false)
       }
     }
     val schema = StructType(Seq(

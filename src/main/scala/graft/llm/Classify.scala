@@ -113,8 +113,7 @@ object Classify {
     val pTarget = math.max(1L, math.min(p0.toLong, (n + rowsPerTask - 1) / rowsPerTask)).toInt
     val fl = if (pTarget < p0) f.coalesce(pTarget) else f
     val nD = n.toDouble
-    val wu = Array.fill(d + 1)(0L)
-    for (_ <- 1 to iters) {
+    graft.core.Rounds.run("logisticTrain", Array.fill(d + 1)(0L), iters) { (wu, _) =>
       val m = (0 until d).foldLeft(lit(wu(0).toDouble): org.apache.spark.sql.Column)(
         (acc, j) => acc + lit(wu(j + 1).toDouble) * col(s"_x$j")) / lit(1.0e6)
       val r = lit(1.0) / (lit(1.0) + exp(-m)) - col("_y")
@@ -122,10 +121,9 @@ object Classify {
       val gj = (0 until d).map(j =>
         sum(floor(r * col(s"_x$j") * lit(1.0e6) + lit(0.5))).as(s"_g${j + 1}"))
       val row = fl.agg(g0, gj: _*).collect()(0)
-      for (j <- 0 to d)
-        wu(j) -= math.floor(lr * row.getLong(j).toDouble / nD + 0.5).toLong
-    }
-    wu
+      (Array.tabulate(d + 1)(j =>
+        wu(j) - math.floor(lr * row.getLong(j).toDouble / nD + 0.5).toLong), false)
+    }.state
   }
 
   /** Score a feature frame with [[logisticTrain]] weights: per row the

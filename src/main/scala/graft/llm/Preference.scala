@@ -70,28 +70,27 @@ object Preference {
     val k = items.count()
     val p0 = math.floor(Nano / k + 0.5).toLong
 
-    var p = items.select(col("a"), lit(p0).as("p"))
-    for (_ <- 1 to iters) {
-      val terms = sym
-        .join(p.select(col("a"), col("p").as("pa")), "a")
-        .join(p.select(col("a").as("b"), col("p").as("pb")), "b")
-        .select(col("a"),
-          floor(col("nab").cast("double") * lit(Nano) /
-            (col("pa") + col("pb")).cast("double") * lit(Micro) + lit(0.5)).as("t"))
-      val denom = terms.groupBy(col("a")).agg(sum(col("t")).as("d"))
-      val r = base.join(denom, "a")
-        .select(col("a"),
-          floor(col("wi").cast("double") / col("d").cast("double") * lit(RScale) +
-            lit(0.5)).as("r"))
-      val tot = r.agg(sum(col("r")).as("tr"))
-      p = r.crossJoin(broadcast(tot))
-        .select(col("a"),
-          greatest(
-            floor(col("r").cast("double") * lit(Nano) / col("tr").cast("double") +
-              lit(0.5)),
-            lit(1L)).as("p"))
-        .localCheckpoint(false)
-    }
+    val p = graft.core.Rounds.run("bradleyTerry", items.select(col("a"), lit(p0).as("p")), iters) {
+      (p, _) =>
+        val terms = sym
+          .join(p.select(col("a"), col("p").as("pa")), "a")
+          .join(p.select(col("a").as("b"), col("p").as("pb")), "b")
+          .select(col("a"),
+            floor(col("nab").cast("double") * lit(Nano) /
+              (col("pa") + col("pb")).cast("double") * lit(Micro) + lit(0.5)).as("t"))
+        val denom = terms.groupBy(col("a")).agg(sum(col("t")).as("d"))
+        val r = base.join(denom, "a")
+          .select(col("a"),
+            floor(col("wi").cast("double") / col("d").cast("double") * lit(RScale) +
+              lit(0.5)).as("r"))
+        val tot = r.agg(sum(col("r")).as("tr"))
+        (graft.core.Rounds.checkpoint(r.crossJoin(broadcast(tot))
+          .select(col("a"),
+            greatest(
+              floor(col("r").cast("double") * lit(Nano) / col("tr").cast("double") +
+                lit(0.5)),
+              lit(1L)).as("p"))), false)
+    }.state
     base.join(nm, "a").join(p, "a")
       .select(col("a").as("item"), col("wi").as("wins"), col("n_matches"),
         (col("p").cast("double") / lit(Nano)).as("rating"))

@@ -524,28 +524,23 @@ object Selection {
     val sh = graft.core.Fan.out(docs)
       .select(col(idCol).as("doc"), explode(TextOps.shingleHashes(col(textCol))).as("h"))
       .localCheckpoint(false) // scanned once per round — materialize the tokenize
-    var covered = spark.createDataFrame(
+    val covered0 = spark.createDataFrame(
       java.util.Collections.emptyList[Row](),
       StructType(Seq(StructField("h", LongType, nullable = false))))
     val out = scala.collection.mutable.ArrayBuffer.empty[Row]
-    var total = 0L
-    var exhausted = false
-    for (r <- 1 to k if !exhausted) {
+    graft.core.Rounds.run("greedyCoverage", (covered0, 0L), k) { case ((covered, total), r) =>
       val win = sh.join(covered, Seq("h"), "left_anti")
         .groupBy(col("doc")).agg(count(lit(1)).as("gain"))
         .orderBy(col("gain").desc, col("doc"))
         .limit(1).collect()
-      if (win.isEmpty) exhausted = true
+      if (win.isEmpty) ((covered, total), true)
       else {
         val doc = win.head.getLong(0)
         val gain = win.head.getLong(1)
-        total += gain
-        out += Row(r.toLong, doc, gain, total)
-        covered = org.apache.spark.sql.graft.Bridge.resetStats(covered
+        out += Row(r.toLong, doc, gain, total + gain)
+        ((graft.core.Rounds.checkpoint(covered
           .unionAll(sh.filter(col("doc") === doc).select(col("h")))
-          .distinct()
-          .localCheckpoint(false)) // resetStats: k rounds of self-union
-          // would compound origin stats (the louvain driver-wedge lesson)
+          .distinct()), total + gain), false)
       }
     }
     // explicit-schema createDataFrame (repo invariant: no case-class

@@ -63,7 +63,7 @@ object Similarity {
     * bit-for-bit); empty cells keep their position.
     */
   private[llm] def refineCentroids(p: DataFrame, cents0: DataFrame, iters: Int): DataFrame =
-    (1 to iters).foldLeft(cents0) { (c, _) =>
+    graft.core.Rounds.run("refineCentroids", cents0, iters) { (c, _) =>
       val rk = row_number().over(
         Window.partitionBy(col("vid")).orderBy(col("ccos").desc, col("cid")))
       val assign = p.crossJoin(broadcast(c))
@@ -79,12 +79,11 @@ object Similarity {
         .agg(transform(sort_array(collect_list(struct(col("j"), col("sx")))),
           e => e.getField("sx").cast("double")).as("ncv"))
         .withColumn("ncn", norm(col("ncv")))
-      c.join(sums, Seq("cid"), "left")
+      (graft.core.Rounds.checkpoint(c.join(sums, Seq("cid"), "left")
         .select(col("cid"),
           coalesce(col("ncv"), col("cv")).as("cv"),
-          coalesce(col("ncn"), col("cn")).as("cn"))
-        .localCheckpoint(false)
-    }
+          coalesce(col("ncn"), col("cn")).as("cn"))), false)
+    }.state
 
   /** Near-duplicate pairs: cosine(a, b) >= minCosine over all pairs.
     *

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.core.Rounds
+
 /** Iterative graph analytics over edge-list DataFrames. First member:
   * PageRank (Page et al. 1999, "The PageRank Citation Ranking") — the
   * classic link-quality signal web-curation pipelines rank domains
@@ -44,40 +46,28 @@ object Graph {
 
   private val Scale = 1000000000L // nano-rank units
 
-  /** Per-ROUND checkpoint for iterative loops: lazy localCheckpoint +
-    * [[org.apache.spark.sql.graft.Bridge.resetStats]]. Spark 4 carries
-    * the child plan's estimated statistics into a checkpoint's
-    * LogicalRDD; a loop whose round joins the previous round's
-    * checkpoint several times MULTIPLIES that estimate per round, so
-    * the BigInt digit count grows geometrically and the driver
-    * eventually wedges inside stats estimation (the louvainMultiLevel
-    * level-3 incident: minutes per round planning a 63-edge graph).
-    * Every in-loop checkpoint in this file goes through here; one-time
-    * checkpoints outside loops don't compound and keep their stats.
+  /** Both orientations of every `(a, b)` row — `(a, b, rest…)` and
+    * `(b, a, rest…)` — off ONE scan of `df`: an `e ∪ swap(e)` union
+    * would plan (and run) `df` twice, and an unmaterialized input is
+    * often a join. Columns come back as `a, b, rest…`.
     */
-  private def ckptRound(df: DataFrame): DataFrame =
-    org.apache.spark.sql.graft.Bridge.resetStats(df.localCheckpoint(false))
+  private[graft] def bothWays(df: DataFrame, a: String, b: String): DataFrame = {
+    val rest = df.columns.filterNot(c => c == a || c == b).map(col).toSeq
+    df.select(explode(array(
+        struct(col(a) +: col(b) +: rest: _*),
+        struct(col(b).as(a) +: col(a).as(b) +: rest: _*))).as("_e"))
+      .select(col("_e.*"))
+  }
 
-  /** Materialize a freshly (lazily) localCheckpoint'd round frame AND
-    * return how many of its rows satisfy `pred`, in ONE job (r13
-    * verdict #1 — fold the quiet-check into the checkpoint's
-    * materializing action). The former `filter(pred).isEmpty` probe
-    * cost two jobs per round: `take(1)` computes only a partition
-    * prefix, so the localCheckpoint's `doCheckpoint` hook then launches
-    * a SECOND fill-in job over the partitions the probe never touched
-    * (LocalRDDCheckpointData materializes every missing partition at
-    * first-action completion) — and when the filter survivors live in
-    * late partitions, `take` itself escalates through 1/4/16-partition
-    * retry jobs first. One full-scan aggregate computes (and persists)
-    * every partition exactly once and returns the exact count; the
-    * quiet decision `count == 0` is the same boolean the isEmpty probe
-    * produced, so loop trajectories — and results — are unchanged.
+  /** The canonical undirected edge set: distinct `(a, b)` longs with
+    * a < b, self-loops dropped.
     */
-  private def materializedCount(
-      ckpt: DataFrame,
-      pred: org.apache.spark.sql.Column
-  ): Long =
-    ckpt.agg(count(when(pred, lit(1)))).collect()(0).getLong(0)
+  private def canonicalPairs(edges: DataFrame, srcCol: String, dstCol: String): DataFrame =
+    edges.select(
+        least(col(srcCol), col(dstCol)).cast("long").as("a"),
+        greatest(col(srcCol), col(dstCol)).cast("long").as("b"))
+      .filter(col("a") =!= col("b"))
+      .distinct()
 
   /** PageRank over a directed edge list, PREPARED once: returns a
     * [[PreparedPageRank]] whose `ranks` runs the power iteration,
@@ -284,22 +274,19 @@ object Graph {
       val r0 = math.floor(Scale.toDouble / sn + 0.5).toLong
       val baseScaled = (1.0 - damping) / sn * Scale.toDouble
 
-      var r = init match {
+      val r0Frame = init match {
         case None => nodes.select(col("node"), col("sf"), col("dang"),
           when(col("sf") === 1, lit(r0)).otherwise(lit(0L)).as("rank"))
-        case Some(i) => nodes
+        // Rounds.checkpoint: a warm-start init may itself be a prior
+        // run's output carrying compounded origin stats
+        case Some(i) => Rounds.checkpoint(nodes
           .join(i.select(col("node"),
             floor(col("rank").cast("double") * lit(1.0e9) + lit(0.5)).as("_rn")),
             Seq("node"), "left")
           .select(col("node"), col("sf"), col("dang"),
-            coalesce(col("_rn"), lit(0L)).as("rank"))
-          // ckptRound: a warm-start init may itself be a prior run's
-          // output carrying compounded origin stats
-          .transform(ckptRound)
+            coalesce(col("_rn"), lit(0L)).as("rank")))
       }
-      var rounds = 0
-      var converged = false
-      while (rounds < iters && !converged) {
+      val out = Rounds.run("pageRank", r0Frame, iters) { (r, _) =>
         val share = e2
           .join(r.select(col("node"), col("rank")), col("node") === col("src"))
           .select(col("dst").as("cnode"),
@@ -318,7 +305,7 @@ object Graph {
           .agg(coalesce(sum(when(col("dang") === 1, col("rank"))), lit(0L)).as("dsum"))
           .collect()(0).getLong(0)
         val dshare = math.floor(dsum.toDouble / sn.toDouble + 0.5).toLong
-        val next = ckptRound(nodes
+        val next = Rounds.checkpoint(nodes
           .join(contrib, col("node") === col("cnode"), "left")
           .select(col("node"), col("sf"), col("dang"),
             floor(
@@ -326,20 +313,16 @@ object Graph {
                 lit(damping) * (coalesce(col("csum"), lit(0L)) +
                   when(col("sf") === 1, lit(dshare)).otherwise(lit(0L))).cast("double") +
                 lit(0.5)).as("rank")))
-        rounds += 1
-        if (tolNano > 0L) {
-          // convergence probe: largest per-node nano-rank move this round
-          // — exact longs, one node-keyed join + a one-row collect
-          val move = r.select(col("node"), col("rank").as("_pr"))
-            .join(next.select(col("node"), col("rank")), Seq("node"))
-            .agg(coalesce(max(abs(col("rank") - col("_pr"))), lit(0L)))
-            .collect()(0).getLong(0)
-          converged = move <= tolNano
-        }
-        r = next
+        // convergence probe: largest per-node nano-rank move this round
+        // — exact longs, one node-keyed join + a one-row collect
+        val converged = tolNano > 0L && r.select(col("node"), col("rank").as("_pr"))
+          .join(next.select(col("node"), col("rank")), Seq("node"))
+          .agg(coalesce(max(abs(col("rank") - col("_pr"))), lit(0L)))
+          .collect()(0).getLong(0) <= tolNano
+        (next, converged)
       }
-      (r.select(col("node"),
-        (col("rank").cast("double") / lit(Scale.toDouble)).as("rank")), rounds)
+      (out.state.select(col("node"),
+        (col("rank").cast("double") / lit(Scale.toDouble)).as("rank")), out.rounds)
     }
   }
 
@@ -481,34 +464,25 @@ object Graph {
         .filter(col("w") > 0)
         .groupBy(col("src"), col("dst")).agg(min(col("w")).as("w"))
     }).localCheckpoint(false)
-    var dist = seeds.select(col("node")).distinct()
+    val dist0 = seeds.select(col("node")).distinct()
       .withColumn("dist", lit(0L))
       .localCheckpoint(false)
-    var frontier = dist
-    var hop = 0
-    var drained = false
-    while (hop < maxHops && !drained) {
+    Rounds.run("shortestPaths", (dist0, dist0), maxHops) { case ((dist, frontier), _) =>
       val relaxed = frontier
         .join(e, col("node") === col("src"))
         .select(col("dst").as("node"), (col("dist") + col("w")).as("dist"))
-      val next = ckptRound(dist.unionAll(relaxed)
+      val next = Rounds.checkpoint(dist.unionAll(relaxed)
         .groupBy(col("node")).agg(min(col("dist")).as("dist")))
       // improved-only frontier: new nodes, or a strictly smaller dist
-      frontier = ckptRound(next
+      val improved = Rounds.checkpoint(next
         .join(dist.select(col("node"), col("dist").as("_prev")), Seq("node"), "left")
         .filter(col("_prev").isNull || col("dist") < col("_prev"))
         .select(col("node"), col("dist")))
-      dist = next
-      // ONE control-plane boolean per round (the pageRank dangling-
+      // ONE control-plane count per round (the pageRank dangling-
       // collect precedent); an empty frontier means converged — every
-      // remaining round would relax nothing. Full-scan count, not
-      // isEmpty: materializes the frontier checkpoint in the same job
-      // (see materializedCount) instead of take(1) + a doCheckpoint
-      // fill-in job.
-      drained = materializedCount(frontier, lit(true)) == 0L
-      hop += 1
-    }
-    dist
+      // remaining round would relax nothing
+      ((next, improved), Rounds.countWhere(improved, lit(true)) == 0L)
+    }.state._1
   }
 
   /** The [[shortestPaths]] oracle generator: unrolled min-plus CTEs,
@@ -616,17 +590,16 @@ object Graph {
       iters: Int
   ): (DataFrame, DataFrame) = {
     require(iters >= 0, s"iters must be non-negative, got $iters")
-    val e0 = edges.select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
-    val und = e0.unionAll(e0.select(col("dst").as("src"), col("src").as("dst")))
+    val und = bothWays(
+        edges.select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst")),
+        "src", "dst")
       .filter(col("src") =!= col("dst"))
       .distinct()
       .localCheckpoint(false)
-    var labels = und.select(col("src").as("node")).distinct()
+    val labels0 = und.select(col("src").as("node")).distinct()
       .withColumn("label", col("node"))
       .localCheckpoint(false)
-    var round = 0
-    var fixed = false
-    while (round < iters && !fixed) {
+    val labels = Rounds.run("labelPropagation", labels0, iters) { (labels, _) =>
       // argmax as a map-side-combinable AGGREGATE, not a window (r14,
       // guide §2.4): `min(struct(-c, label))` is lexicographic —
       // largest count first, ties to the smallest label — exactly the
@@ -641,21 +614,13 @@ object Graph {
         .groupBy(col("dst"))
         .agg(min(struct(negate(col("c")).as("nc"), col("label").as("l"))).as("m"))
         .select(col("dst").as("node"), col("m.l").as("nlabel"))
-      // resetStats: the per-round checkpoint would otherwise carry the
-      // round plan's MULTIPLIED size estimate into the next round's
-      // joins — geometric stats growth that wedges the driver after a
-      // few compounded levels (see Bridge.resetStats)
-      val updated = org.apache.spark.sql.graft.Bridge.resetStats(
-        labels.join(next, Seq("node"), "left")
-          .select(col("node"), col("label").as("_old"),
-            coalesce(col("nlabel"), col("label")).as("label"))
-          .localCheckpoint(false))
+      val updated = Rounds.checkpoint(labels.join(next, Seq("node"), "left")
+        .select(col("node"), col("label").as("_old"),
+          coalesce(col("nlabel"), col("label")).as("label")))
       // one job: materializes the round checkpoint AND counts changes
-      // (the louvainWeightedCore quiet-check fold, same rationale)
-      fixed = materializedCount(updated, col("label") =!= col("_old")) == 0L
-      labels = updated.select(col("node"), col("label"))
-      round += 1
-    }
+      (updated.select(col("node"), col("label")),
+        Rounds.countWhere(updated, col("label") =!= col("_old")) == 0L)
+    }.state
     (labels, und)
   }
 
@@ -717,12 +682,7 @@ object Graph {
     */
   def triangleCount(edges: DataFrame, srcCol: String, dstCol: String): DataFrame = {
     val idMax = 1L << 31
-    val und = edges
-      .select(
-        least(col(srcCol), col(dstCol)).cast("long").as("a"),
-        greatest(col(srcCol), col(dstCol)).cast("long").as("b"))
-      .filter(col("a") =!= col("b"))
-      .distinct()
+    val und = canonicalPairs(edges, srcCol, dstCol)
       .localCheckpoint(false) // feeds degrees, orientation AND the closing join
     val deg = und.select(col("a").as("node")).unionAll(und.select(col("b").as("node")))
       .groupBy(col("node")).agg(count(lit(1)).as("deg"))
@@ -812,43 +772,42 @@ object Graph {
     // the vertex universe keeps self-loop-only nodes; the star loop
     // drops self-loops (they never change connectivity)
     val nodes = canon.select(explode(array(col("u"), col("v"))).as("node")).distinct()
-    var e = canon.filter(col("u") =!= col("v"))
+    val e0 = canon.filter(col("u") =!= col("v"))
     val sizes = scala.collection.mutable.ArrayBuffer[Long]()
-    var it = 0
-    var converged = starStats(e)._1 == 0L
-    while (!converged && it < maxIter) {
-      // large-star: for every node x, hang each neighbor LARGER than x
-      // off m(x) = min(Γ(x) ∪ {x}); output keeps the (big, small)
-      // orientation because m(x) <= x < neighbor
-      val sym = e.unionAll(e.select(col("v").as("u"), col("u").as("v")))
-      val mins = sym.groupBy(col("u")).agg(min(col("v")).as("mn"))
-      val ls = sym.join(mins, Seq("u"))
-        .filter(col("v") > col("u"))
-        .select(col("v").as("u"), least(col("mn"), col("u")).as("v"))
-        .distinct()
-      // small-star: collapse each node's smaller neighborhood onto its
-      // minimum — one output edge per input edge, orientation kept
-      val minsS = ls.groupBy(col("u")).agg(min(col("v")).as("mn"))
-      // lazy: the round's starStats full-scan aggregate materializes
-      // it — one action per round
-      e = ckptRound(ls.join(minsS, Seq("u"))
-        .select(
-          when(col("v") === col("mn"), col("u")).otherwise(col("v")).as("nu"),
-          col("mn").as("nv"))
-        .filter(col("nu") =!= col("nv"))
-        .select(col("nu").as("u"), col("nv").as("v"))
-        .distinct())
-      val (viol, nEdges) = starStats(e)
-      sizes += nEdges
-      converged = viol == 0L
-      it += 1
-    }
-    if (!converged)
-      throw new IllegalStateException(
-        s"connectedComponents did not converge in $maxIter rounds; " +
-          "raise maxIter (the alternation needs O(log^2 n) rounds)")
+    // an input that already is a star forest runs no round
+    val out =
+      if (starStats(e0)._1 == 0L) Rounds.Outcome(e0, 0, converged = true)
+      else Rounds.run("connectedComponents", e0, maxIter) { (e, _) =>
+        // large-star: for every node x, hang each neighbor LARGER than x
+        // off m(x) = min(Γ(x) ∪ {x}); output keeps the (big, small)
+        // orientation because m(x) <= x < neighbor
+        val sym = e.unionAll(e.select(col("v").as("u"), col("u").as("v")))
+        val mins = sym.groupBy(col("u")).agg(min(col("v")).as("mn"))
+        val ls = sym.join(mins, Seq("u"))
+          .filter(col("v") > col("u"))
+          .select(col("v").as("u"), least(col("mn"), col("u")).as("v"))
+          .distinct()
+        // small-star: collapse each node's smaller neighborhood onto its
+        // minimum — one output edge per input edge, orientation kept
+        val minsS = ls.groupBy(col("u")).agg(min(col("v")).as("mn"))
+        // lazy: the round's starStats full-scan aggregate materializes
+        // it — one action per round
+        val next = Rounds.checkpoint(ls.join(minsS, Seq("u"))
+          .select(
+            when(col("v") === col("mn"), col("u")).otherwise(col("v")).as("nu"),
+            col("mn").as("nv"))
+          .filter(col("nu") =!= col("nv"))
+          .select(col("nu").as("u"), col("nv").as("v"))
+          .distinct())
+        val (viol, nEdges) = starStats(next)
+        sizes += nEdges
+        (next, viol == 0L)
+      }
+    // the alternation needs O(log² n) rounds; past maxIter the labels
+    // could split a true component
+    if (!out.converged) throw Rounds.NotConverged("connectedComponents", maxIter)
     val labels = nodes
-      .join(e.select(col("u").as("node"), col("v").as("component")), Seq("node"), "left")
+      .join(out.state.select(col("u").as("node"), col("v").as("component")), Seq("node"), "left")
       .select(col("node"), coalesce(col("component"), col("node")).as("component"))
     (labels, sizes.toSeq)
   }
@@ -913,26 +872,19 @@ object Graph {
   ): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     require(rounds >= 1 && rounds <= 50, s"rounds must be in 1..50, got $rounds")
-    val e0 = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-    val sym = e0.unionAll(e0.select(col("dst").as("src"), col("src").as("dst")))
+    val sym = bothWays(edges.select(col(srcCol).as("src"), col(dstCol).as("dst")), "src", "dst")
       .distinct().localCheckpoint(false)
     def degrees(alive: DataFrame): DataFrame =
       sym
         .join(alive.select(col("node").as("src")), Seq("src"), "left_semi")
         .join(alive.select(col("node").as("dst")), Seq("dst"), "left_semi")
         .groupBy(col("src").as("node")).agg(count(lit(1)).as("deg"))
-    var alive = sym.select(col("src").as("node")).distinct().localCheckpoint(false)
-    var n = alive.count()
-    var round = 0
-    var converged = false
-    while (round < rounds && !converged) {
-      alive = ckptRound(degrees(alive).filter(col("deg") >= k)
-        .select(col("node")))
-      val m = alive.count()
-      converged = m == n
-      n = m
-      round += 1
-    }
+    val alive0 = sym.select(col("src").as("node")).distinct().localCheckpoint(false)
+    val (alive, _) = Rounds.run("kCore", (alive0, alive0.count()), rounds) { case ((alive, n), _) =>
+      val next = Rounds.checkpoint(degrees(alive).filter(col("deg") >= k).select(col("node")))
+      val m = next.count()
+      ((next, m), m == n)
+    }.state
     degrees(alive).filter(col("deg") >= k)
   }
 
@@ -1041,26 +993,24 @@ object Graph {
     val n = nodes.count()
     require(n > 0, "hits requires a non-empty edge list")
     val h0 = math.floor(Scale.toDouble / n + 0.5).toLong
-    var hub = nodes.select(col("node"), lit(h0).as("hub"))
-    var auth = nodes.select(col("node"), lit(0L).as("auth"))
-    for (_ <- 1 to iters) {
-      val ar = ckptRound(e.join(hub.select(col("node").as("src"), col("hub")), "src")
-        .groupBy(col("dst")).agg(sum(col("hub")).as("araw")))
-      val asum = ar.agg(coalesce(sum(col("araw")), lit(0L))).collect()(0).getLong(0)
-      require(asum > 0, "authority mass vanished — every edge source has hub 0")
-      auth = ckptRound(nodes.join(ar, col("node") === col("dst"), "left")
+    // one half-step: the `from` side's units flow along the edges from
+    // its `key` endpoint and sum at the `to` endpoint (checkpointed: it
+    // feeds the normalizer AND the join back), then renormalize
+    def half(from: DataFrame, key: String, to: String, name: String): DataFrame = {
+      val raw = Rounds.checkpoint(e.join(from.toDF(key, "s"), key)
+        .groupBy(col(to)).agg(sum(col("s")).as("raw")))
+      val total = raw.agg(coalesce(sum(col("raw")), lit(0L))).collect()(0).getLong(0)
+      require(total > 0, s"$name mass vanished — every edge's $key end scores 0")
+      Rounds.checkpoint(nodes.join(raw, col("node") === col(to), "left")
         .select(col("node"),
-          floor(coalesce(col("araw"), lit(0L)).cast("double") * lit(Scale.toDouble) /
-            lit(asum.toDouble) + lit(0.5)).as("auth")))
-      val hr = ckptRound(e.join(auth.select(col("node").as("dst"), col("auth")), "dst")
-        .groupBy(col("src")).agg(sum(col("auth")).as("hraw")))
-      val hsum = hr.agg(coalesce(sum(col("hraw")), lit(0L))).collect()(0).getLong(0)
-      require(hsum > 0, "hub mass vanished — every edge target has authority 0")
-      hub = ckptRound(nodes.join(hr, col("node") === col("src"), "left")
-        .select(col("node"),
-          floor(coalesce(col("hraw"), lit(0L)).cast("double") * lit(Scale.toDouble) /
-            lit(hsum.toDouble) + lit(0.5)).as("hub")))
+          floor(coalesce(col("raw"), lit(0L)).cast("double") * lit(Scale.toDouble) /
+            lit(total.toDouble) + lit(0.5)).as(name)))
     }
+    val init = (nodes.select(col("node"), lit(h0).as("hub")), nodes.select(col("node"), lit(0L).as("auth")))
+    val (hub, auth) = Rounds.run("hits", init, iters) { case ((hub, _), _) =>
+      val auth = half(hub, "src", "dst", "auth")
+      ((half(auth, "dst", "src", "hub"), auth), false)
+    }.state
     hub.join(auth, Seq("node"))
       .select(col("node"),
         (col("hub").cast("double") / lit(Scale.toDouble)).as("hub"),
@@ -1111,8 +1061,7 @@ object Graph {
     * inside `c`, `d_c` its degree sum, `m` the undirected edge count;
     * Q = Σ Q_c. Returns one row per community —
     * `(label, nodes, internal_edges, degree_sum, q_contrib, q_total)`
-    * — with the corpus Q repeated on every row (the totals-as-window
-    * convention). Nodes the `labels` frame misses default to
+    * — with the corpus Q repeated on every row. Nodes the `labels` frame misses default to
     * singleton communities of themselves.
     *
     * Exactness: everything up to the final divisions is integer —
@@ -1124,10 +1073,12 @@ object Graph {
     * integers in both engines — never rounded.
     *
     * Scale shape: one distinct-edge exchange, one degree aggregate,
-    * two node-keyed label joins, one (label) aggregate. The totals
-    * window runs over the LABEL-level aggregate (communities-sized,
-    * never rows-scaled — the Funnel.transitions precedent), so the
-    * empty partition spec is safe.
+    * two node-keyed label joins, one (label) aggregate. The totals —
+    * `m2` (a long) and Σ num (Σ_c num_c = 2·m2·Σe_c − Σd_c², exact
+    * BigInt) — are scalars of ONE reduce over the checkpointed
+    * per-label frame, re-entered as long / DECIMAL(38,0) literals: no
+    * single-partition window over a frame that grows with the
+    * community count.
     */
   def modularity(
       edges: DataFrame,
@@ -1137,11 +1088,7 @@ object Graph {
       nodeCol: String = "node",
       labelCol: String = "label"
   ): DataFrame = {
-    val und = edges.select(
-        least(col(srcCol), col(dstCol)).cast("long").as("a"),
-        greatest(col(srcCol), col(dstCol)).cast("long").as("b"))
-      .filter(col("a") =!= col("b"))
-      .distinct()
+    val und = canonicalPairs(edges, srcCol, dstCol)
       .localCheckpoint(false) // feeds degrees AND the internal-edge join
     val lab = labels.select(
       col(nodeCol).cast("long").as("node"), col(labelCol).cast("long").as("label"))
@@ -1174,20 +1121,25 @@ object Graph {
       .filter(col("la") === col("lb"))
       .groupBy(col("la")).agg(count(lit(1)).as("internal_edges"))
       .withColumnRenamed("la", "label")
-    val wAll = org.apache.spark.sql.expressions.Window.partitionBy()
-    perLabel.join(eIn, Seq("label"), "left")
+    val pl = perLabel.join(eIn, Seq("label"), "left")
       .select(col("label"), col("nodes"),
         coalesce(col("internal_edges"), lit(0L)).as("internal_edges"),
         col("degree_sum"))
-      .withColumn("m2", sum(col("degree_sum")).over(wAll))
-      .withColumn("num",
-        lit(2L).cast(dec) * col("m2").cast(dec) * col("internal_edges").cast(dec)
-          - col("degree_sum").cast(dec) * col("degree_sum").cast(dec))
-      .withColumn("den", col("m2").cast(dec) * col("m2").cast(dec))
-      .select(col("label"), col("nodes"), col("internal_edges"), col("degree_sum"),
-        (col("num").cast("double") / col("den").cast("double")).as("q_contrib"),
-        (sum(col("num")).over(wAll).cast("double") / col("den").cast("double"))
-          .as("q_total"))
+      .localCheckpoint(false) // feeds the totals AND the per-label rows
+    // (m2, Σe_c, Σd_c²) in ONE job that also fills the checkpoint: a
+    // reduce returns per-task partials to the driver, where a global
+    // aggregate would add a single-partition exchange (a job of its own)
+    val (m2, sumE, sumD2) = pl.select(col("degree_sum"), col("internal_edges")).rdd
+      .map(r => (r.getLong(0), r.getLong(1), BigInt(r.getLong(0)) * r.getLong(0)))
+      .fold((0L, 0L, BigInt(0))) { case ((a, b, c), (x, y, z)) => (a + x, b + y, c + z) }
+    val sumNum = BigInt(2) * m2 * sumE - sumD2
+    val den = lit(m2).cast(dec) * lit(m2).cast(dec)
+    pl.select(col("label"), col("nodes"), col("internal_edges"), col("degree_sum"),
+      ((lit(2L).cast(dec) * lit(m2).cast(dec) * col("internal_edges").cast(dec)
+        - col("degree_sum").cast(dec) * col("degree_sum").cast(dec)).cast("double") /
+        den.cast("double")).as("q_contrib"),
+      (lit(new java.math.BigDecimal(sumNum.bigInteger)).cast(dec).cast("double") /
+        den.cast("double")).as("q_total"))
   }
 
   /** The [[modularity]] oracle: `labelsSql` must yield (node, label)
@@ -1277,11 +1229,7 @@ object Graph {
     // and gains, so labels are bit-identical to the dedicated
     // unweighted body (and to [[louvainSql]]) while rounds gain the
     // core's two-joins-fewer plan.
-    val und = edges.select(
-        least(col(srcCol).cast("long"), col(dstCol).cast("long")).as("a"),
-        greatest(col(srcCol).cast("long"), col(dstCol).cast("long")).as("b"))
-      .filter(col("a") =!= col("b"))
-      .distinct()
+    val und = canonicalPairs(edges, srcCol, dstCol)
       .withColumn("w", lit(1L))
       .localCheckpoint(false)
     louvainWeightedCore(und, iters)._1
@@ -1408,56 +1356,47 @@ object Graph {
     // labels carry the STATIC deg so rounds never re-join the degree
     // table: dc aggregates labels directly, the gain join reads deg
     // off the candidate's label row
-    var labels = deg.select(col("node"), col("node").as("label"), col("deg"))
-    var round = 1
-    var quiet = 0
-    while (round <= iters && quiet < 2) {
-      val p = round % 2
-      val dc = labels
-        .groupBy(col("label").as("c")).agg(sum(col("deg")).as("dc"))
-      val moving = pmod(col("node"), lit(2L)) === lit(p.toLong)
-      val enc = adj.filter(moving)
-        .join(labels.select(col("node").as("nbr"), col("label").as("c")), "nbr")
-        .groupBy(col("node"), col("c")).agg(sum(col("w")).as("e"))
-      val cand = enc
-        .unionAll(labels.filter(moving).select(col("node"), col("label").as("c"), lit(0L).as("e")))
-        .groupBy(col("node"), col("c")).agg(max(col("e")).as("e"))
-      // argmax as a map-side-combinable AGGREGATE, not a window (r14,
-      // guide §2.4): `min(struct(-gain, c))` is lexicographic — largest
-      // gain first, ties to the smallest c — exactly the former
-      // row_number().over(node, gain desc, c).filter(rk = 1) row, but
-      // with a partial-combine below the node exchange and NO per-
-      // partition sort (WindowExec sorts its whole input). Negating a
-      // DECIMAL(38,0) is exact (sign flip); gain values are unchanged.
-      // The dc join moves FIRST so the final node-keyed join feeds the
-      // node-keyed aggregate directly (inner joins commute; one fewer
-      // exchange of the candidate stream).
-      val next = cand
-        .join(dc, "c")
-        .join(labels, "node")
-        .withColumn("gain",
-          lit(m2).cast(dec) * col("e").cast(dec)
-            - col("deg").cast(dec) *
-              (col("dc") - when(col("c") === col("label"), col("deg")).otherwise(lit(0L))).cast(dec))
-        .groupBy(col("node"))
-        .agg(min(struct(negate(col("gain")).as("ng"), col("c").as("c"))).as("m"))
-        .select(col("node"), col("m.c").as("nlabel"))
-      // resetStats: the per-round checkpoint would otherwise carry the
-      // round plan's MULTIPLIED size estimate into the next round's
-      // joins — geometric stats growth that wedges the driver after a
-      // few compounded levels (see Bridge.resetStats)
-      val updated = org.apache.spark.sql.graft.Bridge.resetStats(
-        labels.join(next, Seq("node"), "left")
+    val labels0 = deg.select(col("node"), col("node").as("label"), col("deg"))
+    // early exit after TWO consecutive no-move rounds (one per parity)
+    val (labels, _) = Rounds.run("louvainWeightedCore", (labels0, 0), iters) {
+      case ((labels, quiet), round) =>
+        val p = round % 2
+        val dc = labels
+          .groupBy(col("label").as("c")).agg(sum(col("deg")).as("dc"))
+        val moving = pmod(col("node"), lit(2L)) === lit(p.toLong)
+        val enc = adj.filter(moving)
+          .join(labels.select(col("node").as("nbr"), col("label").as("c")), "nbr")
+          .groupBy(col("node"), col("c")).agg(sum(col("w")).as("e"))
+        val cand = enc
+          .unionAll(labels.filter(moving).select(col("node"), col("label").as("c"), lit(0L).as("e")))
+          .groupBy(col("node"), col("c")).agg(max(col("e")).as("e"))
+        // argmax as a map-side-combinable AGGREGATE, not a window (r14,
+        // guide §2.4): `min(struct(-gain, c))` is lexicographic — largest
+        // gain first, ties to the smallest c — exactly the former
+        // row_number().over(node, gain desc, c).filter(rk = 1) row, but
+        // with a partial-combine below the node exchange and NO per-
+        // partition sort (WindowExec sorts its whole input). Negating a
+        // DECIMAL(38,0) is exact (sign flip); gain values are unchanged.
+        // The dc join moves FIRST so the final node-keyed join feeds the
+        // node-keyed aggregate directly (inner joins commute; one fewer
+        // exchange of the candidate stream).
+        val next = cand
+          .join(dc, "c")
+          .join(labels, "node")
+          .withColumn("gain",
+            lit(m2).cast(dec) * col("e").cast(dec)
+              - col("deg").cast(dec) *
+                (col("dc") - when(col("c") === col("label"), col("deg")).otherwise(lit(0L))).cast(dec))
+          .groupBy(col("node"))
+          .agg(min(struct(negate(col("gain")).as("ng"), col("c").as("c"))).as("m"))
+          .select(col("node"), col("m.c").as("nlabel"))
+        val updated = Rounds.checkpoint(labels.join(next, Seq("node"), "left")
           .select(col("node"), col("label").as("_old"),
-            coalesce(col("nlabel"), col("label")).as("label"), col("deg"))
-          .localCheckpoint(false))
-      // one job: materializes the round checkpoint AND counts moves
-      // (r13 verdict #1 — was filter(...).isEmpty + a doCheckpoint
-      // fill-in job per round; see materializedCount)
-      quiet = if (materializedCount(updated, col("label") =!= col("_old")) == 0L) quiet + 1 else 0
-      labels = updated.select(col("node"), col("label"), col("deg"))
-      round += 1
-    }
+            coalesce(col("nlabel"), col("label")).as("label"), col("deg")))
+        // one job: materializes the round checkpoint AND counts moves
+        val q = if (Rounds.countWhere(updated, col("label") =!= col("_old")) == 0L) quiet + 1 else 0
+        ((updated.select(col("node"), col("label"), col("deg")), q), q == 2)
+    }.state
     (labels.select(col("node"), col("label")), deg, m2)
   }
 
@@ -1493,11 +1432,7 @@ object Graph {
       itersL1: Int,
       itersL2: Int
   ): DataFrame = {
-    val und = edges.select(
-        least(col(srcCol), col(dstCol)).cast("long").as("a"),
-        greatest(col(srcCol), col(dstCol)).cast("long").as("b"))
-      .filter(col("a") =!= col("b"))
-      .distinct()
+    val und = canonicalPairs(edges, srcCol, dstCol)
       .withColumn("w", lit(1L))
       .localCheckpoint(false) // feeds level-1 rounds AND the contraction join
     // both levels enter the core directly: und and the contracted
@@ -1598,51 +1533,39 @@ object Graph {
       maxLevels: Int
   ): DataFrame = {
     require(maxLevels >= 1 && maxLevels <= 8, s"maxLevels must be in 1..8, got $maxLevels")
-    val und = edges.select(
-        least(col(srcCol), col(dstCol)).cast("long").as("a"),
-        greatest(col(srcCol), col(dstCol)).cast("long").as("b"))
-      .filter(col("a") =!= col("b"))
-      .distinct()
-    // resetStats at every level boundary: each level's checkpoints
-    // would otherwise compound the previous level's inflated size
-    // estimate — the geometric-stats wedge (see Bridge.resetStats)
-    val rs = org.apache.spark.sql.graft.Bridge.resetStats _
-    var g = rs(und.select(col("a"), col("b"), lit(1L).as("w"))
-      .localCheckpoint(false))
-    var mapping: DataFrame = null
-    var bestQ: BigInt = null
-    var level = 1
-    var stop = false
-    while (level <= maxLevels && !stop) {
-      // core directly: g is canonical by construction (distinct level-1
-      // pairs / grouped contraction), so the per-level
-      // re-canonicalization shuffle + checkpoint is skipped, and the
-      // core's (deg, m2) feed the ΔQ audit below instead of being
-      // rebuilt + re-collected per level (r12 verdict #6)
-      val (l0, deg, m2) = louvainWeightedCore(g, itersPerLevel)
-      val l = rs(l0.localCheckpoint(false))
-      // ΔQ acceptance (the Blondel stop rule, eps = 0): exact integer
-      // Q·m2² of this level's labels ON THIS LEVEL'S GRAPH — equal, by
-      // modularity's contraction invariance, to the composed mapping's
-      // Q on the original graph. Level 1 is the baseline (always
-      // accepted, like louvainMoves itself); deeper levels must
-      // STRICTLY improve or the loop stops and their moves are
-      // discarded — so Q is non-decreasing per level BY CONSTRUCTION
-      // (batch parity moves can jointly lower Q on tiny coarse graphs;
-      // a no-move level has equal Q and stops the same way). Exact
-      // integers, so the oracle replays the accept chain as HUGEINT
-      // comparisons.
-      val q = qNumContracted(g, l, deg, m2)
-      if (bestQ == null || q > bestQ) {
-        bestQ = q
-        mapping =
-          if (mapping == null) l
-          else rs(compose(mapping, l).localCheckpoint(false))
-        if (level < maxLevels) g = rs(contract(g, l).localCheckpoint(false))
-      } else stop = true
-      level += 1
-    }
-    mapping
+    // Rounds.checkpoint at every level boundary: each level's
+    // checkpoints would otherwise compound the previous level's
+    // inflated size estimate — the geometric-stats wedge
+    val g0 = Rounds.checkpoint(canonicalPairs(edges, srcCol, dstCol).withColumn("w", lit(1L)))
+    // state: this level's graph and the accepted (mapping, Q·m2²)
+    Rounds.run("louvainMultiLevel", (g0, Option.empty[(DataFrame, BigInt)]), maxLevels) {
+      case ((g, best), level) =>
+        // core directly: g is canonical by construction (distinct level-1
+        // pairs / grouped contraction), so the per-level
+        // re-canonicalization shuffle + checkpoint is skipped, and the
+        // core's (deg, m2) feed the ΔQ audit below instead of being
+        // rebuilt + re-collected per level (r12 verdict #6)
+        val (l0, deg, m2) = louvainWeightedCore(g, itersPerLevel)
+        val l = Rounds.checkpoint(l0)
+        // ΔQ acceptance (the Blondel stop rule, eps = 0): exact integer
+        // Q·m2² of this level's labels ON THIS LEVEL'S GRAPH — equal, by
+        // modularity's contraction invariance, to the composed mapping's
+        // Q on the original graph. Level 1 is the baseline (always
+        // accepted, like louvainMoves itself); deeper levels must
+        // STRICTLY improve or the loop stops and their moves are
+        // discarded — so Q is non-decreasing per level BY CONSTRUCTION
+        // (batch parity moves can jointly lower Q on tiny coarse graphs;
+        // a no-move level has equal Q and stops the same way). Exact
+        // integers, so the oracle replays the accept chain as HUGEINT
+        // comparisons.
+        val q = qNumContracted(g, l, deg, m2)
+        if (best.exists(_._2 >= q)) ((g, best), true)
+        else {
+          val mapping = best.fold(l) { case (m, _) => Rounds.checkpoint(compose(m, l)) }
+          val next = if (level < maxLevels) Rounds.checkpoint(contract(g, l)) else g
+          ((next, Some((mapping, q))), false)
+        }
+    }.state._2.get._1
   }
 
   /** Exact Q·m2² of `labels` on the weighted graph `g` (`(a, b, w)`
@@ -1858,8 +1781,9 @@ object Graph {
     require(maxHops >= 1 && maxHops <= 8, s"maxHops must be in 1..8, got $maxHops")
     require(k >= 2 && k <= 4096, s"k must be in 2..4096, got $k")
     val p = graft.functions.StrHash.P
-    val e0 = edges.select(col(srcCol).cast("long").as("node"), col(dstCol).cast("long").as("nbr"))
-    val adj = e0.unionAll(e0.select(col("nbr").as("node"), col("node").as("nbr")))
+    val adj = bothWays(
+        edges.select(col(srcCol).cast("long").as("node"), col(dstCol).cast("long").as("nbr")),
+        "node", "nbr")
       .filter(col("node") =!= col("nbr"))
       .distinct()
       .localCheckpoint(false)
@@ -1868,7 +1792,7 @@ object Graph {
       val q = pmod(h * h, lit(p))
       pmod(q * q, lit(p))
     }
-    var s = adj.select(col("node")).distinct()
+    val s0 = adj.select(col("node")).distinct()
       .select(col("node"), keyHash(col("node")).as("hv"))
       .localCheckpoint(false)
     def estOf(sk: DataFrame, name: String): DataFrame = sk
@@ -1878,9 +1802,8 @@ object Graph {
         when(col("cnt") < k, col("cnt").cast("double"))
           .otherwise(lit((k - 1).toLong * p).cast("double") / col("kth").cast("double"))
           .as(name))
-    var ests = estOf(s, "est0")
     val spark = edges.sparkSession
-    for (t <- 1 to maxHops) {
+    Rounds.run("ballEstimates", (s0, estOf(s0, "est0")), maxHops) { case ((s, ests), t) =>
       val fromNbr = adj
         .join(s.select(col("node").as("nbr"), col("hv")), "nbr")
         .select(col("node"), col("hv"))
@@ -1891,11 +1814,10 @@ object Graph {
       // over the same single node exchange. Input rows are distinct, so
       // the kept (node, hv) SET is identical and every downstream
       // estimator (count + max per node) is order-free.
-      s = ckptRound(graft.plans.TopKPerKey(spark,
+      val next = Rounds.checkpoint(graft.plans.TopKPerKey(spark,
         s.unionAll(fromNbr).distinct(), Seq("node"), Seq("hv" -> false), k))
-      ests = ests.join(estOf(s, s"est$t"), "node")
-    }
-    ests
+      ((next, ests.join(estOf(next, s"est$t"), "node")), false)
+    }.state._2
   }
 
   /** HyperBall closeness centrality + the per-node neighborhood

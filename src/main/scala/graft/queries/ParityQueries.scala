@@ -1402,8 +1402,8 @@ object ParityQueries {
   /** The customer→supplier trade graph shared by the graph demos: one
     * `(src, dst)` edge per lineitem, node ids 2·custkey / 2·suppkey+1.
     * `weight`, an expression over the orders ⋈ lineitem row, adds a
-    * `w` column; `symmetric` appends every edge reversed (the
-    * undirected form the walks and BFS run on).
+    * `w` column; `symmetric` adds every edge reversed (the undirected
+    * form the walks and BFS run on) off one scan of the join.
     */
   private def tradeEdges(
       s: SparkSession,
@@ -1415,9 +1415,7 @@ object ParityQueries {
     val cs = o.join(Tables.lineitem(s, dir), col("o_orderkey") === col("l_orderkey"))
       .select((col("o_custkey") * 2).as("src") +: (col("l_suppkey") * 2 + 1).as("dst") +:
         weight.map(_.as("w")).toSeq: _*)
-    if (!symmetric) cs
-    else cs.unionAll(cs.select(col("dst").as("src") +: col("src").as("dst") +:
-      weight.map(_ => col("w")).toSeq: _*))
+    if (symmetric) graft.operators.Graph.bothWays(cs, "src", "dst") else cs
   }
 
   /** [[tradeEdges]] as oracle SQL; `weight` is a SQL expression. */

@@ -319,10 +319,10 @@ class BucketedSinkSpec extends SparkSpec {
     val nb = 64
     val keys = 1L to 400L
     BucketedDir.merge(spark, root, df(keys.map(k => k -> s"v$k"): _*), "key", nb, schema)(upsertFn)
-    val Capture.Result(one, _, oneJobs) = Capture.run(spark) {
+    val Capture.Result(one, _, oneJobs, _) = Capture.run(spark) {
       BucketedDir.merge(spark, root, df(7L -> "one"), "key", nb, schema)(upsertFn)
     }
-    val Capture.Result(wide, _, wideJobs) = Capture.run(spark) {
+    val Capture.Result(wide, _, wideJobs, _) = Capture.run(spark) {
       BucketedDir.merge(spark, root, df(keys.map(k => k -> s"w$k"): _*), "key", nb, schema)(upsertFn)
     }
     val (oneTouched, wideTouched) = (one.size, wide.size)
@@ -524,13 +524,13 @@ class BucketedSinkSpec extends SparkSpec {
     val root = tmp()
     val nb = 8
     BucketedDir.merge(spark, root, df((1L to 40L).map(k => k -> s"v$k"): _*), "key", nb, schema)(upsertFn)
-    val Capture.Result(touched, _, jobs) = Capture.run(spark) {
+    val Capture.Result(touched, _, jobs, _) = Capture.run(spark) {
       BucketedDir.merge(spark, root, df((1L to 40L).map(k => k -> s"w$k"): _*), "key", nb, schema)(upsertFn)
     }
     assert(touched.size == nb && jobs >= 1 && jobs <= 2, s"a merge touching ${touched.size} buckets ran $jobs jobs")
     val sink = tmp()
     FeatureTableSink.merge(spark, sink, (1 to 40).map(i => KeyFeature(s"k$i", 1, i.toDouble, 1)).toDS(), 0)
-    val Capture.Result(_, _, sinkJobs) = Capture.run(spark) {
+    val Capture.Result(_, _, sinkJobs, _) = Capture.run(spark) {
       FeatureTableSink.merge(spark, sink, (1 to 40).map(i => KeyFeature(s"k$i", 2, i.toDouble, 2)).toDS(), 1)
     }
     assert(sinkJobs >= 1 && sinkJobs <= 2, s"a sink merge ran $sinkJobs jobs")

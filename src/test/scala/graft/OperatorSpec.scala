@@ -1644,10 +1644,11 @@ class OperatorSpec extends SparkSpec {
     assert(sizes.length <= 12, s"expected O(log² n) rounds, got ${sizes.length}: $sizes")
   }
 
-  test("connectedComponents runs a bounded number of Spark jobs per round") {
+  test("connectedComponents runs an exact number of Spark jobs per round") {
     // each round is one materializing aggregate, which AQE submits as
-    // one job per exchange: 10 per round, plus 7 for the input stage
-    // and the final labels (measured on chains needing 2 to 8 rounds)
+    // one job per exchange: 10 per round (9 in round 1, whose input
+    // checkpoint keeps its size estimate and so plans one broadcast),
+    // plus 8 outside the rounds for the input stage and the final labels
     val seen = Seq(4, 256).map { n =>
       val chain = (0 until n).map(i => (i.toLong, i.toLong + 1)).toDF("src", "dst")
       val cap = graft.metrics.Capture.run(spark) {
@@ -1655,8 +1656,12 @@ class OperatorSpec extends SparkSpec {
         labels.collect()
         sizes.length
       }
-      assert(cap.jobs <= 7 + 10 * cap.value, s"chain of $n: ${cap.jobs} jobs in ${cap.value} rounds")
-      cap.value
+      val rounds = cap.value
+      assert(cap.roundJobs.toSeq ==
+        (1 to rounds).map(r => s"connectedComponents/round-$r" -> (if (r == 1) 9 else 10)),
+        s"chain of $n: ${cap.roundJobs}")
+      assert(cap.jobs == 7 + 10 * rounds, s"chain of $n: ${cap.jobs} jobs in $rounds rounds")
+      rounds
     }
     assert(seen(1) > seen(0), s"a longer chain needs more rounds: $seen")
   }
