@@ -21,6 +21,14 @@ class RoundsSpec extends SparkSpec {
   private def chain(n: Int): DataFrame =
     (0 until n).map(i => (i.toLong, i.toLong + 1)).toDF("src", "dst")
 
+  private def withoutAqe[A](body: => A): A = {
+    val key = "spark.sql.adaptive.enabled"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "false")
+    try body
+    finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
   // (operator label, the call, its exact Spark jobs per round). From
   // round 2 on every round runs the same job set. Round 1 can differ:
   // it reads the prep's frames, whose size estimates let the static
@@ -40,10 +48,14 @@ class RoundsSpec extends SparkSpec {
     ("hits", () => Graph.hits(chain(6), "src", "dst", 3).collect(), Seq(14, 14, 14)),
     ("louvainWeightedCore", () => Graph.louvainMoves(twoTriangles, "src", "dst", 4).collect(),
       Seq(11, 12, 12, 12)),
-    // levels run different job sets (level 1 composes nothing, the last
-    // level contracts nothing); its nested move rounds are pinned below
-    ("louvainMultiLevel", () => Graph.louvainMultiLevel(twoTriangles, "src", "dst", 2, 3).collect(),
-      Seq(21, 23, 16)),
+    // pinned with AQE off: under AQE a level's label self-joins (the ΔQ
+    // audit, the contraction) run as many stage jobs as the order their
+    // shuffle stages finish in allows (level 1: 20, 21 or 22 over
+    // repeated runs), so only the static plan has an exact count — two
+    // actions per level (the core's m2 and the ΔQ collect); the lazy
+    // compose/contract checkpoints add none
+    ("louvainMultiLevel", () => withoutAqe(
+      Graph.louvainMultiLevel(twoTriangles, "src", "dst", 2, 3).collect()), Seq(2, 2, 2)),
     ("ballEstimates", () => Graph.harmonicCentrality(chain(6), "src", "dst", 3).collect(),
       Seq(3, 3, 3)),
     ("learnMerges", () => graft.llm.Bpe.learnMerges(spark,
@@ -71,8 +83,7 @@ class RoundsSpec extends SparkSpec {
       assert(own.keys.toSeq == want.indices.map(i => s"$op/round-${i + 1}"),
         s"$op: round labels ${cap.roundJobs.keys}")
       assert(own.values.toSeq == want, s"$op: jobs per round ${cap.roundJobs}")
-      if (op != "louvainMultiLevel")
-        assert(want.tail.distinct.size <= 1, s"$op: rounds 2.. must run the same jobs: $want")
+      assert(want.tail.distinct.size <= 1, s"$op: rounds 2.. must run the same jobs: $want")
       assert(cap.roundJobs.values.sum <= cap.jobs)
       if (op == "louvainMultiLevel")
         assert(cap.roundJobs.keys.toSeq.contains(
