@@ -142,6 +142,6 @@ object GraftFunctions {
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     GraftFunctions.injectInto(ext)
-    ext.injectPlannerStrategy(_ => graft.plans.TopKStrategy)
+    graft.plans.Strategies.all.foreach(s => ext.injectPlannerStrategy(_ => s))
   }
 }

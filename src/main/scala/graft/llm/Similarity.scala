@@ -137,8 +137,9 @@ object Similarity {
     * matrix (both DECIMAL(18,6)-quantized) compute ONCE up front;
     * each greedy round is then an anti-join (drop selected), a
     * max-penalty aggregate against the selected set, and a per-query
-    * argmax — all on queries×candDepth frames, localCheckpoint'd per
-    * round so the growing selection never re-executes.
+    * argmax — all on queries×candDepth frames. Picks 2..k are rounds
+    * 1..k−1 of [[graft.core.Rounds]], each selection checkpointed with
+    * its stats reset, so the growing selection never re-executes.
     *
     * Output: (qid, rank, nid, score) — rank is selection order, score
     * the MMR objective at pick time (round 1 has no penalty term, so
@@ -191,9 +192,10 @@ object Similarity {
       .filter(col("_rk") === 1)
       .select(col("qid"), lit(rank.toLong).as("rank"), col("nid"),
         col("_sc").cast("double").as("score"))
-    var sel = pick(cand.withColumn("_sc", lam * col("rel")), rank = 1)
+    val first = pick(cand.withColumn("_sc", lam * col("rel")), rank = 1)
       .localCheckpoint(false)
-    for (j <- 2 to k) {
+    // round r picks rank r + 1
+    graft.core.Rounds.run("mmrTopK", first, k - 1) { (sel, r) =>
       val remaining = cand
         .join(sel.select(col("qid"), col("nid")), Seq("qid", "nid"), "left_anti")
       val scored = remaining
@@ -202,9 +204,8 @@ object Similarity {
         .groupBy(col("qid"), col("nid"), col("rel"))
         .agg(max(col("sim")).as("pen"))
         .withColumn("_sc", lam * col("rel") - om * col("pen"))
-      sel = sel.unionAll(pick(scored, j)).localCheckpoint(false)
-    }
-    sel
+      (graft.core.Rounds.checkpoint(sel.unionAll(pick(scored, r + 1))), false)
+    }.state
   }
 
   /** [[bruteTopK]] on the custom bounded-heap operator

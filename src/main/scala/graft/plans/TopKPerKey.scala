@@ -90,14 +90,6 @@ object TopKStrategy extends SparkStrategy {
 
 object TopKPerKey {
 
-  /** Ensure the strategy is available on this session (idempotent). */
-  def install(spark: SparkSession): Unit = {
-    val strategies = spark.experimental.extraStrategies
-    if (!strategies.contains(TopKStrategy)) {
-      spark.experimental.extraStrategies = strategies :+ (TopKStrategy: SparkStrategy)
-    }
-  }
-
   /** The k best rows per key group, best-first within each group.
     * `order` entries are (columnName, descending). Attributes resolve
     * against the child's analyzed output here — Column-API expressions
@@ -112,7 +104,7 @@ object TopKPerKey {
       k: Int
   ): DataFrame = {
     require(k > 0, s"k must be positive, got $k")
-    install(spark)
+    Strategies.install(spark)
     val child = Bridge.logicalPlan(df)
     def attr(name: String): Attribute =
       child.output.find(_.name == name).getOrElse(

@@ -22,11 +22,12 @@ import graft.state.Connector
   *     a miss (the reference's KeyError analog), 400 on a malformed key.
   *   - `GET /bulk` → 200 `{"rows": [{..}, ..]}`.
   *
-  * Control-plane sized BY DESIGN: point queries are driver-side filtered
-  * scans (key predicate pushed to the store) and bulk results flow
-  * through one driver collect. At 100 TB consumers read the bucketed
-  * parquet table directly; this endpoint serves the reference's
-  * interactive/debug contract, not the data plane.
+  * A point query is the connector's: over the bucketed store
+  * ([[graft.state.BucketedParquetConnector]]) a driver-side read of the
+  * key's bucket that runs no Spark job; other connectors filter a scan.
+  * Bulk results flow through one driver collect, so `/bulk` is
+  * control-plane sized BY DESIGN: at 100 TB consumers read the bucketed
+  * parquet table directly.
   */
 final class FeatureServer(connector: Connector, port: Int = 0) {
 

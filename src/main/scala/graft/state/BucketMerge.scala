@@ -5,10 +5,8 @@ import java.nio.ByteBuffer
 import scala.collection.mutable
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
 import org.apache.spark.{HashPartitioner, SerializableWritable}
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.paths.SparkPath
 import org.apache.spark.rdd.{RDD, ShuffledRDD}
 import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
@@ -76,11 +74,7 @@ private[state] final class BucketMergeTask(
       byBucket.iterator.flatMap { case (b, batch) =>
         val bktRow = new GenericInternalRow(Array[Any](b))
         def emit(r: InternalRow): InternalRow = out(joined(r, bktRow))
-        val stored = VersionedDir.currentVersion(fs, new Path(new Path(root), BucketedDir.bucketName(b)))
-          .iterator.flatMap(v => fs.listStatus(v).iterator)
-          .filter(s => s.isFile && BucketMergeTask.isData(s.getPath.getName))
-          .flatMap(s => read(PartitionedFile(InternalRow.empty, SparkPath.fromPath(s.getPath), 0L, s.getLen,
-            Array.empty[String], s.getModificationTime, s.getLen)))
+        val stored = BucketedDir.currentRows(fs, root, b, read)
         val held = mutable.HashMap.empty[Any, mutable.ArrayBuffer[InternalRow]]
         val passed = stored.filter { r =>
           val hit = batch.contains(storedKey(r))
@@ -99,11 +93,6 @@ private[state] final class BucketMergeTask(
 }
 
 private[state] object BucketMergeTask {
-
-  /** Data files of a version dir: Hadoop's markers and checksums start
-    * with `_` or `.`.
-    */
-  def isData(name: String): Boolean = !name.startsWith("_") && !name.startsWith(".")
 
   /** Refuse a key column that cannot group by value, or whose type in
     * the batch is not its type in the table.
@@ -136,15 +125,22 @@ private[state] object BucketMergeTask {
       keyCol: String,
       mergeFn: (Seq[Row], Seq[Row]) => Seq[Row]
   ): BucketMergeTask = {
-    // the session's Hadoop conf, copied: building the reader sets keys
-    // on it. Tasks get it broadcast, once per merge, for their
-    // filesystem calls; the reader broadcasts its own copy.
+    // tasks get the session's Hadoop conf broadcast, once per merge, for
+    // their filesystem calls; the reader broadcasts its own copy
+    new BucketMergeTask(root, batchSchema, schema, keyCol, mergeFn, reader(spark, schema),
+      spark.sparkContext.broadcast(new SerializableWritable(new ParquetFileFormat().getHadoopConf(spark))))
+  }
+
+  /** Spark's Parquet reader of files in the table `schema`, row by row:
+    * what [[BucketedDir.currentRows]] reads stored bucket rows with, in
+    * merge tasks and driver-side lookups alike. Building it broadcasts
+    * a copy of the session's Hadoop conf (the reader sets keys on it),
+    * so a caller builds it once and reuses it.
+    */
+  def reader(spark: SparkSession, schema: StructType): PartitionedFile => Iterator[InternalRow] = {
     val format = new ParquetFileFormat()
-    val hadoopConf = format.getHadoopConf(spark)
-    val read = format.buildReaderWithPartitionValues(spark, schema, new StructType(), schema,
-      Nil, Map(FileFormat.OPTION_RETURNING_BATCH -> "false"), hadoopConf)
-    new BucketMergeTask(root, batchSchema, schema, keyCol, mergeFn, read,
-      spark.sparkContext.broadcast(new SerializableWritable(hadoopConf)))
+    format.buildReaderWithPartitionValues(spark, schema, new StructType(), schema,
+      Nil, Map(FileFormat.OPTION_RETURNING_BATCH -> "false"), format.getHadoopConf(spark))
   }
 }
 
@@ -203,17 +199,10 @@ private[state] final case class BucketMergeExec(
   override protected def withNewChildInternal(newChild: SparkPlan): BucketMergeExec = copy(child = newChild)
 }
 
-private[state] object BucketMergeStrategy extends SparkStrategy {
+private[graft] object BucketMergeStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case BucketMerge(task, partitions, bkt, output, child) =>
       BucketMergeExec(task, partitions, bkt, output, planLater(child)) :: Nil
     case _ => Nil
-  }
-
-  /** Make the strategy available on this session (idempotent). */
-  def install(spark: SparkSession): Unit = synchronized {
-    val strategies = spark.experimental.extraStrategies
-    if (!strategies.contains(BucketMergeStrategy))
-      spark.experimental.extraStrategies = strategies :+ (BucketMergeStrategy: SparkStrategy)
   }
 }

@@ -5,12 +5,16 @@ import java.util.concurrent.{Callable, ExecutionException, Executors}
 
 import scala.util.{Failure, Try}
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.{Cast, Literal, Pmod, XxHash64}
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
+import org.apache.spark.sql.execution.datasources.PartitionedFile
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.Bridge
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{DataType, StructType}
 
 import graft.core.Names
 
@@ -34,6 +38,11 @@ import graft.core.Names
   * keys are routed by `pmod(xxhash64(key), numBuckets)`, so changing the
   * count would strand stale rows in their old buckets. Re-bucketing
   * requires a full rewrite ([[merge]] refuses a mismatched count).
+  *
+  * Two reads: [[read]] scans every bucket's current version as one
+  * DataFrame (the bulk data plane), and [[lookup]] reads one key's
+  * bucket on the driver through [[currentRows]], the function merge
+  * tasks read stored rows with.
   */
 object BucketedDir {
 
@@ -48,70 +57,34 @@ object BucketedDir {
   def bucketCol(keyCol: String, numBuckets: Int): Column =
     pmod(xxhash64(col(keyCol)), lit(numBuckets.toLong)).cast("int")
 
-  /** The table's pinned bucket count (None if never written). */
-  def bucketCount(spark: SparkSession, root: String): Option[Int] = {
+  /** Whether the table at `root` has been created, failing if it was
+    * created with a bucket count other than `numBuckets`.
+    */
+  private[state] def pinned(spark: SparkSession, root: String, numBuckets: Int): Boolean = {
     val hfs = VersionedDir.fs(spark, root)
     val f = new Path(new Path(root), "_BUCKETS")
-    if (!hfs.exists(f)) None
-    else {
+    hfs.exists(f) && {
       val in = hfs.open(f)
-      try Some(scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim.toInt)
-      finally in.close()
+      val stored = try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim.toInt finally in.close()
+      require(stored == numBuckets,
+        s"table at $root was created with $stored buckets, not $numBuckets; re-bucketing requires a full rewrite")
+      true
     }
   }
 
-  private def pinBucketCount(
-      spark: SparkSession,
-      root: String,
-      keyCol: String,
-      numBuckets: Int,
-      keepVersions: Int
-  ): Int =
-    bucketCount(spark, root) match {
-      case Some(stored) =>
-        require(stored == numBuckets,
-          s"table at $root was created with $stored buckets, merge requested $numBuckets; " +
-            "re-bucketing requires a full rewrite")
-        stored
-      case None =>
-        // First bucketed merge into this root. If a legacy FLAT
-        // VersionedDir table lives here (pre-bucketed sink versions wrote
-        // root/v*/ + root/_CURRENT), its rows must seed the buckets NOW:
-        // once buckets exist, readers resolve them in preference to the
-        // flat layout, so skipping this step would silently drop every
-        // pre-existing row on the exact upgrade path read()'s fallback
-        // claims to support (ADVICE r3). Migration runs BEFORE _BUCKETS
-        // is written, so a crash mid-seed re-runs it on the next merge
-        // (re-publishing a bucket just advances its version — idempotent).
-        migrateFlatLayout(spark, root, keyCol, numBuckets, keepVersions)
-        val hfs = VersionedDir.fs(spark, root)
-        hfs.mkdirs(new Path(root))
-        val out = hfs.create(new Path(new Path(root), "_BUCKETS"), true)
-        try out.write(numBuckets.toString.getBytes(StandardCharsets.UTF_8)) finally out.close()
-        numBuckets
-    }
-
-  /** Seed buckets from a legacy flat [[VersionedDir]] at `root` (no-op
-    * when none exists), then retire the flat `v*` dirs and `_CURRENT`
-    * pointer. One O(table) rewrite at upgrade time — the documented
-    * re-bucketing cost, paid once.
+  /** Pin `numBuckets` on the first merge into `root`. A root holding a
+    * flat [[VersionedDir]] table (its own `_CURRENT` pointer) is refused
+    * before anything is written: once buckets exist, readers resolve
+    * only them, so a bucketed merge there would shadow every flat row.
     */
-  private def migrateFlatLayout(
-      spark: SparkSession,
-      root: String,
-      keyCol: String,
-      numBuckets: Int,
-      keepVersions: Int
-  ): Unit =
-    VersionedDir.read(spark, root).foreach { flat =>
-      // materialize off the flat files before they are deleted below
-      publishPartitioned(spark, root, flat, keyCol, numBuckets, flat.schema,
-        minVersion = 0L, keepVersions)((_, rows) => rows)
+  private def pinBucketCount(spark: SparkSession, root: String, numBuckets: Int): Unit =
+    if (!pinned(spark, root, numBuckets)) {
       val hfs = VersionedDir.fs(spark, root)
-      val rootPath = new Path(root)
-      VersionedDir.committedVersions(hfs, rootPath).foreach(p => hfs.delete(p, true))
-      hfs.delete(new Path(rootPath, "_CURRENT"), false)
-      ()
+      require(!hfs.exists(new Path(new Path(root), "_CURRENT")),
+        s"$root holds a flat VersionedDir table, not a bucketed one; a bucketed merge would shadow its rows")
+      hfs.mkdirs(new Path(root))
+      val out = hfs.create(new Path(new Path(root), "_BUCKETS"), true)
+      try out.write(numBuckets.toString.getBytes(StandardCharsets.UTF_8)) finally out.close()
     }
 
   /** Read the current table: ONE parquet scan over every bucket's
@@ -132,45 +105,78 @@ object BucketedDir {
     }
   }
 
-  /** Read ONE bucket's current version with the table's `schema` (None
-    * if that bucket was never written) — the point-query path: a key's
-    * row can only live in its hash bucket, so a lookup scans
-    * 1/numBuckets of the table (plus the key predicate pushed into that
-    * bucket's parquet scan), and the given schema spares the per-lookup
-    * schema-inference job.
+  /** The stored rows of bucket `b`'s current version under `root`, read
+    * file by file with `read` ([[BucketMergeTask.reader]]): the one read
+    * of stored bucket rows, in merge tasks and [[lookup]]s alike. Empty
+    * if the bucket was never written. The rows are the reader's, reused
+    * from one to the next, and the reader closes a file when its rows
+    * run out: outside a task nothing else closes it, so a driver-side
+    * caller drains the iterator.
     */
-  def readBucket(spark: SparkSession, root: String, bucket: Int, schema: StructType): Option[DataFrame] =
-    VersionedDir.currentVersion(VersionedDir.fs(spark, root), new Path(new Path(root), bucketName(bucket)))
-      .map(v => spark.read.schema(schema).parquet(v.toString))
+  private[state] def currentRows(
+      fs: FileSystem,
+      root: String,
+      b: Int,
+      read: PartitionedFile => Iterator[InternalRow]
+  ): Iterator[InternalRow] =
+    VersionedDir.currentVersion(fs, new Path(new Path(root), bucketName(b)))
+      .iterator.flatMap(v => fs.listStatus(v).iterator)
+      // Hadoop's markers and checksums start with `_` or `.`
+      .filter(s => s.isFile && !s.getPath.getName.startsWith("_") && !s.getPath.getName.startsWith("."))
+      .flatMap(s => read(PartitionedFile(InternalRow.empty, SparkPath.fromPath(s.getPath), 0L, s.getLen,
+        Array.empty[String], s.getModificationTime, s.getLen)))
 
-  /** The bucket a key value routes to, using the table's pinned count
-    * and the SAME Catalyst expression tree as writes (`keyType` must be
-    * the stored key column's type — xxhash64 of an int and a long
-    * differ). None if the table was never written.
-    *
-    * Evaluated interpreted ON THE DRIVER — the write path's
-    * `pmod(xxhash64(cast(key)), nb)` is a pure expression, so routing a
-    * point query must not launch a one-row Spark job per HTTP hit
-    * (ConnectorSpec pins driver-side ≡ write-path routing across key
-    * types).
+  /** The stored row of `key` in a table of `numBuckets` buckets and the
+    * given `schema` (None on a miss, a NULL key included): a point read
+    * on the driver that plans no query and runs no Spark job. It routes
+    * the key to its bucket, resolves that bucket's `_CURRENT` (so a
+    * lookup sees the latest published version) and reads it with `read`,
+    * comparing keys as a merge groups them ([[BucketMergeTask.keyOf]]).
+    * The key is cast to the key column's type once; routing and the key
+    * test both use the cast value. The caller checks the bucket count
+    * ([[pinned]]).
     */
-  def bucketForKey(
+  private[state] def lookup(
       spark: SparkSession,
       root: String,
-      key: Any,
-      keyType: org.apache.spark.sql.types.DataType
-  ): Option[Int] =
-    bucketCount(spark, root).map(nb => routeKey(key, keyType, nb))
+      numBuckets: Int,
+      keyCol: String,
+      schema: StructType,
+      read: PartitionedFile => Iterator[InternalRow]
+  )(key: Any): Option[Row] = {
+    val typed = typedKey(key, schema(keyCol).dataType)
+    val want = BucketMergeTask.keyOf(StructType(Seq(schema(keyCol))), keyCol)(InternalRow(typed.value))
+    if (want == null) None
+    else {
+      val keyOf = BucketMergeTask.keyOf(schema, keyCol)
+      val toRow = CatalystTypeConverters.createToScalaConverter(schema)
+      // foldLeft, not find: reading to the end closes the reader
+      currentRows(VersionedDir.fs(spark, root), root, route(typed, numBuckets), read)
+        .foldLeft(Option.empty[Row]) { (hit, r) =>
+          hit.orElse(if (keyOf(r) == want) Some(toRow(r).asInstanceOf[Row]) else None)
+        }
+    }
+  }
 
   /** Driver-side interpreted eval of the write-path routing expression
-    * (`functions.xxhash64` is `XxHash64(_, seed = 42)`; `pmod` keeps the
-    * result non-negative like the write side).
+    * ([[bucketCol]]; `keyType` must be the stored key column's type —
+    * xxhash64 of an int and a long differ), so routing a point read
+    * launches no Spark job (BucketedSinkSpec pins it equal to the write
+    * path across key types).
     */
-  private[graft] def routeKey(key: Any, keyType: org.apache.spark.sql.types.DataType, nb: Int): Int = {
-    import org.apache.spark.sql.catalyst.expressions.{Cast, Literal, Pmod, XxHash64}
-    Pmod(new XxHash64(Seq(Cast(Literal(key), keyType, Some("UTC")))), Literal(nb.toLong))
-      .eval(null).asInstanceOf[Long].toInt
-  }
+  private[graft] def routeKey(key: Any, keyType: DataType, nb: Int): Int = route(typedKey(key, keyType), nb)
+
+  /** `functions.xxhash64` is `XxHash64(_, seed = 42)`; `pmod` keeps the
+    * bucket non-negative, as on the write side.
+    */
+  private def route(key: Literal, nb: Int): Int =
+    Pmod(new XxHash64(Seq(key)), Literal(nb.toLong)).eval(null).asInstanceOf[Long].toInt
+
+  /** `key` cast to `keyType`, as the literal both routing and the key
+    * test of a lookup read.
+    */
+  private def typedKey(key: Any, keyType: DataType): Literal =
+    Literal(Cast(Literal(key), keyType, Some("UTC")).eval(), keyType)
 
   /** Merge a keyed batch, rewriting only the buckets its keys hash
     * into. For each batch key k, the key's new stored rows are
@@ -223,43 +229,18 @@ object BucketedDir {
       keepVersions: Int = 2
   )(mergeFn: (Seq[Row], Seq[Row]) => Seq[Row]): Seq[Int] = {
     BucketMergeTask.validate(batch.schema, schema, keyCol)
-    val nb = pinBucketCount(spark, root, keyCol, numBuckets, keepVersions)
-    publishPartitioned(spark, root, batch, keyCol, nb, schema, minVersion, keepVersions)(mergeFn)
-  }
-
-  /** Hidden dir under the table root that a merge's partitioned write
-    * lands in before each bucket dir moves into place. Readers only
-    * resolve `b*` dirs, so a stage left by a crash is invisible, and
-    * the next merge's overwrite clears it. One stage per table: a table
-    * has one writer at a time, as its unlocked version choice already
-    * requires.
-    */
-  private[graft] val StageDir = "_stage"
-
-  /** The shared bucket-publish machinery behind [[merge]] and the
-    * flat-layout migration.
-    */
-  private def publishPartitioned(
-      spark: SparkSession,
-      root: String,
-      batch: DataFrame,
-      keyCol: String,
-      nb: Int,
-      schema: StructType,
-      minVersion: Long,
-      keepVersions: Int
-  )(mergeFn: (Seq[Row], Seq[Row]) => Seq[Row]): Seq[Int] = {
+    pinBucketCount(spark, root, numBuckets)
     val bkt = Names.fresh(batch.columns.toSeq ++ schema.fieldNames, "_bkt")
     val task = BucketMergeTask(spark, root, batch.schema, schema, keyCol, mergeFn)
     val seen = new Observation()
-    val keyed = Bridge.logicalPlan(batch.withColumn(bkt, bucketCol(keyCol, nb))
+    val keyed = Bridge.logicalPlan(batch.withColumn(bkt, bucketCol(keyCol, numBuckets))
       .observe(seen, collect_set(col(bkt)).as(bkt)))
     val bktAttr = keyed.output.last
     // plan and write in the batch's own session: a streaming batch lives
     // in the stream's session, whose listeners complete the observation
     val session = batch.sparkSession
-    BucketMergeStrategy.install(session)
-    val merged = BucketMerge(task, math.min(nb, spark.sparkContext.defaultParallelism), bktAttr,
+    graft.plans.Strategies.install(session)
+    val merged = BucketMerge(task, math.min(numBuckets, spark.sparkContext.defaultParallelism), bktAttr,
       DataTypeUtils.toAttributes(schema) :+ bktAttr, keyed)
     val rootPath = new Path(root)
     val stage = new Path(rootPath, StageDir)
@@ -299,6 +280,15 @@ object BucketedDir {
     hfs.delete(stage, true)
     touched
   }
+
+  /** Hidden dir under the table root that a merge's partitioned write
+    * lands in before each bucket dir moves into place. Readers only
+    * resolve `b*` dirs, so a stage left by a crash is invisible, and
+    * the next merge's overwrite clears it. One stage per table: a table
+    * has one writer at a time, as its unlocked version choice already
+    * requires.
+    */
+  private[graft] val StageDir = "_stage"
 
   /** Run the filesystem work `f` once per bucket on a pool of at most one
     * thread per core: on HDFS or S3 each call is a round trip, so

@@ -188,6 +188,9 @@ final class ParquetConnector(
   * amplification — fine for small control-plane tables, fatal for a
   * large feature table absorbing a stream of small batches). Reference
   * semantics: per-record upsert, ralf/state/sqlite_connector.py:30-38.
+  * A point query is a driver-side read of the key's bucket, as ralf
+  * routes a key to its shard and reads that shard's state
+  * (ralf/operator.py:288-305).
   */
 final class BucketedParquetConnector(
     val spark: SparkSession,
@@ -201,16 +204,26 @@ final class BucketedParquetConnector(
     BucketedDir.read(spark, root)
       .getOrElse(spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema))
 
-  /** Bucket-pruned lookup: scans ONLY the key's hash bucket (the trait
-    * default filters a scan of every bucket) — at scale this is the
-    * difference between a point query and a table scan. The scan reads
-    * with the connector's schema, so a lookup runs no inference job.
+  /** The bucket reader of lookups, built on the first one: building it
+    * broadcasts a Hadoop conf.
     */
-  override def pointQuery(key: Any): Option[Row] =
-    BucketedDir.bucketForKey(spark, root, key, schema(keyCol).dataType).flatMap { b =>
-      BucketedDir.readBucket(spark, root, b, schema)
-        .flatMap(_.filter(col(keyCol) === lit(key)).collect().headOption)
-    }
+  private lazy val read = BucketMergeTask.reader(spark, schema)
+
+  /** Whether `_BUCKETS` was found and checked against `numBuckets`; the
+    * count is pinned for the table's life, so it is read once.
+    */
+  @volatile private var pinned = false
+
+  /** A driver-side read of the key's hash bucket alone
+    * ([[BucketedDir.lookup]]): no planned query, no Spark job. Each
+    * lookup resolves the bucket's `_CURRENT`, so it sees the latest
+    * published version. Fails if the table was created with another
+    * bucket count.
+    */
+  override def pointQuery(key: Any): Option[Row] = {
+    if (!pinned) pinned = BucketedDir.pinned(spark, root, numBuckets)
+    if (!pinned) None else BucketedDir.lookup(spark, root, numBuckets, keyCol, schema, read)(key)
+  }
 
   /** Not supported: a bucketed table is rewritten only bucket by
     * bucket, and a merge of `table` would keep every untouched bucket's

@@ -1,16 +1,15 @@
 package graft.streaming
 
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row, SparkSession}
 
-import graft.state.{BucketedDir, VersionedDir}
+import graft.state.BucketedDir
 import graft.streaming.StreamingFeatures.{KeyEvent, KeyFeature}
 
 /** Durable feature-table sink: the parquet analog of ralf's storage
   * connectors (dict/SQLite/Redis, ralf/state/connector.py:7-30) — a
   * materialized latest-value-per-key table that consumers point-query
-  * with a plain filtered scan.
+  * through a [[graft.state.BucketedParquetConnector]].
   *
   * Each micro-batch merges the incoming per-key updates into the stored
   * table through [[graft.state.BucketedDir]]: the table is hash-bucketed
@@ -38,17 +37,14 @@ object FeatureTableSink {
     */
   val DefaultBuckets = 16
 
-  /** Read the current materialized table (empty if never written).
-    * Falls back to a flat [[VersionedDir]] layout for tables written by
-    * pre-bucketed versions of this sink; the first bucketed [[merge]]
-    * into such a root migrates the flat rows into buckets (BucketedDir's
-    * flat-layout seeding), so the fallback never shadows live data.
+  /** Read the current materialized table: one scan over every bucket's
+    * current version (empty if never written). A point read of one key
+    * goes through a [[graft.state.BucketedParquetConnector]] on the same
+    * root instead: a driver-side read of the key's bucket.
     */
   def read(spark: SparkSession, root: String): DataFrame = {
     import spark.implicits._
-    BucketedDir.read(spark, root)
-      .orElse(VersionedDir.read(spark, root))
-      .getOrElse(Seq.empty[KeyFeature].toDF())
+    BucketedDir.read(spark, root).getOrElse(Seq.empty[KeyFeature].toDF())
   }
 
   /** Merge one batch of updates into the stored table. Exposed for
@@ -124,8 +120,4 @@ object FeatureTableSink {
       }
     (if (availableNow) w.trigger(Trigger.AvailableNow()) else w).start()
   }
-
-  /** Point query over the materialized table (SURVEY §2.1 #13). */
-  def pointQuery(spark: SparkSession, root: String, key: String): DataFrame =
-    read(spark, root).filter(col("key") === key)
 }

@@ -161,32 +161,35 @@ class BucketedSinkSpec extends SparkSpec {
     assert(got2.size == 400 && keys.forall(k => got2(k) == s"w$k"))
   }
 
-  test("first bucketed merge into a legacy flat table migrates its rows (no silent loss)") {
+  test("a first merge into a flat VersionedDir root is refused") {
     import spark.implicits._
     import graft.streaming.StreamingFeatures.KeyFeature
     val root = tmp()
-    // a pre-bucketed sink version wrote a FLAT VersionedDir at this root
-    graft.state.VersionedDir.publish(spark, root,
-      (1 to 20).map(i => KeyFeature(s"k$i", 1, i.toDouble, 1)).toDS().toDF())
-    // upgrade path: the first bucketed merge must carry the 20 legacy
-    // rows into the buckets, not shadow them
-    graft.streaming.FeatureTableSink.merge(spark, root,
-      Seq(KeyFeature("k7", 5, 99.0, 2), KeyFeature("k99", 1, 1.0, 1)).toDS(),
-      0, numBuckets = 8)
-    val t = graft.streaming.FeatureTableSink.read(spark, root)
-      .as[KeyFeature].collect().map(f => f.key -> f.value).toMap
-    assert(t.size == 21, s"legacy rows must survive the upgrade, got ${t.size}")
-    assert(t("k7") == 99.0 && t("k99") == 1.0 && t("k3") == 3.0)
-    // the flat layout is retired: no v* dirs remain at the root
-    assert(!Files.list(Paths.get(root)).iterator().asScala
-      .exists(_.getFileName.toString.startsWith("v0")),
-      "flat v* dirs must be deleted after seeding")
-    // and subsequent merges stay bucket-pruned
-    val before = snapshot(root)
-    graft.streaming.FeatureTableSink.merge(spark, root,
-      Seq(KeyFeature("k7", 9, 100.0, 3)).toDS(), 1, numBuckets = 8)
-    val after = snapshot(root)
-    assert(before.keys.count(b => after(b) != before(b)) == 1)
+    VersionedDir.publish(spark, root, (1 to 20).map(i => KeyFeature(s"k$i", 1, i.toDouble, 1)).toDS().toDF())
+    val before = Files.list(Paths.get(root)).iterator().asScala.map(_.getFileName.toString).toSet
+    val e = intercept[IllegalArgumentException](graft.streaming.FeatureTableSink.merge(spark, root,
+      Seq(KeyFeature("k7", 5, 99.0, 2)).toDS(), 0, numBuckets = 8))
+    assert(e.getMessage.contains("flat VersionedDir table"), e.getMessage)
+    // no _BUCKETS, no bucket dir, no stage: the flat rows are not shadowed
+    assert(Files.list(Paths.get(root)).iterator().asScala.map(_.getFileName.toString).toSet == before)
+    assert(VersionedDir.read(spark, root).get.count() == 20)
+  }
+
+  test("a point lookup runs no Spark job and sees the latest version") {
+    val root = tmp()
+    val c = new BucketedParquetConnector(spark, "key", schema, root, numBuckets = 8)
+    assert(c.pointQuery(1L).isEmpty, "a table never written is a miss")
+    c.upsert(df((1L to 40L).map(k => k -> s"v$k"): _*))
+    val Capture.Result(got, _, jobs, _) = Capture.run(spark) {
+      ((1L to 40L) ++ Seq(41L, -1L)).map(k => k -> c.pointQuery(k).map(_.getString(1)))
+    }
+    assert(jobs == 0, s"lookups ran $jobs Spark jobs")
+    assert(got == (1L to 40L).map(k => k -> Some(s"v$k")) ++ Seq(41L -> None, -1L -> None))
+    c.upsert(df(7L -> "w7"))
+    assert(c.pointQuery(7L).map(_.getString(1)) == Some("w7"))
+    // another connector on the same root with another count fails loudly
+    val wrong = new BucketedParquetConnector(spark, "key", schema, root, numBuckets = 16)
+    intercept[IllegalArgumentException](wrong.pointQuery(7L))
   }
 
   test("bucket count is pinned: a mismatched merge is refused") {
@@ -537,6 +540,7 @@ class BucketedSinkSpec extends SparkSpec {
   }
 
   test("string, long, int, NULL and BINARY keys group by value; other key types fail before any write") {
+    import org.apache.spark.sql.functions.{col, lit}
     import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, IntegerType}
     def table(keyType: DataType) = StructType(Seq(
       StructField("key", keyType, nullable = true), StructField("a", StringType, nullable = true)))
@@ -553,6 +557,15 @@ class BucketedSinkSpec extends SparkSpec {
       val got = BucketedDir.read(spark, root).get.collect().map(r => show(r.get(0)) -> r.getString(1))
       assert(got.length == keys.size && got.forall(_._2 == "1+2"), s"${keyType.sql}: ${got.toSeq}")
       assert(got.map(_._1).toSet == keys.map(k => show(k())).toSet, keyType.sql)
+      // a point lookup returns the DataFrame filter's row for every key;
+      // the NULL key, stored as a row, is a miss as under `===`
+      val c = new BucketedParquetConnector(spark, "key", t, root, numBuckets = 4)
+      val stored = BucketedDir.read(spark, root).get
+      keys.foreach { k =>
+        val want = stored.filter(col("key") === lit(k())).collect().headOption
+        assert(c.pointQuery(k()) == want, s"${keyType.sql} key ${show(k())}")
+        assert(want.isDefined == (k() != null))
+      }
     }
     val id: Any => Any = identity
     check(StringType, Seq(() => new String("k1"), () => new String("käse"), () => null), id)

@@ -7,13 +7,18 @@ import graft.functions.{GraftExtensions, StrHash}
 /** The cluster-deployment injection path
   * (`spark.sql.extensions=graft.functions.GraftExtensions`): a session
   * built with the extensions applied must resolve the SQL functions and
-  * carry the TopKPerKey planner strategy — previously only
+  * carry the TopKPerKey and bucketed-merge planner strategies — previously only
   * GraftFunctions.register (the session-mutating path) was tested.
   */
 class ExtensionsSpec extends SparkSpec {
 
   test("extensions-built session resolves graft SQL functions and TopK strategy") {
     val s2 = Bridge.newSessionWithExtensions(spark, new GraftExtensions()(_))
+    // both planner strategies come injected, before any operator installs one
+    assert(s2.experimental.extraStrategies.isEmpty)
+    val planner = s2.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionState.planner
+    assert(Seq(graft.plans.TopKStrategy, graft.state.BucketMergeStrategy).forall(planner.strategies.contains),
+      planner.strategies)
     // SQL function resolution through the injected registry
     val h = s2.sql("SELECT graft_strhash('spark') AS h").collect().head.getLong(0)
     assert(h == StrHash.hash(org.apache.spark.unsafe.types.UTF8String.fromString("spark")))

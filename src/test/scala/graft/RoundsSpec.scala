@@ -70,9 +70,17 @@ class RoundsSpec extends SparkSpec {
       (0 until 40).map(i => (i.toLong, Seq(1.0 + i % 4, (i % 3).toDouble, 0.5))).toDF("id", "v"),
       "id", "v", col("vid") % 10 === 0, 3, numCentroids = 4, nProbe = 1, refineIters = 3).collect(),
       Seq(5, 6, 6)),
-    ("bradleyTerry", () => graft.llm.Preference.bradleyTerry(
+    // pinned with AQE off, as louvainMultiLevel: under AQE rounds 2 and 3
+    // ran 7 or 8 jobs over repeated runs (3 runs of 10 in one JVM)
+    ("bradleyTerry", () => withoutAqe(graft.llm.Preference.bradleyTerry(
       Seq(("a", "b"), ("a", "b"), ("b", "c"), ("c", "a"), ("a", "c")).toDF("w", "l"),
-      "w", "l", iters = 3).collect(), Seq(7, 8, 8))
+      "w", "l", iters = 3).collect()), Seq(7, 5, 5)),
+    // pinned with AQE off too: under AQE round 1 ran 6 or 7 jobs over
+    // repeated runs (rounds 2.. ran 8 in every run); the static plan
+    // broadcasts round 1's selection, which has no stats reset
+    ("mmrTopK", () => withoutAqe(graft.llm.Similarity.mmrTopK(
+      (0 until 24).map(i => (i.toLong, Seq(1.0 + i % 4, (i % 3).toDouble, 0.5 + i % 5))).toDF("id", "v"),
+      "id", "v", col("vid") % 8 === 0, k = 4, candDepth = 6).collect()), Seq(2, 1, 1))
   )
 
   test("every loop runs on Rounds: exact Spark jobs per round, steady from round 2") {

@@ -7,7 +7,7 @@ import org.apache.spark.sql.Row
 import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructField, StructType}
 
 import graft.serve.FeatureServer
-import graft.state.TempViewConnector
+import graft.state.{BucketedParquetConnector, TempViewConnector}
 
 /** The reference's HTTP client contract (ralf/table.py:159-213 served
   * routes, ralf/tests/test_client.py): point query hit / miss / bad key,
@@ -51,6 +51,28 @@ class ServeSpec extends SparkSpec {
       val bulk = get(port, "/bulk")
       assert(bulk.statusCode() == 200)
       assert(bulk.body().contains(""""key":1""") && bulk.body().contains(""""key":2"""))
+    } finally srv.stop()
+  }
+
+  test("point/bulk HTTP façade over the bucketed store: hit, miss=404, malformed=400, bulk") {
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Files.createTempDirectory("graft-serve-bkt").toString
+    val c = new BucketedParquetConnector(spark, "key", schema, root, numBuckets = 4)
+    c.upsert(spark.createDataFrame(
+      Seq(Row(1L, "alpha", 0.5), Row(2L, "beta", null), Row(3L, "gamma", 1.5)).asJava, schema))
+    val srv = new FeatureServer(c)
+    srv.start()
+    try {
+      val port = srv.boundPort
+      val hit = get(port, "/point?key=1")
+      assert(hit.statusCode() == 200)
+      assert(hit.body() == """{"row":{"key":1,"name":"alpha","score":0.5}}""")
+      assert(get(port, "/point?key=2").body() == """{"row":{"key":2,"name":"beta","score":null}}""")
+      assert(get(port, "/point?key=999").statusCode() == 404)
+      assert(get(port, "/point?key=abc").statusCode() == 400)
+      val bulk = get(port, "/bulk")
+      assert(bulk.statusCode() == 200)
+      assert(Seq(1, 2, 3).forall(k => bulk.body().contains(s""""key":$k,""")), bulk.body())
     } finally srv.stop()
   }
 

@@ -376,8 +376,11 @@ class StreamingSpec extends SparkSpec {
     val t = graft.streaming.FeatureTableSink.read(spark, root).collect()
       .map(r => r.getString(0) -> ((r.getLong(1), r.getDouble(2), r.getLong(3)))).toMap
     assert(t == Map("a" -> ((3L, 42.0, 3L)), "b" -> ((1L, 5.0, 1L))))
-    val pq = graft.streaming.FeatureTableSink.pointQuery(spark, root, "a")
-    assert(pq.select("value").as[Double].head() == 42.0)
+    // a point read of the sink's table: a bucket lookup over the same root
+    val c = new graft.state.BucketedParquetConnector(spark, "key",
+      org.apache.spark.sql.Encoders.product[KeyFeature].schema, root,
+      graft.streaming.FeatureTableSink.DefaultBuckets)
+    assert(c.pointQuery("a").map(_.getAs[Double]("value")) == Some(42.0))
   }
 
   test("feature-table sink end-to-end from a live stream") {
