@@ -7,6 +7,8 @@ import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types.StructType
 
+import graft.state.CheckpointFiles
+
 /** The ordered per-key fold every ralf operator is (the eager push loop,
   * ralf/operator.py:189-259: each record folds into its key's state and
   * may emit), with one driver per engine mode. Operators supply a
@@ -24,6 +26,11 @@ private[graft] object KeyedFold {
     * output IS their state. The stored state type `S` is the checkpoint
     * format; a new one is a public case class with array fields (the
     * state encoder's generated code constructs and reads it).
+    *
+    * Building the stream points `ds`'s session at
+    * [[graft.state.CheckpointFiles]] for the checkpoint it will keep,
+    * unless the session already names a checkpoint file manager
+    * ([[graft.state.CheckpointFiles.use]]).
     */
   def stream[K: Encoder, U, S: Encoder, O: Encoder](
       ds: Dataset[U],
@@ -34,7 +41,8 @@ private[graft] object KeyedFold {
   )(
       step: (K, S, U, O => Unit) => S,
       done: (K, S) => Iterator[O] = (_: K, _: S) => Iterator.empty
-  ): Dataset[O] =
+  ): Dataset[O] = {
+    CheckpointFiles.use(ds.sparkSession)
     ds.groupByKey(key).flatMapGroupsWithState(mode, GroupStateTimeout.NoTimeout) {
       (k: K, batch: Iterator[U], state: GroupState[S]) =>
         val out = ArrayBuffer.empty[O]
@@ -46,6 +54,7 @@ private[graft] object KeyedFold {
         out ++= done(k, st)
         out.iterator
     }
+  }
 
   /** Batch driver: the sort-fold — `repartition(key)`, then
     * `sortWithinPartitions(key, ord)`, then ONE `mapPartitions` pass that

@@ -250,13 +250,15 @@ object IvfIndex {
       idCol: String,
       vecCol: String,
       dir: String
-  ): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
+  ): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
+    graft.state.CheckpointFiles.use(emb.sparkSession)
     emb.writeStream
       .outputMode("append")
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], epoch: Long) =>
         if (!batch.isEmpty)
           appendEpoch(batch.sparkSession, dir, batch.toDF(), idCol, vecCol, epoch)
       }
+  }
 
   /** Fold every `cells-b<epoch>/` root into the base `cells/` layout
     * and delete the epoch roots — run BETWEEN probe workloads (same

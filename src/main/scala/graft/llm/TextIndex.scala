@@ -169,13 +169,15 @@ object TextIndex {
       idCol: String,
       textCol: String,
       dir: String
-  ): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
+  ): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
+    graft.state.CheckpointFiles.use(docs.sparkSession)
     docs.writeStream
       .outputMode("append")
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], epoch: Long) =>
         if (!batch.isEmpty)
           appendEpoch(batch.sparkSession, dir, batch.toDF(), idCol, textCol, epoch)
       }
+  }
 
   /** Every committed root backing the index: the base plus epoch
     * appends whose `.stats` marker exists (an epoch without it never

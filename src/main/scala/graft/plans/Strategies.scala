@@ -1,6 +1,6 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{classic, SparkSession}
 import org.apache.spark.sql.execution.SparkStrategy
 
 /** graft's planner strategies: the custom logical nodes' execs
@@ -14,13 +14,15 @@ object Strategies {
 
   val all: Seq[SparkStrategy] = Seq(TopKStrategy, graft.state.BucketMergeStrategy)
 
-  /** Add every strategy missing from the session's extra strategies
-    * (idempotent). Locked: concurrent installs must not drop one
-    * another's append.
+  /** Add every strategy missing from the session's planner to its extra
+    * strategies (idempotent). The planner's list holds the extra
+    * strategies and the ones `GraftExtensions` injected, so a session
+    * built with the extensions gets none twice. Locked: concurrent
+    * installs must not drop one another's append.
     */
   def install(spark: SparkSession): Unit = synchronized {
-    val have = spark.experimental.extraStrategies
-    val missing = all.filterNot(have.contains)
-    if (missing.nonEmpty) spark.experimental.extraStrategies = have ++ missing
+    val planned = spark.asInstanceOf[classic.SparkSession].sessionState.planner.strategies
+    val missing = all.filterNot(planned.contains)
+    if (missing.nonEmpty) spark.experimental.extraStrategies = spark.experimental.extraStrategies ++ missing
   }
 }

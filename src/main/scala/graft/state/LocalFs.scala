@@ -17,7 +17,9 @@ import org.apache.hadoop.fs.permission.FsPermission
   * Hadoop writes; only the process start goes away. The sticky bit,
   * which nio cannot set, and file stores without a POSIX view take
   * Hadoop's own path. Routed to by [[VersionedDir.fs]] and
-  * [[VersionedDir.writeOptions]] for local roots.
+  * [[VersionedDir.writeOptions]] for local roots, and by
+  * [[CheckpointFiles]] for a local streaming checkpoint, whose offset
+  * log, commit log and state-store files it writes and renames.
   */
 class LocalFs extends LocalFileSystem(new LocalFs.Raw)
 

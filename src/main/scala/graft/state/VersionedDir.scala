@@ -1,7 +1,9 @@
 package graft.state
 
+import java.io.FileNotFoundException
+
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{ChecksumException, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 
 /** Atomically-versioned parquet directory: writers publish `v*` dirs and
@@ -33,26 +35,31 @@ object VersionedDir {
     * scheme, not by implementation.
     */
   private[state] def writeOptions(spark: SparkSession, root: String): Map[String, String] =
-    if (!isLocal(spark.sparkContext.hadoopConfiguration, root)) Map.empty
-    else Map("fs.file.impl" -> classOf[LocalFs].getName, "fs.file.impl.disable.cache" -> "true")
+    if (!isLocal(spark.sparkContext.hadoopConfiguration, root)) Map.empty else LocalOptions
 
-  private def isLocal(conf: Configuration, root: String): Boolean =
+  /** The Hadoop conf entries that route `file:` paths to [[LocalFs]]. */
+  private[state] val LocalOptions =
+    Map("fs.file.impl" -> classOf[LocalFs].getName, "fs.file.impl.disable.cache" -> "true")
+
+  private[state] def isLocal(conf: Configuration, root: String): Boolean =
     Option(new Path(root).toUri.getScheme).getOrElse(FileSystem.getDefaultUri(conf).getScheme) == "file"
 
   /** Current version dir: the `_CURRENT` pointer, falling back to the
     * highest committed `v*` directory if the pointer is mid-swap or was
     * lost — a reader never observes an empty table once one exists.
+    * Mid-swap includes a pointer that is missing when opened, and one
+    * read against its predecessor's checksum: [[swapAndPrune]] deletes
+    * the old pointer, then renames the new one data file first, `.crc`
+    * second.
     */
   def currentVersion(fs: FileSystem, root: Path): Option[Path] = {
-    val ptr = new Path(root, "_CURRENT")
     val fromPtr =
-      if (!fs.exists(ptr)) None
-      else {
-        val in = fs.open(ptr)
+      try {
+        val in = fs.open(new Path(root, "_CURRENT"))
         val v = try scala.io.Source.fromInputStream(in).mkString.trim
         finally in.close()
         Some(new Path(root, v)).filter(fs.exists)
-      }
+      } catch { case _: FileNotFoundException | _: ChecksumException => None }
     fromPtr.orElse {
       if (!fs.exists(root)) None
       else committedVersions(fs, root).lastOption

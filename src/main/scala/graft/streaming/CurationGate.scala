@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
 
 import graft.llm.{CorpusFrame, Dedup}
+import graft.state.CheckpointFiles
 import graft.streaming.StreamingFeatures.StreamDoc
 
 /** The streaming curation gate — the always-on counterpart of
@@ -128,6 +129,7 @@ object CurationGate {
       bloomDir: Option[String] = None,
       bloomBits: Int = 1 << 22
   ): StreamingQuery = {
+    CheckpointFiles.use(docs.sparkSession)
     val w = docs.writeStream
       .outputMode(OutputMode.Update())
       .foreachBatch { (b: Dataset[StreamDoc], epoch: Long) =>

@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row, SparkSession}
 
-import graft.state.BucketedDir
+import graft.state.{BucketedDir, CheckpointFiles}
 import graft.streaming.StreamingFeatures.{KeyEvent, KeyFeature}
 
 /** Durable feature-table sink: the parquet analog of ralf's storage
@@ -113,6 +113,7 @@ object FeatureTableSink {
       numBuckets: Int = DefaultBuckets,
       keepVersions: Int = 2
   ): StreamingQuery = {
+    CheckpointFiles.use(updates.sparkSession)
     val w = updates.writeStream
       .outputMode(OutputMode.Update())
       .foreachBatch { (batch: Dataset[KeyFeature], id: Long) =>

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.core.KeyedFold
 import graft.operators.{Shedding, Windows}
+import graft.state.CheckpointFiles
 
 /** Structured Streaming implementations of ralf's incremental semantics
   * (reference: the eager per-record push loop, ralf/operator.py:189-259).
@@ -56,6 +57,7 @@ object StreamingFeatures {
       ttlMs: Long = 0L
   ): Dataset[KeyFeature] = {
     import spark.implicits._
+    CheckpointFiles.use(updates.sparkSession)
     val timeout =
       if (ttlMs > 0) GroupStateTimeout.ProcessingTimeTimeout else GroupStateTimeout.NoTimeout
     updates
@@ -165,6 +167,7 @@ object StreamingFeatures {
       updates: Dataset[EvictableUpdate]
   ): Dataset[KeyEvent] = {
     import spark.implicits._
+    CheckpointFiles.use(updates.sparkSession)
     updates
       .groupByKey(_.key)
       .flatMapGroupsWithState(OutputMode.Update(), GroupStateTimeout.NoTimeout) {
@@ -1063,6 +1066,7 @@ object StreamingFeatures {
       name: String,
       mode: OutputMode = OutputMode.Update()
   ): DataFrame = {
+    CheckpointFiles.use(ds.sparkSession)
     val q = ds.writeStream
       .format("memory")
       .queryName(name)

@@ -192,6 +192,49 @@ class BucketedSinkSpec extends SparkSpec {
     intercept[IllegalArgumentException](wrong.pointQuery(7L))
   }
 
+  test("a pointer read against its predecessor's checksum resolves to the newest committed version") {
+    val root = tmp()
+    val c = new BucketedParquetConnector(spark, "key", schema, root, numBuckets = 1)
+    c.upsert(df(1L -> "old"))
+    c.upsert(df(1L -> "new"))
+    val bucket = new org.apache.hadoop.fs.Path(root, BucketedDir.bucketName(0))
+    val hfs = VersionedDir.fs(spark, root)
+    val versions = VersionedDir.committedVersions(hfs, bucket)
+    assert(versions.size == 2)
+    // the swap's window: the pointer's bytes name another version (same
+    // length) while its `.crc` still holds the old pointer's checksum
+    val ptr = Paths.get(bucket.toUri.getPath, "_CURRENT")
+    Files.write(ptr, versions.head.getName.getBytes("UTF-8"))
+    assert(Files.exists(Paths.get(bucket.toUri.getPath, "._CURRENT.crc")))
+    assert(VersionedDir.currentVersion(hfs, bucket).map(_.getName) == Some(versions.last.getName))
+    assert(c.pointQuery(1L).map(_.getString(1)) == Some("new"))
+  }
+
+  test("lookups racing 40 merges into a one-bucket table see no exception") {
+    import spark.implicits._
+    import graft.streaming.FeatureTableSink
+    import graft.streaming.StreamingFeatures.KeyFeature
+    val root = tmp()
+    def merge(i: Int): Unit =
+      FeatureTableSink.merge(spark, root, Seq(KeyFeature("k", i, i.toDouble, i)).toDS(), i, numBuckets = 1)
+    merge(0)
+    val c = new BucketedParquetConnector(spark, "key", Encoders.product[KeyFeature].schema, root, numBuckets = 1)
+    @volatile var done = false
+    val failure = new java.util.concurrent.atomic.AtomicReference[Throwable]()
+    val lookups = new java.util.concurrent.atomic.AtomicInteger()
+    val reader = new Thread(() =>
+      try while (!done) {
+        assert(c.pointQuery("k").isDefined)
+        lookups.incrementAndGet()
+      } catch { case t: Throwable => failure.set(t) })
+    reader.start()
+    try (1 to 40).foreach(merge)
+    finally { done = true; reader.join() }
+    assert(failure.get == null, s"a lookup failed after ${lookups.get} lookups: ${failure.get}")
+    assert(lookups.get > 0)
+    assert(c.pointQuery("k").map(_.getAs[Double]("value")) == Some(40.0))
+  }
+
   test("bucket count is pinned: a mismatched merge is refused") {
     val root = tmp()
     new BucketedParquetConnector(spark, "key", schema, root, numBuckets = 8)
@@ -218,8 +261,6 @@ class BucketedSinkSpec extends SparkSpec {
   }
 
   test("a merge into a local root starts no process (chmod runs in-process)") {
-    import jdk.jfr.Recording
-    import jdk.jfr.consumer.RecordingFile
     import spark.implicits._
     import graft.streaming.FeatureTableSink
     import graft.streaming.StreamingFeatures.{KeyEvent, KeyFeature}
@@ -229,24 +270,13 @@ class BucketedSinkSpec extends SparkSpec {
     val victims = keys.filter(k => BucketedDir.routeKey(k, StringType, FeatureTableSink.DefaultBuckets) == vb)
     val updates = keys.map(k => KeyFeature(k, 1, 1.0, 1)).toDS()
     val evictions = victims.map(k => KeyEvent(k, 2, 0.0, 0, evicted = true)).toDS()
-    val rec = new Recording()
-    rec.enable("jdk.ProcessStart")
-    rec.start()
-    try {
-      // a fresh 16-bucket table, then an eviction that empties one bucket
-      // (the empty-version publish), then a known fork as the census check
+    // a fresh 16-bucket table, then an eviction that empties one bucket
+    // (the empty-version publish)
+    val forks = Forks.under(root) {
       FeatureTableSink.merge(spark, root, updates, 0)
       FeatureTableSink.mergeEvents(spark, root, evictions, 1)
-      new ProcessBuilder("ls", root).start().waitFor()
-    } finally rec.stop()
-    val dump = Files.createTempFile("graft-forks", ".jfr")
-    try {
-      rec.dump(dump)
-      val (census, forks) = RecordingFile.readAllEvents(dump).asScala.toSeq
-        .map(_.getString("command")).filter(_.contains(root)).partition(_ == s"ls $root")
-      assert(census.size == 1, "the recording must see the census fork")
-      assert(forks.size == 0, s"the merges started processes, e.g. ${forks.take(3)}")
-    } finally { rec.close(); Files.delete(dump) }
+    }
+    assert(forks.isEmpty, s"the merges started processes, e.g. ${forks.take(3)}")
     assert(Files.list(Paths.get(root)).iterator().asScala
       .count(_.getFileName.toString.matches("b\\d+")) == FeatureTableSink.DefaultBuckets)
     assert(FeatureTableSink.read(spark, root).count() == keys.size - victims.size)

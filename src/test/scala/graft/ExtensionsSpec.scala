@@ -33,6 +33,13 @@ class ExtensionsSpec extends SparkSpec {
     assert(top.queryExecution.executedPlan.toString.contains("TopKPerKey"),
       s"expected TopKPerKeyExec in:\n${top.queryExecution.executedPlan}")
     assert(top.select("k", "v").as[(String, Double)].collect().toSet == Set("a" -> 2.0, "b" -> 3.0))
+    // planning a TopK and a bucketed merge adds neither strategy again
+    val root = java.nio.file.Files.createTempDirectory("graft-ext").toString
+    graft.streaming.FeatureTableSink.merge(s2, root,
+      Seq(graft.streaming.StreamingFeatures.KeyFeature("a", 1, 1.0, 1)).toDS(), 0)
+    assert(graft.streaming.FeatureTableSink.read(s2, root).count() == 1)
+    assert(s2.experimental.extraStrategies.isEmpty, s2.experimental.extraStrategies)
+    assert(graft.plans.Strategies.all.forall(st => planner.strategies.count(_ == st) == 1), planner.strategies)
   }
 
   test("SQL-computed MinHash signature == the Scala operator's persisted signature") {

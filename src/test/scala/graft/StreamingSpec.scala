@@ -1290,4 +1290,128 @@ class StreamingSpec extends SparkSpec {
       .map { case (h, c, n) => h -> ((c, n)) }.toMap
     assert(finalRows == batch)
   }
+
+  private val FileContextManager =
+    classOf[org.apache.spark.sql.execution.streaming.checkpointing.FileContextBasedCheckpointFileManager].getName
+
+  test("a graft stream's micro-batches start no process under its checkpoint") {
+    import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper
+    import graft.state.CheckpointFiles
+    import graft.streaming.FeatureTableSink
+    import graft.streaming.StreamingFeatures.KeyFeature
+    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt-forks").toString
+    val root = s"$dir/sink"
+    val in = MemoryStream[Update]
+    val q = FeatureTableSink.start(spark, StreamingFeatures.latestPerKey(spark, in.toDS()), root,
+      availableNow = false)
+    try {
+      assert(spark.conf.get(CheckpointFiles.Key) == classOf[CheckpointFiles].getName)
+      val ckpt = new org.apache.hadoop.fs.Path(
+        q.asInstanceOf[StreamingQueryWrapper].streamingQuery.resolvedCheckpointRoot).toUri.getPath
+      // the offset log, commit log and state-store files of 3 micro-batches
+      val forks = Forks.under(ckpt) {
+        (1 to 3).foreach { b =>
+          in.addData((1 to 50).map(i => Update(s"k$i", b, b * i.toDouble)): _*)
+          q.processAllAvailable()
+        }
+      }
+      assert(forks.isEmpty, s"the checkpoint started processes, e.g. ${forks.take(3)}")
+      assert(q.recentProgress.count(_.numInputRows > 0) == 3)
+    } finally q.stop()
+    val t = FeatureTableSink.read(spark, root).as[KeyFeature].collect()
+    assert(t.length == 50 && t.forall(f => f.ord == 3 && f.numUpdates == 3 &&
+      f.value == 3 * f.key.drop(1).toDouble), t.take(3).toSeq)
+  }
+
+  test("CheckpointFiles.use names the manager only on a session that names none") {
+    import graft.state.CheckpointFiles
+    val fresh = spark.newSession()
+    assert(fresh.conf.getOption(CheckpointFiles.Key).isEmpty)
+    CheckpointFiles.use(fresh)
+    assert(fresh.conf.get(CheckpointFiles.Key) == classOf[CheckpointFiles].getName)
+    // a user's choice wins, in the session conf ...
+    val theirs = spark.newSession()
+    theirs.conf.set(CheckpointFiles.Key, FileContextManager)
+    StreamingFeatures.slidingCountWindow(theirs, theirs.createDataset(Seq(Update("a", 1, 1.0))), 2, 1)
+    StreamingFeatures.latestPerKey(theirs, theirs.createDataset(Seq(Update("a", 1, 1.0))))
+    assert(theirs.conf.get(CheckpointFiles.Key) == FileContextManager)
+    // ... and in the Hadoop conf
+    val hadoop = spark.sparkContext.hadoopConfiguration
+    hadoop.set(CheckpointFiles.Key, FileContextManager)
+    try {
+      val viaHadoop = spark.newSession()
+      CheckpointFiles.use(viaHadoop)
+      assert(viaHadoop.conf.getOption(CheckpointFiles.Key).isEmpty)
+    } finally hadoop.unset(CheckpointFiles.Key)
+  }
+
+  test("a checkpoint resumes across Spark's default manager and CheckpointFiles, both ways") {
+    import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
+    import org.apache.spark.sql.streaming.Trigger
+    import graft.state.CheckpointFiles
+    import graft.streaming.FeatureTableSink
+    import graft.streaming.StreamingFeatures.KeyFeature
+    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt-resume")
+    val Seq(input, ckpt, root) = Seq("in", "ckpt", "sink").map(dir.resolve(_).toString)
+    val stock = spark.newSession()
+    stock.conf.set(CheckpointFiles.Key, FileContextManager)
+    val ours = spark.newSession()
+    def run(s: SparkSession, round: Int): Unit = {
+      Seq(Update("a", round, round.toDouble), Update(s"k$round", 1, 1.0)).toDF()
+        .write.mode("append").parquet(input)
+      val in = s.readStream.schema(Encoders.product[Update].schema).parquet(input)
+        .as[Update](Encoders.product[Update])
+      StreamingFeatures.latestPerKey(s, in).writeStream
+        .option("checkpointLocation", ckpt)
+        .outputMode(OutputMode.Update())
+        .trigger(Trigger.AvailableNow())
+        .foreachBatch { (b: Dataset[KeyFeature], id: Long) => FeatureTableSink.merge(s, root, b, id) }
+        .start().awaitTermination()
+    }
+    run(stock, 1)
+    run(ours, 2)
+    run(stock, 3)
+    assert(ours.conf.get(CheckpointFiles.Key) == classOf[CheckpointFiles].getName)
+    assert(stock.conf.get(CheckpointFiles.Key) == FileContextManager)
+    // the key's update counter lives in the state store: 3 means every
+    // run restored the state the other manager wrote
+    val t = FeatureTableSink.read(spark, root).as[KeyFeature].collect().map(f => f.key -> f).toMap
+    assert(t.keySet == Set("a", "k1", "k2", "k3"))
+    assert(t("a") == KeyFeature("a", 3, 3.0, 3))
+    // one layout: every log entry beside its checksum
+    for (log <- Seq("offsets", "commits")) {
+      val names = new java.io.File(ckpt, log).list().toSet
+      assert((0 to 2).forall(i => names(i.toString) && names(s".$i.crc")), s"$log: $names")
+    }
+  }
+
+  test("CheckpointFiles leaves a non-local checkpoint to Spark's own manager") {
+    import org.apache.hadoop.fs.Path
+    import org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager
+    import graft.state.CheckpointFiles
+    val conf = new org.apache.hadoop.conf.Configuration(spark.sparkContext.hadoopConfiguration)
+    conf.set("fs.stocklocal.impl", classOf[StockLocalFs].getName)
+    conf.set(CheckpointFiles.Key, classOf[CheckpointFiles].getName)
+    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt-scheme").toString
+    /** Write one log entry through the manager Spark would build for
+      * `path`; the processes it started, and the names it left.
+      */
+    def write(path: String): (Seq[String], Set[String]) = {
+      val forks = Forks.under(dir) {
+        val fm = CheckpointFileManager.create(new Path(path), conf)
+        assert(fm.isInstanceOf[CheckpointFiles])
+        fm.mkdirs(new Path(path))
+        val out = fm.createAtomic(new Path(path, "0"), false)
+        out.write("v1".getBytes("UTF-8"))
+        out.close()
+      }
+      (forks, new java.io.File(new Path(path).toUri.getPath).list().toSet)
+    }
+    val (stockForks, stockNames) = write(s"stocklocal://$dir/stock")
+    val (localForks, localNames) = write(s"file://$dir/local")
+    // Hadoop's stock local filesystem, under Spark's manager, forks chmod
+    assert(stockForks.exists(_.startsWith("chmod")), stockForks)
+    assert(localForks.isEmpty, localForks)
+    assert(stockNames == Set("0", ".0.crc") && localNames == stockNames, (stockNames, localNames))
+  }
 }

@@ -24,7 +24,18 @@ Recording a perfbench run without editing perfbench:
 Each micro-batch is one sink merge. The run's `detail` line gives
 `micro_batches`, the measured ones; the two warm-up batches merge in the
 same JVM, so `--per <micro_batches + 2>` adds each count divided by the
-merges the recording saw: forks per merge.
+merges the recording saw: forks per merge. Two untraced runs (seed 112,
+15 s, 4-core host), first with Spark's default checkpoint file manager
+(26 measured batches, `--per 28`):
+
+        2647     94.5  process starts (count, per 28)
+        2104     75.1  readlink     (FileContextBasedCheckpointFileManager.renameTempFile)
+         526     18.8  chmod 0644   (FileContextBasedCheckpointFileManager.createTempFile)
+
+then with graft's `CheckpointFiles` (33 measured batches, `--per 35`):
+
+           6      0.2  process starts (count, per 35)
+           4      0.1  rm -rf       (JavaUtils.deleteRecursivelyUsingUnixNative, at shutdown)
 
 With `--threads` the census counts `jdk.ThreadStart` events instead (on
 in JFR's default and profile settings, with the starting thread's stack):
